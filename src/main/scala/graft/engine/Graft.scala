@@ -633,9 +633,11 @@ final class Graft(val spark: SparkSession) {
     allowedIndexTypes = vectorIndexTypes; restrictionsTemplate = template; this
   }
 
-  /** Corpus-size threshold below which engine keyword search skips the
-   * two-phase block-max pruning (see bm25Serve). */
   private var postingsPruneCutoff: Long = 40000L
+  /** Corpus-size threshold below which engine keyword search skips the
+   * two-phase block-max pruning and scores on the driver from one fetch of
+   * the query's posting rows (see bm25Serve). It also bounds that fetch: at
+   * most cutoff × scored props × query terms posting rows reach the driver. */
   def withPostingsPruneCutoff(n: Long): Graft = { postingsPruneCutoff = n; this }
 
   /**
@@ -993,20 +995,21 @@ final class Graft(val spark: SparkSession) {
    * Keyword-search planner — the scan-vs-index strategy choice (the keyword
    * mirror of `IvfIndex.searchOrScan`): serve from the registered postings
    * index when its prop set matches the query's scored props; otherwise
-   * scan+score (Bm25Search). The where-filter becomes the allowlist semi-join
-   * before scoring either way (reference: shard_read.go:536-550). The index
-   * path returns (id, _score) so the page is decorated by a tiny
-   * hits ⋈ collection join (the reference's fetch-objects-by-docid step);
-   * at scale that join broadcasts the k hits and reads only the projected
-   * columns of the corpus — never tokenizes or scores it.
-   */
-  /** hitsOnly: return the postings-served (id, _score) top-N frame WITHOUT
-   * the decorate join + global sort — for callers that immediately reduce to
+   * scan+score (Bm25Search). The where-filter becomes an allowlist either
+   * way: docs outside it never return, and df stays collection-wide
+   * (reference: shard_read.go:536-550). The index
+   * path yields the k (id, _score) hits on the driver, so the page is
+   * `filtered` narrowed to those ids with the score attached from a literal
+   * map (the reference's fetch-objects-by-docid step) — no join, no
+   * broadcast, and the corpus is never tokenized or scored.
+   *
+   * hitsOnly: return the postings-served (id, _score) top-N frame WITHOUT
+   * the decoration + global sort — for callers that immediately reduce to
    * (id, score), i.e. the hybrid sparse leg. The row SET is identical: hits
-   * ids are a subset of `filtered`'s (the allowlist semi-join runs BEFORE
-   * scoring), so the skipped inner join could never drop or add a row, and
-   * fusion re-ranks so the skipped sort was dead ordering. The scan path is
-   * unchanged (it has no decoration join to skip). */
+   * ids are a subset of `filtered`'s (the allowlist applies BEFORE the
+   * top-N), so decorating could never drop or add a row, and fusion re-ranks
+   * so the skipped sort was dead ordering. The scan path is unchanged (it
+   * has no decoration to skip). */
   private def bm25Serve(c: Collection, kw: Bm25, fetchN: Int, filtered: DataFrame,
                         explain: Boolean = false, hitsOnly: Boolean = false): DataFrame = {
     val id = c.schema.idColumn
@@ -1028,10 +1031,10 @@ final class Graft(val spark: SparkSession) {
       case Some(idx) =>
         val allow = if (filtered eq c.df) None else Some(filtered.select(col(id)))
         // block-max pruning pays when the postings scan is large: its two
-        // phases are extra driver round-trips, so a small corpus serves the
-        // single-pass scoring instead (the keyword mirror of the
-        // flatSearchCutoff decision; the reference's block stats are
-        // in-memory so its BlockMax is unconditionally on)
+        // phases are extra driver round-trips, so a small corpus is scored
+        // on the driver from one posting-row fetch instead (the keyword
+        // mirror of the flatSearchCutoff decision; the reference's block
+        // stats are in-memory so its BlockMax is unconditionally on)
         val boosts = specs.map(s => s.name -> s.boost).toMap
         val hits =
           if (idx.nDocs < postingsPruneCutoff)
@@ -1042,8 +1045,15 @@ final class Graft(val spark: SparkSession) {
             kw.k1, kw.b, allowlist = allow, boosts = boosts,
             props = Some(specs.map(_.name)))
         if (hitsOnly) hits
-        else hits.join(filtered, Seq(id), "inner")
-          .orderBy(col(Bm25Search.ScoreCol).desc, col(id).asc)
+        else {
+          val top = hits.collect()
+          if (top.isEmpty) filtered.filter(lit(false)).withColumn(Bm25Search.ScoreCol, lit(0.0))
+          else filtered.filter(col(id).isin(top.map(_.get(0)): _*))
+            .withColumn(Bm25Search.ScoreCol, element_at(map_from_arrays(
+              array(top.map(r => lit(r.get(0))).toSeq: _*),
+              array(top.map(r => lit(r.getDouble(1))).toSeq: _*)), col(id)))
+            .orderBy(col(Bm25Search.ScoreCol).desc, col(id).asc)
+        }
       case None => Bm25Search.search(c, kw, fetchN, Some(filtered))
     }
   }

@@ -53,9 +53,9 @@ import graft.text.Tokenize
  * is already shuffle-minimal (only k rows per partition move).
  *
  * For repeated querying at scale, `Postings.build` materializes a postings
- * table (term → doc list with tf) that turns each query into a broadcast
- * semi-join instead of a full scan — same math to the last bit
- * (PostingsParityProps).
+ * table (term → doc list with tf and prop length) that turns each query into
+ * a read of its terms' posting rows instead of a full scan — same math to
+ * the last bit (PostingsParityProps).
  */
 object Bm25Search {
 

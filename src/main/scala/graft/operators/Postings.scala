@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.Collection
 import graft.model.{SearchOperator, Tokenization}
@@ -16,10 +21,11 @@ import Bm25Search.TermKey
  * `Bm25Search` scans and tokenizes the collection per query — right for
  * ad-hoc queries. For query-heavy workloads the postings table amortizes
  * tokenization once: one explode + groupBy at build time, then each query is
- * a pushdown-filtered read of a few term partitions joined back to doc
- * lengths. At 100 TB the postings table is partitioned/bucketed by term, so
- * a query reads only its terms' partitions — the Spark analogue of fetching
- * posting lists, with the same scoring math to the last bit
+ * a pushdown-filtered read of a few term partitions (each posting row carries
+ * its prop length, so no join back to doc lengths). At 100 TB the postings
+ * table is partitioned/bucketed by term, so a query reads only its terms'
+ * partitions — the Spark analogue of fetching posting lists, with the same
+ * scoring math to the last bit
  * (PostingsParityProps asserts postings ≡ scan on random corpora, including
  * multi-prop boosted queries and null props).
  *
@@ -42,8 +48,8 @@ import Bm25Search.TermKey
 final case class PostingsIndex(
     props: Seq[String],
     tokenizations: Seq[Tokenization],
-    postings: DataFrame,   // (term, __id, __p, tf, __bucket)
-    docLens: DataFrame,    // (__id, __dl_0 … __dl_{P-1}) — DISTINCT-term counts
+    postings: DataFrame,   // (term, __id, __p, tf, __dl, __bucket) — __dl = the prop's DISTINCT-term count
+    docLens: DataFrame,    // (__id, __dl_0 … __dl_{P-1}) — feeds nDocs/propMeans and delta
     termDf: DataFrame,     // (__g, term, df) — group-union doc frequency (BM25F idf)
     maxImpact: DataFrame,  // (term, __bucket, __p, max_tf, min_dl)
     nDocs: Long,
@@ -131,7 +137,7 @@ object Postings {
             removedIds: Option[DataFrame] = None): PostingsIndex = {
     // collapse duplicate ids within the batch (an at-least-once stream can
     // carry two versions of a doc): without this, tf would SUM across both
-    // versions and docLens would fan out the scoring join. Which duplicate
+    // versions and docLens would count the doc twice. Which duplicate
     // wins is arbitrary on an unordered DataFrame — collapse upstream
     // (e.g. IndexMaintenance.startPostings materializes one winner for both
     // the store and the index) when last-write-wins matters.
@@ -166,20 +172,24 @@ object Postings {
     }: _*)
   }
 
-  /** Per-doc prop lengths = DISTINCT-term counts (reference: the prop length
-   * tracker stores len(Items) — unique countables — per doc,
+  /** Prop length = DISTINCT-term count (reference: the prop length tracker
+   * stores len(Items) — unique countables — per doc,
    * shard_write_inverted_lsm.go:251). */
-  private def docLensOf(toks: DataFrame, props: Seq[String]): DataFrame =
-    toks.select(col("__id") +: props.indices.map(i =>
-      size(array_distinct(col(s"__toks_$i"))).cast("double").as(s"__dl_$i")): _*)
+  private def propLen(i: Int): Column =
+    size(array_distinct(col(s"__toks_$i"))).cast("double")
 
-  /** (term, __id, __p, tf) without the bucket column. */
+  private def docLensOf(toks: DataFrame, props: Seq[String]): DataFrame =
+    toks.select(col("__id") +: props.indices.map(i => propLen(i).as(s"__dl_$i")): _*)
+
+  /** (term, __id, __p, tf, __dl) without the bucket column. Each row carries
+   * its prop's length so scoring and the block-max stats read it in place. */
   private def postingsOf(toks: DataFrame, props: Seq[String]): DataFrame =
     props.indices.map { i =>
-      toks.select(col("__id"), lit(i).as("__p"), explode(col(s"__toks_$i")).as("term"))
+      toks.select(col("__id"), lit(i).as("__p"), propLen(i).as("__dl"),
+        explode(col(s"__toks_$i")).as("term"))
     }.reduce(_.unionByName(_))
       .groupBy(col("term"), col("__id"), col("__p"))
-      .agg(count(lit(1)).cast("double").as("tf"))
+      .agg(count(lit(1)).cast("double").as("tf"), max(col("__dl")).as("__dl"))
 
   /** `when`-chain mapping __p → its tokenization-group index. */
   private def groupOfProp(groups: Seq[((Tokenization, Boolean), Seq[Int])]): Column =
@@ -209,12 +219,9 @@ object Postings {
     val termDf = postings.withColumn("__g", groupOfProp(groups))
       .groupBy(col("__g"), col("term"))
       .agg(countDistinct(col("__id")).cast("double").as("df")).cache()
-    val dlOfProp = props.indices.foldLeft(lit(null).cast("double")) { (acc, i) =>
-      when(col("__p") === i, col(s"__dl_$i")).otherwise(acc)
-    }
-    val maxImpact = postings.join(docLens, "__id")
+    val maxImpact = postings
       .groupBy(col("term"), col("__bucket"), col("__p"))
-      .agg(max(col("tf")).as("max_tf"), min(dlOfProp).as("min_dl"))
+      .agg(max(col("tf")).as("max_tf"), min(col("__dl")).as("min_dl"))
       .cache()
     PostingsIndex(props, modes, postings, docLens, termDf, maxImpact,
       nDocs, propMeans, c.schema.idColumn, buckets, c.version,
@@ -223,14 +230,20 @@ object Postings {
 
   // --- query-time shared pieces ---------------------------------------------
 
-  /** Resolved query context. `activeByGroup` = for each tokenization group
-   * with ≥1 scored prop, the scored prop indices (into idx.props) — the
-   * reference's per-tokenization property lists: ONE index over all
-   * searchable props serves any scored subset (bm25 `properties:`), because
-   * df/tf/len stats restrict to the subset at query time. */
+  /** The query prologue both search paths share. `activeByGroup` = for each
+   * tokenization group with ≥1 scored prop, the scored prop indices (into
+   * idx.props) — the reference's per-tokenization property lists: ONE index
+   * over all searchable props serves any scored subset (bm25 `properties:`),
+   * because df/tf/len stats restrict to the subset at query time. */
+  private final case class Prologue(
+      termKeys: Seq[TermKey], activeByGroup: Map[Int, Seq[Int]], minMatch: Int,
+      avgPool: Double, fullSet: Boolean)
+
+  /** The pruned path's resolved context: the prologue's values plus
+   * `idfDup` (idf × duplicate-query-term count per (group, term)). */
   private final case class QueryCtx(
-      termKeys: Seq[TermKey], idfDup: Map[(Int, String), Double], minMatch: Int,
-      activeByGroup: Map[Int, Seq[Int]], avgPool: Double, fullSet: Boolean)
+      termKeys: Seq[TermKey], activeByGroup: Map[Int, Seq[Int]], minMatch: Int,
+      avgPool: Double, idfDup: Map[(Int, String), Double])
 
   private def resolveActive(idx: PostingsIndex, props: Option[Seq[String]]): Seq[Int] =
     props match {
@@ -254,18 +267,8 @@ object Postings {
       }
     }
 
-  /** The query prologue ctx() and search() share: resolved prop groups,
-   * term keys (with the stopword error rule), minMatch, pooled average
-   * length, and the per-(group, term) df FRAME — the precomputed dictionary
-   * for the full prop set, a term-pruned re-aggregation for a subset (a job
-   * over only the query terms' posting rows — the same work the dictionary
-   * lookup does plus one tiny shuffle). ctx() collects the frame driver-side
-   * into idf literals (scan scoring); search() keeps it lazy and joins it
-   * (index-served scoring composes into one job). */
-  private final case class Prologue(
-      termKeys: Seq[TermKey], activeByGroup: Map[Int, Seq[Int]],
-      minMatch: Int, avgPool: Double, fullSet: Boolean, dfFrame: DataFrame)
-
+  /** Resolved prop groups, term keys (with the stopword error rule),
+   * minMatch and the pooled average length. */
   private def prologue(idx: PostingsIndex, query: String, op: SearchOperator,
                        props: Option[Seq[String]]): Prologue = {
     val active = resolveActive(idx, props)
@@ -278,29 +281,34 @@ object Postings {
     if (termKeys.isEmpty && termKeysOf(idx, active, query, Set.empty).nonEmpty)
       Tokenize.onlyStopwordsError()
     require(termKeys.nonEmpty, "bm25: empty query after tokenization")
-    val fullSet = active.sorted == idx.props.indices
-    val dfFrame =
-      if (fullSet) idx.termDf.filter(col("term").isin(termKeys.map(_.term).distinct: _*))
-      else queryRows(idx, termKeys, activeByGroup)
-        .groupBy(col("__g"), col("term"))
-        .agg(countDistinct(col("__id")).cast("double").as("df"))
     Prologue(termKeys, activeByGroup, Bm25Search.minMatchOf(termKeys, op),
       Bm25Search.pooledAvgLen(
         activeByGroup.values.flatten.toSeq.sorted.map(idx.propMeans)),
-      fullSet, dfFrame)
+      fullSet = active.sorted == idx.props.indices)
   }
 
+  /** idf × duplicate-query-term count from per-(group, term) group-union doc
+   * frequencies; a term no doc carries has df 0. */
+  private def idfDupOf(idx: PostingsIndex, termKeys: Seq[TermKey],
+                       dfs: Map[(Int, String), Double]): Map[(Int, String), Double] =
+    termKeys.map { k =>
+      val n = dfs.getOrElse((k.group, k.term), 0.0)
+      (k.group, k.term) -> math.log(1.0 + (idx.nDocs - n + 0.5) / (n + 0.5)) * k.dup
+    }.toMap
+
+  /** The pruned path's context: df from the precomputed dictionary for the
+   * full prop set, a term-pruned re-aggregation of the query rows for a
+   * subset. */
   private def ctx(idx: PostingsIndex, query: String, op: SearchOperator,
                   props: Option[Seq[String]]): QueryCtx = {
     val p = prologue(idx, query, op, props)
-    val dfs: Map[(Int, String), Double] = p.dfFrame
-      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val idfDup = p.termKeys.map { k =>
-      val n = dfs.getOrElse((k.group, k.term), 0.0)
-      (k.group, k.term) ->
-        math.log(1.0 + (idx.nDocs - n + 0.5) / (n + 0.5)) * k.dup
-    }.toMap
-    QueryCtx(p.termKeys, idfDup, p.minMatch, p.activeByGroup, p.avgPool, p.fullSet)
+    val dfFrame =
+      if (p.fullSet) idx.termDf.filter(col("term").isin(p.termKeys.map(_.term).distinct: _*))
+      else queryRows(idx, p.termKeys, p.activeByGroup)
+        .groupBy(col("__g"), col("term"))
+        .agg(countDistinct(col("__id")).cast("double").as("df"))
+    QueryCtx(p.termKeys, p.activeByGroup, p.minMatch, p.avgPool, idfDupOf(idx, p.termKeys,
+      dfFrame.collect().map(r => (r.getInt(0), r.getString(1)) -> r.getDouble(2)).toMap))
   }
 
   /** The query's posting rows: term ∈ the group's terms AND __p ∈ the
@@ -318,34 +326,33 @@ object Postings {
       .withColumn("__g", groupOfProp(idx.groups))
   }
 
-  /** Merge the query rows per (group, term, doc): boosted frequency and
+  /** Per-doc scores over a (possibly bucket-restricted) postings subset for
+   * the pruned path: (__id, _score) after the minimum-should-match filter.
+   * The query rows merge per (group, term, doc) — boosted frequency and
    * distinct-term prop length summed across the term's props (reference:
-   * bm25_searcher.go:950-951), then saturate once and sum per doc. Shared by
-   * the lazy and pruned paths; `idfExpr` supplies idf·dupBoost either as a
-   * literal `when`-chain (pruned path — stats already on the driver) or from
-   * a broadcast dictionary join (lazy path). */
-  private def mergeAndScore(idx: PostingsIndex, q: QueryCtx, k1: Double, b: Double,
-                            boosts: Map[String, Double], rows: DataFrame,
-                            idfJoin: Option[DataFrame]): DataFrame = {
+   * bm25_searcher.go:950-951) — then saturate once and sum per doc, with
+   * idf·dupBoost as a literal `when`-chain. */
+  private def scored(idx: PostingsIndex, q: QueryCtx, k1: Double, b: Double,
+                     allowlist: Option[DataFrame], boosts: Map[String, Double],
+                     bucketFilter: Option[Seq[Int]]): DataFrame = {
+    val rows0 = queryRows(idx, q.termKeys, q.activeByGroup)
+    val rows1 = bucketFilter.map(bs => rows0.filter(col("__bucket").isin(bs: _*))).getOrElse(rows0)
+    // where-filter = allowlist before scoring (reference shard_read.go:536-550)
+    val rows = allowlist match {
+      case Some(ids) => rows1.join(
+        ids.select(col(idx.idCol).as("__id")), Seq("__id"), "left_semi")
+      case None => rows1
+    }
     val boostCol = idx.props.indices.foldLeft(lit(1.0)) { (acc, p) =>
       when(col("__p") === p, lit(boosts.getOrElse(idx.props(p), 1.0))).otherwise(acc)
     }
-    val dlOfProp = idx.props.indices.foldLeft(lit(null).cast("double")) { (acc, p) =>
-      when(col("__p") === p, col(s"__dl_$p")).otherwise(acc)
+    val idfLit = q.termKeys.foldLeft(lit(0.0)) { (acc, k) =>
+      when(col("__g") === k.group && col("term") === k.term,
+        lit(q.idfDup((k.group, k.term)))).otherwise(acc)
     }
-    val merged = rows.join(idx.docLens, "__id")
-      .groupBy(col("__g"), col("term"), col("__id"))
-      .agg(sum(boostCol * col("tf")).as("__freq"), sum(dlOfProp).as("__dlsum"))
-    val withIdf = idfJoin match {
-      case Some(dict) => merged.join(broadcast(dict), Seq("__g", "term"))
-      case None =>
-        val idfLit = q.termKeys.foldLeft(lit(0.0)) { (acc, k) =>
-          when(col("__g") === k.group && col("term") === k.term,
-            lit(q.idfDup((k.group, k.term)))).otherwise(acc)
-        }
-        merged.withColumn("__idf", idfLit)
-    }
-    withIdf
+    rows.groupBy(col("__g"), col("term"), col("__id"))
+      .agg(sum(boostCol * col("tf")).as("__freq"), sum(col("__dl")).as("__dlsum"))
+      .withColumn("__idf", idfLit)
       // freq=0 (a zero boost) scores 0 rather than 0/0 — same guard as the
       // scan path's when(freq > 0, …)
       .withColumn("__contrib",
@@ -360,31 +367,17 @@ object Postings {
       .drop("__matched")
   }
 
-  /** Per-doc scores over a (possibly bucket-restricted) postings subset:
-   * (__id, _score) after the minimum-should-match filter. */
-  private def scored(idx: PostingsIndex, q: QueryCtx, k1: Double, b: Double,
-                     allowlist: Option[DataFrame], boosts: Map[String, Double],
-                     bucketFilter: Option[Seq[Int]]): DataFrame = {
-    val rows0 = queryRows(idx, q.termKeys, q.activeByGroup)
-    val rows1 = bucketFilter.map(bs => rows0.filter(col("__bucket").isin(bs: _*))).getOrElse(rows0)
-    // where-filter = allowlist before scoring (reference shard_read.go:536-550)
-    val rows = allowlist match {
-      case Some(ids) => rows1.join(
-        ids.select(col(idx.idCol).as("__id")), Seq("__id"), "left_semi")
-      case None => rows1
-    }
-    mergeAndScore(idx, q, k1, b, boosts, rows, idfJoin = None)
-  }
-
-  /** BM25 scoring over the postings table — identical math to Bm25Search.
+  /** BM25 scoring over the postings table — identical math to Bm25Search,
+   * computed on the driver from ONE fetch of the query's posting rows (the
+   * reference reads, scores and merges posting lists in one process,
+   * bm25_searcher.go:183-193). The fetch holds at most nDocs × scored props
+   * × query terms rows, so the engine serves this arm only below its prune
+   * cutoff (Graft.bm25Serve); larger corpora take `searchPruned`.
    *
-   * Fully LAZY: unlike `searchPruned` (whose θ phase must materialize), this
-   * builds ONE plan — the per-term doc frequency joins in from the (tiny,
-   * broadcast) dictionary and idf is computed in the plan, so no driver jobs
-   * run at construction time and the search composes into larger DAGs
-   * (hybrid legs run inside one job instead of serializing driver phases).
-   * `Math.log` backs both the literal and codegen paths, so scores stay
-   * bit-identical to the scan path. */
+   * df counts every fetched row: a `where` allowlist only marks which docs
+   * may be returned and never changes df (reference shard_read.go:536-550 —
+   * idf stays collection-wide, as on the scan path). Returns a local
+   * (id, _score) frame in `score desc, id asc` order. */
   def search(idx: PostingsIndex, query: String, limit: Int,
              searchOperator: SearchOperator = SearchOperator.Or(1),
              k1: Double = 1.2, b: Double = 0.75,
@@ -392,26 +385,64 @@ object Postings {
              boosts: Map[String, Double] = Map.empty,
              props: Option[Seq[String]] = None): DataFrame = {
     val p = prologue(idx, query, searchOperator, props)
-    // duplicate-query-term boost rides in as a literal `when`-chain over the
-    // (tiny, ≤|terms|-row) df frame, broadcast onto the merged rows
-    val dupCol = p.termKeys.foldLeft(lit(1.0)) { (acc, k) =>
-      when(col("__g") === k.group && col("term") === k.term, lit(k.dup.toDouble)).otherwise(acc)
-    }
-    val dfTbl = p.dfFrame.withColumn("__idf",
-      log(lit(1.0) + (lit(idx.nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-        * dupCol)
-      .select(col("__g"), col("term"), col("__idf"))
     val rows0 = queryRows(idx, p.termKeys, p.activeByGroup)
     val rows = allowlist match {
-      case Some(ids) => rows0.join(
-        ids.select(col(idx.idCol).as("__id")), Seq("__id"), "left_semi")
-      case None => rows0
+      case Some(ids) => rows0.join(ids.select(col(idx.idCol).as("__id"))
+        .withColumn("__ok", lit(true)), Seq("__id"), "left")
+      case None => rows0.withColumn("__ok", lit(true))
     }
-    val q = QueryCtx(p.termKeys, Map.empty, p.minMatch, p.activeByGroup, p.avgPool, p.fullSet)
-    mergeAndScore(idx, q, k1, b, boosts, rows, idfJoin = Some(dfTbl))
-      .withColumnRenamed("__id", idx.idCol)
-      .orderBy(col(Bm25Search.ScoreCol).desc, col(idx.idCol).asc)
-      .limit(limit)
+    // a posting row is unique per (term, __id, __p): `distinct` undoes the
+    // repeats a duplicated allowlist id makes; the sort by __p fixes the
+    // order in which props sum per (term, doc)
+    val fetched = rows.select(col("__g"), col("term"), col("__id"), col("__p"),
+        col("tf"), col("__dl"), col("__ok").isNotNull)
+      .collect().distinct.sortBy(_.getInt(3))
+    val termIdx = p.termKeys.zipWithIndex.map { case (k, i) => (k.group, k.term) -> i }.toMap
+    val boostOf = idx.props.map(name => boosts.getOrElse(name, 1.0))
+    // per (term, doc): boosted frequency and distinct-term prop length
+    // summed across the term's props (reference: bm25_searcher.go:950-951)
+    val merged = mutable.HashMap.empty[(Int, Any), Array[Double]]
+    val allowed = mutable.HashSet.empty[Any]
+    fetched.foreach { r =>
+      val fd = merged.getOrElseUpdate(
+        (termIdx((r.getInt(0), r.getString(1))), r.get(2)), Array(0.0, 0.0))
+      fd(0) += boostOf(r.getInt(3)) * r.getDouble(4)
+      fd(1) += r.getDouble(5)
+      if (r.getBoolean(6)) allowed += r.get(2)
+    }
+    // group-union df = docs per (group, term) among ALL fetched rows
+    val idfDup = idfDupOf(idx, p.termKeys, merged.keys.toSeq.groupMapReduce { case (ti, _) =>
+      (p.termKeys(ti).group, p.termKeys(ti).term) }(_ => 1.0)(_ + _))
+    val top = merged.toSeq.groupBy { case ((_, id), _) => id }.iterator.collect {
+      case (id, terms) if allowed(id) && terms.size >= p.minMatch =>
+        // saturate once per (term, doc), sum the doc's terms in query order;
+        // freq=0 (a zero boost) scores 0 rather than 0/0 — the scan path's
+        // when(freq > 0, …) guard
+        Row(id, terms.sortBy(_._1._1).map { case ((ti, _), Array(f, dl)) =>
+          val k = p.termKeys(ti)
+          if (f > 0) idfDup((k.group, k.term)) * f / (f + k1 * ((1.0 - b) + b * dl / p.avgPool))
+          else 0.0
+        }.sum)
+    }.toSeq.sorted(byScoreThenId).take(limit)
+    val schema = StructType(Seq(idx.postings.schema("__id").copy(name = idx.idCol),
+      StructField(Bm25Search.ScoreCol, DoubleType)))
+    idx.postings.sparkSession.createDataFrame(top.asJava, schema)
+  }
+
+  /** Spark's `score desc, id asc` order: scores compare with -0.0 == 0.0 and
+   * NaN greatest (SQLOrderingUtil), string ids by UTF-8 bytes
+   * (UTF8String.compareTo), a null id first. */
+  private val byScoreThenId: Ordering[Row] = (x, y) => {
+    val (sx, sy) = (x.getDouble(1), y.getDouble(1))
+    val byScore = if (sx == sy) 0 else java.lang.Double.compare(sy, sx)
+    if (byScore != 0) byScore
+    else (x.get(0), y.get(0)) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+      case (a: Comparable[_], b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
   }
 
   /**
@@ -438,10 +469,16 @@ object Postings {
                    allowlist: Option[DataFrame] = None,
                    boosts: Map[String, Double] = Map.empty,
                    props: Option[Seq[String]] = None): DataFrame = {
-    // pruning is proven sound only on the monotone parameter range
-    if (k1 < 0 || b < 0 || b > 1 || boosts.values.exists(_ < 0))
-      return search(idx, query, limit, searchOperator, k1, b, allowlist, boosts, props)
     val q = ctx(idx, query, searchOperator, props)
+    def finish(d: DataFrame): DataFrame = d
+      .withColumnRenamed("__id", idx.idCol)
+      .orderBy(col(Bm25Search.ScoreCol).desc, col(idx.idCol).asc)
+      .limit(limit)
+    // pruning is proven sound only on the monotone parameter range; outside
+    // it every bucket is scored, still in Spark (this arm serves corpora too
+    // large for a driver-side posting fetch)
+    if (k1 < 0 || b < 0 || b > 1 || boosts.values.exists(_ < 0))
+      return finish(scored(idx, q, k1, b, allowlist, boosts, None))
 
     // driver-side bucket bounds from the (tiny) block-max table
     val impactConds: Seq[Column] = q.activeByGroup.toSeq.sortBy(_._1).flatMap { case (g, ps) =>
@@ -475,10 +512,6 @@ object Postings {
               (freqUpper + k1 * ((1.0 - b) + b * dlLower / q.avgPool))
         }.sum
       }
-    def finish(d: DataFrame): DataFrame = d
-      .withColumnRenamed("__id", idx.idCol)
-      .orderBy(col(Bm25Search.ScoreCol).desc, col(idx.idCol).asc)
-      .limit(limit)
     if (bounds.isEmpty)
       return finish(scored(idx, q, k1, b, allowlist, boosts, None)).limit(0)
 

@@ -76,13 +76,16 @@ final class CollectionStore(val spark: SparkSession, val root: String,
    * session width and needed AQE's coalescing — the adaptive write width
    * made that objection obsolete. Scoped HERE, not globally: scan/join/agg
    * queries keep AQE's skew and coalescing at scale. Set
-   * `spark.graft.mutationAqe=true` to keep AQE inside mutations too.
+   * `spark.graft.mutationAqe=true` to keep AQE inside mutations too; a value
+   * that is not a boolean falls back to the default instead of failing the
+   * write.
    * The conf set/restore is session-visible for the mutation's duration; a
    * concurrently-planned reader would merely plan without AQE once —
    * a perf nuance, never a correctness one (AQE is purely physical).
    */
   private def withMutationAqe[T](body: => T): T =
-    if (spark.conf.getOption("spark.graft.mutationAqe").exists(_.toBoolean)) body
+    if (spark.conf.getOption("spark.graft.mutationAqe")
+        .exists(v => scala.util.Try(v.trim.toBoolean).getOrElse(false))) body
     else CollectionStore.withAqeOff(spark)(body)
 
   def version: Int =

@@ -1,9 +1,16 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-import graft.model.{Bm25, GetParams, Pagination, SearchOperator, Where}
-import graft.operators.{Bm25Search, Postings}
+import graft.engine.Collection
+import graft.model._
+import graft.operators.{Bm25Search, Postings, PostingsIndex}
 
 /** The postings-table BM25 path must reproduce the scan path bit-for-bit
  * (same formula, different physical plan). */
@@ -11,20 +18,87 @@ class PostingsSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private def hitsOf(df: DataFrame, id: String): Seq[(Any, Double)] =
+    df.select(col(id), col(Bm25Search.ScoreCol)).collect()
+      .map(r => (r.get(0), r.getDouble(1))).toSeq
+
+  /** The postings top-k (driver-scored `search`, or `searchPruned` when
+   * `pruned`) equals the scan path's on the same params (same ids in the
+   * same order, scores within 1e-9), optionally under a `where` allowlist.
+   * Returns the postings hits. */
+  private def assertParity(c: Collection, idx: PostingsIndex, kw: Bm25, limit: Int,
+                           where: Option[Column] = None,
+                           pruned: Boolean = false): Seq[(Any, Double)] = {
+    val id = c.schema.idColumn
+    val base = where.map(c.df.filter)
+    val specs = Bm25Search.parseProps(kw.properties)
+    val scan = hitsOf(Bm25Search.search(c, kw, limit, base), id)
+    val f = if (pruned) Postings.searchPruned _ else Postings.search _
+    val posted = hitsOf(f(idx, kw.query, limit, kw.searchOperator, kw.k1, kw.b,
+      base.map(_.select(col(id))), specs.map(s => s.name -> s.boost).toMap,
+      Some(specs.map(_.name))), id)
+    assert(scan.nonEmpty, s"vacuous parity case $kw")
+    assert(posted.map(_._1) == scan.map(_._1), s"ids or order differ for $kw")
+    scan.zip(posted).foreach { case ((_, a), (d, b)) =>
+      assert(math.abs(a - b) < 1e-9, s"doc $d: scan $a vs postings $b for $kw")
+    }
+    posted
+  }
+
   test("postings search == scan search (scores within 1e-9, same order)") {
     val g = Fixtures.graft(spark, sf)
     val c = g.collection("Document")
     val idx = Postings.build(c, "text")
-    for (q <- Seq("spark join stream", "table scan")) {
-      val scan = Bm25Search.search(c, Bm25(q, Seq("text")), 20)
-        .select(col("doc_id"), col(Bm25Search.ScoreCol))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      val posted = Postings.search(idx, q, 20)
-        .select(col("doc_id"), col(Bm25Search.ScoreCol))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      assert(scan.map(_._1).toSeq == posted.map(_._1).toSeq, s"doc order differs for '$q'")
-      scan.zip(posted).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
-    }
+    val cases = Seq(
+      Bm25("spark join stream", Seq("text")),
+      Bm25("table scan", Seq("text")),
+      Bm25("spark join stream window", Seq("text"), SearchOperator.Or(2)),
+      Bm25("table scan", Seq("text"), SearchOperator.AndOp),
+      Bm25("spark spark join stream spark", Seq("text")),   // duplicate query terms
+      Bm25("spark join stream", Seq("text"), k1 = 0.0))
+    cases.foreach(kw => assertParity(c, idx, kw, 20))
+    // a where allowlist only restricts which docs return: df stays
+    // collection-wide, so an allowed doc scores exactly as it does unfiltered
+    val kw = Bm25("spark join stream", Seq("text"))
+    val allowed = assertParity(c, idx, kw, 15, Some(col("doc_id") % 3 =!= 0))
+    val unfiltered = hitsOf(Postings.search(idx, kw.query, 100000), "doc_id").toMap
+    allowed.foreach { case (d, s) => assert(unfiltered(d) == s, s"doc $d: df moved under the allowlist") }
+    assert(allowed.map(_._1) != hitsOf(Postings.search(idx, kw.query, 15), "doc_id").map(_._1),
+      "sanity: the allowlist must change the page")
+  }
+
+  test("postings == scan: string ids with tied scores, a boosted two-prop group, zero boost, k1=0, after delta") {
+    import spark.implicits._
+    val schema = CollectionSchema("Tied", "id", Seq(
+      Property("title", PropType.Text, Tokenization.Word),
+      Property("body", PropType.Text, Tokenization.Word)))
+    val docs = Seq(
+      ("b", "spark join", "stream window spark"), ("a", "spark join", "stream window spark"),
+      ("\u00e9", "spark join", "stream window spark"), ("Z", "spark join", "stream window spark"),
+      ("c", "join", "spark spark table"), ("d", null, "stream"), ("e", "table", "merge sort"),
+      ("f", "spark", null), ("ab", "window", "join stream spark spark"), ("aa", "merge", "hash"))
+    val c0 = Collection(schema, docs.toDF("id", "title", "body"))
+    val idx0 = Postings.build(c0, Seq("title", "body"), buckets = 2)
+    val cases = Seq(
+      Bm25("spark stream", Seq("title^2", "body^0")),
+      Bm25("spark join window", Seq("title", "body^1.5")),
+      Bm25("spark join", Seq("title", "body"), k1 = 0.0),
+      Bm25("spark spark join", Seq("title", "body"), SearchOperator.Or(2)),
+      Bm25("spark join", Seq("title", "body"), SearchOperator.AndOp),
+      Bm25("stream spark", Seq("body")))
+    val tied = assertParity(c0, idx0, cases.head, 10)
+    assert(tied.filter(_._2 == tied(1)._2).map(_._1) == Seq("Z", "a", "b", "\u00e9"),
+      s"tied docs must order by id: $tied")
+    cases.foreach(kw => assertParity(c0, idx0, kw, 10))
+    assertParity(c0, idx0, cases(1), 10, Some(col("id") =!= "ab"))
+
+    // upsert (replace "a", add "new") + delete "b"
+    val changed = Seq(("a", "merge table", "sort"), ("new", "spark spark", "join stream")).toDF("id", "title", "body")
+    val c1 = Collection(schema, c0.df.filter(!col("id").isin("a", "b")).unionByName(changed))
+    val idx1 = Postings.delta(idx0, c1, changed, Some(Seq("b").toDF("id")))
+    cases.foreach(kw => assertParity(c1, idx1, kw, 10))
+    val after = hitsOf(Postings.search(idx1, "spark merge", 10), "id").map(_._1)
+    assert(after.contains("a") && after.contains("new") && !after.contains("b"))
   }
 
   test("block-max pruned search (WAND analogue) is exact vs unpruned") {
@@ -40,6 +114,30 @@ class PostingsSpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(full.map(_._1) == pruned.map(_._1), s"doc order differs for '$q'")
       full.zip(pruned).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
+    }
+  }
+
+  test("pruned arm scores out-of-range b and negative boosts unpruned in Spark, at scan parity") {
+    // searchPruned serves corpora at or above the prune cutoff, too large for
+    // the driver-side posting fetch: queries outside the range its bound is
+    // proven on (k1 < 0, b outside [0, 1], a negative boost) must still be
+    // scored by a Spark plan over the postings, not a driver-built frame
+    val g = Fixtures.graft(spark, sf)
+    val c = g.collection("DocVec")
+    val idx = Postings.build(c, Seq("text", "lang"), buckets = 16)
+    val cases = Seq(
+      Bm25("spark join stream", Seq("text"), b = 1.5),
+      Bm25("spark join en", Seq("text^2", "lang^-1")),
+      Bm25("stream window de", Seq("text", "lang^-0.5"), SearchOperator.Or(2)))
+    cases.foreach { kw =>
+      assertParity(c, idx, kw, 15, pruned = true)
+      assertParity(c, idx, kw, 15, Some(col("doc_id") % 2 === 0), pruned = true)
+      val specs = Bm25Search.parseProps(kw.properties)
+      val plan = Postings.searchPruned(idx, kw.query, 15, kw.searchOperator, kw.k1, kw.b,
+        boosts = specs.map(s => s.name -> s.boost).toMap, props = Some(specs.map(_.name)))
+        .queryExecution.optimizedPlan
+      assert(plan.find(_.isInstanceOf[LocalRelation]).isEmpty,
+        s"out-of-range query must score in Spark for $kw:\n$plan")
     }
   }
 
@@ -61,24 +159,54 @@ class PostingsSpec extends SparkSpecBase {
     df.select(col("doc_id"), round(col("_score"), 9)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  /** Runs `body` and counts the Spark jobs it started on this thread (by
+   * job group). A marker job run afterwards in its own group proves the
+   * listener bus has delivered every earlier job-start event. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val started = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted read")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "listener-bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus never delivered the marker job")
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("engine bm25 leg serves from the registered postings index (plan has no corpus tokenization)") {
     val g = Fixtures.graft(spark, sf)
     val params = GetParams("Document",
       bm25 = Some(Bm25("spark join stream window", properties = Seq("text"))),
       pagination = Some(Pagination(limit = 20)),
       properties = Seq("doc_id"), additional = Set("score"))
-    val served = g.get(params)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(!plan.contains("__tok_"),
+    // warm-up read: the first one also fills the in-memory postings cache
+    engineHits(g.get(params))
+    val ((served, hits), jobs) = jobsOf {
+      val s = g.get(params)
+      (s, engineHits(s))
+    }
+    assert(!served.queryExecution.executedPlan.toString.contains("__tok_"),
       "engine bm25 plan re-tokenizes the corpus — postings index not routed")
-    assert(plan.contains("InMemoryTableScan") || plan.contains("__bucket"),
-      "engine bm25 plan shows no postings-table scan")
+    assert(jobs <= 2, s"served bm25 read ran $jobs Spark jobs; expected posting fetch + page")
     // parity vs the scan path on the same params
     val scan = Bm25Search.search(g.collection("Document"),
       Bm25("spark join stream window", Seq("text")), 20)
       .select(col("doc_id"), round(col(Bm25Search.ScoreCol), 9))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(engineHits(served) == scan)
+    assert(hits == scan)
   }
 
   test("engine bm25 with a where-filter applies the allowlist before scoring (postings path)") {
