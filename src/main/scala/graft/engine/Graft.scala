@@ -1209,6 +1209,11 @@ final class Graft(val spark: SparkSession) {
 
     val limit = params.pagination.map(p => p.offset + p.limit)
       .orElse(params.cursor.map(_.limit))
+    // the page bound (search.go getTotalLimit) is checked before any leg
+    // runs: search legs fetch their top-k at plan build
+    require(params.pagination.map(p => p.offset.toLong + p.limit)
+      .orElse(params.cursor.map(_.limit.toLong)).forall(_ <= queryMaximumResults),
+      "query maximum results exceeded")
 
     // overfetch when grouping needs a deeper candidate pool
     // (reference: explorer groupBy pool = groups * objectsPerGroup)
@@ -1448,19 +1453,13 @@ final class Graft(val spark: SparkSession) {
       // bound the group_index — hybrid_group_by_array_test.go's 4-hit bed
       // yields 9 full groups under the default limit, never a truncated group
       case Some(p) if params.groupBy.isDefined =>
-        require(p.offset.toLong + p.limit.toLong <= queryMaximumResults,
-          "query maximum results exceeded" /* search.go getTotalLimit */)
         groupedOrSorted.filter(col("group_index") > p.offset &&
           col("group_index") <= p.offset.toLong + p.limit)
       case Some(p) =>
-        require(p.offset.toLong + p.limit.toLong <= queryMaximumResults,
-          "query maximum results exceeded" /* search.go getTotalLimit */)
         if (p.offset > 0) groupedOrSorted.offset(p.offset).limit(p.limit)
         else groupedOrSorted.limit(p.limit)
       case None => params.cursor match {
-        case Some(cur) =>
-          require(cur.limit.toLong <= queryMaximumResults, "query maximum results exceeded")
-          groupedOrSorted.limit(cur.limit)
+        case Some(cur) => groupedOrSorted.limit(cur.limit)
         case None if radiusSearch                         => groupedOrSorted
         case None if queryMaximumResults >= Int.MaxValue  => groupedOrSorted
         case None => groupedOrSorted.limit(queryMaximumResults.toInt)

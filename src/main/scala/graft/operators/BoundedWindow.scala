@@ -11,20 +11,19 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
  * table, and a false alarm when the input is a top-k pool. Every call site
  * in this engine is the latter, and routes through this helper to say so:
  *
- *  - hybrid fusion legs (`Hybrid.fuseMany`): each leg is the output of a
- *    TakeOrderedAndProject bounded to fetchN rows (overfetched top-k), so
- *    the rank/min-max windows see ≤ fetchN × legs rows;
  *  - autocut (`Hybrid.autocut`): runs over an already-ranked top-k frame;
  *  - result grouping (`ResultGroupBy`, `Graft.get`'s groupBy arm): the rank
  *    pool is `limit`ed to max(limit, groups × objectsPerGroup) BEFORE the
- *    window (Graft.scala "Bound the rank pool BEFORE the global window").
+ *    window (Graft.scala "Bound the rank pool BEFORE the global window");
+ *  - boost rescoring (`Boost`): runs over the depth-bounded
+ *    search pool (Graft.scala boost overfetch, capped at
+ *    queryMaximumResults).
  *
  * A single task ranking k rows (k ≤ a few hundred at the API's pagination
- * bounds) is the CORRECT plan — the reference performs the same fusion and
- * autocut driver-side over the merged top-k lists
- * (usecases/traverser/hybrid/hybrid_fusion.go, entities/autocut/autocut.go).
+ * bounds) is the CORRECT plan — the reference performs the same autocut
+ * driver-side over the merged top-k list (entities/autocut/autocut.go).
  * At 100 TB the bounded pool size is unchanged: k rows cross the exchange
- * per partition (TakeOrderedAndProject), then one task fuses them.
+ * per partition (TakeOrderedAndProject), then one task ranks them.
  *
  * If a NEW call site cannot prove its input bounded, do not use this helper —
  * partition the window or bound the frame first.

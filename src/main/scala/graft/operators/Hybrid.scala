@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Collection
 import graft.model.{FusionType, Metric, NearVector, Hybrid => HybridParams}
@@ -12,11 +13,14 @@ import graft.model.{FusionType, Metric, NearVector, Hybrid => HybridParams}
  * (reference: usecases/traverser/explorer_hybrid.go:37-120,
  * hybrid/searcher.go:75-156; fusion math hybrid/hybrid_fusion.go).
  *
- * Both legs are bounded top-N frames (overfetch, reference
- * explorer_hybrid.go:66-71), so the fusion full-outer join is a join of two
- * k-row frames — tiny at any collection size; ranks come from window
- * functions over those k rows. The expensive work (scan+TopK per leg) stays
- * embarrassingly parallel.
+ * Each leg is a bounded top-fetchN frame (overfetch, reference
+ * explorer_hybrid.go:66-71). Its (id, score) list is fetched to the driver,
+ * at most legs × fetchN rows in all, and fused, ranked and cut to the page
+ * there in plain Scala, as the reference fuses in-process
+ * (hybrid_fusion.go:22-182). The page then reads its rows from the
+ * collection by id with the scores attached from literal maps, so no join
+ * or shuffle runs over the legs. The expensive work (scan or index probe +
+ * TopK per leg) stays in Spark.
  */
 object HybridSearch {
 
@@ -48,6 +52,95 @@ object HybridSearch {
   private def goNum(c: Column): Column =
     when(c.cast("double") === c.cast("long").cast("double"),
       c.cast("long").cast("string")).otherwise(c.cast("float").cast("string"))
+
+  /** One fetched leg: its (id, score) hits, with unique ids and a
+   * similarity-like score (higher = better), the leg's weight and its
+   * explain label. */
+  final case class Leg(hits: Seq[(Any, Double)], weight: Double, name: String)
+
+  /** One fused hit. `raw(i)` is leg i's score for the id and `contrib(i)`
+   * what leg i adds to the fused score (the explain fragment's value); both
+   * are None when leg i did not return the id. `secondary` is the first raw
+   * score in leg order, so it is never null for a hit. */
+  final case class Fused(id: Any, score: Double, secondary: Double,
+                         raw: IndexedSeq[Option[Double]], contrib: IndexedSeq[Option[Double]])
+
+  /** `rankOrder` on the driver: float32 score desc, float32 secondary desc,
+   * then id asc. */
+  private[graft] val byRank: Ordering[Fused] = (x, y) => {
+    val byScore = SparkOrder.compareDouble(y.score.toFloat, x.score.toFloat)
+    if (byScore != 0) byScore
+    else {
+      val bySecondary = SparkOrder.compareDouble(y.secondary.toFloat, x.secondary.toFloat)
+      if (bySecondary != 0) bySecondary else SparkOrder.compareId(x.id, y.id)
+    }
+  }
+
+  private val sparkDoubles: Ordering[Double] = SparkOrder.compareDouble(_, _)
+
+  /**
+   * Fuse the fetched legs; the hits come back in `rankOrder`.
+   * rankedFusion: score = Σ w_leg / (60 + rank_leg), a leg ranking its hits
+   * by score desc, id asc (hybrid_fusion.go:22-81).
+   * relativeScore: min-max normalize each leg to [0,1], a flat leg to 1,
+   * then the weighted sum (hybrid_fusion.go:93-182; default since 1.24).
+   * A leg that did not return an id adds 0.0, and the sum runs in leg
+   * order. A single leg scores raw × w; its explain value is the
+   * relativeScore one whatever the fusion (FusionRelativeScore runs even
+   * over one set).
+   */
+  def fuse(legs: Seq[Leg], fusion: FusionType): Seq[Fused] = {
+    val relative = legs.size == 1 || fusion == FusionType.RelativeScore
+    val contribs: Seq[Map[Any, Double]] = legs.map { leg =>
+      if (leg.hits.isEmpty) Map.empty[Any, Double]
+      else if (relative) {
+        // Spark's min/max: NaN is the greatest double, and NaN equals NaN
+        val scores = leg.hits.map(_._2)
+        val (mn, mx) = (scores.min(sparkDoubles), scores.max(sparkDoubles))
+        val flat = mx == mn || (mx.isNaN && mn.isNaN)
+        leg.hits.map { case (id, s) =>
+          id -> (if (flat) 1.0 else (s - mn) / (mx - mn)) * leg.weight
+        }.toMap
+      } else
+        leg.hits.sorted(SparkOrder.byScoreThenId).zipWithIndex.map { case ((id, _), i) =>
+          id -> leg.weight / (RrfK + (i + 1))
+        }.toMap
+    }
+    val raws = legs.map(_.hits.toMap)
+    legs.flatMap(_.hits.map(_._1)).distinct.map { id =>
+      val raw = raws.map(_.get(id)).toIndexedSeq
+      val contrib = contribs.map(_.get(id)).toIndexedSeq
+      val score =
+        if (legs.size == 1) raw(0).get * legs(0).weight
+        else contrib.map(_.getOrElse(0.0)).reduce(_ + _)
+      Fused(id, score, raw.flatten.head, raw, contrib)
+    }.sorted(byRank)
+  }
+
+  /** Per-result explain fragments, in the fusion's own wording, over the
+   * page's per-leg raw scores and contributions:
+   * ranked — "... contributed <w/(60+rank)> to the score", fragments in LEG
+   * order each behind a newline (hybrid_fusion.go:40-48);
+   * relativeScore (and a single leg) — "... original score <raw>,
+   * normalized score: <weighted-normalized>", fragments in REVERSE leg
+   * order joined by " - " with each behind a newline
+   * (hybrid_fusion.go:136-144). */
+  private def explain(id: String, names: Seq[String], relative: Boolean,
+                      raw: Int => Column, contrib: Int => Column): Column =
+    if (!relative)
+      concat(names.indices.map { i =>
+        val frag = format_string(
+          s"Hybrid (Result Set ${names(i)}) Document %s contributed %s to the score",
+          col(id).cast("string"), goNum(contrib(i)))
+        coalesce(when(raw(i).isNotNull, concat(lit("\n"), frag)), lit(""))
+      }: _*)
+    else
+      concat_ws(" - ", names.indices.reverse.map { i =>
+        when(raw(i).isNotNull, concat(lit("\n"), format_string(
+          s"Hybrid (Result Set ${names(i)}) Document %s: " +
+            "original score %s, normalized score: %s",
+          col(id).cast("string"), goNum(raw(i)), goNum(contrib(i)))))
+      }: _*)
 
   def search(
       c: Collection,
@@ -125,124 +218,36 @@ object HybridSearch {
       return if (keepSecondary) empty else empty.drop(SecondaryCol)
     }
 
-    val fused: DataFrame = legs match {
-      case Seq((df, w, name)) =>
-        // pure-leg degenerate case: weighted raw score; the explain fragment
-        // still renders the fusion's normalized contribution
-        // (FusionRelativeScore runs even over one set)
-        val wnd = BoundedWindow.all()
-        val mn = min(col("__s")).over(wnd); val mx = max(col("__s")).over(wnd)
-        val norm = when(mx === mn, lit(w)).otherwise((col("__s") - mn) / (mx - mn) * w)
-        df.withColumn(ExplainCol, concat(lit("\n"),
-            format_string(s"Hybrid (Result Set $name) Document %s: " +
-              "original score %s, normalized score: %s",
-              col(id).cast("string"), goNum(col("__s")), goNum(norm))))
-          .withColumn(ScoreCol, col("__s") * w)
-          .withColumn(SecondaryCol, col("__s")).drop("__s")
-      case many => fuseMany(many, id, params.fusionType)
+    // fetch each bounded leg (a postings-served sparse leg is already a
+    // local frame) and fuse, rank and cut the page on the driver; a row
+    // without a score (no vector to compare) is no hit
+    val fetched = legs.map { case (df, w, name) =>
+      Leg(df.collect().toSeq.collect { case r if !r.isNullAt(1) => (r.get(0), r.getDouble(1)) },
+        w, name)
     }
-
-    val ranked = fused
-      .orderBy(rankOrder(id): _*)
-      .limit(limit)
-    // decorate back with the collection's columns (ids are unique)
-    val decorated = ranked.join(filtered.getOrElse(c.df), Seq(id), "inner")
+    val page = fuse(fetched, params.fusionType).take(limit)
+    // a literal map keyed by the page's ids; null for an id without a value
+    def byId(values: Seq[(Any, Double)]): Column =
+      if (values.isEmpty) lit(null).cast(DoubleType)
+      else element_at(map_from_arrays(array(values.map(v => lit(v._1)): _*),
+        array(values.map(v => lit(v._2)): _*)), col(id))
+    def perHit(f: Fused => Option[Double]): Column = byId(page.flatMap(h => f(h).map(h.id -> _)))
+    val score = byId(page.map(h => h.id -> h.score)).as(ScoreCol)
+    val secondary = byId(page.map(h => h.id -> h.secondary)).as(SecondaryCol)
+    val explained = explain(id, fetched.map(_.name),
+      relative = fetched.size == 1 || params.fusionType == FusionType.RelativeScore,
+      raw = i => perHit(_.raw(i)), contrib = i => perHit(_.contrib(i))).as(ExplainCol)
+    val fusedCols =
+      if (fetched.size == 1) Seq(explained, score, secondary) else Seq(score, secondary, explained)
+    // the page's rows from the collection (ids are unique), laid out as
+    // id, fused columns, then the collection's other columns
+    val base = filtered.getOrElse(c.df)
+    val decorated = base
+      .filter(if (page.isEmpty) lit(false) else col(id).isin(page.map(_.id): _*))
+      .select((col(id) +: fusedCols) ++
+        base.columns.filterNot(_ == id).map(n => col(s"`${n.replace("`", "``")}`")): _*)
       .orderBy(rankOrder(id): _*)
     if (keepSecondary) decorated else decorated.drop(SecondaryCol)
-  }
-
-  /**
-   * Fuse two scored legs on the id column (the classic alpha-weighted shape;
-   * delegates to fuseMany with legs ordered sparse-then-dense).
-   */
-  def fuse(
-      sparse: DataFrame, dense: DataFrame, id: String,
-      fusion: FusionType, wSparse: Double, wDense: Double): DataFrame =
-    fuseMany(Seq(
-      (sparse.withColumnRenamed("__s_sparse", "__s"), wSparse, "keyword"),
-      (dense.withColumnRenamed("__s_dense", "__s"), wDense, "vector")), id, fusion)
-
-  /**
-   * Fuse N weighted legs on the id column — each leg df is (id, __s) with a
-   * similarity-like score (higher = better), already bounded to its top-N
-   * frame (so every window below runs over ≤ fetchN rows).
-   * rankedFusion: score = Σ w_leg / (60 + rank_leg)  (hybrid_fusion.go:22-81)
-   * relativeScore: min-max normalize each leg to [0,1], weighted sum
-   * (hybrid_fusion.go:93-182; default since 1.24).
-   * SecondaryCol carries the first non-null raw leg score in leg order for
-   * tie-breaking (hybrid_fusion.go:68-79 SecondarySortValue).
-   */
-  def fuseMany(legs: Seq[(DataFrame, Double, String)], id: String, fusion: FusionType): DataFrame = {
-    require(legs.size >= 2, "fuseMany needs at least two legs")
-    // ONE plan for all legs (guide §2.4 — remove shuffles outright): tag each
-    // (already top-N-bounded) leg with its index, union, rank/normalize with
-    // a single window PARTITIONED BY the leg tag, then pivot back to per-leg
-    // columns with one id-keyed hash aggregate. The previous shape — one
-    // single-partition window exchange PER LEG feeding a chain of full-outer
-    // SortMergeJoins (2 exchanges + 2 sorts each; full-outer cannot
-    // broadcast) — paid ~3N-1 exchanges for frames of ≤fetchN rows. This
-    // shape pays 2 (window hash + aggregate hash) for any leg count.
-    // Per-id equivalence: every leg carries unique ids (each is a top-N over
-    // an id-unique collection frame), so max(when(__leg = i, x)) recovers
-    // exactly the full-outer join's per-leg cell — the value when leg i
-    // returned the id, null otherwise. Ranks/normals are computed per leg
-    // partition, identical to the per-leg windows they replace.
-    val tagged = legs.zipWithIndex.map { case ((df, _, _), i) =>
-      df.select(col(id), col("__s"), lit(i).as("__leg"))
-    }.reduce(_.unionByName(_))
-    val wLeg = Window.partitionBy(col("__leg"))
-    val (metric, mName) = fusion match {
-      case FusionType.Ranked =>
-        (tagged.withColumn("__m",
-          row_number().over(wLeg.orderBy(col("__s").desc, col(id).asc))), "__r")
-      case FusionType.RelativeScore =>
-        val mn = min(col("__s")).over(wLeg); val mx = max(col("__s")).over(wLeg)
-        (tagged.withColumn("__m",
-          when(mx === mn, lit(1.0)).otherwise((col("__s") - mn) / (mx - mn))), "__n")
-    }
-    val aggs: Seq[Column] =
-      legs.indices.map(i => max(when(col("__leg") === i, col("__s"))).as(s"__s_$i")) ++
-      legs.indices.map(i => max(when(col("__leg") === i, col("__m"))).as(s"${mName}_$i"))
-    val joined = metric.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
-    val score: Column = fusion match {
-      case FusionType.Ranked =>
-        legs.indices.map(i =>
-          coalesce(lit(legs(i)._2) / (lit(RrfK) + col(s"__r_$i")), lit(0.0))).reduce(_ + _)
-      case FusionType.RelativeScore =>
-        legs.indices.map(i =>
-          coalesce(col(s"__n_$i") * legs(i)._2, lit(0.0))).reduce(_ + _)
-    }
-    val rankCols = fusion match {
-      case FusionType.Ranked        => legs.indices.map(i => s"__r_$i")
-      case FusionType.RelativeScore => legs.indices.map(i => s"__n_$i")
-    }
-    // per-result explain fragments, exactly the fusion's own wording:
-    // ranked — "... contributed <w/(60+rank)> to the score", fragments in
-    // LEG order each behind a newline (hybrid_fusion.go:40-48);
-    // relativeScore — "... original score <raw>, normalized score:
-    // <weighted-normalized>", fragments in REVERSE leg order joined by
-    // " - " with each behind a newline (hybrid_fusion.go:136-144)
-    val explain: Column = fusion match {
-      case FusionType.Ranked =>
-        concat(legs.indices.map { i =>
-          val frag = format_string(
-            s"Hybrid (Result Set ${legs(i)._3}) Document %s contributed %s to the score",
-            col(id).cast("string"), goNum(lit(legs(i)._2) / (lit(RrfK) + col(s"__r_$i"))))
-          coalesce(when(col(s"__r_$i").isNotNull, concat(lit("\n"), frag)), lit(""))
-        }: _*)
-      case FusionType.RelativeScore =>
-        concat_ws(" - ", legs.indices.reverse.map { i =>
-          when(col(s"__s_$i").isNotNull, concat(lit("\n"), format_string(
-            s"Hybrid (Result Set ${legs(i)._3}) Document %s: " +
-              "original score %s, normalized score: %s",
-            col(id).cast("string"), goNum(col(s"__s_$i")),
-            goNum(col(s"__n_$i") * legs(i)._2))))
-        }: _*)
-    }
-    joined.withColumn(ScoreCol, score)
-      .withColumn(SecondaryCol, coalesce(legs.indices.map(i => col(s"__s_$i")): _*))
-      .withColumn(ExplainCol, explain)
-      .drop((rankCols ++ legs.indices.map(i => s"__s_$i")): _*)
   }
 
   /**

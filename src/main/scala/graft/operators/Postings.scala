@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.Collection
 import graft.model.{SearchOperator, Tokenization}
@@ -418,31 +417,15 @@ object Postings {
         // saturate once per (term, doc), sum the doc's terms in query order;
         // freq=0 (a zero boost) scores 0 rather than 0/0 — the scan path's
         // when(freq > 0, …) guard
-        Row(id, terms.sortBy(_._1._1).map { case ((ti, _), Array(f, dl)) =>
+        id -> terms.sortBy(_._1._1).map { case ((ti, _), Array(f, dl)) =>
           val k = p.termKeys(ti)
           if (f > 0) idfDup((k.group, k.term)) * f / (f + k1 * ((1.0 - b) + b * dl / p.avgPool))
           else 0.0
-        }.sum)
-    }.toSeq.sorted(byScoreThenId).take(limit)
+        }.sum
+    }.toSeq.sorted(SparkOrder.byScoreThenId).take(limit)
     val schema = StructType(Seq(idx.postings.schema("__id").copy(name = idx.idCol),
       StructField(Bm25Search.ScoreCol, DoubleType)))
-    idx.postings.sparkSession.createDataFrame(top.asJava, schema)
-  }
-
-  /** Spark's `score desc, id asc` order: scores compare with -0.0 == 0.0 and
-   * NaN greatest (SQLOrderingUtil), string ids by UTF-8 bytes
-   * (UTF8String.compareTo), a null id first. */
-  private val byScoreThenId: Ordering[Row] = (x, y) => {
-    val (sx, sy) = (x.getDouble(1), y.getDouble(1))
-    val byScore = if (sx == sy) 0 else java.lang.Double.compare(sy, sx)
-    if (byScore != 0) byScore
-    else (x.get(0), y.get(0)) match {
-      case (null, null) => 0
-      case (null, _) => -1
-      case (_, null) => 1
-      case (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-      case (a: Comparable[_], b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
-    }
+    idx.postings.sparkSession.createDataFrame(top.map { case (i, s) => Row(i, s) }.asJava, schema)
   }
 
   /**

@@ -267,8 +267,13 @@ class AnnSpec extends SparkSpecBase {
       val c = centers(i % 16)
       (i.toLong, s"token$i common words", c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
     }
-    val df = rows.toDF("vec_id", "text", "embedding")
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-hybrid").toString
+    // the collection is read from parquet, as a store serves it: over a
+    // driver-local frame Spark folds the page into a local scan, whose
+    // global sort then takes a range exchange (3 jobs instead of 1)
+    val objects = java.nio.file.Files.createTempDirectory("graft-hybrid-objects").toString + "/H"
+    rows.toDF("vec_id", "text", "embedding").write.parquet(objects)
+    val df = spark.read.parquet(objects)
     val index = IvfIndex.build(df, "vec_id", "embedding", nlist = 16,
       defaultNprobe = 4, persistPath = Some(path))
     val eng = new Graft(spark)
@@ -276,16 +281,22 @@ class AnnSpec extends SparkSpecBase {
       Seq(Property("text", graft.model.PropType.Text, Tokenization.Word)),
       vectors = Map("default" -> "embedding"), defaultVector = Some("default")), df)
     eng.registerIndex("H", "default", index)
+    eng.registerPostings("H", Seq("text"))
     val q = rows(100)._3.toArray
-    val hybrid = eng.get(GetParams("H",
+    val params = GetParams("H",
       hybrid = Some(Hybrid("common", vector = Some(q), metric = Metric.L2Squared,
         alpha = 0.7, fusionType = FusionType.Ranked)),
       pagination = Some(Pagination(limit = 10)),
-      properties = Seq("vec_id"), additional = Set("score")))
-    val plan = hybrid.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [__centroid"),
-      s"hybrid dense leg did not probe the index:\n${plan.take(3000)}")
-    assert(hybrid.count() == 10)
+      properties = Seq("vec_id"), additional = Set("score"))
+    eng.get(params).collect() // warm-up: fills the postings cache
+    // the legs are fetched while the read is built: trace every query it runs
+    val (hits, trace) = ReadTrace(spark)(eng.get(params).collect())
+    assert(trace.partitionFilters("__centroid"),
+      s"hybrid dense leg did not probe the index:\n${trace.plans.mkString("\n").take(3000)}")
+    assert(!trace.plans.exists(_.contains("__tok_")), "hybrid sparse leg not postings-served")
+    assert(trace.jobs <= 3,
+      s"warm hybrid read ran ${trace.jobs} Spark jobs; expected sparse fetch, dense fetch, page")
+    assert(hits.length == 10)
   }
 
   test("multi-target search is served by per-target index probes (pruned, no full scan, recall >= 0.9)") {

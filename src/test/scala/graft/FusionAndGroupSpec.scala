@@ -8,11 +8,14 @@ import graft.operators.{HybridSearch, ResultGroupBy}
 class FusionAndGroupSpec extends SparkSpecBase {
   import spark.implicits._
 
+  private def leg(hits: Seq[(Long, Double)], w: Double, name: String) =
+    HybridSearch.Leg(hits.map { case (i, s) => (i: Any, s) }, w, name)
+
   test("rankedFusion (RRF) = sum of w/(60+rank)") {
-    val sparse = Seq((1L, 10.0), (2L, 8.0), (3L, 5.0)).toDF("id", "__s_sparse")
-    val dense = Seq((2L, 0.9), (3L, 0.8), (4L, 0.7)).toDF("id", "__s_dense")
-    val out = HybridSearch.fuse(sparse, dense, "id", FusionType.Ranked, 0.3, 0.7)
-      .collect().map(r => r.getLong(0) -> r.getAs[Double](HybridSearch.ScoreCol)).toMap
+    val sparse = leg(Seq((1L, 10.0), (2L, 8.0), (3L, 5.0)), 0.3, "keyword")
+    val dense = leg(Seq((2L, 0.9), (3L, 0.8), (4L, 0.7)), 0.7, "vector")
+    val out = HybridSearch.fuse(Seq(sparse, dense), FusionType.Ranked)
+      .map(h => h.id.asInstanceOf[Long] -> h.score).toMap
     assert(math.abs(out(1L) - 0.3 / 61) < 1e-12)
     assert(math.abs(out(2L) - (0.3 / 62 + 0.7 / 61)) < 1e-12)
     assert(math.abs(out(3L) - (0.3 / 63 + 0.7 / 62)) < 1e-12)
@@ -20,10 +23,10 @@ class FusionAndGroupSpec extends SparkSpecBase {
   }
 
   test("relativeScoreFusion min-max normalizes each leg") {
-    val sparse = Seq((1L, 10.0), (2L, 5.0)).toDF("id", "__s_sparse")
-    val dense = Seq((1L, 0.5), (2L, 1.0)).toDF("id", "__s_dense")
-    val out = HybridSearch.fuse(sparse, dense, "id", FusionType.RelativeScore, 0.5, 0.5)
-      .collect().map(r => r.getLong(0) -> r.getAs[Double](HybridSearch.ScoreCol)).toMap
+    val sparse = leg(Seq((1L, 10.0), (2L, 5.0)), 0.5, "keyword")
+    val dense = leg(Seq((1L, 0.5), (2L, 1.0)), 0.5, "vector")
+    val out = HybridSearch.fuse(Seq(sparse, dense), FusionType.RelativeScore)
+      .map(h => h.id.asInstanceOf[Long] -> h.score).toMap
     assert(math.abs(out(1L) - (0.5 * 1.0 + 0.5 * 0.0)) < 1e-12)
     assert(math.abs(out(2L) - (0.5 * 0.0 + 0.5 * 1.0)) < 1e-12)
   }

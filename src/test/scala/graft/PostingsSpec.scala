@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -159,33 +155,6 @@ class PostingsSpec extends SparkSpecBase {
     df.select(col("doc_id"), round(col("_score"), 9)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  /** Runs `body` and counts the Spark jobs it started on this thread (by
-   * job group). A marker job run afterwards in its own group proves the
-   * listener bus has delivered every earlier job-start event. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime()}"
-    val started = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted read")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "listener-bus marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus never delivered the marker job")
-      (out, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("engine bm25 leg serves from the registered postings index (plan has no corpus tokenization)") {
     val g = Fixtures.graft(spark, sf)
     val params = GetParams("Document",
@@ -194,13 +163,14 @@ class PostingsSpec extends SparkSpecBase {
       properties = Seq("doc_id"), additional = Set("score"))
     // warm-up read: the first one also fills the in-memory postings cache
     engineHits(g.get(params))
-    val ((served, hits), jobs) = jobsOf {
+    val ((served, hits), trace) = ReadTrace(spark) {
       val s = g.get(params)
       (s, engineHits(s))
     }
     assert(!served.queryExecution.executedPlan.toString.contains("__tok_"),
       "engine bm25 plan re-tokenizes the corpus — postings index not routed")
-    assert(jobs <= 2, s"served bm25 read ran $jobs Spark jobs; expected posting fetch + page")
+    assert(trace.jobs <= 2,
+      s"served bm25 read ran ${trace.jobs} Spark jobs; expected posting fetch + page")
     // parity vs the scan path on the same params
     val scan = Bm25Search.search(g.collection("Document"),
       Bm25("spark join stream window", Seq("text")), 20)
@@ -276,15 +246,19 @@ class PostingsSpec extends SparkSpecBase {
     val g = Fixtures.graft(spark, sf)
     val gg = g // DocVec has text + vector
     val anchor = Fixtures.anchorVector(gg, 7L)
-    val served = gg.get(GetParams("DocVec",
+    val params = GetParams("DocVec",
       hybrid = Some(graft.model.Hybrid("spark join stream", vector = Some(anchor),
         alpha = 0.5, fusionType = graft.model.FusionType.Ranked)),
       pagination = Some(Pagination(limit = 15)),
-      properties = Seq("doc_id"), additional = Set("score")))
-    val plan = served.queryExecution.executedPlan.toString
-    assert(!plan.contains("__tok_"),
+      properties = Seq("doc_id"), additional = Set("score"))
+    gg.get(params).collect() // warm-up: fills the postings cache
+    // the legs are fetched while the read is built, so the served frame's
+    // plan no longer shows them: trace every query the read runs
+    val (rows, trace) = ReadTrace(spark)(gg.get(params).collect())
+    assert(trace.plans.nonEmpty)
+    assert(!trace.plans.exists(_.contains("__tok_")),
       "hybrid sparse leg re-tokenizes the corpus — postings index not routed")
-    assert(served.count() == 15)
+    assert(rows.length == 15)
   }
 
   // --- incremental maintenance (delta — the async-indexing-queue analogue) --
