@@ -133,38 +133,45 @@ final class Graft(val spark: SparkSession) {
     NearVector(v, nt.metric, nt.distance, nt.certainty, nt.targetVectors)
   }
 
-  /** Resolve a hybrid's top-level nearText dense leg into its raw vector
-   * (reference: explorer_hybrid.go:138-180 — the nearText's moves run first,
-   * its distance feeds the dense-leg cutoff, its targets apply when the
-   * hybrid doesn't name its own). */
-  private def resolveHybridNearText(c: Collection, h: Hybrid): Hybrid = h.nearText match {
-    case Some(nt) =>
-      val nv = resolveNearText(c, nt)
-      val targets = if (h.targetVectors.nonEmpty) h.targetVectors else nt.targetVectors
-      // certainty is the cosine-only radius form — converted to the distance
-      // cutoff 2·(1−certainty), the engine's certainty convention (was
-      // silently discarded, letting far vectors into fusion)
-      val certaintyCut = nt.certainty.map { ct =>
-        val m = if (nt.metric == Metric.Default) c.schema.metricFor(targets.headOption)
-                else nt.metric
-        require(m == Metric.Cosine,
-          s"can't compute and return certainty when vector index is " +
-          s"configured with $m distance")
-        2.0 * (1.0 - ct)
-      }
-      h.copy(nearText = None, vector = Some(nv.vector),
-        maxVectorDistance = h.maxVectorDistance.orElse(nt.distance).orElse(certaintyCut),
-        targetVectors = targets)
-    case None =>
+  /** Resolve a hybrid's nearText legs into vectors through the embedder (the
+   * module boundary), so the operator layer only ever sees vectors. The
+   * top-level nearText (reference: explorer_hybrid.go:138-180) runs its
+   * moves first, its distance feeds the dense-leg cutoff and its targets
+   * apply when the hybrid doesn't name its own; each nearText subSearch
+   * becomes a nearVector one. */
+  private def resolveHybridNearText(c: Collection, h0: Hybrid): Hybrid = {
+    val h = h0.nearText match {
+      case Some(nt) =>
+        val nv = resolveNearText(c, nt)
+        val targets = if (h0.targetVectors.nonEmpty) h0.targetVectors else nt.targetVectors
+        // certainty is the cosine-only radius form — converted to the distance
+        // cutoff 2·(1−certainty), the engine's certainty convention (was
+        // silently discarded, letting far vectors into fusion)
+        val certaintyCut = nt.certainty.map { ct =>
+          val m = if (nt.metric == Metric.Default) c.schema.metricFor(targets.headOption)
+                  else nt.metric
+          require(m == Metric.Cosine,
+            s"can't compute and return certainty when vector index is " +
+            s"configured with $m distance")
+          2.0 * (1.0 - ct)
+        }
+        h0.copy(nearText = None, vector = Some(nv.vector),
+          maxVectorDistance = h0.maxVectorDistance.orElse(nt.distance).orElse(certaintyCut),
+          targetVectors = targets)
       // no explicit vector and no subsearches: the reference vectorizes the
       // QUERY TEXT through the class's vectorizer module for the dense leg
       // (explorer_hybrid.go — hybrid.Vector == nil → modules vectorize
       // hybrid.Query; local_get_hybrid_search_test.go's "no vector" arms
       // return the full fused page). Without a registered vectorizer the
       // leg stays sparse-only, as for vectorizer-less classes.
-      if (h.vector.isEmpty && h.denseParams.isEmpty && h.subSearches.isEmpty && h.query.nonEmpty && h.alpha > 0)
-        embedder.map(e => h.copy(vector = Some(e(h.query)))).getOrElse(h)
-      else h
+      case None if h0.vector.isEmpty && h0.denseParams.isEmpty && h0.subSearches.isEmpty &&
+          h0.query.nonEmpty && h0.alpha > 0 =>
+        embedder.map(e => h0.copy(vector = Some(e(h0.query)))).getOrElse(h0)
+      case None => h0
+    }
+    if (!h.subSearches.exists(_.nearText.isDefined)) h
+    else h.copy(subSearches = h.subSearches.map(ss => ss.nearText.fold(ss)(nt =>
+      ss.copy(nearText = None, nearVector = Some(resolveNearText(c, nt))))))
   }
 
   /**
@@ -1104,37 +1111,65 @@ final class Graft(val spark: SparkSession) {
     this
   }
 
-  /** Resolve Metric.Default legs against the class's configured per-vector
-   * distance (the reference's model: distance is vectorIndexConfig, not a
-   * query argument) — one pre-pass at the query entry so every planner
-   * downstream sees a concrete metric. */
-  private def resolveMetrics(c: Collection, params: GetParams): GetParams = {
-    def r(m: Metric, targets: Seq[String]): Metric =
-      if (m == Metric.Default) c.schema.metricFor(targets.headOption) else m
-    params.copy(
-      nearVector = params.nearVector.map(nv => nv.copy(metric = r(nv.metric, nv.targetVectors))),
-      nearObject = params.nearObject.map(no => no.copy(metric = r(no.metric, no.targetVectors))),
-      nearText = params.nearText.map(nt => nt.copy(metric = r(nt.metric, nt.targetVectors))),
-      nearMedia = params.nearMedia.map(nm => nm.copy(metric = r(nm.metric, nm.targetVectors))),
-      hybrid = params.hybrid.map { h =>
-        h.copy(metric = r(h.metric, h.targetVectors),
-          subSearches = h.subSearches.map(ss => ss.copy(
-            nearVector = ss.nearVector.map(nv => nv.copy(metric = r(nv.metric, nv.targetVectors))),
-            nearText = ss.nearText.map(nt => nt.copy(metric = r(nt.metric, nt.targetVectors))))))
-      })
+  /** A request's search legs, in Get's dispatch order (at most one is
+   * valid; the caller checks). Nothing is resolved yet: resolveMetrics
+   * follows the first validation, and a nearX vector resolves on first use,
+   * after every check. */
+  private def searchLegs(c: Collection, params: GetParams): Seq[SearchLeg] = {
+    import SearchLeg.Near
+    Seq(
+      params.nearVector.map(nv => Near(nv.metric, nv.distance, nv.certainty, nv.targetVectors)(
+        m => nv.copy(metric = m))),
+      params.nearObject.map(no => Near(no.metric, no.distance, no.certainty, no.targetVectors)(
+        m => VectorSearch.resolveNearObject(c, no.copy(metric = m)))),
+      params.nearText.map(nt => Near(nt.metric, nt.distance, nt.certainty, nt.targetVectors,
+        Some(nt.concepts))(m => resolveNearText(c, nt.copy(metric = m)))),
+      params.nearMedia.map(nm => Near(nm.metric, nm.distance, nm.certainty, nm.targetVectors)(
+        m => resolveNearMedia(nm.copy(metric = m)))),
+      params.nearMultiVector.map(SearchLeg.MultiVector),
+      params.bm25.map(SearchLeg.Keyword),
+      params.hybrid.map(h => SearchLeg.Fused(h)(resolveHybridNearText(c, _)))).flatten
   }
 
-  def get(params0: GetParams): DataFrame = getAs(rbacPrincipal, params0)
+  /** Aggregate's legs are a subset of Get's. */
+  private def searchLegs(c: Collection, params: AggregateParams): Seq[SearchLeg] =
+    searchLegs(c, GetParams(params.collection, nearVector = params.nearVector,
+      nearObject = params.nearObject, nearText = params.nearText, nearMedia = params.nearMedia,
+      hybrid = params.hybrid))
+
+  /** Resolve Metric.Default against the class's configured per-vector
+   * distance (the reference's model: distance is vectorIndexConfig, not a
+   * query argument), for the leg's first target: the nearX leg, and a
+   * hybrid's own metric, every subSearch and its denseParams, so every
+   * planner downstream sees a concrete metric. */
+  private def resolveMetrics(c: Collection, leg: SearchLeg): SearchLeg = {
+    def r(m: Metric, targets: Seq[String]): Metric =
+      if (m == Metric.Default) c.schema.metricFor(targets.headOption) else m
+    def rv(nv: NearVector): NearVector = nv.copy(metric = r(nv.metric, nv.targetVectors))
+    leg match {
+      case n: SearchLeg.Near => n.copy(metric = r(n.metric, n.targets))(n.resolve)
+      case f @ SearchLeg.Fused(h) =>
+        f.copy(params = h.copy(metric = r(h.metric, h.targetVectors),
+          denseParams = h.denseParams.map(rv),
+          subSearches = h.subSearches.map(ss => ss.copy(nearVector = ss.nearVector.map(rv),
+            nearText = ss.nearText.map(nt => nt.copy(metric = r(nt.metric, nt.targetVectors)))))))(
+          f.resolve)
+      case other => other
+    }
+  }
+
+  def get(params: GetParams): DataFrame = getAs(rbacPrincipal, params)
 
   /** Get under an explicit per-request principal (replaces — not falls back
    * to — the engine default; an explicitly anonymous request stays
    * anonymous). Race-free under concurrent multi-principal serving. */
-  def getAs(principal: Option[Rbac.Principal], params0: GetParams): DataFrame = {
+  def getAs(principal: Option[Rbac.Principal], params: GetParams): DataFrame = {
     // authorization precedes any data access (and even the registry lookup's
     // error — the reference's handlers authorize before use-case dispatch)
     authorizeRbac(principal, Rbac.ReadData,
-      Seq(Rbac.objects(rbacName(params0.collection), params0.tenant.getOrElse(""))))
-    val c = collection(params0.collection)
+      Seq(Rbac.objects(rbacName(params.collection), params.tenant.getOrElse(""))))
+    val c = collection(params.collection)
+    val given = searchLegs(c, params)
 
     // after-cursor compatibility FIRST, before metric/vector resolution —
     // reference texts and check ORDER verbatim
@@ -1144,48 +1179,36 @@ final class Graft(val spark: SparkSession) {
     // "cursor api: invalid 'after' parameter" by explorer.go:151). Keyset
     // pagination walks the id order, so any of these would silently break
     // the walk — rejected loudly instead.
-    params0.cursor.foreach { cur =>
+    params.cursor.foreach { cur =>
       def cfail(msg: String): Nothing = throw new IllegalArgumentException(
         s"cursor api: invalid 'after' parameter: $msg")
-      val searchLegs = Seq(
-        params0.nearVector.isDefined, params0.nearObject.isDefined,
-        params0.nearText.isDefined, params0.nearMedia.isDefined,
-        params0.nearMultiVector.isDefined, params0.bm25.isDefined,
-        params0.hybrid.isDefined, params0.groupBy.isDefined)
-      if (searchLegs.exists(identity))
+      if (given.nonEmpty || params.groupBy.isDefined)
         cfail("other params cannot be set with after and limit parameters")
       val offending = Seq(
-        if (params0.pagination.exists(_.offset > 0)) Some("offset") else None,
-        if (params0.where.isDefined) Some("where") else None,
-        if (params0.sort.nonEmpty) Some("sort") else None).flatten
+        if (params.pagination.exists(_.offset > 0)) Some("offset") else None,
+        if (params.where.isDefined) Some("where") else None,
+        if (params.sort.nonEmpty) Some("sort") else None).flatten
       if (offending.nonEmpty)
         cfail(s"${offending.mkString(",")} cannot be set with after and limit parameters")
       if (cur.limit < 0) cfail("limit parameter must be set")
     }
 
-    val params = resolveMetrics(c, params0)
+    val legs = given.map(resolveMetrics(c, _))
     val id = c.schema.idColumn
 
     // certainty is cosine-only on the Get path too (reference:
     // traverser_validate_distance_metrics.go — the certainty argument and
     // `_additional { certainty }` both require cosine distance)
-    locally {
-      val legs: Seq[(Option[Double], Metric)] = Seq(
-        params.nearVector.map(nv => (nv.certainty, nv.metric)),
-        params.nearObject.map(no => (no.certainty, no.metric)),
-        params.nearText.map(nt => (nt.certainty, nt.metric)),
-        params.nearMedia.map(nm => (nm.certainty, nm.metric))).flatten
-      legs.foreach { case (ct, m) =>
-        // verbatim reference text, no require() prefix
-        // (local_get_with_expected_failures.go asserts it exactly)
-        if (!((ct.isEmpty && !params.additional.contains("certainty")) ||
-            m == Metric.Cosine))
-          throw new IllegalArgumentException(
-            "can't compute and return certainty when vector index is " +
-            s"configured with ${m.name} distance")
-      }
+    legs.foreach {
+      // verbatim reference text, no require() prefix
+      // (local_get_with_expected_failures.go asserts it exactly)
+      case n: SearchLeg.Near if !((n.certainty.isEmpty &&
+          !params.additional.contains("certainty")) || n.metric == Metric.Cosine) =>
+        throw new IllegalArgumentException(
+          "can't compute and return certainty when vector index is " +
+          s"configured with ${n.metric.name} distance")
+      case _ =>
     }
-
 
     // tenant routing = partition pruning (reference: index.go:2233);
     // lifecycle gate first (tenant not found / not active). A class with
@@ -1234,15 +1257,15 @@ final class Graft(val spark: SparkSession) {
         Some(math.max(depth, fetchLimit0.getOrElse(0)))
       }
 
-    val legCount = Seq(params.nearVector, params.nearObject, params.nearText,
-      params.nearMedia, params.nearMultiVector, params.bm25, params.hybrid).count(_.isDefined)
-    require(legCount <= 1, "at most one search leg (nearX | bm25 | hybrid)")
-
+    require(legs.size <= 1, "at most one search leg (nearX | bm25 | hybrid)")
+    val leg = legs.headOption
+    val near = leg.collect { case n: SearchLeg.Near => n }
+    val legTarget = near.flatMap(_.targets.headOption)
     // threshold-only nearX with no explicit pagination = SearchByVectorDistance
-    // (unlimited radius search, reference: shard_read.go:674-700)
-    def nearLimit(hasThreshold: Boolean): Option[Int] =
-      if (hasThreshold && params.pagination.isEmpty && params.cursor.isEmpty) None
-      else fetchLimit.orElse(Some(defaultLimit))
+    // (unlimited radius search, reference: shard_read.go:674-700): it returns
+    // every row inside the threshold, bypassing the results cap too
+    // (LimitFlagSearchByDist, search.go:57-59)
+    val radiusSearch = near.exists(_.radius) && params.pagination.isEmpty && params.cursor.isEmpty
 
     // where/tenant filtering ⇒ selectivity decides: a small allowlist is
     // brute-forced, a large one probes the registered ANN index and
@@ -1251,20 +1274,13 @@ final class Graft(val spark: SparkSession) {
     // cutoff-capped count — see selectivityEstimate), and is only paid when
     // an index could actually serve the query.
     val hasFilter = !(filtered eq c.df)
-    def vectorLeg(nv: NearVector, limitOverride: Option[Int] = None): DataFrame =
-      denseServe(c, nv,
-        limitOverride.orElse(nearLimit(nv.distance.orElse(nv.certainty).isDefined)),
-        if (hasFilter) Some(filtered) else None)
+    def vectorLeg(nv: NearVector, limit: Option[Int]): DataFrame =
+      denseServe(c, nv, limit, if (hasFilter) Some(filtered) else None)
 
-    val searched: DataFrame =
-      params.nearVector.map(nv => vectorLeg(nv))
-        .orElse(params.nearObject.map { no =>
-          vectorLeg(VectorSearch.resolveNearObject(c, no))
-        }).orElse(params.nearText.map { nt =>
-        vectorLeg(resolveNearText(c, nt))
-      }).orElse(params.nearMedia.map { nm =>
-        vectorLeg(resolveNearMedia(nm))
-      }).orElse(params.nearMultiVector.map { nmv =>
+    val searched: DataFrame = leg match {
+      case Some(n: SearchLeg.Near) =>
+        vectorLeg(n.query, if (radiusSearch) None else fetchLimit.orElse(Some(defaultLimit)))
+      case Some(SearchLeg.MultiVector(nmv)) =>
         val vecCol = c.schema.vectorColumn(nmv.targetVectors.headOption)
         // a stale entry (collection re-registered with new data) is evicted
         // and its persisted table released; the query falls back to the
@@ -1285,34 +1301,17 @@ final class Graft(val spark: SparkSession) {
             VectorSearch.nearMultiVector(c, nmv, fetchLimit.orElse(Some(defaultLimit)),
               if (hasFilter) Some(filtered) else None)
         }
-      }).orElse(params.bm25.map { kw =>
+      case Some(SearchLeg.Keyword(kw)) =>
         bm25Serve(c, kw, fetchLimit.getOrElse(defaultLimit), filtered,
           explain = params.additional.contains("explainScore"))
-      }).orElse(params.hybrid.map { h0 =>
-        // nearText legs — top-level (retrieval.go:124 NearTextParams,
-        // explorer_hybrid.go:138+ nearTextSubSearch) and subsearch — resolve
-        // through the embedder here (the module boundary), so the operator
-        // layer only ever sees vectors
-        val h = resolveHybridNearText(c, h0)
-        val resolved =
-          if (h.subSearches.exists(_.nearText.isDefined))
-            h.copy(subSearches = h.subSearches.map { ss =>
-              ss.nearText match {
-                case Some(nt) => ss.copy(nearText = None, nearVector = Some(resolveNearText(c, nt)))
-                case None     => ss
-              }
-            })
-          else h
-        HybridSearch.search(c, resolved, resolved.metric, fetchLimit.getOrElse(defaultLimit),
+      case Some(f: SearchLeg.Fused) =>
+        val h = f.resolved
+        HybridSearch.search(c, h, h.metric, fetchLimit.getOrElse(defaultLimit),
           filtered = Some(filtered),
-          denseSearch = Some((nv, n) => vectorLeg(nv, limitOverride = Some(n))),
-          sparseSearch = Some((kw, n) => bm25Serve(c, kw, n, filtered, hitsOnly = true)),
-          // the groupBy pool re-ranks below — keep the secondary so float32
-          // ties break the reference way, not by id
-          keepSecondary = params.groupBy.isDefined)
-      }).getOrElse(filtered)
-
-    val isSearch = legCount > 0
+          denseSearch = Some((nv, n) => vectorLeg(nv, Some(n))),
+          sparseSearch = Some((kw, n) => bm25Serve(c, kw, n, filtered, hitsOnly = true)))
+      case None => filtered
+    }
 
     // boost post-scoring (boost_scorer.go boostScoreAndSort via
     // explorer.go:161-175/applyBoostIfNeeded): over the depth-bounded pool,
@@ -1322,38 +1321,33 @@ final class Graft(val spark: SparkSession) {
     // display and the pool re-sorts. Runs BEFORE pagination — the page is
     // the prefix of the boosted order. Score metadata serves the boosted
     // value (the raw distance stays).
+    val boosted = boostActive && leg.isDefined
     val searchedB =
-      if (!(boostActive && isSearch)) searched
+      if (!boosted) searched
       else {
-        val primary: Column =
-          if (searched.columns.contains(graft.operators.Bm25Search.ScoreCol))
-            col(graft.operators.Bm25Search.ScoreCol)
-          else if (searched.columns.contains(HybridSearch.ScoreCol))
-            col(HybridSearch.ScoreCol)
-          else -col(VectorSearch.DistanceCol) // distToScore
         val b = params.boost.get
         val conds = b.conditions.map(bc => (boostConditionScore(c, bc), bc.weight))
         val out = graft.operators.Boost.applyBoost(
-          searched, id, primary, conds, b.weight, HybridSearch.ScoreCol)
+          searched, id, leg.get.score, conds, b.weight, HybridSearch.ScoreCol)
         // the boosted score IS the page score; a bm25 pool's raw score
         // column would otherwise win the `_score` resolution
-        if (out.columns.contains(graft.operators.Bm25Search.ScoreCol))
-          out.withColumn(graft.operators.Bm25Search.ScoreCol, col(HybridSearch.ScoreCol))
+        if (leg.exists(_.isInstanceOf[SearchLeg.Keyword]))
+          out.withColumn(Bm25Search.ScoreCol, col(HybridSearch.ScoreCol))
         else out
       }
 
+    // the rank the hits come in, decided once: boost's blended score when it
+    // re-scored the pool, else the leg's own; a plain read ranks by id. Its
+    // score is the autocut curve; its keys rank the groupBy pool and order a
+    // page that is neither sorted nor grouped.
+    val rankScore: Option[Column] = if (boosted) Some(col(HybridSearch.ScoreCol)) else leg.map(_.score)
+    val rankKeys: Seq[Column] =
+      if (boosted) Seq(col(HybridSearch.ScoreCol).desc, col(id).asc)
+      else leg.fold(Seq(col(id).asc))(_.rankKeys(id))
+
     // autocut on the search score/distance curve (reference: index.go:2309-2313)
-    val afterAutocut = (params.autocut, isSearch) match {
-      case (Some(n), true) =>
-        val scoreCol =
-          if (boostActive) col(HybridSearch.ScoreCol) // boosted order owns the curve
-          else if (params.nearVector.isDefined || params.nearObject.isDefined ||
-              params.nearText.isDefined || params.nearMedia.isDefined ||
-              params.nearMultiVector.isDefined)
-            -col(VectorSearch.DistanceCol)
-          else if (params.bm25.isDefined) col(Bm25Search.ScoreCol)
-          else col(HybridSearch.ScoreCol)
-        HybridSearch.autocut(searchedB, scoreCol, col(id), n)
+    val afterAutocut = (params.autocut, rankScore) match {
+      case (Some(n), Some(score)) => HybridSearch.autocut(searchedB, score, col(id), n)
       case _ => searchedB
     }
 
@@ -1385,37 +1379,31 @@ final class Graft(val spark: SparkSession) {
         // because it ranks nearer "Berlin"); a plain scan's prior order is
         // the uuid order. The trailing id key keeps the total order either
         // way.
-        val ties: Seq[Column] =
-          if (isSearch && afterAutocut.columns.contains(VectorSearch.DistanceCol))
-            Seq(col(VectorSearch.DistanceCol).asc, col(id).asc)
-          else Seq(col(id).asc)
-        keys ++ ties
+        keys ++ (leg match {
+          case Some(l: SearchLeg.ByDistance) => l.rankKeys(id)
+          case _ => Seq(col(id).asc)
+        })
       }
+    val groupKeys = Seq(col("group_index").asc, col("group_hit_rank").asc)
+    // the page's order: groups, else the explicit sort, else the rank (a
+    // sort on a grouped read only picks the pool the groups are drawn from)
+    val pageOrder =
+      if (params.groupBy.isDefined) groupKeys
+      else if (explicitSortKeys.nonEmpty) explicitSortKeys
+      else rankKeys
     val sorted: DataFrame =
       if (explicitSortKeys.nonEmpty) afterAutocut.orderBy(explicitSortKeys: _*)
-      else if (isSearch) afterAutocut
+      else if (leg.isDefined) afterAutocut
       else params.cursor match {
         case Some(cur) =>
           val after = cur.after.map(a => afterAutocut.filter(col(id) > lit(a))).getOrElse(afterAutocut)
-          after.orderBy(col(id).asc)
-        case None => afterAutocut.orderBy(col(id).asc) // default uuid order (index.go:2303-2307)
+          after.orderBy(rankKeys: _*)
+        case None => afterAutocut.orderBy(rankKeys: _*) // default uuid order (index.go:2303-2307)
       }
 
     val groupedOrSorted = params.groupBy match {
       case Some(g) =>
         val rankCol = "__rank"
-        val rankOrder: Seq[Column] =
-          if (params.nearVector.isDefined || params.nearObject.isDefined ||
-              params.nearText.isDefined || params.nearMedia.isDefined ||
-              params.nearMultiVector.isDefined)
-            Seq(col(VectorSearch.DistanceCol).asc, col(id).asc)
-          else if (params.bm25.isDefined) Seq(col(Bm25Search.ScoreCol).desc, col(id).asc)
-          // float32 rank keys with the secondary fallback — the reference
-          // comparator's tie band (see HybridSearch.rankOrder)
-          else if (params.hybrid.isDefined)
-            Seq(col(HybridSearch.ScoreCol).cast("float").desc,
-              col(HybridSearch.SecondaryCol).cast("float").desc_nulls_last, col(id).asc)
-          else Seq(col(id).asc)
         // Bound the rank pool BEFORE the global window (reference: explorer
         // groupBy pool = groups × objectsPerGroup overfetch). Search legs are
         // already fetchLimit-bounded, but the plain path (no search leg) would
@@ -1425,8 +1413,7 @@ final class Graft(val spark: SparkSession) {
         val pool = fetchLimit.getOrElse(g.groups * g.objectsPerGroup)
         val pooled = sorted.limit(pool) // sorted always carries a total order
         val ranked = pooled.withColumn(rankCol,
-            row_number().over(graft.operators.BoundedWindow.ordered(rankOrder: _*)))
-          .drop(HybridSearch.SecondaryCol) // rank key only, never projected
+          row_number().over(graft.operators.BoundedWindow.ordered(rankKeys: _*)))
         // explode per element for ANY array-shaped column — text[] props and
         // beacon-list crefs alike (the reference groups ref values per
         // beacon: people-by-city makes one group per city,
@@ -1434,18 +1421,9 @@ final class Graft(val spark: SparkSession) {
         val isArr = pooled.schema(g.property).dataType
           .isInstanceOf[org.apache.spark.sql.types.ArrayType]
         ResultGroupBy(ranked, rankCol, g.property, g.groups, g.objectsPerGroup, isArr)
-          .orderBy(col("group_index").asc, col("group_hit_rank").asc)
+          .orderBy(groupKeys: _*)
       case None => sorted
     }
-
-    // radius searches return every row inside the threshold — the reference's
-    // LimitFlagSearchByDist bypasses the results cap for them (search.go:57-59)
-    val radiusSearch = Seq(
-      params.nearVector.map(nv => nv.distance.orElse(nv.certainty).isDefined),
-      params.nearObject.map(no => no.distance.orElse(no.certainty).isDefined),
-      params.nearText.map(nt => nt.distance.orElse(nt.certainty).isDefined),
-      params.nearMedia.map(nm => nm.distance.orElse(nm.certainty).isDefined))
-      .flatten.exists(identity) && params.pagination.isEmpty && params.cursor.isEmpty
 
     val paged = params.pagination match {
       // groupBy pages GROUPS, not hits: the reference's grouped reply returns
@@ -1498,17 +1476,8 @@ final class Graft(val spark: SparkSession) {
         // the active leg's targetVectors pick BOTH the diversity vector
         // column and the metric — a leg over a named non-default vector
         // must not be diversified against the default vector's column
-        val legTargets = params.nearVector.map(_.targetVectors)
-          .orElse(params.nearObject.map(_.targetVectors))
-          .orElse(params.nearText.map(_.targetVectors))
-          .orElse(params.nearMedia.map(_.targetVectors))
-          .getOrElse(Nil)
-        val legMetric = params.nearVector.map(_.metric)
-          .orElse(params.nearObject.map(_.metric))
-          .orElse(params.nearText.map(_.metric))
-          .orElse(params.nearMedia.map(_.metric))
-          .getOrElse(c.schema.metricFor(legTargets.headOption))
-        Mmr.diversify(pagedD, id, c.schema.vectorColumn(legTargets.headOption),
+        val legMetric = near.fold(c.schema.metricFor(legTarget))(_.metric)
+        Mmr.diversify(pagedD, id, c.schema.vectorColumn(legTarget),
           relCol, sm.balance, sm.limit, legMetric)
           .drop("__mmr_rel") // pseudo-distances never project
       case None => paged
@@ -1584,7 +1553,7 @@ final class Graft(val spark: SparkSession) {
     val spellchecked =
       if (!params.additional.contains("spellCheck")) answered
       else {
-        val (argName, texts) = params.nearText.map(nt => ("nearText", nt.concepts))
+        val (argName, texts) = near.flatMap(_.concepts).map(("nearText", _))
           .orElse(params.ask.map(a => ("ask", Seq(a.question))))
           .getOrElse(throw new IllegalArgumentException(
             "spellCheck requires a nearText or ask argument"))
@@ -1623,14 +1592,7 @@ final class Graft(val spark: SparkSession) {
     // contextionary additional props (module boundary: withConcepts).
     // Both resolve the vector column from the active leg's targetVectors —
     // the same named-vector rule as selection.mmr above.
-    def legVecCol: String = {
-      val targets = params.nearVector.map(_.targetVectors)
-        .orElse(params.nearObject.map(_.targetVectors))
-        .orElse(params.nearText.map(_.targetVectors))
-        .orElse(params.nearMedia.map(_.targetVectors))
-        .getOrElse(Nil)
-      c.schema.vectorColumn(targets.headOption)
-    }
+    def legVecCol: String = c.schema.vectorColumn(legTarget)
     // interpretation re-derives the SAME vectorizer corpus the embedding
     // came from (VectorizerCorpus default config — the text2vec rule) and
     // explains it per result; a pure column expression, no module needed
@@ -1671,12 +1633,7 @@ final class Graft(val spark: SparkSession) {
           "calculation is only suported up to 25 items, set a limit to <= 25")
         // the walk starts at the SEARCH vector — nearX-only, like the
         // reference (builder_params.go: "no valid search vector present")
-        val searchVec = params.nearVector.map(_.queryFor(0))
-          .orElse(params.nearObject.map(no =>
-            VectorSearch.resolveNearObject(c, no).queryFor(0)))
-          .orElse(params.nearText.map(nt => resolveNearText(c, nt).queryFor(0)))
-          .orElse(params.nearMedia.map(nm => resolveNearMedia(nm).queryFor(0)))
-          .getOrElse(throw new IllegalArgumentException(
+        val searchVec = near.map(_.query.queryFor(0)).getOrElse(throw new IllegalArgumentException(
             "no valid search vector present — semanticPath is only supported " +
             "on nearXXX queries"))
         Contextionary.attachPath(withNeighbors, id, legVecCol, searchVec, voc)
@@ -1691,22 +1648,8 @@ final class Graft(val spark: SparkSession) {
     val reordered =
       if (params.resolveRefs.isEmpty || params.rerank.isDefined ||
           params.selectionMmr.isDefined) resolved
-      else params.groupBy match {
-        case Some(_) => resolved.orderBy(col("group_index").asc, col("group_hit_rank").asc)
-        case None if explicitSortKeys.nonEmpty => resolved.orderBy(explicitSortKeys: _*)
-        case None if isSearch =>
-          val rank: Seq[Column] =
-            if (resolved.columns.contains(VectorSearch.DistanceCol))
-              Seq(col(VectorSearch.DistanceCol).asc)
-            else if (resolved.columns.contains(Bm25Search.ScoreCol))
-              Seq(col(Bm25Search.ScoreCol).desc)
-            else if (resolved.columns.contains(HybridSearch.ScoreCol))
-              Seq(col(HybridSearch.ScoreCol).desc)
-            else Nil
-          resolved.orderBy(rank :+ col(id).asc: _*)
-        case None => resolved.orderBy(col(id).asc)
-      }
-    project(c, params, reordered)
+      else resolved.orderBy(pageOrder: _*)
+    project(c, params, reordered.drop(HybridSearch.SecondaryCol)) // a rank key, never projected
   }
 
   /** Property → prompt-text column for generate templating (reference:
@@ -1938,24 +1881,17 @@ final class Graft(val spark: SparkSession) {
         "boost condition must set exactly one of filter | timeDecay | numericDecay | propertyValue"))
   }
 
-  def aggregate(params0: AggregateParams): DataFrame =
-    aggregateAs(rbacPrincipal, params0)
+  def aggregate(params: AggregateParams): DataFrame =
+    aggregateAs(rbacPrincipal, params)
 
   /** Aggregate under an explicit per-request principal (see getAs). */
   def aggregateAs(principal: Option[Rbac.Principal],
-                  params0: AggregateParams): DataFrame = {
+                  params: AggregateParams): DataFrame = {
     authorizeRbac(principal, Rbac.ReadData,
-      Seq(Rbac.objects(rbacName(params0.collection), params0.tenant.getOrElse(""))))
-    val c = collection(params0.collection)
-    // Metric.Default resolution — same class-config model as Get's
-    def rm(m: Metric, targets: Seq[String]): Metric =
-      if (m == Metric.Default) c.schema.metricFor(targets.headOption) else m
-    val params = params0.copy(
-      nearVector = params0.nearVector.map(nv => nv.copy(metric = rm(nv.metric, nv.targetVectors))),
-      nearObject = params0.nearObject.map(no => no.copy(metric = rm(no.metric, no.targetVectors))),
-      nearText = params0.nearText.map(nt => nt.copy(metric = rm(nt.metric, nt.targetVectors))),
-      nearMedia = params0.nearMedia.map(nm => nm.copy(metric = rm(nm.metric, nm.targetVectors))),
-      hybrid = params0.hybrid.map(h => h.copy(metric = rm(h.metric, h.targetVectors))))
+      Seq(Rbac.objects(rbacName(params.collection), params.tenant.getOrElse(""))))
+    val c = collection(params.collection)
+    // a nearX leg wins over hybrid, as in Get's dispatch order
+    val leg = searchLegs(c, params).map(resolveMetrics(c, _)).headOption
     if (params.tenant.isEmpty && tenantRegistryHas(c.name))
       throw new IllegalArgumentException(
         s"class ${c.name} has multi-tenancy enabled, but request was without tenant")
@@ -1979,45 +1915,31 @@ final class Graft(val spark: SparkSession) {
     // traverser_aggregate.go:74 check precedes the module/object lookups —
     // local_aggregate_with_expected_failures.go's nearObject arm uses an id
     // that exists nowhere and still gets THIS error, not object-not-found)
-    val nearThreshold: Option[Option[Double]] =
-      params.nearVector.map(nv => nv.distance.orElse(nv.certainty))
-        .orElse(params.nearObject.map(no => no.distance.orElse(no.certainty)))
-        .orElse(params.nearText.map(nt => nt.distance.orElse(nt.certainty)))
-        .orElse(params.nearMedia.map(nm => nm.distance.orElse(nm.certainty)))
-    nearThreshold.foreach { t =>
+    val scoped: Option[DataFrame] = leg match {
       // verbatim reference text, no require() prefix (traverser_aggregate.go:74)
-      if (!(params.objectLimit.isDefined || t.isDefined))
+      case Some(n: SearchLeg.Near) if !(params.objectLimit.isDefined || n.radius) =>
         throw new IllegalArgumentException(
           "must provide certainty or objectLimit with vector search")
-    }
-    val nearResolved: Option[NearVector] = params.nearVector
-      .orElse(params.nearObject.map(no => VectorSearch.resolveNearObject(c, no)))
-      .orElse(params.nearText.map(nt => resolveNearText(c, nt)))
-      .orElse(params.nearMedia.map(resolveNearMedia))
-    // hybrid without objectLimit defaults to the bounded
-    // QueryHybridMaximumResults pool of 100 (aggregator/filtered.go:61-64
-    // defaultLimit, environment.go DefaultQueryHybridMaximumResults) — the
-    // hybrid aggregator always carries a bounded result list
-    val hybridLimit: Option[Int] =
-      if (params.hybrid.isEmpty) None
-      else params.objectLimit.orElse(Some(100))
-    val scoped: Option[DataFrame] = (nearResolved, params.hybrid, hybridLimit) match {
-      case (Some(nv), _, _) =>
-        Some(denseServe(c, nv, params.objectLimit, filtered))
-      case (_, Some(h00), Some(lim)) =>
-        val h0 = resolveHybridNearText(c, h00)
+      case Some(n: SearchLeg.Near) =>
+        Some(denseServe(c, n.query, params.objectLimit, filtered))
+      case Some(f: SearchLeg.Fused) =>
         // the AGGREGATE keyword leg silently drops unsearchable props
         // (ChooseSearchableProperties — aggregator/filtered.go:142,
         // aggregator/hybrid.go:55) where the Get path errors (WEAVIATE-471)
-        val h = h0.copy(properties = h0.properties.filter { p =>
+        val h = f.resolved.copy(properties = f.resolved.properties.filter { p =>
           c.schema.property(p.split('^').head).exists(_.hasSearchableIndex)
         })
         // hybrid legs route through the same planners as Get's (postings for
-        // the sparse leg, registered ANN index + selectivity for the dense)
-        Some(HybridSearch.search(c, h, h.metric, lim, filtered = filtered,
+        // the sparse leg, registered ANN index + selectivity for the dense);
+        // without objectLimit the pool is the bounded
+        // QueryHybridMaximumResults of 100 (aggregator/filtered.go:61-64
+        // defaultLimit, environment.go DefaultQueryHybridMaximumResults)
+        Some(HybridSearch.search(c, h, h.metric, params.objectLimit.getOrElse(100),
+          filtered = filtered,
           denseSearch = Some((nv, n) => denseServe(c, nv, Some(n), filtered)),
           sparseSearch = Some((kw, n) =>
-            bm25Serve(c, kw, n, filtered.getOrElse(c.df), hitsOnly = true))))
+            bm25Serve(c, kw, n, filtered.getOrElse(c.df), hitsOnly = true)))
+          .drop(HybridSearch.SecondaryCol))
       case _ => filtered
     }
     Aggregations.run(c, params, scoped)
@@ -2149,4 +2071,46 @@ final class Graft(val spark: SparkSession) {
   }
 
   private val defaultLimit = 25 // reference: QueryDefaults.LimitGraphQL
+}
+
+/** A request's one search leg, built once per Get/Aggregate (the
+ * reference's traverser resolves its search params once, before the
+ * searcher or aggregator runs: traverser_aggregate.go:60-105). */
+private sealed trait SearchLeg {
+  /** The leg's relevance, higher first: the boost primary and the autocut curve. */
+  def score: Column
+  /** The order the leg ranks its hits in. */
+  def rankKeys(id: String): Seq[Column]
+}
+
+private object SearchLeg {
+  sealed trait ByDistance extends SearchLeg {
+    def score: Column = -col(VectorSearch.DistanceCol) // distToScore
+    def rankKeys(id: String): Seq[Column] = Seq(col(VectorSearch.DistanceCol).asc, col(id).asc)
+  }
+
+  /** nearVector | nearObject | nearText | nearMedia. `query` is the family
+   * resolved to one vector, on first use and once; `concepts` are a
+   * nearText's. */
+  final case class Near(metric: Metric, distance: Option[Double], certainty: Option[Double],
+                        targets: Seq[String], concepts: Option[Seq[String]] = None)(
+                        val resolve: Metric => NearVector) extends ByDistance {
+    lazy val query: NearVector = resolve(metric)
+    /** A threshold (distance or certainty) makes an unpaged read a radius search. */
+    def radius: Boolean = distance.orElse(certainty).isDefined
+  }
+
+  final case class MultiVector(nmv: NearMultiVector) extends ByDistance
+
+  final case class Keyword(kw: Bm25) extends SearchLeg {
+    def score: Column = col(Bm25Search.ScoreCol)
+    def rankKeys(id: String): Seq[Column] = Seq(col(Bm25Search.ScoreCol).desc, col(id).asc)
+  }
+
+  /** hybrid; `resolved` has its nearText legs embedded, on first use and once. */
+  final case class Fused(params: Hybrid)(val resolve: Hybrid => Hybrid) extends SearchLeg {
+    lazy val resolved: Hybrid = resolve(params)
+    def score: Column = col(HybridSearch.ScoreCol)
+    def rankKeys(id: String): Seq[Column] = HybridSearch.rankOrder(id)
+  }
 }

@@ -26,7 +26,8 @@ object HybridSearch {
 
   val ScoreCol = "_hybrid_score"
   /** Original-leg score carried for tie-breaking (reference: hybrid_fusion.go:68-79 —
-   * |Δscore| < 1e-7 falls back to SecondarySortValue desc, then id). */
+   * |Δscore| < 1e-7 falls back to SecondarySortValue desc, then id). Every
+   * fused page carries it; the caller drops it after its last re-order. */
   val SecondaryCol = "_secondary"
 
   /** The reference ranks on FLOAT32 scores (search.Result.Score/
@@ -159,11 +160,7 @@ object HybridSearch {
       // registered postings index instead of full-scan scoring (reference:
       // the hybrid sparse leg IS the shard's inverted index,
       // hybrid/searcher.go sparseSearch → bm25 objects search)
-      sparseSearch: Option[(graft.model.Bm25, Int) => DataFrame] = None,
-      // keep SecondaryCol in the output so a downstream re-rank (hybrid
-      // groupBy pools) can break float32-collapsed ties the reference way;
-      // the caller owns dropping it before projection
-      keepSecondary: Boolean = false): DataFrame = {
+      sparseSearch: Option[(graft.model.Bm25, Int) => DataFrame] = None): DataFrame = {
     val fetchN = math.max(limit, overfetch)
     val id = c.schema.idColumn
 
@@ -213,9 +210,8 @@ object HybridSearch {
     // (mcp query_hybrid_test.go TestQueryHybridEmptyQuery)
     if (legs.isEmpty) {
       val base = filtered.getOrElse(c.df)
-      val empty = base.filter(lit(false))
+      return base.filter(lit(false))
         .withColumn(ScoreCol, lit(0.0)).withColumn(SecondaryCol, lit(0.0))
-      return if (keepSecondary) empty else empty.drop(SecondaryCol)
     }
 
     // fetch each bounded leg (a postings-served sparse leg is already a
@@ -242,12 +238,11 @@ object HybridSearch {
     // the page's rows from the collection (ids are unique), laid out as
     // id, fused columns, then the collection's other columns
     val base = filtered.getOrElse(c.df)
-    val decorated = base
+    base
       .filter(if (page.isEmpty) lit(false) else col(id).isin(page.map(_.id): _*))
       .select((col(id) +: fusedCols) ++
         base.columns.filterNot(_ == id).map(n => col(s"`${n.replace("`", "``")}`")): _*)
       .orderBy(rankOrder(id): _*)
-    if (keepSecondary) decorated else decorated.drop(SecondaryCol)
   }
 
   /**

@@ -613,13 +613,6 @@ final class CollectionStore(val spark: SparkSession, val root: String,
         }
       case _ => df
     }
-    // plan-audit hook (off unless the conf is set): captures the physical
-    // plan of the layout+write for the r16 optimization evidence files —
-    // `spark.graft.targetFileBytes=1` forces every estimate over the
-    // threshold, i.e. exactly the pre-r16 session-width write plan
-    if (spark.conf.getOption("spark.graft.explainWrites").exists(_.toBoolean))
-      CollectionStore.lastWritePlan = Some(laidOut.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
     val writer = laidOut.write.mode("overwrite")
     (if (clustered) schema.tenantColumn.fold(writer)(writer.partitionBy(_)) else writer)
       .parquet(s"$root/v$next")
@@ -635,9 +628,6 @@ final class CollectionStore(val spark: SparkSession, val root: String,
 }
 
 object CollectionStore {
-
-  /** Last captured write plan (plan-audit hook above; test/audit use only). */
-  @volatile var lastWritePlan: Option[String] = None
 
   /** One write lock per canonical store root (see the instance scaladoc):
    * every CollectionStore opened on the same directory serializes through

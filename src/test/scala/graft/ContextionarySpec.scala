@@ -130,6 +130,21 @@ class ContextionarySpec extends SparkSpecBase {
     assert(e2.getMessage.contains("bounded page"))
   }
 
+  test("semanticPath walks from the nearText leg's vector without embedding it again") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val g = gg.withEmbedder { t => calls.incrementAndGet(); vocab.toMap.apply(t) }
+    def embeddings(additional: Set[String]): Int = {
+      calls.set(0)
+      g.get(GetParams("Ctx", nearText = Some(NearText(Seq("north", "ne"), metric = Metric.Default)),
+        pagination = Some(Pagination(limit = 2)), properties = Seq("id"),
+        additional = additional)).collect()
+      calls.get
+    }
+    val plain = embeddings(Set.empty)
+    assert(plain == 2)
+    assert(embeddings(Set("semanticPath")) == plain)
+  }
+
   test("interpretation: corpus tokens with occurrence and weight, first-occurrence order") {
     val g2 = new Graft(spark)
     g2.register(CollectionSchema("Article", "id", Seq(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Graft
 import graft.model._
-import graft.operators.{Bm25Search, VectorSearch}
+import graft.operators.{Bm25Search, HybridSearch, VectorSearch}
 
 /** `Graft.get` hybrid (postings-served sparse leg, driver-side fusion) equals
  * a plain-Scala fusion of the scan legs — `Bm25Search` scores and exact
@@ -26,7 +26,8 @@ class HybridServeSpec extends SparkSpecBase {
   /** Mix: 80 random docs plus the identical tie group; Pair: two docs whose
    * ranked-fusion scores tie exactly (their ranks swap between the legs),
    * so the secondary (the keyword score) decides against id order. Both
-   * are read back from parquet, as a store serves them. */
+   * are read back from parquet, as a store serves them; every doc's `ref`
+   * points at the one Target object. */
   private lazy val g: Graft = {
     val rnd = new scala.util.Random(7)
     val mix = (0 until 80).map { i =>
@@ -36,12 +37,16 @@ class HybridServeSpec extends SparkSpecBase {
     val pair = Seq(("x", "alpha beta", "p", 0, q.toSeq), ("y", "alpha alpha", "p", 1, Seq.fill(8)(-1f)))
     val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-serve").toString
     val eng = new Graft(spark)
+    eng.register(CollectionSchema("Target", "tid", Seq(Property("label", PropType.Text))),
+      Seq(("t", "target")).toDF("tid", "label"))
     for ((name, rows) <- Seq("Mix" -> mix, "Pair" -> pair)) {
-      rows.toDF("uid", "text", "cat", "n", "embedding").write.parquet(s"$dir/$name")
+      rows.toDF("uid", "text", "cat", "n", "embedding").withColumn("ref", lit("t"))
+        .write.parquet(s"$dir/$name")
       eng.register(CollectionSchema(name, "uid", Seq(
         Property("text", PropType.Text, Tokenization.Word),
         Property("cat", PropType.Text, Tokenization.Field),
-        Property("n", PropType.Int)),
+        Property("n", PropType.Int),
+        Property("ref", PropType.Ref, refTarget = Some("Target"))),
         vectors = Map("default" -> "embedding"), defaultVector = Some("default")),
         spark.read.parquet(s"$dir/$name"))
       eng.registerPostings(name, Seq("text"))
@@ -146,6 +151,10 @@ class HybridServeSpec extends SparkSpecBase {
     }
   }
 
+  private def pageIds(p: GetParams): Seq[String] =
+    g.get(p.copy(pagination = Some(Pagination(limit = 10)), properties = Seq("uid"))).collect()
+      .map(_.getAs[String]("uid")).toSeq
+
   test("float32-tied string ids fall to the secondary, then UTF-8 id order") {
     // the tie group fuses to equal scores and secondaries: id order decides
     val rel = check("Mix", base, 10)
@@ -153,10 +162,16 @@ class HybridServeSpec extends SparkSpecBase {
     assert(rel.filter(h => tieIds.contains(h.id)).map(_.score).distinct.size == 1)
     // ranks swap between the legs, so the ranked sums tie exactly; the
     // keyword score (secondary) puts y first, against id order
-    val pair = check("Pair", Hybrid("alpha", vector = Some(q), metric = Metric.Cosine,
-      alpha = 0.5, fusionType = FusionType.Ranked), 10)
+    val ranked = Hybrid("alpha", vector = Some(q), metric = Metric.Cosine,
+      alpha = 0.5, fusionType = FusionType.Ranked)
+    val pair = check("Pair", ranked, 10)
     assert(pair.map(_.id) == Seq("y", "x"))
     assert(pair(0).score == pair(1).score && pair(0).secondary > pair(1).secondary)
+    // resolving refs re-orders the page by the same rank, after which the
+    // rank key is dropped whatever the projection
+    val withRefs = GetParams("Pair", hybrid = Some(ranked), resolveRefs = Seq("ref"))
+    assert(pageIds(withRefs) == Seq("y", "x"))
+    assert(!g.get(withRefs).columns.contains(HybridSearch.SecondaryCol))
   }
 
   test("autocut cuts the fused page's score curve") {
@@ -202,6 +217,19 @@ class HybridServeSpec extends SparkSpecBase {
     assert(mixGot == exp)
   }
 
+  test("resolving refs or grouping keeps a boosted page's order") {
+    // x is the nearer doc; the boost on n = 1 lifts y over it
+    val boosted = GetParams("Pair", nearVector = Some(NearVector(q, Metric.Cosine)),
+      boost = Some(BoostParams(Seq(BoostCondition(filter = Some(Where.eqInt("n", 1)))), weight = 0.9)))
+    assert(pageIds(boosted.copy(boost = None)) == Seq("x", "y"))
+    assert(pageIds(boosted) == Seq("y", "x"))
+    assert(pageIds(boosted.copy(resolveRefs = Seq("ref"))) == Seq("y", "x"))
+    // groups open in the boosted order too, as they do for boosted keyword
+    // and fused pools
+    assert(pageIds(boosted.copy(groupBy = Some(GroupByParams("n", groups = 2, objectsPerGroup = 1)))) ==
+      Seq("y", "x"))
+  }
+
   test("explainScore renders as before the driver-side fusion") {
     def explained(fusion: FusionType) =
       served("Pair", Hybrid("alpha", vector = Some(q), metric = Metric.Cosine, alpha = 0.5,
@@ -226,8 +254,12 @@ class HybridServeSpec extends SparkSpecBase {
   }
 
   test("Aggregate over hybrid counts Get's hit set (objectLimit and the default pool)") {
-    val h = base.copy(fusionType = FusionType.RelativeScore)
-    for (objectLimit <- Seq(Some(30), None)) {
+    // the subSearch leg is at Metric.Default, which Aggregate resolves as Get does
+    val sub = Hybrid("alpha beta", subSearches = Seq(
+      HybridSubSearch(0.5, bm25 = Some(Bm25("alpha"))),
+      HybridSubSearch(0.5, nearVector = Some(NearVector(q, Metric.Default)))))
+    for (h <- Seq(base.copy(fusionType = FusionType.RelativeScore), sub);
+         objectLimit <- Seq(Some(30), None)) {
       val hits = served("Mix", h, objectLimit.getOrElse(100))
       val meta = g.aggregate(AggregateParams("Mix", includeMetaCount = true,
         hybrid = Some(h), objectLimit = objectLimit)).head()

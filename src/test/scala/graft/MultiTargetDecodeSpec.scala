@@ -241,5 +241,12 @@ class MultiTargetDecodeSpec extends SparkSpecBase {
     assert(h.vector.isEmpty && h.denseParams.isDefined)
     assert(h.denseParams.get.targetVectors == Seq("regular", "regular"))
     assert(h.denseParams.get.combination == TargetCombination.Sum)
+    // the decoded leg is at Metric.Default: it runs as with the class's
+    // metric given (the dense leg alone: the query "a" is a stopword)
+    assert(h.denseParams.get.metric == Metric.Default)
+    def rows(dense: NearVector): Seq[String] = g.get(p.copy(hybrid = Some(
+      h.copy(alpha = 1.0, denseParams = Some(dense))))).collect().map(_.toString).toSeq
+    val got = rows(h.denseParams.get)
+    assert(got.nonEmpty && got == rows(h.denseParams.get.copy(metric = Metric.Cosine)))
   }
 }
