@@ -52,7 +52,7 @@ object Bench {
     warm("songFixture")(SparkEntryFixtures.songGraft(spark))
     warm("grpcFixtures")(SparkEntryGrpc.warmBeds(spark))
     Seq("q_pq_search", "q_bm25_postings", "q_near_ivf").foreach { q =>
-      warm(s"warmq:$q")(SparkEntry.queries(q)(spark, sfDir).count())
+      warm(s"warmq:$q")(SparkEntry.gate(q).build(spark, sfDir).count())
     }
     if (warmupErrors.nonEmpty) {
       val errs = warmupErrors.map { case (k, v) =>
@@ -68,8 +68,8 @@ object Bench {
     // local-iteration convenience, mirroring Verify: SPARK_GRAFT_ONLY=q_a,q_b
     // times a subset (the driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.contains(kv._1)))
+    val gates = SparkEntry.gates.sortBy(_.name)
+      .filter(gt => only.forall(_.contains(gt.name)))
     // fault-isolated timing that KEEPS the failure: a query that throws used
     // to record its fast-fail elapsed as a (misleadingly good) benchmark
     // number with no marker anywhere — a regression-to-throwing read as a
@@ -98,9 +98,10 @@ object Bench {
     val diag = scala.collection.mutable.ListBuffer.empty[String]
     var lastGc = gcMs()
     def gcDelta(): Long = { val g = gcMs(); val d = g - lastGc; lastGc = g; d }
-    def pass(tag: Int): Map[String, (Double, Boolean)] = names.map { case (name, fn) =>
+    def pass(tag: Int): Map[String, (Double, Boolean)] = gates.map { gt =>
+      val name = gt.name
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
+      val ok = try { gt.build(spark, sfDir).count(); true } catch {
         case e: Throwable =>
           passErrors(name) = passErrors.get(name).map(_ + ";").getOrElse("") +
             s"p$tag:${e.getClass.getSimpleName}"
@@ -155,7 +156,7 @@ object Bench {
     // become the benchmark number (it reads as a speedup); if both passes
     // failed, carry the slower elapsed so the total isn't deflated either,
     // with the failure marked in errors
-    val results = names.map { case (name, _) =>
+    val results = gates.map(_.name).map { name =>
       val (v1, ok1) = p1t(name); val (v2, ok2) = p2t(name)
       name -> ((ok1, ok2) match {
         case (true, true)   => math.min(v1, v2)
@@ -206,11 +207,11 @@ object Bench {
     val isolated: Seq[(String, Double)] = isolateSet.flatMap { name =>
       if (wallSec >= budgetSec) { isolatedSkipped += 1; None }
       else {
-        val fn = SparkEntry.queries(name)
+        val build = SparkEntry.gate(name).build
         System.gc()
         def once(): Double = {
           val t0 = System.nanoTime()
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+          try build(spark, sfDir).count() catch { case _: Throwable => () }
           (System.nanoTime() - t0) / 1e9
         }
         val v = math.min(once(), once())
@@ -222,7 +223,7 @@ object Bench {
     // 3-decimal rounding keeps the artifact lines short
     def r3(x: Double): Double = math.rint(x * 1000) / 1000
     def obj(m: Map[String, Double]): String =
-      names.map { case (n, _) => "\"" + n + "\":" + r3(m(n)) }.mkString("{", ",", "}")
+      gates.map(gt => "\"" + gt.name + "\":" + r3(m(gt.name))).mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) r3(results.map(_._2).sum) else 0.0
@@ -252,7 +253,7 @@ object Bench {
     // degrading long-lived session). Streaming gates are exempt (they drain
     // real micro-batch queues whose depth legitimately varies run-to-run);
     // p2_ok=false is the tripwire the next round must treat as red.
-    val steady = names.map(_._1).filterNot(_.contains("stream"))
+    val steady = gates.map(_.name).filterNot(_.contains("stream"))
     val p2OverP1 = {
       val s1 = steady.map(n => p1t(n)._1).sum
       val s2 = steady.map(n => p2t(n)._1).sum

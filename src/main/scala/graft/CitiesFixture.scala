@@ -178,10 +178,7 @@ object CitiesFixture {
     StructField("lat", FloatType), StructField("lon", FloatType)))
 
   // one Graft per session, all three classes registered
-  private val cache = scala.collection.mutable.Map.empty[SparkSession, Graft]
-
-  def graft(spark: SparkSession): Graft =
-    cache.synchronized(cache.getOrElseUpdate(spark, build(spark)))
+  def graft(spark: SparkSession): Graft = Fixtures.cached(spark, "cities")(build(spark))
 
   /** Stand-in contextionary vocabulary for `_additional { nearestNeighbors }`
    * (the acceptance arm asserts each hit gets ≥1 non-empty-concept

@@ -32,10 +32,9 @@ object Fixtures {
       // the engine serves hundreds of DISTINCT query shapes per session; the
       // default whole-stage-codegen class cache (100 entries) thrashes and
       // recompiles (Janino) the same operators every pass — pure driver CPU
-      // and GC garbage. Sized for the full declared-query surface; env-
-      // overridable for bigger deployments (static conf: set at build time).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
+      // and GC garbage. Sized for the full declared-query surface (static
+      // conf: set at build time).
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       // the UI is off, but the in-memory status store still retains
       // per-job/stage/task rows for EVERY job — a 274-query bench session
       // runs thousands of jobs, and the retained history is driver-heap
@@ -50,9 +49,8 @@ object Fixtures {
       .config("spark.speculation", "false")
       // zstd for everything the engine writes (guide §6: smaller than snappy
       // at similar read speed; at 100 TB the store/postings/index layouts are
-      // the dominant bytes). Env-overridable for A/B.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
+      // the dominant bytes).
+      .config("spark.sql.parquet.compression.codec", "zstd")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the engine's global-window fusions are DOCUMENTED bounded (top-k pools,
@@ -88,14 +86,21 @@ object Fixtures {
     s
   }
 
-  // keyed by (session, dir): a cache hit across a stopped-and-recreated
-  // session would hand out DataFrames bound to the dead session; guarded so
-  // concurrent first calls from parallel suites build once
-  private val cache = scala.collection.mutable.Map.empty[(SparkSession, String), Graft]
+  /** The one memo for session-bound fixtures: engines, beds and index side
+   * tables. Keyed by (session, key): a hit across sessions (or across a
+   * stopped-and-recreated one) would hand out DataFrames bound to another
+   * session. The map lock is held only to install a key's holder; the build
+   * runs under that holder's lazy-val monitor, so concurrent first calls
+   * build once, different keys build concurrently, and a build may itself
+   * call `cached` for another key. A build that throws caches nothing: the
+   * next call for its key runs it again. */
+  def cached[T](s: SparkSession, key: String)(build: => T): T =
+    memo.synchronized(memo.getOrElseUpdate((s, key), new Memo(build))).value.asInstanceOf[T]
 
-  def graft(spark: SparkSession, dir: String): Graft = cache.synchronized {
-    cache.getOrElseUpdate((spark, dir), build(spark, dir))
-  }
+  private final class Memo(build: => Any) { lazy val value: Any = build }
+  private val memo = scala.collection.mutable.Map.empty[(SparkSession, String), Memo]
+
+  def graft(spark: SparkSession, dir: String): Graft = cached(spark, s"graft:$dir")(build(spark, dir))
 
   /** JSON string literal: escapes backslash, quote, and ALL control chars
    * (<0x20) — a tab/CR/FF in an error message or builder-authored SQL would

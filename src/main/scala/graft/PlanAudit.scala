@@ -11,7 +11,7 @@ object PlanAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     def show(name: String): Unit = {
       println(s"\n================ $name ================")
-      println(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
+      println(SparkEntry.gate(name).build(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
     Seq("q_filter_and_range", "q_ref_filter", "q_near_l2", "q_bm25").foreach(show)

@@ -8,9 +8,14 @@ import graft.model._
 import graft.operators._
 
 /**
- * Driver contract (see SURVEY.md §7): every entry in `queries` exercises an
- * operator family from SURVEY §2 through the engine API, and `oracleSql` holds
- * the DuckDB-equivalent SQL run by the driver on the same parquet tables.
+ * Driver contract (see SURVEY.md §7): `gates` declares every oracle gate
+ * once, as `Gate(name, oracle) { (spark, dir) => query }`. The query
+ * exercises an operator family from SURVEY §2 through the engine API; the
+ * oracle is the DuckDB-equivalent SQL, run on the same parquet tables
+ * (`scripts/verify_local.py` is the local compare). Each registry file (this
+ * one and the other `SparkEntry*` objects) keeps its oracles beside their
+ * queries; `gates` concatenates the files and rejects a duplicate name.
+ * Verify, Bench, PlanAudit and PlanGuardSpec iterate it.
  *
  * Determinism rules used throughout:
  *  - every result has a total order (trailing id tie-break) on BOTH sides;
@@ -20,6 +25,8 @@ import graft.operators._
  *    float32, which would diverge from our double-precision kernels).
  */
 object SparkEntry {
+
+  import Gate.g
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
    * filtered hybrid search (BM25 + vector legs, RRF fusion) over DocVec. */
@@ -36,8 +43,6 @@ object SparkEntry {
   }
 
   // --- shared helpers -------------------------------------------------------
-
-  private def g(spark: SparkSession, dir: String): Graft = Fixtures.graft(spark, dir)
 
   /** Lineitem ∪ a planted 'Z' group whose top mode count TIES (l_linenumber
    * 9×2, 4×2, 2×1): every natural l_returnflag group has a unique maximal
@@ -158,14 +163,23 @@ object SparkEntry {
     (tok, score)
   }
 
-  // --- the query inventory --------------------------------------------------
+  // --- the gate registry ----------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = base ++ SparkEntryExt.queries ++ SparkEntryExt2.queries ++ SparkEntryFixtures.queries ++ SparkEntryWire2.queries ++ SparkEntryGrpc.queries ++ SparkEntryObjects.queries ++ SparkEntryActions.queries
+  /** Every gate, in declaration order; a duplicate name fails here. */
+  lazy val gates: Seq[Gate] = Gate.registry(base ++ SparkEntryExt.gates ++
+    SparkEntryExt2.gates ++ SparkEntryFixtures.gates ++ SparkEntryWire2.gates ++
+    SparkEntryGrpc.gates ++ SparkEntryObjects.gates ++ SparkEntryActions.gates)
 
-  private def base: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gate(name: String): Gate =
+    gates.find(_.name == name).getOrElse(throw new NoSuchElementException(s"no gate $name"))
+
+  private def base: Seq[Gate] = Seq(
 
     // §2.2 filters: And + numeric/date ranges + (field-tokenized) text equal
-    "q_filter_and_range" -> ((s, dir) => {
+    Gate("q_filter_and_range",
+      """SELECT l_orderkey, l_linenumber FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Lineitem",
         where = Some(Where.and(
           Where.eqText("l_returnflag", "R"),
@@ -173,12 +187,15 @@ object SparkEntry {
           Where.ltDate("l_shipdate", "1995-06-17"))),
         properties = Seq("l_orderkey", "l_linenumber")))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // §2.2 Or / Not combinators. Bound 25000 (not 1000): min totalprice is
     // ~1014, so the numeric disjunct matched ZERO rows and a first-arm-only
     // Or passed — at 25000 it contributes 402 non-'F' rows of its own
-    "q_filter_or_not" -> ((s, dir) => {
+    Gate("q_filter_or_not",
+      """SELECT o_orderkey FROM orders
+        |WHERE (o_orderstatus = 'F' OR o_totalprice < 25000) AND NOT o_orderpriority = '1-URGENT'
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Order",
         where = Some(Where.and(
           Where.or(
@@ -187,10 +204,14 @@ object SparkEntry {
           Where.not(Where.eqText("o_orderpriority", "1-URGENT")))),
         properties = Seq("o_orderkey")))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // §2.2 Like wildcards + ContainsAny(int/text)
-    "q_filter_like_contains" -> ((s, dir) => {
+    Gate("q_filter_like_contains",
+      """SELECT p_partkey FROM part
+        |WHERE (p_name LIKE '%widget' OR p_type IN ('PROMO','LARGE'))
+        |  AND p_size IN (5,10,15,20,25,30)
+        |ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Part",
         where = Some(Where.and(
           Where.or(
@@ -199,63 +220,96 @@ object SparkEntry {
           Where.containsAnyInt("p_size", Seq(5L, 10L, 15L, 20L, 25L, 30L)))),
         properties = Seq("p_partkey")))
         .orderBy(col("p_partkey"))
-    }),
+    },
 
     // §2.2 IsNull + len(prop)
-    "q_filter_isnull_len" -> ((s, dir) => {
+    Gate("q_filter_isnull_len",
+      """SELECT doc_id FROM documents
+        |WHERE (CASE WHEN source = 'src13' THEN NULL ELSE source END) IS NULL
+        |   OR length(text) > 350
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Document",
         where = Some(Where.or(
           Where.isNull("maybe_src"),
           Where.gtInt("len(text)", 350))),
         properties = Seq("doc_id")))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // §2.2 WithinGeoRange (haversine ≤ radius)
-    "q_filter_geo" -> ((s, dir) => {
+    Gate("q_filter_geo",
+      """WITH pts AS (
+        |  SELECT c_custkey,
+        |         ((c_custkey * 7) % 17000) / 100.0 - 85.0 AS lat,
+        |         ((c_custkey * 13) % 35000) / 100.0 - 175.0 AS lon
+        |  FROM customer)
+        |SELECT c_custkey FROM pts
+        |WHERE 2 * 6371000.0 * asin(least(1.0, sqrt(
+        |        pow(sin(radians(10.0 - lat) / 2), 2)
+        |      + cos(radians(lat)) * cos(radians(10.0)) * pow(sin(radians(20.0 - lon) / 2), 2))))
+        |      <= 6000000.0
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Customer",
         where = Some(Where.withinGeoRange("geo", 10.0, 20.0, 6.0e6)),
         properties = Seq("c_custkey")))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // §2.2 cross-reference filter (1 hop: Order → Customer)
-    "q_ref_filter" -> ((s, dir) => {
+    Gate("q_ref_filter",
+      """SELECT o_orderkey FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+        |  AND o_totalprice > 100000
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Order",
         where = Some(Where.and(
           Where.eqText("o_custkey/Customer/c_mktsegment", "BUILDING"),
           Where.gtNum("o_totalprice", 100000.0))),
         properties = Seq("o_orderkey")))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // §2.2 cross-reference filter, 2 hops (Order → Customer → Nation)
-    "q_ref_filter_2hop" -> ((s, dir) => {
+    Gate("q_ref_filter_2hop",
+      """SELECT o_orderkey FROM orders
+        |WHERE o_custkey IN (
+        |  SELECT c_custkey FROM customer WHERE c_nationkey IN (
+        |    SELECT n_nationkey FROM nation
+        |    WHERE list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), 'nation')
+        |      AND list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), '7')))
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Order",
         where = Some(Where(WhereOp.Equal,
           Seq("o_custkey", "Customer", "c_nationkey", "Nation", "n_name"),
           Some(FilterValue.TextV("NATION_7")))),
         properties = Seq("o_orderkey")))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // §2.7 multi-key sort + offset/limit pagination
-    "q_sort_page" -> ((s, dir) => {
+    Gate("q_sort_page",
+      """SELECT p_partkey, p_retailprice FROM part
+        |ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 20 OFFSET 5""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Part",
         sort = Seq(SortBy.desc("p_retailprice"), SortBy.asc("p_partkey")),
         pagination = Some(Pagination(offset = 5, limit = 20)),
         properties = Seq("p_partkey", "p_retailprice")))
-    }),
+    },
 
     // §2.7 keyset cursor pagination
-    "q_cursor" -> ((s, dir) => {
+    Gate("q_cursor",
+      "SELECT o_orderkey FROM orders WHERE o_orderkey > 700 ORDER BY o_orderkey LIMIT 15") { (s, dir) =>
       g(s, dir).get(GetParams("Order",
         cursor = Some(Cursor(after = Some(700L), limit = 15)),
         properties = Seq("o_orderkey")))
-    }),
+    },
 
     // §2.6 grouped numeric aggregations
-    "q_agg_group_numeric" -> ((s, dir) => {
+    Gate("q_agg_group_numeric",
+      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
+        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
+        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       g(s, dir).aggregate(AggregateParams("Order",
         groupBy = Some(Seq("o_orderstatus")),
         properties = Map("o_totalprice" -> Seq(
@@ -270,281 +324,11 @@ object SparkEntry {
           round(col("o_totalprice_minimum"), 4).as("min_price"),
           round(col("o_totalprice_maximum"), 4).as("max_price"))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
 
     // §2.6 exact median + deterministic mode (over the tie-planted bed —
     // see lineitemTieBedFor)
-    "q_agg_median_mode" -> ((s, dir) => {
-      val gg = g(s, dir)
-      lineitemTieBedFor(gg, s)
-      val c = gg.collection("LineitemTie")
-      val med = gg.aggregate(AggregateParams("LineitemTie",
-        groupBy = Some(Seq("l_returnflag")),
-        properties = Map("l_quantity" -> Seq(Aggregator.Median))))
-        .select(col("groupedBy_value").as("l_returnflag"),
-          round(col("l_quantity_median"), 4).as("median_qty"))
-      val mode = Aggregations.modeExact(c.df, Seq(col("l_returnflag")), col("l_linenumber"))
-        .select(col("l_returnflag"), col("mode").as("mode_linenumber"))
-      med.join(mode, Seq("l_returnflag")).orderBy(col("l_returnflag"))
-    }),
-
-    // §2.6 boolean aggregations
-    "q_agg_bool" -> ((s, dir) => {
-      g(s, dir).aggregate(AggregateParams("Lineitem",
-        groupBy = Some(Seq("l_linestatus")),
-        properties = Map("is_high" -> Seq(
-          Aggregator.TotalTrue, Aggregator.TotalFalse,
-          Aggregator.PercentageTrue, Aggregator.PercentageFalse))))
-        .select(col("groupedBy_value").as("l_linestatus"),
-          col("is_high_totalTrue").cast("long").as("total_true"),
-          col("is_high_totalFalse").cast("long").as("total_false"),
-          round(col("is_high_percentageTrue"), 4).as("pct_true"),
-          round(col("is_high_percentageFalse"), 4).as("pct_false"))
-        .orderBy(col("l_linestatus"))
-    }),
-
-    // §2.6 date aggregations (min/max/median on timestamps)
-    "q_agg_date" -> ((s, dir) => {
-      val c = g(s, dir).collection("Order")
-      c.df.groupBy(col("o_orderstatus"))
-        .agg(
-          min(col("o_orderdate")).cast("string").as("min_date"),
-          max(col("o_orderdate")).cast("string").as("max_date"),
-          round(median(unix_micros(col("o_orderdate").cast("timestamp"))), 4).as("median_micros"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // §2.6 topOccurrences per group
-    "q_agg_topoccurrences" -> ((s, dir) => {
-      val c = g(s, dir).collection("Document")
-      Aggregations.topOccurrences(c.df, Seq(col("source")), col("lang"), 3)
-        .select(col("source"), col("value"), col("occurs"), col("rank").cast("long").as("rank"))
-        .orderBy(col("source"), col("rank"))
-    }),
-
-    // §2.3 nearObject + l2-squared top-k
-    "q_near_l2" -> ((s, dir) => {
-      g(s, dir).get(GetParams("Embedding",
-        nearObject = Some(NearObject(7L, metric = Metric.L2Squared)),
-        pagination = Some(Pagination(limit = 10)),
-        properties = Seq("vec_id"),
-        additional = Set("distance")))
-        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
-
-    // §2.3 SearchByVectorDistance: unlimited, threshold only (cosine)
-    "q_near_cosine_radius" -> ((s, dir) => {
-      g(s, dir).get(GetParams("Embedding",
-        nearObject = Some(NearObject(3L, metric = Metric.Cosine, distance = Some(0.8))),
-        properties = Seq("vec_id")))
-        .orderBy(col("vec_id"))
-    }),
-
-    // §2.3 multi-target search (Sum combination over named vectors)
-    "q_near_multitarget" -> ((s, dir) => {
-      val gg = g(s, dir)
-      gg.get(GetParams("Embedding",
-        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
-          targetVectors = Seq("default", "rev"), combination = TargetCombination.Sum)),
-        pagination = Some(Pagination(limit = 10)),
-        properties = Seq("vec_id"),
-        additional = Set("distance")))
-        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
-
-    // §2.3 multi-target search with PER-TARGET query vectors (the
-    // reference's `Vectors []models.Vector` aligned with targetVectors —
-    // retrieval.go:33-39, shard_read.go:675 searchVectors[i]): each target
-    // scored with its own query embedding, Sum-combined over the full scan
-    "q_near_multitarget_pervec" -> ((s, dir) => {
-      val gg = g(s, dir)
-      gg.get(GetParams("Embedding",
-        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
-          targetVectors = Seq("default", "rev"), combination = TargetCombination.Sum,
-          vectors = TargetQuery.singles(Seq(Fixtures.anchorVector(gg, 11L), Fixtures.anchorVector(gg, 23L))))),
-        pagination = Some(Pagination(limit = 10)),
-        properties = Seq("vec_id"),
-        additional = Set("distance")))
-        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
-
-    // §2.3 multi-target RelativeScore combination: pool = union of per-target
-    // top-k, min-max normalized per target OVER THE POOL, weighted sum
-    // (reference: shard_combine_multi_target.go:118-183 + hybrid_fusion.go)
-    "q_near_multitarget_rel" -> ((s, dir) => {
-      val gg = g(s, dir)
-      gg.get(GetParams("Embedding",
-        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
-          targetVectors = Seq("default", "rev"),
-          combination = TargetCombination.RelativeScore(Seq(0.7, 0.3)))),
-        pagination = Some(Pagination(limit = 10)),
-        properties = Seq("vec_id"),
-        additional = Set("distance")))
-        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
-
-    // §2.3 vector-search groupBy (greedy rank-order grouping)
-    "q_group_near" -> ((s, dir) => {
-      g(s, dir).get(GetParams("Embedding",
-        nearObject = Some(NearObject(11L, metric = Metric.L2Squared)),
-        pagination = Some(Pagination(limit = 50)),
-        groupBy = Some(GroupByParams("label", groups = 5, objectsPerGroup = 3)),
-        properties = Seq("vec_id")))
-        .select(col("group_index").cast("long").as("group_index"), col("group_value").as("label"),
-          col("group_hit_rank").cast("long").as("group_hit_rank"), col("vec_id"))
-        .orderBy(col("group_index"), col("group_hit_rank"))
-    }),
-
-    // §2.4 BM25 top-k (searchOperator Or)
-    "q_bm25" -> ((s, dir) => {
-      g(s, dir).get(GetParams("Document",
-        bm25 = Some(Bm25("spark join stream window", properties = Seq("text"))),
-        pagination = Some(Pagination(limit = 20)),
-        properties = Seq("doc_id"),
-        additional = Set("score")))
-        .select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
-
-    // §2.4 BM25 searchOperator And (all terms required)
-    "q_bm25_and" -> ((s, dir) => {
-      val gg = g(s, dir)
-      bmAndBedFor(gg, s)
-      gg.get(GetParams("DocAnd",
-        bm25 = Some(Bm25("table dup merge", properties = Seq("text"),
-          searchOperator = SearchOperator.AndOp)),
-        pagination = Some(Pagination(limit = 15)),
-        properties = Seq("doc_id"),
-        additional = Set("score")))
-        .select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
-
-    // §2.5 hybrid rankedFusion (RRF)
-    // alpha 0.7 (not 0.5): at 0.5 the RRF weight expression is symmetric
-    // under a sparse/dense leg swap, so an engine applying alpha to the
-    // WRONG leg hash-matched every Ranked gate — 0.7 pins alpha to the
-    // vector leg (reference: hybrid alpha weights the vector side)
-    "q_hybrid_rrf" -> ((s, dir) => {
-      val gg = g(s, dir)
-      gg.get(GetParams("DocVec",
-        hybrid = Some(Hybrid("spark join stream", vector = Some(Fixtures.anchorVector(gg, 7L)),
-          metric = Metric.Cosine, alpha = 0.7, fusionType = FusionType.Ranked)),
-        pagination = Some(Pagination(limit = 15)),
-        properties = Seq("doc_id"),
-        additional = Set("score")))
-        .select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
-
-    // §2.1 TPC-H Q1-style relational aggregation (M0 generic runner)
-    "q1_tpch" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      li.filter(col("l_shipdate") <= lit(Where.utcTs("1996-06-30")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 4).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 4).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("sum_disc_price"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // §2.10 streaming-shaped windowed aggregation (batch parity of the
-    // Structured Streaming job in graft.streaming)
-    "q_events_window" -> ((s, dir) => {
-      val ev = Fixtures.events(s, dir)
-      ev.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-        .select(col("w.start").cast("string").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // kNN join: for each probe (vec_id % 100 == 0), its 3 nearest neighbours.
-    // IVF-bucketed join (probes and data equi-joined on shared centroids) at
-    // full probe, so the result is exact and the brute-force SQL oracle
-    // hash-matches; the pruned-nprobe regime is covered by KnnJoinSpec
-    "q_knn_join" -> ((s, dir) => {
-      val gg = g(s, dir)
-      val emb = gg.collection("Embedding").df
-      val probes = emb.filter(col("vec_id") % 100 === 0)
-      KnnJoin.bucketed(SparkEntryExt.ivfFor(gg, dir),
-          probes, col("vec_id"), col("embedding"),
-          k = 3, metric = Metric.L2Squared, nprobe = 8)
-        .select(col("probe_id"), col("rank").cast("long").as("rank"),
-          col("data_id").as("neighbor_id"), round(col("dist"), 4).as("dist"))
-        .orderBy(col("probe_id"), col("rank"))
-    })
-  )
-
-  // --- DuckDB oracle SQL ----------------------------------------------------
-
-  def oracleSql: Map[String, String] = baseOracle ++ SparkEntryExt.oracleSql ++ SparkEntryExt2.oracleSql ++ SparkEntryFixtures.oracleSql ++ SparkEntryWire2.oracleSql ++ SparkEntryGrpc.oracleSql ++ SparkEntryObjects.oracleSql ++ SparkEntryActions.oracleSql
-
-  private def baseOracle: Map[String, String] = Map(
-    "q_filter_and_range" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_filter_or_not" ->
-      """SELECT o_orderkey FROM orders
-        |WHERE (o_orderstatus = 'F' OR o_totalprice < 25000) AND NOT o_orderpriority = '1-URGENT'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_filter_like_contains" ->
-      """SELECT p_partkey FROM part
-        |WHERE (p_name LIKE '%widget' OR p_type IN ('PROMO','LARGE'))
-        |  AND p_size IN (5,10,15,20,25,30)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_filter_isnull_len" ->
-      """SELECT doc_id FROM documents
-        |WHERE (CASE WHEN source = 'src13' THEN NULL ELSE source END) IS NULL
-        |   OR length(text) > 350
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_filter_geo" ->
-      """WITH pts AS (
-        |  SELECT c_custkey,
-        |         ((c_custkey * 7) % 17000) / 100.0 - 85.0 AS lat,
-        |         ((c_custkey * 13) % 35000) / 100.0 - 175.0 AS lon
-        |  FROM customer)
-        |SELECT c_custkey FROM pts
-        |WHERE 2 * 6371000.0 * asin(least(1.0, sqrt(
-        |        pow(sin(radians(10.0 - lat) / 2), 2)
-        |      + cos(radians(lat)) * cos(radians(10.0)) * pow(sin(radians(20.0 - lon) / 2), 2))))
-        |      <= 6000000.0
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_ref_filter" ->
-      """SELECT o_orderkey FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |  AND o_totalprice > 100000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_ref_filter_2hop" ->
-      """SELECT o_orderkey FROM orders
-        |WHERE o_custkey IN (
-        |  SELECT c_custkey FROM customer WHERE c_nationkey IN (
-        |    SELECT n_nationkey FROM nation
-        |    WHERE list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), 'nation')
-        |      AND list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), '7')))
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_sort_page" ->
-      """SELECT p_partkey, p_retailprice FROM part
-        |ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 20 OFFSET 5""".stripMargin,
-
-    "q_cursor" ->
-      "SELECT o_orderkey FROM orders WHERE o_orderkey > 700 ORDER BY o_orderkey LIMIT 15",
-
-    "q_agg_group_numeric" ->
-      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
-        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
-        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_agg_median_mode" ->
+    Gate("q_agg_median_mode",
       """WITH li AS (
         |  SELECT l_returnflag, l_linenumber, l_quantity FROM lineitem
         |  UNION ALL SELECT * FROM (VALUES
@@ -556,59 +340,140 @@ object SparkEntry {
         |  FROM li GROUP BY l_returnflag, l_linenumber)
         |SELECT l.l_returnflag, round(median(l.l_quantity), 4) AS median_qty, any_value(m.mode_linenumber) AS mode_linenumber
         |FROM li l JOIN modes m ON l.l_returnflag = m.l_returnflag AND m.rn = 1
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin) { (s, dir) =>
+      val gg = g(s, dir)
+      lineitemTieBedFor(gg, s)
+      val c = gg.collection("LineitemTie")
+      val med = gg.aggregate(AggregateParams("LineitemTie",
+        groupBy = Some(Seq("l_returnflag")),
+        properties = Map("l_quantity" -> Seq(Aggregator.Median))))
+        .select(col("groupedBy_value").as("l_returnflag"),
+          round(col("l_quantity_median"), 4).as("median_qty"))
+      val mode = Aggregations.modeExact(c.df, Seq(col("l_returnflag")), col("l_linenumber"))
+        .select(col("l_returnflag"), col("mode").as("mode_linenumber"))
+      med.join(mode, Seq("l_returnflag")).orderBy(col("l_returnflag"))
+    },
 
-    "q_agg_bool" ->
+    // §2.6 boolean aggregations
+    Gate("q_agg_bool",
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END) AS BIGINT) AS total_true,
         |  CAST(sum(CASE WHEN l_quantity > 25 THEN 0 ELSE 1 END) AS BIGINT) AS total_false,
         |  round(avg(CASE WHEN l_quantity > 25 THEN 1.0 ELSE 0.0 END), 4) AS pct_true,
         |  round(avg(CASE WHEN l_quantity > 25 THEN 0.0 ELSE 1.0 END), 4) AS pct_false
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
+      g(s, dir).aggregate(AggregateParams("Lineitem",
+        groupBy = Some(Seq("l_linestatus")),
+        properties = Map("is_high" -> Seq(
+          Aggregator.TotalTrue, Aggregator.TotalFalse,
+          Aggregator.PercentageTrue, Aggregator.PercentageFalse))))
+        .select(col("groupedBy_value").as("l_linestatus"),
+          col("is_high_totalTrue").cast("long").as("total_true"),
+          col("is_high_totalFalse").cast("long").as("total_false"),
+          round(col("is_high_percentageTrue"), 4).as("pct_true"),
+          round(col("is_high_percentageFalse"), 4).as("pct_false"))
+        .orderBy(col("l_linestatus"))
+    },
 
-    "q_agg_date" ->
+    // §2.6 date aggregations (min/max/median on timestamps)
+    Gate("q_agg_date",
       """SELECT o_orderstatus,
         |  CAST(min(o_orderdate) AS VARCHAR) AS min_date,
         |  CAST(max(o_orderdate) AS VARCHAR) AS max_date,
         |  round(median(epoch_us(o_orderdate)), 4) AS median_micros
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
+      val c = g(s, dir).collection("Order")
+      c.df.groupBy(col("o_orderstatus"))
+        .agg(
+          min(col("o_orderdate")).cast("string").as("min_date"),
+          max(col("o_orderdate")).cast("string").as("max_date"),
+          round(median(unix_micros(col("o_orderdate").cast("timestamp"))), 4).as("median_micros"))
+        .orderBy(col("o_orderstatus"))
+    },
 
-    "q_agg_topoccurrences" ->
+    // §2.6 topOccurrences per group
+    Gate("q_agg_topoccurrences",
       """SELECT source, value, occurs, rank FROM (
         |  SELECT source, lang AS value, count(*) AS occurs,
         |         row_number() OVER (PARTITION BY source ORDER BY count(*) DESC, lang ASC) AS rank
         |  FROM documents GROUP BY source, lang)
-        |WHERE rank <= 3 ORDER BY source, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY source, rank""".stripMargin) { (s, dir) =>
+      val c = g(s, dir).collection("Document")
+      Aggregations.topOccurrences(c.df, Seq(col("source")), col("lang"), 3)
+        .select(col("source"), col("value"), col("occurs"), col("rank").cast("long").as("rank"))
+        .orderBy(col("source"), col("rank"))
+    },
 
-    "q_near_l2" ->
+    // §2.3 nearObject + l2-squared top-k
+    Gate("q_near_l2",
       s"""WITH ${sqlQv(7)},
          |d AS (SELECT e.vec_id, ${sqlL2("e.embedding", "q.v")} AS dist
          |      FROM embeddings e CROSS JOIN qv q)
          |SELECT vec_id, round(dist, 4) AS dist FROM d
-         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
+      g(s, dir).get(GetParams("Embedding",
+        nearObject = Some(NearObject(7L, metric = Metric.L2Squared)),
+        pagination = Some(Pagination(limit = 10)),
+        properties = Seq("vec_id"),
+        additional = Set("distance")))
+        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
+    },
 
-    "q_near_cosine_radius" ->
+    // §2.3 SearchByVectorDistance: unlimited, threshold only (cosine)
+    Gate("q_near_cosine_radius",
       s"""WITH ${sqlQv(3)},
          |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
          |      FROM embeddings e CROSS JOIN qv q)
-         |SELECT vec_id FROM d WHERE dist <= 0.8 ORDER BY vec_id""".stripMargin,
+         |SELECT vec_id FROM d WHERE dist <= 0.8 ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      g(s, dir).get(GetParams("Embedding",
+        nearObject = Some(NearObject(3L, metric = Metric.Cosine, distance = Some(0.8))),
+        properties = Seq("vec_id")))
+        .orderBy(col("vec_id"))
+    },
 
-    "q_near_multitarget" ->
+    // §2.3 multi-target search (Sum combination over named vectors)
+    Gate("q_near_multitarget",
       s"""WITH ${sqlQv(11)},
          |d AS (SELECT e.vec_id, ${sqlL2("e.embedding", "q.v")} + ${sqlL2Rev("e.embedding", "q.v")} AS dist
          |      FROM embeddings e CROSS JOIN qv q)
          |SELECT vec_id, round(dist, 4) AS dist FROM d
-         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
+      val gg = g(s, dir)
+      gg.get(GetParams("Embedding",
+        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
+          targetVectors = Seq("default", "rev"), combination = TargetCombination.Sum)),
+        pagination = Some(Pagination(limit = 10)),
+        properties = Seq("vec_id"),
+        additional = Set("distance")))
+        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
+    },
 
-    "q_near_multitarget_pervec" ->
+    // §2.3 multi-target search with PER-TARGET query vectors (the
+    // reference's `Vectors []models.Vector` aligned with targetVectors —
+    // retrieval.go:33-39, shard_read.go:675 searchVectors[i]): each target
+    // scored with its own query embedding, Sum-combined over the full scan
+    Gate("q_near_multitarget_pervec",
       s"""WITH qa AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 11),
          |qb AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 23),
          |d AS (SELECT e.vec_id, ${sqlL2("e.embedding", "a.v")} + ${sqlL2Rev("e.embedding", "b.v")} AS dist
          |      FROM embeddings e CROSS JOIN qa a CROSS JOIN qb b)
          |SELECT vec_id, round(dist, 4) AS dist FROM d
-         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
+      val gg = g(s, dir)
+      gg.get(GetParams("Embedding",
+        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
+          targetVectors = Seq("default", "rev"), combination = TargetCombination.Sum,
+          vectors = TargetQuery.singles(Seq(Fixtures.anchorVector(gg, 11L), Fixtures.anchorVector(gg, 23L))))),
+        pagination = Some(Pagination(limit = 10)),
+        properties = Seq("vec_id"),
+        additional = Set("distance")))
+        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
+    },
 
-    "q_near_multitarget_rel" ->
+    // §2.3 multi-target RelativeScore combination: pool = union of per-target
+    // top-k, min-max normalized per target OVER THE POOL, weighted sum
+    // (reference: shard_combine_multi_target.go:118-183 + hybrid_fusion.go)
+    Gate("q_near_multitarget_rel",
       s"""WITH ${sqlQv(11)},
          |d AS (SELECT e.vec_id, ${sqlL2("e.embedding", "q.v")} AS d0,
          |             ${sqlL2Rev("e.embedding", "q.v")} AS d1
@@ -623,9 +488,20 @@ object SparkEntry {
          |      + (CASE WHEN mx1 = mn1 THEN 0.3 ELSE (d1 - mn1) / (mx1 - mn1) * 0.3 END) AS dist
          |      FROM pool CROSS JOIN stats)
          |SELECT vec_id, round(dist, 4) AS dist FROM f
-         |ORDER BY f.dist ASC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY f.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
+      val gg = g(s, dir)
+      gg.get(GetParams("Embedding",
+        nearVector = Some(NearVector(Fixtures.anchorVector(gg, 11L), metric = Metric.L2Squared,
+          targetVectors = Seq("default", "rev"),
+          combination = TargetCombination.RelativeScore(Seq(0.7, 0.3)))),
+        pagination = Some(Pagination(limit = 10)),
+        properties = Seq("vec_id"),
+        additional = Set("distance")))
+        .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
+    },
 
-    "q_group_near" ->
+    // §2.3 vector-search groupBy (greedy rank-order grouping)
+    Gate("q_group_near",
       s"""WITH ${sqlQv(11)},
          |ranked AS (
          |  SELECT e.vec_id, e.label,
@@ -639,18 +515,36 @@ object SparkEntry {
          |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS group_index FROM grouped)
          |SELECT group_index, label, group_hit_rank, vec_id FROM idx
          |WHERE group_index <= 5 AND group_hit_rank <= 3
-         |ORDER BY group_index, group_hit_rank""".stripMargin,
+         |ORDER BY group_index, group_hit_rank""".stripMargin) { (s, dir) =>
+      g(s, dir).get(GetParams("Embedding",
+        nearObject = Some(NearObject(11L, metric = Metric.L2Squared)),
+        pagination = Some(Pagination(limit = 50)),
+        groupBy = Some(GroupByParams("label", groups = 5, objectsPerGroup = 3)),
+        properties = Seq("vec_id")))
+        .select(col("group_index").cast("long").as("group_index"), col("group_value").as("label"),
+          col("group_hit_rank").cast("long").as("group_hit_rank"), col("vec_id"))
+        .orderBy(col("group_index"), col("group_hit_rank"))
+    },
 
-    "q_bm25" -> {
+    // §2.4 BM25 top-k (searchOperator Or)
+    Gate("q_bm25", {
       val terms = Seq("spark", "join", "stream", "window")
       val (ctes, _) = sqlBm25(terms)
       s"""WITH $ctes
          |SELECT doc_id, round(score_exact, 4) AS score FROM scored
          |WHERE terms_matched >= 1
          |ORDER BY score_exact DESC, doc_id ASC LIMIT 20""".stripMargin
+    }) { (s, dir) =>
+      g(s, dir).get(GetParams("Document",
+        bm25 = Some(Bm25("spark join stream window", properties = Seq("text"))),
+        pagination = Some(Pagination(limit = 20)),
+        properties = Seq("doc_id"),
+        additional = Set("score")))
+        .select(col("doc_id"), round(col("_score"), 4).as("score"))
     },
 
-    "q_bm25_and" -> {
+    // §2.4 BM25 searchOperator And (all terms required)
+    Gate("q_bm25_and", {
       val terms = Seq("table", "dup", "merge")
       // same planted bed as bmAndBedFor: the 2-of-3 plant would LEAD an Or
       // ordering (its saturated two-term score beats every full match) but
@@ -662,9 +556,24 @@ object SparkEntry {
          |SELECT doc_id, round(score_exact, 4) AS score FROM scored
          |WHERE terms_matched >= ${terms.size}
          |ORDER BY score_exact DESC, doc_id ASC LIMIT 15""".stripMargin
+    }) { (s, dir) =>
+      val gg = g(s, dir)
+      bmAndBedFor(gg, s)
+      gg.get(GetParams("DocAnd",
+        bm25 = Some(Bm25("table dup merge", properties = Seq("text"),
+          searchOperator = SearchOperator.AndOp)),
+        pagination = Some(Pagination(limit = 15)),
+        properties = Seq("doc_id"),
+        additional = Set("score")))
+        .select(col("doc_id"), round(col("_score"), 4).as("score"))
     },
 
-    "q_hybrid_rrf" -> {
+    // §2.5 hybrid rankedFusion (RRF)
+    // alpha 0.7 (not 0.5): at 0.5 the RRF weight expression is symmetric
+    // under a sparse/dense leg swap, so an engine applying alpha to the
+    // WRONG leg hash-matched every Ranked gate — 0.7 pins alpha to the
+    // vector leg (reference: hybrid alpha weights the vector side)
+    Gate("q_hybrid_rrf", {
       val terms = Seq("spark", "join", "stream")
       // properties=Nil scores ALL DocVec searchable props: lang+source are
       // Field-tokenized (mean length 1.0) and join the pooled avgdl
@@ -687,9 +596,19 @@ object SparkEntry {
          |  FROM sparse s FULL OUTER JOIN dense de ON s.doc_id = de.doc_id)
          |SELECT doc_id, round(score_exact, 4) AS score FROM fused
          |ORDER BY score_exact DESC, secondary DESC, doc_id ASC LIMIT 15""".stripMargin
+    }) { (s, dir) =>
+      val gg = g(s, dir)
+      gg.get(GetParams("DocVec",
+        hybrid = Some(Hybrid("spark join stream", vector = Some(Fixtures.anchorVector(gg, 7L)),
+          metric = Metric.Cosine, alpha = 0.7, fusionType = FusionType.Ranked)),
+        pagination = Some(Pagination(limit = 15)),
+        properties = Seq("doc_id"),
+        additional = Set("score")))
+        .select(col("doc_id"), round(col("_score"), 4).as("score"))
     },
 
-    "q1_tpch" ->
+    // §2.1 TPC-H Q1-style relational aggregation (M0 generic runner)
+    Gate("q1_tpch",
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 4) AS sum_qty,
         |  round(sum(l_extendedprice), 4) AS sum_base_price,
@@ -698,14 +617,38 @@ object SparkEntry {
         |  round(avg(l_discount), 4) AS avg_disc,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1996-06-30'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
+      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      li.filter(col("l_shipdate") <= lit(Where.utcTs("1996-06-30")))
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(
+          round(sum(col("l_quantity")), 4).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 4).as("sum_base_price"),
+          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("sum_disc_price"),
+          round(avg(col("l_quantity")), 4).as("avg_qty"),
+          round(avg(col("l_discount")), 4).as("avg_disc"),
+          count(lit(1)).as("count_order"))
+        .orderBy(col("l_returnflag"), col("l_linestatus"))
+    },
 
-    "q_events_window" ->
+    // §2.10 streaming-shaped windowed aggregation (batch parity of the
+    // Structured Streaming job in graft.streaming)
+    Gate("q_events_window",
       """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS window_start, event_type,
         |  count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+      val ev = Fixtures.events(s, dir)
+      ev.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+        .select(col("w.start").cast("string").as("window_start"), col("event_type"), col("n"), col("sum_value"))
+        .orderBy(col("window_start"), col("event_type"))
+    },
 
-    "q_knn_join" ->
+    // kNN join: for each probe (vec_id % 100 == 0), its 3 nearest neighbours.
+    // IVF-bucketed join (probes and data equi-joined on shared centroids) at
+    // full probe, so the result is exact and the brute-force SQL oracle
+    // hash-matches; the pruned-nprobe regime is covered by KnnJoinSpec
+    Gate("q_knn_join",
       """WITH probes AS (SELECT vec_id AS probe_id, embedding AS probe_vec FROM embeddings WHERE vec_id % 100 = 0),
         |pairs AS (
         |  SELECT p.probe_id, e.vec_id,
@@ -717,6 +660,16 @@ object SparkEntry {
         |         row_number() OVER (PARTITION BY probe_id ORDER BY dist ASC, vec_id ASC) AS rank
         |  FROM pairs)
         |SELECT probe_id, rank, vec_id AS neighbor_id, round(dist, 4) AS dist
-        |FROM ranked WHERE rank <= 3 ORDER BY probe_id, rank""".stripMargin
+        |FROM ranked WHERE rank <= 3 ORDER BY probe_id, rank""".stripMargin) { (s, dir) =>
+      val gg = g(s, dir)
+      val emb = gg.collection("Embedding").df
+      val probes = emb.filter(col("vec_id") % 100 === 0)
+      KnnJoin.bucketed(SparkEntryExt.ivfFor(gg, dir),
+          probes, col("vec_id"), col("embedding"),
+          k = 3, metric = Metric.L2Squared, nprobe = 8)
+        .select(col("probe_id"), col("rank").cast("long").as("rank"),
+          col("data_id").as("neighbor_id"), round(col("dist"), 4).as("dist"))
+        .orderBy(col("probe_id"), col("rank"))
+    }
   )
 }

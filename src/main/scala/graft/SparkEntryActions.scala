@@ -32,10 +32,7 @@ import graft.sources.CollectionStore
  */
 object SparkEntryActions {
 
-  private def steps(s: SparkSession, rows: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("step", "result").orderBy(col("step"))
-  }
+  import Gate.steps
 
   /** Go-style float rendering (encoding/json on a float64): integral values
    * drop the decimal part — json.Number("2"), not "2.0". */
@@ -820,37 +817,14 @@ object SparkEntryActions {
     steps(s, out.result())
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fixture_actions" -> ((s, _) => actionsGate(s)),
-    "q_fixture_actions_crud" -> ((s, _) => crudGate(s)),
-    "q_fixture_delete_prop_index" -> ((s, _) => deletePropIndexGate(s)),
-    "q_fixture_drop_index" -> ((s, _) => dropIndexGate(s)))
-
-  def oracleSql: Map[String, String] = Map(
-    // alter_schema/delete_property_index_test.go: pre-deletion searches all
-    // serve; a filterable deletion with a SURVIVING searchable index still
-    // serves filters (the suite deletes both for `title` before asserting
-    // failure); once no inverted index remains, filters error with the
-    // missingFilterable text, bm25 with the missing-searchable text
-    // (WEAVIATE-471), and an unknown property rejects with the handler's
-    // "property name X: not found"
-    "q_fixture_delete_prop_index" ->
-      """SELECT * FROM (VALUES
-        |  ('p1_pre', 'title=1;only_filterable=1;author=1;year=1'),
-        |  ('p2_title_fallback', '1'),
-        |  ('p3_unknown_prop', 'property name doesntexist: not found'),
-        |  ('p4_title_off', 'Filtering by property ''title'' requires inverted index. Is `indexFilterable` option of property ''title'' enabled? Set it to `true` or leave empty'),
-        |  ('p5_only_filterable_off', 'Filtering by property ''title_only_filterable'' requires inverted index. Is `indexFilterable` option of property ''title_only_filterable'' enabled? Set it to `true` or leave empty'),
-        |  ('p6_author_off', 'Searching by property ''author'' requires inverted index. Is `indexSearchable` option of property ''author'' enabled? Set it to `true` or leave empty'),
-        |  ('p7_year_off', 'Filtering by property ''year'' requires inverted index. Is `indexFilterable` option of property ''year'' enabled? Set it to `true` or leave empty')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+  private[graft] def gates: Seq[Gate] = Seq(
     // Test_Objects (setup/add/delete/update/individual_refs): the typed
     // create echo (int as json.Number "1", the +01:00 date offset intact —
     // the stored-document echo), short-beacon class detection on
     // single-target props, delete → 404, deprecated PUT replacing the whole
     // prop set, classless PATCH merging a cref, and the three reference-
     // endpoint ops (append / replace / remove-to-empty)
-    "q_fixture_actions" ->
+    Gate("q_fixture_actions",
       """SELECT * FROM (VALUES
         |  ('a1_create_echo', 'testDateTime=2017-10-06T08:15:30+01:00;testNumber=1.337;testString=Test string;testTrueFalse=true;testWholeNumber=1'),
         |  ('a2_get_roundtrip', 'testDateTime=2017-10-06T08:15:30+01:00;testNumber=1.337;testString=Test string;testTrueFalse=true;testWholeNumber=1'),
@@ -863,13 +837,13 @@ object SparkEntryActions {
         |  ('u2_update_string', 'testString=wibbly wobbly'),
         |  ('u3_update_bool', 'testTrueFalse=true'),
         |  ('u4_patch_cref', 'testReference=[weaviate://localhost/ObjectTestThing/0ac70000-0000-4000-8000-000000000009|/v1/objects/ObjectTestThing/0ac70000-0000-4000-8000-000000000009]')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => actionsGate(s)),
     // object_test.go: class-scoped find/head/put/patch/delete with the
     // duplicate-beacon lists stored VERBATIM through the props path (PUT/
     // PATCH expected maps keep link1+link2), the references error matrix
     // (unknown prop → 422 before the id fetch → 404, nil body → 422),
     // the same-uuid-two-classes delete, and the list endpoint
-    "q_fixture_actions_crud" ->
+    Gate("q_fixture_actions_crud",
       """SELECT * FROM (VALUES
         |  ('del1_delete_a', '204'),
         |  ('del2_gone_a', '404'),
@@ -899,14 +873,31 @@ object SparkEntryActions {
         |  ('q1_list', 'n=2;sum=2'),
         |  ('q2_list_friend', 'n=1'),
         |  ('q3_list_unknown', '404')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => crudGate(s)),
+    // alter_schema/delete_property_index_test.go: pre-deletion searches all
+    // serve; a filterable deletion with a SURVIVING searchable index still
+    // serves filters (the suite deletes both for `title` before asserting
+    // failure); once no inverted index remains, filters error with the
+    // missingFilterable text, bm25 with the missing-searchable text
+    // (WEAVIATE-471), and an unknown property rejects with the handler's
+    // "property name X: not found"
+    Gate("q_fixture_delete_prop_index",
+      """SELECT * FROM (VALUES
+        |  ('p1_pre', 'title=1;only_filterable=1;author=1;year=1'),
+        |  ('p2_title_fallback', '1'),
+        |  ('p3_unknown_prop', 'property name doesntexist: not found'),
+        |  ('p4_title_off', 'Filtering by property ''title'' requires inverted index. Is `indexFilterable` option of property ''title'' enabled? Set it to `true` or leave empty'),
+        |  ('p5_only_filterable_off', 'Filtering by property ''title_only_filterable'' requires inverted index. Is `indexFilterable` option of property ''title_only_filterable'' enabled? Set it to `true` or leave empty'),
+        |  ('p6_author_off', 'Searching by property ''author'' requires inverted index. Is `indexSearchable` option of property ''author'' enabled? Set it to `true` or leave empty'),
+        |  ('p7_year_off', 'Filtering by property ''year'' requires inverted index. Is `indexFilterable` option of property ''year'' enabled? Set it to `true` or leave empty')
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => deletePropIndexGate(s)),
     // drop_vector_index lifecycle/multivector/cold_tenant: drop strips
     // stored vectors + removes the schema entry, sibling untouched, the
     // name re-creatable FRESH at 256 dims (old objects don't resurrect),
     // multi-vector lists strip the same way, and the cold-tenant deferral:
     // hot tenants strip now, the "none" marker stays, manual removal is
     // rejected with the reference's text, reactivation finalizes
-    "q_fixture_drop_index" ->
+    Gate("q_fixture_drop_index",
       """SELECT * FROM (VALUES
         |  ('c1_hot_stripped', 'tenant-1={n=10;with=0;dim=null};tenant-2={n=10;with=0;dim=null};tenant-3={n=10;with=10;dim=32}'),
         |  ('c2_marker', 'entry=true;type=none'),
@@ -941,5 +932,7 @@ object SparkEntryActions {
         |  ('x1_recreated', 'with=n=10;with=10;dim=16'),
         |  ('x2_redropped', 'entry=false;v1=absent;sibling={n=10;with=10;dim=16}'),
         |  ('x3_sibling_near', '3')
-        |) AS t(step, result) ORDER BY step""".stripMargin)
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => dropIndexGate(s))
+  )
+
 }

@@ -16,14 +16,18 @@ import graft.pipeline._
  */
 object SparkEntryExt2 {
 
+  import Gate.{g, okOr, valueOr}
   import SparkEntryExt._
   import SparkEntry.{sqlQv, sqlL2, sqlL2Rev, sqlCosine, sqlBm25, sqlDot, sqlDocVec}
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def gates: Seq[Gate] = Seq(
 
     // §2.1 backup: class-level export (data + schema manifest) and restore —
     // the restored rows must be bit-identical to the source collection
-    "q_backup_roundtrip" -> ((s, dir) => {
+    // export + restore must be the identity on the rows
+    Gate("q_backup_roundtrip",
+      """SELECT doc_id, lang, n_chars, md5(text) AS text_md5, source
+        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val path = java.nio.file.Files.createTempDirectory("graft-backup").toString
       graft.sources.Backup.exportCollection(gg.collection("Document"), path)
@@ -34,28 +38,48 @@ object SparkEntryExt2 {
       restored.df.select(col("doc_id"), col("lang"), col("n_chars"),
           md5(col("text")).as("text_md5"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // §2.3 assign-only incremental IVF append (the async index-queue
     // analogue): an appended exact copy of vec 13 must land in the probed
     // posting list and tie the original at distance 0 — a stale or
     // mis-assigned append cannot produce this pair
-    "q_ivf_append" -> ((s, dir) => {
+    // planted-copy append oracle at nprobe=1: both copies of vec 13 sit in
+    // the query's own nearest-centroid posting ONLY under the correct
+    // nearest-centroid assignment (build side and append side use the same
+    // rule, the query probe the same argmin), so the single-probe search
+    // finds both at distance 0; id tie-break orders original before twin
+    Gate("q_ivf_append",
+      """SELECT vec_id, 0.0 AS dist FROM embeddings WHERE vec_id = 13
+        |UNION ALL
+        |SELECT 5000000 AS vec_id, 0.0 FROM embeddings WHERE vec_id = 13
+        |ORDER BY vec_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       ivfAppendFor(gg, dir)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.4 postings incremental maintenance: build → delta (replace one doc's
     // text, delete one doc, append one new doc) → search. The oracle runs the
     // exact BM25 formula over the post-mutation corpus, so a delta that
     // missed a replaced/deleted/appended posting or stale avgLen/df would
     // hash-mismatch
-    "q_postings_delta" -> ((s, dir) => {
+    // exact BM25 over the post-delta corpus (doc 3 replaced, 11 deleted,
+    // 3000000 appended) — stale postings or stats would mismatch
+    Gate("q_postings_delta", {
+      val src = "(SELECT doc_id, CASE WHEN doc_id = 3 THEN 'postings delta spark merge window' ELSE text END AS text " +
+        "FROM documents WHERE doc_id <> 11 " +
+        "UNION ALL SELECT 3000000 AS doc_id, 'fresh delta stream join appended' AS text)"
+      val (ctes, _) = sqlBm25(Seq("delta", "spark", "stream"), source = src)
+      s"""WITH $ctes
+         |SELECT doc_id, round(score_exact, 4) AS score FROM scored
+         |WHERE terms_matched >= 1
+         |ORDER BY score_exact DESC, doc_id ASC LIMIT 20""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       postingsDeltaFor(gg, dir)
         .select(col("doc_id"), round(col(Bm25Search.ScoreCol), 4).as("score"))
-    }),
+    },
 
     // §2.3 muvera-served nearMultiVector through the ENGINE planner
     // (registerMuvera → fixed-dim dot first pass + exact MaxSim rescore,
@@ -63,7 +87,31 @@ object SparkEntryExt2 {
     // oracle — the query IS vec 50's normalized bag, so vec 50 and its
     // planted twin attain MaxSim distance −2 (the global minimum on a
     // unit-normalized bed) and must come back as the top-2 after rescore
-    "q_near_muvera" -> ((s, dir) => {
+    // planted-copy muvera oracle: on the unit-normalized bed the exact bag
+    // copies of the query (vec 50 and its twin) attain the global MaxSim
+    // minimum −2 and must be the top-2 after first-pass + rescore
+    // brute-force MaxSim top-10 over the normalized planted bed. The bag is
+    // [n, reverse(n)], so with query bag [n50, rev n50] the MaxSim sum
+    // collapses: dot(rev a, b) = dot(a, rev b) ⇒ score = 2·max(d1, d2)
+    // where d1 = dot(n50, n_v), d2 = dot(n50, rev n_v); dist = −score.
+    // Normalization replays the engine's float32 cast exactly (x/‖x‖ in
+    // double, cast FLOAT), dots then accumulate in double.
+    Gate("q_near_muvera",
+      """WITH norm AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) /
+        |    sqrt(list_sum(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))) AS FLOAT)) AS n
+        |  FROM embeddings),
+        |bed AS (
+        |  SELECT vec_id, n FROM norm
+        |  UNION ALL
+        |  SELECT vec_id + 1000000, n FROM norm WHERE vec_id % 50 = 0),
+        |qn AS (SELECT n AS v FROM norm WHERE vec_id = 50),
+        |d AS (SELECT b.vec_id, -2.0 * greatest(
+        |    list_sum(list_transform(range(1, len(b.n)+1), i -> CAST(b.n[i] AS DOUBLE) * CAST(q.v[i] AS DOUBLE))),
+        |    list_sum(list_transform(range(1, len(b.n)+1), i -> CAST(b.n[len(b.n)+1-i] AS DOUBLE) * CAST(q.v[i] AS DOUBLE)))) AS dist
+        |  FROM bed b CROSS JOIN qn q)
+        |SELECT vec_id, round(dist, 4) AS dist FROM d
+        |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       muveraBedFor(gg, dir)
       val q = gg.collection("MVecBed").df.filter(col("vec_id") === 50L)
@@ -79,11 +127,16 @@ object SparkEntryExt2 {
         properties = Seq("vec_id"),
         additional = Set("distance")))
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.3 filtered vector search: where-allowlist + kNN (the reference's
     // filtered-search path, shard_read.go:536-550 / ACORN decision)
-    "q_near_filtered" -> ((s, dir) => {
+    Gate("q_near_filtered",
+      s"""WITH ${sqlQv(7)},
+         |d AS (SELECT e.vec_id, e.label, ${sqlL2("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q WHERE e.label IN (1, 2, 3))
+         |SELECT vec_id, label, round(dist, 4) AS dist FROM d
+         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Embedding",
         where = Some(Where.containsAnyInt("label", Seq(1L, 2L, 3L))),
         nearObject = Some(NearObject(7L, metric = Metric.L2Squared)),
@@ -91,10 +144,14 @@ object SparkEntryExt2 {
         properties = Seq("vec_id", "label"),
         additional = Set("distance")))
         .select(col("vec_id"), col("label"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.2 metadata pseudo-prop filters: _id range + _creationTimeUnix
-    "q_meta_filter" -> ((s, dir) => {
+    Gate("q_meta_filter",
+      """SELECT event_id FROM events
+        |WHERE event_type = 'view' AND event_id > 2000
+        |  AND epoch_ns(ts) < 1705000000000000000
+        |ORDER BY event_id""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("EventTenant",
         tenant = Some("view"),
         where = Some(Where.and(
@@ -105,7 +162,7 @@ object SparkEntryExt2 {
             Some(FilterValue.IntV(1705000000000000000L))))), // epoch ns
         properties = Seq("event_id")))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // §2.6 schema-lookup aggregators type/pointingTo riding a scanned agg
     // row (reference: entities/aggregation/params.go:118,148-150 — answered
@@ -120,7 +177,36 @@ object SparkEntryExt2 {
     // page served, gated while suspended, and served again after
     // reactivation. Every outcome is deterministic, so the oracle is the
     // literal script plus the live page counts.
-    "q_namespace" -> ((s, dir) => {
+    // type/pointingTo are schema constants (the engine schema is the
+    // fixture-declared one); n_chars_min is the real scanned anchor
+    // the namespace lifecycle script is deterministic (VALUES); the two live
+    // rows re-count the page the gate must keep serving around the suspension
+    Gate("q_namespace",
+      """SELECT * FROM (VALUES
+        |  ('01_create_team_a', 'ok'),
+        |  ('02_create_reserved', 'bad request'),
+        |  ('03_create_bad_syntax', 'bad request'),
+        |  ('04_create_duplicate', 'namespace already exists'),
+        |  ('05_suspend', 'ok'),
+        |  ('06_require_suspended', 'instance suspended'),
+        |  ('07_cas_stale', 'namespace state changed concurrently'),
+        |  ('08_resume', 'ok'),
+        |  ('09_require_resuming', 'instance resuming, retry shortly'),
+        |  ('10_activate', 'ok'),
+        |  ('11_illegal_transition', 'invalid namespace state transition'),
+        |  ('12_delete', 'ok'),
+        |  ('13_create_team_b', 'ok'),
+        |  ('14_remove_active', 'namespace is in an invalid state for this operation'),
+        |  ('15_delete_team_b', 'ok'),
+        |  ('16_deleting_list', 'team-a,team-b'),
+        |  ('17_remove_team_b', 'ok'),
+        |  ('18_require_gone', 'instance unavailable'),
+        |  ('20_page_suspended', 'instance suspended')) AS t(step, result)
+        |UNION ALL SELECT '19_page_active', CAST(count(*) AS VARCHAR)
+        |  FROM documents WHERE doc_id < 30
+        |UNION ALL SELECT '21_page_reactivated', CAST(count(*) AS VARCHAR)
+        |  FROM documents WHERE doc_id < 30
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.engine.Namespaces.{State, publicMessage}
       val docs = g(s, dir).collection("Document").df
@@ -164,7 +250,7 @@ object SparkEntryExt2 {
       c.changeState("team-c", State.Active, 15)
       out += "21_page_reactivated" -> page()
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 usage limits (reference: usecases/usagelimits — manager.go
     // CheckObjects at the storage chokepoint, errors.go, template.go): the
@@ -173,7 +259,25 @@ object SparkEntryExt2 {
     // the template arm substitutes {limit}/{value} and passes every other
     // token through, and the collections/tenants caps gate the schema
     // registry (re-registration of an existing name stays exempt)
-    "q_usage_limits" -> ((s, dir) => {
+    // scripted usage-limits walk: reference error texts (template.go default
+    // + {limit}/{value} substitution with foreign tokens passed through);
+    // the live count is data-derived (60 base + 10 appended)
+    Gate("q_usage_limits",
+      """SELECT * FROM (VALUES
+        |  ('01_init_under_cap', 'ok'),
+        |  ('02_upsert_replacements', 'ok'),
+        |  ('03_upsert_to_cap', 'ok'),
+        |  ('04_upsert_over_cap', 'objects count limit of 70 reached for this instance.'),
+        |  ('06_custom_template', 'Limit objects=5 hit - upgrade at example.com {unknown}'),
+        |  ('07_register_third', 'collections count limit of 2 reached for this instance.'),
+        |  ('08_reregister_exempt', 'ok'),
+        |  ('09_tenants_within', 'ok'),
+        |  ('10_tenants_over', 'tenants count limit of 3 reached for this instance.')
+        |) AS t(step, result)
+        |UNION ALL SELECT '05_live_count', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 60)
+        |  + (SELECT count(*) FROM documents WHERE doc_id < 10) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val docs = gg.collection("Document").df
@@ -215,7 +319,7 @@ object SparkEntryExt2 {
       out += "10_tenants_over" -> res(g3.addTenants("LimT",
         Seq(Tenant("t3"), Tenant("t4"))))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 point-in-time parquet export (reference: usecases/export —
     // Prepare pins the snapshot window, Commit scans to parquet; scheduler
@@ -225,7 +329,30 @@ object SparkEntryExt2 {
     // commit, and the exported parquet must hold the anchored version (80
     // rows, max id 79), not the store's live 100; a commit reading the
     // current version instead of the pin exports 100 and mismatches
-    "q_export" -> ((s, dir) => {
+    // export walk: sentinel texts verbatim; the snapshot counts derive from
+    // the data (80 anchored, 100 live after the mid-flight upsert) so the
+    // point-in-time anchor is hash-certified
+    Gate("q_export",
+      """SELECT * FROM (VALUES
+        |  ('01_slot_held', 'export already active'),
+        |  ('03_dup_id', 'export already exists'),
+        |  ('04_unknown_status', 'export not found'),
+        |  ('05_cancel_finished', 'export has already finished'),
+        |  ('06_disabled', 'export API is disabled; enable it via EXPORT_ENABLED=true or the runtime config')
+        |) AS t(step, result)
+        |UNION ALL SELECT '02_meta', 'SUCCESS:' ||
+        |  CAST((SELECT count(*) FROM documents WHERE doc_id < 80) AS VARCHAR)
+        |UNION ALL SELECT '07_live_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 80)
+        |  + (SELECT count(*) FROM documents WHERE doc_id < 20) AS VARCHAR)
+        |UNION ALL SELECT '08_snapshot_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 80) AS VARCHAR)
+        |UNION ALL SELECT '09_snapshot_max', CAST(
+        |  (SELECT max(doc_id) FROM documents WHERE doc_id < 80) AS VARCHAR)
+        |UNION ALL SELECT '10_resnapshot', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 80)
+        |  + (SELECT count(*) FROM documents WHERE doc_id < 20) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.sources.ExportSnapshot
       val gg = g(s, dir)
@@ -256,7 +383,7 @@ object SparkEntryExt2 {
       val m2 = ex.commit(ex.prepare("exp-2", Seq("DocExp" -> st)), dest)
       out += "10_resnapshot" -> m2.objectsExported("DocExp").toString
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 operator config restrictions (reference: usecases/restrictions —
     // template.go sorted {allowed} rendering, errors.go ViolationError;
@@ -264,7 +391,17 @@ object SparkEntryExt2 {
     // the default and override templates, a pass arm, and the LIVE wiring —
     // an ivf registration under a flat/dynamic-only allow-list throws the
     // rendered text, under an ivf-containing list it lands and serves
-    "q_restrictions" -> ((s, dir) => {
+    // restriction arms: sorted {allowed} rendering on default and override
+    // templates, pass arms, and the live index-registration wiring
+    Gate("q_restrictions",
+      """SELECT * FROM (VALUES
+        |  ('01_default_template', 'pq is not allowed for compression. Allowed values: bq, sq.'),
+        |  ('02_custom_template', 'vector_index_type rejects hnsw; pick one of dynamic, flat {x}'),
+        |  ('03_check_pass', 'ok'),
+        |  ('04_unconfigured_pass', 'ok'),
+        |  ('05_register_ivf_rejected', 'ivf is not allowed for vector_index_type. Allowed values: dynamic, flat.'),
+        |  ('06_register_ivf_allowed', 'ok')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.engine.Restrictions
       val gg = g(s, dir)
@@ -289,14 +426,29 @@ object SparkEntryExt2 {
       out += "06_register_ivf_allowed" ->
         res(g3.registerIndex("Embedding", "default", idx))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 namespace-cleanup sweep (reference: usecases/namespace_cleanup/
     // coordinator.go Tick — per DELETING namespace: aliases, then classes,
     // then the entry; scheduled by usecases/cron/namespace_cleanup.go): the
     // sweep's ordered action log, the surviving alias/class set, and a live
     // page through the kept namespace prove scoping
-    "q_namespace_cleanup" -> ((s, dir) => {
+    // cleanup sweep: ordered action log (aliases → classes → entry), the
+    // surviving alias set, the swept class unresolvable, the kept
+    // namespace's live page, idempotent re-sweep
+    Gate("q_namespace_cleanup",
+      """SELECT * FROM (VALUES
+        |  ('01_deleting_list', 'ns-a'),
+        |  ('02_sweep_log', 'alias:CleanAlias,class:NsClean1,class:NsClean2,namespace:ns-a'),
+        |  ('03_aliases_after', 'KeepAlias->NsKeep'),
+        |  ('04_swept_class_gone', 'unknown collection NsClean1'),
+        |  ('06_ns_entry_gone', 'true'),
+        |  ('07_deleting_empty', 'true'),
+        |  ('08_resweep_noop', '(none)')
+        |) AS t(step, result)
+        |UNION ALL SELECT '05_kept_page', CAST(count(*) AS VARCHAR)
+        |  FROM documents WHERE doc_id < 30
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.engine.Namespaces.State
       val gg = g(s, dir)
@@ -331,9 +483,12 @@ object SparkEntryExt2 {
       out += "08_resweep_noop" ->
         (if (g2.cleanupDeletingNamespaces().isEmpty) "(none)" else "unexpected")
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
-    "q_agg_type" -> ((s, dir) => {
+    Gate("q_agg_type",
+      """SELECT 'cref' AS links_type, 'Document' AS links_pointingTo,
+        |  'int' AS n_chars_type, CAST(min(n_chars) AS DOUBLE) AS n_chars_min,
+        |  'object[]' AS tags_type FROM documents""".stripMargin) { (s, dir) =>
       g(s, dir).aggregate(AggregateParams("Document",
         properties = Map(
           "links" -> Seq(Aggregator.Type, Aggregator.PointingTo),
@@ -342,13 +497,25 @@ object SparkEntryExt2 {
         .select(col("links_type"), col("links_pointingTo"),
           col("n_chars_type"), col("n_chars_minimum").cast("double").as("n_chars_min"),
           col("tags_type"))
-    }),
+    },
 
     // §2.1 READONLY shard status write-gate (reference: entities/
     // storagestate/status.go + the ErrStatusReadOnly texts): every write is
     // rejected while READONLY — with the set reason — and succeeds again
     // after READY; the final re-read proves the post-restore write landed
-    "q_readonly_gate" -> ((s, dir) => {
+    // the READONLY gate's observable contract: statuses, the reasoned
+    // rejection text on every write op, and the post-READY write landing
+    // (doc 1's n_chars rewritten to -5)
+    Gate("q_readonly_gate",
+      """SELECT * FROM (VALUES
+        |  ('1_init', 'READY', ''),
+        |  ('2_set_readonly', 'READONLY', ''),
+        |  ('3_upsert_rejected', 'READONLY', 'store is read-only due to: maintenance window'),
+        |  ('4_delete_rejected', 'READONLY', 'store is read-only due to: maintenance window'),
+        |  ('5_read_while_readonly', 'READONLY', '50'),
+        |  ('6_upsert_after_ready', 'READY', ''),
+        |  ('7_reread', 'READY', '-5')) AS t(step, status, detail)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val docs = gg.collection("Document").df
@@ -377,13 +544,23 @@ object SparkEntryExt2 {
         st.read().filter(col("doc_id") === 1L).select(col("n_chars"))
           .head().get(0).toString)) // physical int width is driver-owned
       steps.toSeq.toDF("step", "status", "detail").orderBy(col("step"))
-    }),
+    },
 
     // §2.7 QueryMaximumResults deployment cap (reference: usecases/config
     // QUERY_MAXIMUM_RESULTS + search.go getTotalLimit): a limit-less Get is
     // truncated to the cap, a page within the cap passes through, and
     // offset+limit beyond the cap is rejected with the reference's error
-    "q_query_cap" -> ((s, dir) => {
+    // cap = 100 < the 500-row sf0.01 table, so the limit-less count is the
+    // cap itself at every SF; the over-cap page errors with the reference text
+    Gate("q_query_cap",
+      """SELECT * FROM (VALUES
+        |  ('at_cap_rows', '60'),
+        |  ('capped_limitless_rows', '100'),
+        |  ('cursor_at_cap_rows', '100'),
+        |  ('cursor_over_cap_error', 'query maximum results exceeded'),
+        |  ('over_cap_error', 'query maximum results exceeded'),
+        |  ('within_cap_rows', '60')) AS t(probe, value)
+        |ORDER BY probe""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val capped = new Graft(s).withQueryMaximumResults(100)
@@ -422,23 +599,29 @@ object SparkEntryExt2 {
           ("over_cap_error", err),
           ("within_cap_rows", okRows.toString))
         .toDF("probe", "value").orderBy(col("probe"))
-    }),
+    },
 
     // §2.2 filter-by-id-list: ContainsAny on the _id pseudo-prop (the
     // reference validator constrains only value types on _id, so the id-list
     // idiom is first-class; compiles to an OR of id equalities → parquet
     // row-group skipping on the id-sorted layout)
-    "q_filter_id_in" -> ((s, dir) => {
+    Gate("q_filter_id_in",
+      """SELECT doc_id, lang FROM documents
+        |WHERE doc_id IN (1, 7, 13, 250, 400) ORDER BY doc_id""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Document",
         where = Some(Where(WhereOp.ContainsAny, Seq("_id"),
           Some(FilterValue.ListV(Seq(1L, 7L, 13L, 250L, 400L).map(FilterValue.IntV(_)))))),
         properties = Seq("doc_id", "lang")))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // §2.1/§3.1 cross-reference resolution: expand the cref into the target
     // object's properties (broadcast join on the target id)
-    "q_ref_resolve" -> ((s, dir) => {
+    Gate("q_ref_resolve",
+      """SELECT o.o_orderkey, round(o.o_totalprice, 4) AS o_totalprice,
+        |       c.c_name, c.c_mktsegment
+        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        |WHERE o.o_totalprice > 450000 ORDER BY o.o_orderkey""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Order",
         where = Some(Where.gtNum("o_totalprice", 450000.0)),
         properties = Seq("o_orderkey", "o_totalprice"),
@@ -448,13 +631,57 @@ object SparkEntryExt2 {
           col("o_custkey_resolved.c_name").as("c_name"),
           col("o_custkey_resolved.c_mktsegment").as("c_mktsegment"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // §2.7 legacy group{closest,merge}: greedy single-link clustering of the
     // ranked pool by normalized vector distance (driver-side like the
     // reference; the oracle replays the sequential first-match pass as a
     // recursive CTE over the precomputed pairwise-distance matrix)
-    "q_group_legacy" -> ((s, dir) => {
+    // force=0 invariant: no pair can merge, Closest grouping = identity on
+    // the ranked pool, which is the plain cosine top-k
+    // FULL legacy merge-group replay: the reference's greedy first-match
+    // single-link pass (grouper.go:33-100) is sequential in the RANKED pool,
+    // so the oracle precomputes the 30×30 pairwise NormalizedDistance
+    // matrix and replays the assignment loop as a 30-step recursive CTE
+    // carrying (rn, grp); merge semantics (merge_group.go: numbers
+    // averaged, text "first (second, …)" in rank order) follow in plain SQL
+    Gate("q_group_legacy", {
+      val nd = s"${SparkEntry.sqlCosine("a.embedding", "b.embedding")} / 2.0"
+      s"""WITH RECURSIVE ${SparkEntry.sqlQv(7)},
+         |dv AS (SELECT d.doc_id, d.lang, d.n_chars, e.embedding
+         |       FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
+         |s AS (SELECT dv.*, ${SparkEntry.sqlCosine("dv.embedding", "q.v")} AS dist
+         |      FROM dv CROSS JOIN qv q),
+         |top AS (SELECT *, row_number() OVER (ORDER BY dist ASC, doc_id ASC) AS rn
+         |        FROM s ORDER BY dist ASC, doc_id ASC LIMIT 30),
+         |pd AS (SELECT a.rn AS ra, b.rn AS rb, $nd AS nd
+         |       FROM top a JOIN top b ON a.rn < b.rn),
+         |nbr AS (SELECT t.rn, coalesce(list(p.ra ORDER BY p.ra) FILTER (p.nd < 0.35), []) AS nbrs
+         |        FROM top t LEFT JOIN pd p ON p.rb = t.rn GROUP BY t.rn),
+         |st(i, asg) AS (
+         |  SELECT 0, CAST([] AS STRUCT(rn BIGINT, grp BIGINT)[])
+         |  UNION ALL
+         |  SELECT st.i + 1, list_append(st.asg, {'rn': n.rn, 'grp':
+         |    CASE WHEN len(list_filter(st.asg, a -> list_contains(n.nbrs, a.rn))) = 0
+         |         THEN coalesce(list_max(list_transform(st.asg, a -> a.grp)), -1) + 1
+         |         ELSE list_min(list_transform(list_filter(st.asg,
+         |                a -> list_contains(n.nbrs, a.rn)), a -> a.grp)) END})
+         |  FROM st JOIN nbr n ON n.rn = st.i + 1),
+         |fin AS (SELECT unnest(asg, recursive := true) FROM st
+         |        WHERE i = (SELECT count(*) FROM top)),
+         |m0 AS (SELECT f.grp, list(t.lang ORDER BY t.rn) AS langs,
+         |         avg(CAST(t.doc_id AS DOUBLE)) AS doc_id_mean,
+         |         avg(CAST(t.n_chars AS DOUBLE)) AS n_chars_mean,
+         |         count(*) AS group_size
+         |       FROM fin f JOIN top t ON t.rn = f.rn GROUP BY f.grp)
+         |SELECT round(doc_id_mean, 4) AS doc_id_mean,
+         |  CASE WHEN len(langs) = 1 THEN langs[1]
+         |       ELSE langs[1] || ' (' || array_to_string(langs[2:], ', ') || ')'
+         |  END AS lang,
+         |  round(n_chars_mean, 4) AS n_chars_mean,
+         |  CAST(group_size AS BIGINT) AS group_size
+         |FROM m0 ORDER BY doc_id_mean, lang""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       val pool = gg.get(GetParams("DocVec",
         nearObject = Some(NearObject(7L, metric = Metric.Cosine)),
@@ -465,12 +692,43 @@ object SparkEntryExt2 {
         .select(round(col("doc_id"), 4).as("doc_id_mean"), col("lang"),
           round(col("n_chars"), 4).as("n_chars_mean"), col("group_size"))
         .orderBy(col("doc_id_mean"), col("lang"))
-    }),
+    },
 
     // §2.7 legacy group{closest} at a REAL force (0.35, same pool as
     // q_group_legacy): each group flattens to its best-ranked member —
     // the same recursive-CTE assignment replay, closest flattening
-    "q_group_legacy_closest" -> ((s, dir) => {
+    // same recursive assignment replay, closest flattening: each group's
+    // best-ranked (min rn) member carries its own distance + group size
+    Gate("q_group_legacy_closest", {
+      val nd = s"${SparkEntry.sqlCosine("a.embedding", "b.embedding")} / 2.0"
+      s"""WITH RECURSIVE ${SparkEntry.sqlQv(7)},
+         |dv AS (SELECT d.doc_id, d.lang, e.embedding
+         |       FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
+         |s AS (SELECT dv.*, ${SparkEntry.sqlCosine("dv.embedding", "q.v")} AS dist
+         |      FROM dv CROSS JOIN qv q),
+         |top AS (SELECT *, row_number() OVER (ORDER BY dist ASC, doc_id ASC) AS rn
+         |        FROM s ORDER BY dist ASC, doc_id ASC LIMIT 30),
+         |pd AS (SELECT a.rn AS ra, b.rn AS rb, $nd AS nd
+         |       FROM top a JOIN top b ON a.rn < b.rn),
+         |nbr AS (SELECT t.rn, coalesce(list(p.ra ORDER BY p.ra) FILTER (p.nd < 0.35), []) AS nbrs
+         |        FROM top t LEFT JOIN pd p ON p.rb = t.rn GROUP BY t.rn),
+         |st(i, asg) AS (
+         |  SELECT 0, CAST([] AS STRUCT(rn BIGINT, grp BIGINT)[])
+         |  UNION ALL
+         |  SELECT st.i + 1, list_append(st.asg, {'rn': n.rn, 'grp':
+         |    CASE WHEN len(list_filter(st.asg, a -> list_contains(n.nbrs, a.rn))) = 0
+         |         THEN coalesce(list_max(list_transform(st.asg, a -> a.grp)), -1) + 1
+         |         ELSE list_min(list_transform(list_filter(st.asg,
+         |                a -> list_contains(n.nbrs, a.rn)), a -> a.grp)) END})
+         |  FROM st JOIN nbr n ON n.rn = st.i + 1),
+         |fin AS (SELECT unnest(asg, recursive := true) FROM st
+         |        WHERE i = (SELECT count(*) FROM top)),
+         |cls AS (SELECT f.grp, min(f.rn) AS rn0, count(*) AS group_size
+         |        FROM fin f GROUP BY f.grp)
+         |SELECT t.doc_id, t.lang, round(t.dist, 4) AS distance,
+         |       CAST(c.group_size AS BIGINT) AS group_size
+         |FROM cls c JOIN top t ON t.rn = c.rn0 ORDER BY t.doc_id""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       val pool = gg.get(GetParams("DocVec",
         nearObject = Some(NearObject(7L, metric = Metric.Cosine)),
@@ -481,13 +739,20 @@ object SparkEntryExt2 {
         .select(col("doc_id"), col("lang"),
           round(col("_distance"), 4).as("distance"), col("group_size"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // legacy grouping invariant oracle (same pattern as q_mmr's λ=1): with
     // force = 0 no pair merges (NormalizedDistance < 0 is unsatisfiable), so
     // Closest grouping is the identity on the ranked pool — group_size 1,
     // rows = the cosine top-k, which DuckDB can rank exactly
-    "q_group_legacy0" -> ((s, dir) => {
+    Gate("q_group_legacy0",
+      s"""WITH ${SparkEntry.sqlQv(7)},
+         |dv AS (SELECT d.doc_id, e.embedding FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
+         |s AS (SELECT dv.doc_id, ${SparkEntry.sqlCosine("dv.embedding", "q.v")} AS dist
+         |      FROM dv CROSS JOIN qv q),
+         |top AS (SELECT doc_id, dist FROM s ORDER BY dist ASC, doc_id ASC LIMIT 20)
+         |SELECT doc_id, CAST(1 AS BIGINT) AS group_size, round(dist, 4) AS distance
+         |FROM top ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val pool = gg.get(GetParams("DocVec",
         nearObject = Some(NearObject(7L, metric = Metric.Cosine)),
@@ -498,14 +763,29 @@ object SparkEntryExt2 {
         .select(col("doc_id"), col("group_size"),
           round(col("_distance"), 4).as("distance"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // legacy MERGE grouping oracle twin #2 (planted-bed pattern): with
     // force = 1e-6 single-link merges ONLY bit-identical vectors ((1−cos)/2
     // < 1e-6 needs cos ≈ 1), so the grouping over the planted-dup bed is
     // exactly "group by embedding value" — expressible in SQL. Exercises the
     // real Merge math (numeric mean, group_size) unlike the force=0 twin.
-    "q_group_legacy_merge" -> ((s, dir) => {
+    // force=1e-6 merges only bit-identical vectors ⇒ grouping ≡ GROUP BY the
+    // embedding value over the ranked pool — exact SQL for the Merge math
+    Gate("q_group_legacy_merge",
+      s"""WITH ${sqlQv(50)},
+         |bed AS (
+         |  SELECT vec_id, embedding FROM embeddings
+         |  UNION ALL
+         |  SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id % 50 = 0),
+         |d AS (SELECT b.vec_id, b.embedding, ${sqlCosine("b.embedding", "q.v")} AS dist
+         |      FROM bed b CROSS JOIN qv q),
+         |top AS (SELECT * FROM d ORDER BY dist ASC, vec_id ASC LIMIT 20),
+         |grp AS (SELECT embedding, avg(vec_id) AS id_mean, round(min(dist), 4) AS dist,
+         |               CAST(count(*) AS BIGINT) AS group_size
+         |        FROM top GROUP BY embedding)
+         |SELECT round(id_mean, 4) AS vec_id_mean, dist, group_size
+         |FROM grp ORDER BY id_mean""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val bed = embWithPlantedDups(gg)
       val q = Fixtures.anchorVector(gg, 50L)
@@ -516,7 +796,7 @@ object SparkEntryExt2 {
           round(col(VectorSearch.DistanceCol), 4).as("dist"),
           col("group_size"))
         .orderBy(col("vec_id_mean"))
-    }),
+    },
 
     // §2.3 PQ quantized first-pass + exact rescore. topK=10 against a
     // BRUTE-FORCE top-10 oracle: the page must contain the 8 natural
@@ -524,7 +804,13 @@ object SparkEntryExt2 {
     // is load-bearing — a wrong codebook/segment split ranks candidates
     // near-randomly and the true top-10 won't survive the 160-candidate cut
     // (a planted-copy-only page passed under ANY deterministic encode)
-    "q_pq_search" -> ((s, dir) => {
+    // brute-force top-10 oracle over the planted bed: rescore is exact, so
+    // the page equals exact L2 top-10 IFF the compressed first pass has
+    // full recall for the true top-10 within its 160-candidate cut — a
+    // broken codebook/scale/rotation ranks candidates near-randomly and
+    // P(true top-10 ⊆ a random 160 of 510) ≈ 1e-8; the two planted copies
+    // of vec 50 still anchor ranks 1-2 at dist 0
+    Gate("q_pq_search", QuantizerBruteForceTop10) { (s, dir) =>
       val gg = g(s, dir)
       val (pq, encoded) = pqFor(gg, dir)
       // factor 24 (not 16): the 8×16 codebook is the coarsest of the five
@@ -533,56 +819,59 @@ object SparkEntryExt2 {
       pq.search(encoded, "vec_id", "code", "embedding",
           Fixtures.anchorVector(gg, 50L), topK = 10, rescoreFactor = 24)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.3 IVF-PQ two-level: partition-pruned probe + residual-ADC code-only
     // first pass + exact rescore (Jégou et al. 2011; SURVEY §9.2's low-nprobe
     // accuracy lever); full probe ⇒ planted copies exact-first
-    "q_ivfpq_search" -> ((s, dir) => {
+    Gate("q_ivfpq_search", QuantizerBruteForceTop10) { (s, dir) =>
       val gg = g(s, dir)
       ivfpqFor(gg, dir).search(Fixtures.anchorVector(gg, 50L),
           topK = 10, nprobe = 8, rescoreFactor = 16)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.3 scalar quantization (flat-index SQ path — the reference's cheap
     // training default): byte-code compressed-domain first pass on the
     // 4×-smaller code column, exact rescore on the candidates; same
     // planted-copy oracle shape as q_pq_search/q_bq_search
-    "q_sq_search" -> ((s, dir) => {
+    Gate("q_sq_search", QuantizerBruteForceTop10) { (s, dir) =>
       val gg = g(s, dir)
       val (sq, encoded) = sqFor(gg, dir)
       sq.search(encoded, "vec_id", "code", "embedding",
           Fixtures.anchorVector(gg, 50L), topK = 10, rescoreFactor = 16)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.3 rotational quantization (training-free rotate + per-vector byte
     // grid): compressed-domain dot-estimate first pass on the 4×-smaller
     // code column, exact rescore; same planted-copy oracle shape
-    "q_rq_search" -> ((s, dir) => {
+    Gate("q_rq_search", QuantizerBruteForceTop10) { (s, dir) =>
       val gg = g(s, dir)
       val (rq, encoded) = rqFor(gg, dir)
       rq.search(encoded, "vec_id", "code", "embedding",
           Fixtures.anchorVector(gg, 50L), topK = 10, rescoreFactor = 16)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.3 binary quantization (flat-index BQ path): hamming-over-sign-codes
     // first pass on the 32×-smaller code column, exact rescore on the
     // candidates; same planted-copy oracle shape as q_pq_search
-    "q_bq_search" -> ((s, dir) => {
+    Gate("q_bq_search", QuantizerBruteForceTop10) { (s, dir) =>
       val gg = g(s, dir)
       graft.ann.BinaryQuantizer.search(bqFor(gg, dir), "vec_id", "code", "embedding",
           Fixtures.anchorVector(gg, 50L), topK = 10, rescoreFactor = 16)
         .select(col("vec_id"), round(col("_distance"), 4).as("dist"))
-    }),
+    },
 
     // §2.10 true Structured Streaming execution: events parquet replayed as a
     // file stream, watermarked tumbling-window aggregation, complete-mode
     // memory sink drained synchronously — the batch oracle must agree
     // exactly (same windows, same counts/sums)
-    "q_stream_window" -> ((s, dir) => {
+    Gate("q_stream_window",
+      """SELECT CAST(make_timestamp((epoch_us(ts) // 21600000000) * 21600000000) AS VARCHAR) AS window_start,
+        |  event_type, count(*) AS n, round(sum(value), 4) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       // THREE time-ordered replay files (maxFilesPerTrigger=1 → one
       // micro-batch each), split mid-window (15:00 and 21:00 against 6-hour
@@ -593,7 +882,7 @@ object SparkEntryExt2 {
       // watermark from dropping anything, so the batch oracle stays exact.
       val full = Fixtures.events(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val streamDir = replayDir("swr", dir) { d =>
+      val streamDir = replayDir(s, "swr", dir) { d =>
         val ms = expr("unix_micros(ts) div 1000")
         dumpReplayFile(full.filter(ms < 1704898800000L), d, "00.parquet") // < 01-10T15:00Z
         dumpReplayFile(full.filter(ms >= 1704898800000L &&
@@ -618,7 +907,7 @@ object SparkEntryExt2 {
         .select(col("w.start").cast("string").as("window_start"), col("event_type"),
           col("n"), round(col("sv"), 4).as("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
+    },
 
     // §2.10 stateful streaming sessionization: events parquet replayed as a
     // file stream through flatMapGroupsWithState (EventTimeTimeout, 30-min
@@ -638,7 +927,57 @@ object SparkEntryExt2 {
     // emission rule is batch-independent, so the oracle replays it as plain
     // windowed all-pairs Jaccard SQL (LSH recall 1 at these params — the
     // same (128, 64-band) S-curve q_dedup_minhash's oracle certifies)
-    "q_dedup_stream" -> ((s, dir) => {
+    // batch mirror of the stream: sessionize on epoch millis (the stateful
+    // operator's clock), keep sessions whose timeout (end + gap) the final
+    // watermark (max event ms, 0s delay) strictly passed
+    // windowed all-pairs replay of the deterministic emission rule:
+    // (ts_a, id_a) < (ts_b, id_b), Δts within the horizon, shingle Jaccard
+    // ≥ 0.7 in list math (same shingle semantics as the batch oracle)
+    Gate("q_dedup_stream",
+      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
+        |bed AS (
+        |  SELECT doc_id, (doc_id + 60) * 60000 AS ts_ms, text FROM base
+        |  UNION ALL SELECT doc_id + 1000000, (doc_id + 97) * 60000, text
+        |            FROM base WHERE doc_id % 25 = 0
+        |  UNION ALL SELECT doc_id + 2000000, (doc_id + 760) * 60000, text
+        |            FROM base WHERE doc_id % 25 = 0
+        |  UNION ALL SELECT p.doc_id, p.m * 60000, p.txt FROM (
+        |    SELECT 3000001 AS doc_id, 10000 AS m,
+        |      array_to_string(list_transform(range(1,84), i -> 'qsx'||i), ' ') || ' ' ||
+        |      array_to_string(list_transform(range(1,18), i -> 'qsa'||i), ' ') AS txt
+        |    UNION ALL SELECT 3000002, 10060,
+        |      array_to_string(list_transform(range(1,84), i -> 'qsx'||i), ' ') || ' ' ||
+        |      array_to_string(list_transform(range(1,18), i -> 'qsb'||i), ' ')
+        |    UNION ALL SELECT 3000003, 10010,
+        |      array_to_string(list_transform(range(1,83), i -> 'qsy'||i), ' ') || ' ' ||
+        |      array_to_string(list_transform(range(1,19), i -> 'qsc'||i), ' ')
+        |    UNION ALL SELECT 3000004, 10040,
+        |      array_to_string(list_transform(range(1,83), i -> 'qsy'||i), ' ') || ' ' ||
+        |      array_to_string(list_transform(range(1,19), i -> 'qsd'||i), ' ')
+        |    UNION ALL SELECT 3000005, 10020,
+        |      array_to_string(list_transform(range(1,41), i -> 'qsct'||i), ' ')
+        |    UNION ALL SELECT 3000006, 10140,
+        |      array_to_string(list_transform(range(1,41), i -> 'qsct'||i), ' ')
+        |    UNION ALL SELECT 3000007, 10030,
+        |      array_to_string(list_transform(range(1,41), i -> 'qsdt'||i), ' ')
+        |    UNION ALL SELECT 3000008, 10151,
+        |      array_to_string(list_transform(range(1,41), i -> 'qsdt'||i), ' ')) p),
+        |t AS (SELECT doc_id, ts_ms,
+        |      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
+        |sh AS (SELECT doc_id, ts_ms,
+        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
+        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
+        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
+        |  FROM t WHERE len(toks) > 0),
+        |pairs AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+        |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
+        |  FROM sh a JOIN sh b
+        |    ON (a.ts_ms < b.ts_ms OR (a.ts_ms = b.ts_ms AND a.doc_id < b.doc_id))
+        |   AND b.ts_ms - a.ts_ms <= 7200000)
+        |SELECT id_a, id_b, round(jac, 4) AS jaccard FROM pairs
+        |WHERE jac >= 0.7 ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val raw = s.read.parquet(s"$dir/documents.parquet")
@@ -685,7 +1024,7 @@ object SparkEntryExt2 {
       // state prune and the timeout GC were all dead code. Time-ordered
       // splits mean the 0 s watermark drops nothing, so the batch-SQL
       // oracle stays exact.
-      val streamDir = replayDir("dsr", dir) { d =>
+      val streamDir = replayDir(s, "dsr", dir) { d =>
         dumpReplayFile(full.filter(col("ts_ms") < 350L * 60000L), d, "00.parquet")
         dumpReplayFile(full.filter(col("ts_ms") >= 350L * 60000L &&
           col("ts_ms") < 1300L * 60000L), d, "01.parquet")
@@ -713,7 +1052,7 @@ object SparkEntryExt2 {
       s.table(name).distinct()
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    },
 
     // pipeline: STREAMING trending terms — documents file-replayed with
     // ts = (doc_id + 60) min; the stream maintains (120-min window, term)
@@ -722,7 +1061,23 @@ object SparkEntryExt2 {
     // never emits; ranking is batch-side over the sink (TrendingTerms.topK).
     // The emission rule is micro-batch-independent, so the oracle replays
     // it as batch windowed counts over windows with end <= max ts
-    "q_stream_trending" -> ((s, dir) => {
+    // append-mode windowed counts replayed batch-side: tumbling 120-min
+    // windows, only windows whose end is within the final watermark
+    // (max event time) emit; top-3 rank per window (count desc, term asc)
+    Gate("q_stream_trending",
+      """WITH t AS (SELECT (doc_id + 102) * 60000 AS ts_ms,
+        |             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |           FROM documents),
+        |mx AS (SELECT max((doc_id + 102) * 60000) AS wm FROM documents),
+        |c AS (SELECT (ts_ms // 7200000) * 7200000 AS ws, term, count(*) AS cnt
+        |      FROM t GROUP BY 1, 2),
+        |closed AS (SELECT c.* FROM c CROSS JOIN mx WHERE c.ws + 7200000 <= mx.wm),
+        |r AS (SELECT ws, term, cnt, row_number() OVER (
+        |        PARTITION BY ws ORDER BY cnt DESC, term ASC) AS rnk
+        |      FROM closed)
+        |SELECT CAST(ws AS BIGINT) AS window_start_ms, term,
+        |       CAST(cnt AS BIGINT) AS cnt, CAST(rnk AS INTEGER) AS rnk
+        |FROM r WHERE rnk <= 3 ORDER BY window_start_ms, rnk""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       val raw = s.read.parquet(s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw.schema)
@@ -747,9 +1102,39 @@ object SparkEntryExt2 {
       graft.streaming.TrendingTerms.topK(s.table(name), k = 3)
         .select(col("window_start_ms"), col("term"), col("cnt"), col("rnk"))
         .orderBy(col("window_start_ms"), col("rnk"))
-    }),
+    },
 
-    "q_sessionize_stream" -> ((s, dir) => {
+    Gate("q_sessionize_stream",
+      """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events
+        |  UNION ALL SELECT * FROM (VALUES
+        |    (CAST(900001 AS BIGINT), CAST(9100001 AS BIGINT), CAST(1707000000000 AS BIGINT)),
+        |    (900001, 9100002, 1707001800000),
+        |    (900002, 9100003, 1707000000000),
+        |    (900002, 9100004, 1707001800001),
+        |    (900003, 9100005, 1707089400000),
+        |    (900004, 9100006, 1707089399999),
+        |    (900009, 9100007, 1707091200000)) AS pv(user_id, event_id, ms)),
+        |mx AS (SELECT max(ms) AS wm FROM e),
+        |marked AS (
+        |  SELECT user_id, event_id, ms,
+        |         CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) IS NULL
+        |               OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) > 1800000
+        |              THEN 1 ELSE 0 END AS new_s
+        |  FROM e),
+        |sess AS (
+        |  SELECT user_id, ms,
+        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ms, event_id
+        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM marked),
+        |agg AS (
+        |  SELECT user_id, sid, count(*) AS n_events, max(ms) AS end_ms
+        |  FROM sess GROUP BY user_id, sid),
+        |closed AS (SELECT a.* FROM agg a CROSS JOIN mx WHERE a.end_ms + 1800000 < mx.wm)
+        |SELECT CAST(user_id AS BIGINT) AS user_id,
+        |       CAST(count(*) AS BIGINT) AS n_closed,
+        |       CAST(sum(n_events) AS BIGINT) AS events_closed,
+        |       CAST(max(n_events) AS BIGINT) AS max_session_events
+        |FROM closed GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       // Planted boundary users (all AFTER the natural span, so the natural
@@ -775,7 +1160,7 @@ object SparkEntryExt2 {
         .unionByName(planted)
       // time-ordered multi-file replay: the single-file bed ran as one
       // micro-batch where the state-restore branch was dead code
-      val streamDir = replayDir("ssr", dir) { d =>
+      val streamDir = replayDir(s, "ssr", dir) { d =>
         val ms = expr("unix_micros(ts) div 1000")
         dumpReplayFile(full.filter(ms < 1705000000000L), d, "00.parquet")
         dumpReplayFile(full.filter(ms >= 1705000000000L &&
@@ -801,7 +1186,7 @@ object SparkEntryExt2 {
         .agg(count(lit(1)).as("n_closed"), sum(col("n_events")).as("events_closed"),
           max(col("n_events")).as("max_session_events"))
         .orderBy(col("user_id"))
-    }),
+    },
 
     // §2.7 plain-path groupBy (no search leg): pool bounded to
     // groups × objectsPerGroup BEFORE the rank window (reference: explorer
@@ -811,7 +1196,23 @@ object SparkEntryExt2 {
     // { group { minDistance maxDistance } }` on the groupBy response,
     // shard_group_by.go group struct): per-group min/max distance over the
     // group's KEPT hits, replayed with the same windows in SQL
-    "q_group_near_meta" -> ((s, dir) => {
+    Gate("q_group_near_meta",
+      s"""WITH ${sqlQv(11)},
+         |ranked AS (
+         |  SELECT e.vec_id, e.label, ${sqlL2("e.embedding", "q.v")} AS dist,
+         |         row_number() OVER (ORDER BY ${sqlL2("e.embedding", "q.v")} ASC, e.vec_id ASC) AS rnk
+         |  FROM embeddings e CROSS JOIN qv q),
+         |grouped AS (
+         |  SELECT vec_id, label, rnk, dist,
+         |         row_number() OVER (PARTITION BY label ORDER BY rnk ASC) AS group_hit_rank,
+         |         min(rnk) OVER (PARTITION BY label) AS gmin
+         |  FROM (SELECT * FROM ranked ORDER BY rnk LIMIT 50)),
+         |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS group_index FROM grouped),
+         |kept AS (SELECT * FROM idx WHERE group_index <= 5 AND group_hit_rank <= 3)
+         |SELECT group_index, label, group_hit_rank, vec_id,
+         |       round(min(dist) OVER (PARTITION BY label), 4) AS gmin_dist,
+         |       round(max(dist) OVER (PARTITION BY label), 4) AS gmax_dist
+         |FROM kept ORDER BY group_index, group_hit_rank""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Embedding",
         nearObject = Some(NearObject(11L, metric = Metric.L2Squared)),
         pagination = Some(Pagination(limit = 50)),
@@ -823,13 +1224,30 @@ object SparkEntryExt2 {
           round(col("group_min_distance"), 4).as("gmin_dist"),
           round(col("group_max_distance"), 4).as("gmax_dist"))
         .orderBy(col("group_index"), col("group_hit_rank"))
-    }),
+    },
 
     // §2.4+§2.7 BM25-ranked result grouping: the keyword leg's top-10 pool
     // groups by lang in score-rank order (groups discovered by best hit,
     // capped per group) — the same greedy model as q_group_near with the
     // score ordering swapped in
-    "q_group_bm25" -> ((s, dir) => {
+    Gate("q_group_bm25", {
+      val (ctes, _) = SparkEntry.sqlBm25(Seq("spark", "join"))
+      s"""WITH $ctes,
+         |hits AS (
+         |  SELECT doc_id, row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) AS rnk
+         |  FROM (SELECT * FROM scored WHERE terms_matched >= 1
+         |        ORDER BY score_exact DESC, doc_id ASC LIMIT 10)),
+         |j AS (SELECT h.doc_id, h.rnk, d.lang FROM hits h JOIN documents d USING (doc_id)),
+         |grouped AS (
+         |  SELECT doc_id, lang, rnk,
+         |         row_number() OVER (PARTITION BY lang ORDER BY rnk ASC) AS group_hit_rank,
+         |         min(rnk) OVER (PARTITION BY lang) AS gmin
+         |  FROM j),
+         |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS group_index FROM grouped)
+         |SELECT group_index, lang, group_hit_rank, doc_id FROM idx
+         |WHERE group_index <= 3 AND group_hit_rank <= 2
+         |ORDER BY group_index, group_hit_rank""".stripMargin
+    }) { (s, dir) =>
       g(s, dir).get(GetParams("Document",
         bm25 = Some(Bm25("spark join", properties = Seq("text"))),
         groupBy = Some(GroupByParams("lang", groups = 3, objectsPerGroup = 2)),
@@ -839,21 +1257,42 @@ object SparkEntryExt2 {
           col("group_value").as("lang"),
           col("group_hit_rank").cast("long").as("group_hit_rank"), col("doc_id"))
         .orderBy(col("group_index"), col("group_hit_rank"))
-    }),
+    },
 
-    "q_group_plain" -> ((s, dir) => {
+    Gate("q_group_plain",
+      """WITH ranked AS (
+        |  SELECT vec_id, label, row_number() OVER (ORDER BY vec_id ASC) AS rnk
+        |  FROM embeddings),
+        |grouped AS (
+        |  SELECT vec_id, label, rnk,
+        |         row_number() OVER (PARTITION BY label ORDER BY rnk ASC) AS group_hit_rank,
+        |         min(rnk) OVER (PARTITION BY label) AS gmin
+        |  FROM (SELECT * FROM ranked ORDER BY rnk LIMIT 12)),
+        |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS group_index FROM grouped)
+        |SELECT group_index, label, group_hit_rank, vec_id FROM idx
+        |WHERE group_index <= 4 AND group_hit_rank <= 3
+        |ORDER BY group_index, group_hit_rank""".stripMargin) { (s, dir) =>
       g(s, dir).get(GetParams("Embedding",
         groupBy = Some(GroupByParams("label", groups = 4, objectsPerGroup = 3)),
         properties = Seq("vec_id")))
         .select(col("group_index").cast("long").as("group_index"), col("group_value").as("label"),
           col("group_hit_rank").cast("long").as("group_hit_rank"), col("vec_id"))
         .orderBy(col("group_index"), col("group_hit_rank"))
-    }),
+    },
 
     // §2.3 MMR re-selection with the verifiable λ=1 invariant: pure-relevance
     // MMR must equal the top-k by distance with mmr_score = relevance
     // (diversity regime λ<1 stays asserted in EngineSpec)
-    "q_mmr" -> ((s, dir) => {
+    // λ=1 invariant: MMR degenerates to top-k by relevance = top-k by distance
+    Gate("q_mmr",
+      s"""WITH ${sqlQv(7)},
+         |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q),
+         |top AS (SELECT vec_id, 1.0 - dist / 2.0 AS rel,
+         |          row_number() OVER (ORDER BY dist ASC, vec_id ASC) AS mmr_rank
+         |        FROM d ORDER BY dist ASC, vec_id ASC LIMIT 10)
+         |SELECT vec_id, CAST(mmr_rank AS BIGINT) AS mmr_rank, round(rel, 4) AS mmr_score
+         |FROM top ORDER BY mmr_rank""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val pool = gg.get(GetParams("Embedding",
         nearObject = Some(NearObject(7L, metric = Metric.Cosine)),
@@ -863,7 +1302,7 @@ object SparkEntryExt2 {
         .select(col("id").as("vec_id"), col("mmr_rank").cast("long").as("mmr_rank"),
           round(col("mmr_score"), 4).as("mmr_score"))
         .orderBy(col("mmr_rank"))
-    }),
+    },
 
     // §2.7 _additional { rerank(property, query) { score } }: filtered page
     // (bounded by limit BEFORE rerank, reference provider_ranker.go) re-scored
@@ -872,7 +1311,25 @@ object SparkEntryExt2 {
     // reranker module — where (allowlist; idf/avgdl stay collection-wide),
     // keyword scoring, pagination, and the rerank additional all in one
     // query, each stage replayed in the oracle
-    "q_compose_search" -> ((s, dir) => {
+    // page first (id order + limit), THEN score: rerank sees only the page
+    // composition replay: full-corpus BM25 stats, lang-filtered scored set,
+    // page, then the lexical-overlap rerank over the page
+    Gate("q_compose_search", {
+      val (ctes, _) = SparkEntry.sqlBm25(Seq("spark", "join", "stream"))
+      val rrTerms = Seq("window", "merge", "batch")
+      val hits = rrTerms.map(t =>
+        s"(CASE WHEN regexp_matches(lower(d.text), '\\b$t\\b') THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH $ctes,
+         |page AS (
+         |  SELECT s.doc_id, s.score_exact FROM scored s JOIN documents d USING (doc_id)
+         |  WHERE d.lang = 'en' AND s.terms_matched >= 1
+         |  ORDER BY s.score_exact DESC, s.doc_id ASC LIMIT 25)
+         |SELECT p.doc_id, round(($hits) / ${rrTerms.size}.0, 4) AS rr,
+         |       round(p.score_exact, 4) AS bm25
+         |FROM page p JOIN documents d USING (doc_id)
+         |ORDER BY rr DESC, p.doc_id ASC""".stripMargin
+    }) { (s, dir) =>
       g(s, dir).get(GetParams("Document",
         where = Some(Where.eqText("lang", "en")),
         bm25 = Some(Bm25("spark join stream", properties = Seq("text"))),
@@ -882,9 +1339,19 @@ object SparkEntryExt2 {
         rerank = Some(RerankParams("text", "window merge batch"))))
         .select(col("doc_id"), round(col(Rerank.ScoreCol), 4).as("rr"),
           round(col("_score"), 4).as("bm25"))
-    }),
+    },
 
-    "q_rerank" -> ((s, dir) => {
+    Gate("q_rerank", {
+      val terms = Seq("spark", "join", "window", "merge", "batch")
+      val hits = terms.map(t =>
+        s"(CASE WHEN regexp_matches(lower(text), '\\b$t\\b') THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH page AS (
+         |  SELECT doc_id, text FROM documents WHERE source = 'src7'
+         |  ORDER BY doc_id ASC LIMIT 40)
+         |SELECT doc_id, round(($hits) / ${terms.size}.0, 4) AS score
+         |FROM page ORDER BY score DESC, doc_id ASC""".stripMargin
+    }) { (s, dir) =>
       g(s, dir).get(GetParams("Document",
         where = Some(Where.eqText("source", "src7")),
         pagination = Some(Pagination(limit = 40)),
@@ -892,7 +1359,7 @@ object SparkEntryExt2 {
         additional = Set("rerank"),
         rerank = Some(RerankParams("text", "spark join window merge batch"))))
         .select(col("doc_id"), round(col(Rerank.ScoreCol), 4).as("score"))
-    }),
+    },
 
     // pipeline: distributed BPE tokenizer TRAINING (Sennrich et al. 2016 —
     // word-frequency-table formulation): 6 merge rounds over the Document
@@ -901,19 +1368,35 @@ object SparkEntryExt2 {
     // segmentation, freq-weighted adjacent-pair counts, (count desc, pair
     // asc) argmax, left-to-right merge application — over the same
     // double-space segmentation representation (Bpe.scala scaladoc).
-    "q_bpe_train" -> ((s, dir) => {
+    Gate("q_bpe_train", (bpeCtes(6) + """
+        |SELECT rank, pair, cnt FROM (
+        |""".stripMargin +
+      (1 to 6).map(i => s"  SELECT $i AS rank, pair, cnt FROM b$i")
+        .mkString("", "\n  UNION ALL\n", "\n") +
+      ") ORDER BY rank")) { (s, dir) =>
       val (model, _) = bpeFor(s, dir)
       import s.implicits._
       model.merges.map(m => (m.rank, m.pair, m.count)).toDF("rank", "pair", "cnt")
         .orderBy(col("rank"))
-    }),
+    },
 
     // pipeline: BPE corpus ENCODING with the trained merges — distinct-word
     // dictionary join (encode each vocabulary word once, map occurrences
     // back in word order); per doc the subword count and the first 10
     // tokens. Oracle: the q_bpe_train replay's final vocabulary joined back
     // through the same word-position explode.
-    "q_bpe_encode" -> ((s, dir) => {
+    Gate("q_bpe_encode", (bpeCtes(6) + """,
+        |dw AS (SELECT doc_id, i, ws[i] AS w FROM (
+        |    SELECT doc_id,
+        |           list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS ws
+        |    FROM documents) d, unnest(range(1, len(ws) + 1)) AS u(i)),
+        |jt AS (SELECT dw.doc_id, dw.i, string_split(trim(wk.seg), '  ') AS syms
+        |       FROM dw JOIN w6 wk ON dw.w = wk.w),
+        |enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS toks
+        |        FROM jt GROUP BY doc_id)
+        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
+        |       array_to_string(toks[1:10], '|') AS head
+        |FROM enc ORDER BY doc_id""".stripMargin)) { (s, dir) =>
       val gg = g(s, dir)
       val (_, vocab) = bpeFor(s, dir)
       val docs = gg.collection("Document").df
@@ -921,19 +1404,24 @@ object SparkEntryExt2 {
         .select(col("__id").as("doc_id"), size(col("tokens")).as("n_tokens"),
           array_join(slice(col("tokens"), 1, 10), "|").as("head"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // pipeline: WordPiece tokenizer TRAINING — same merge machinery as
     // q_bpe_train but the argmax is the likelihood score
     // count(ab)/(count(a)·count(b)) (Schuster & Nakajima 2012; the BERT
     // trainer). Oracle: the six rounds unrolled with per-round symbol-count
     // CTEs and the identical double-precision score.
-    "q_wordpiece_train" -> ((s, dir) => {
+    Gate("q_wordpiece_train", (wpCtes(6) + """
+        |SELECT rank, pair, cnt FROM (
+        |""".stripMargin +
+      (1 to 6).map(i => s"  SELECT $i AS rank, pair, cnt FROM b$i")
+        .mkString("", "\n  UNION ALL\n", "\n") +
+      ") ORDER BY rank")) { (s, dir) =>
       val (model, _) = wpFor(s, dir)
       import s.implicits._
       model.merges.map(m => (m.rank, m.pair, m.count)).toDF("rank", "pair", "cnt")
         .orderBy(col("rank"))
-    }),
+    },
 
     // pipeline: WordPiece ENCODING — greedy maximal munch over the trained
     // subword vocabulary (the actual WordPiece inference rule, distinct
@@ -941,34 +1429,46 @@ object SparkEntryExt2 {
     // occurrence join-back. Oracle: the greedy scan unrolled step-by-step
     // (longest vocab entry at each position via a windowed argmax) over the
     // replayed final vocabulary.
-    "q_wordpiece_encode" -> ((s, dir) => {
+    Gate("q_wordpiece_encode", (wpCtes(6) + wpGreedyCtes(6, steps = 12) + """
+        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
+        |       array_to_string(toks[1:10], '|') AS head
+        |FROM enc ORDER BY doc_id""".stripMargin)) { (s, dir) =>
       val (_, vocab) = wpFor(s, dir)
       Bpe.encodeGreedy(wpDocs(s, dir), col("doc_id"), col("text"),
         Bpe.vocabularyOf(vocab))
         .select(col("__id").as("doc_id"), size(col("tokens")).as("n_tokens"),
           array_join(slice(col("tokens"), 1, 10), "|").as("head"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // pipeline: unigram-LM tokenizer TRAINING (Kudo 2018; the SentencePiece
     // default) — substring seed vocabulary, two hard-EM rounds (Viterbi
     // E-step, exact-count M-step). The oracle replays EVERYTHING: seed
     // ranking, per-round DP (unrolled position CTEs), backtrack, count
     // re-estimation — in identical IEEE-double math.
-    "q_unigram_train" -> ((s, dir) => {
+    Gate("q_unigram_train", (unigramCtes(seedSize = 96, maxL = 4, rounds = 2,
+      positions = 12, withEncode = false) + """
+        |SELECT c.piece, c.cnt, round(q.p, 6) AS prob
+        |FROM c2 c JOIN q2 q USING (piece)
+        |WHERE (SELECT ok FROM scan_ok)
+        |ORDER BY q.p DESC, c.piece ASC""".stripMargin)) { (s, dir) =>
       val model = uniFor(s, dir)
       import s.implicits._
       model.pieces.map(p => (p.piece, p.count, p.prob))
         .toDF("piece", "cnt", "prob")
         .orderBy(col("prob").desc, col("piece")) // EXACT prob, then round
         .withColumn("prob", round(col("prob"), 6)) // same HALF_UP as DuckDB
-    }),
+    },
 
     // pipeline: unigram-LM Viterbi ENCODING of the corpus under the trained
     // model — globally-best segmentation per word (not greedy munch), one
     // codegen DP per DISTINCT word + occurrence join-back. Oracle: one more
     // replayed DP+backtrack round over the final piece table.
-    "q_unigram_encode" -> ((s, dir) => {
+    Gate("q_unigram_encode", (unigramCtes(seedSize = 96, maxL = 4, rounds = 2,
+      positions = 12, withEncode = true) + """
+        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
+        |       array_to_string(toks[1:10], '|') AS head
+        |FROM enc ORDER BY doc_id""".stripMargin)) { (s, dir) =>
       val gg = g(s, dir)
       val model = uniFor(s, dir)
       val docs = gg.collection("Document").df
@@ -976,7 +1476,7 @@ object SparkEntryExt2 {
         .select(col("__id").as("doc_id"), size(col("tokens")).as("n_tokens"),
           array_join(slice(col("tokens"), 1, 10), "|").as("head"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // --- wire-format decoder gates (reference: adapters/handlers/grpc/v1/
     // parse_search_request.go, filters.go, parse_aggregate_request.go): a
@@ -985,7 +1485,12 @@ object SparkEntryExt2 {
 
     // filters via the wire: And tree (text/number/date leaves) replaying
     // q_filter_and_range through the decoded path
-    "q_wire_filter" -> ((s, dir) => {
+    // --- wire-format decoder gates: each decoded JSON query must hash-match
+    // the programmatic twin's oracle (same SQL, same aliases) ---
+    Gate("q_wire_filter",
+      """SELECT l_orderkey, l_linenumber FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.WireDecoder.search(gg,
         """{"collection": "Lineitem", "limit": 1000000,
@@ -995,11 +1500,18 @@ object SparkEntryExt2 {
           |    {"operator": "OPERATOR_GREATER_THAN", "on": ["l_quantity"], "valueNumber": 30.0},
           |    {"operator": "OPERATOR_LESS_THAN", "on": ["l_shipdate"], "valueText": "1995-06-17"}]}}""".stripMargin)
       gg.get(params).orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // new-style FilterTarget singleTarget chain (2-hop ref descent) through
     // the wire — replays q_ref_filter_2hop's semi-join plan
-    "q_wire_ref_filter" -> ((s, dir) => {
+    Gate("q_wire_ref_filter",
+      """SELECT o_orderkey FROM orders
+        |WHERE o_custkey IN (
+        |  SELECT c_custkey FROM customer WHERE c_nationkey IN (
+        |    SELECT n_nationkey FROM nation
+        |    WHERE list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), 'nation')
+        |      AND list_contains(regexp_extract_all(lower(n_name), '[a-z0-9]+'), '7')))
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.WireDecoder.search(gg,
         """{"collection": "Order", "limit": 1000000,
@@ -1010,10 +1522,17 @@ object SparkEntryExt2 {
           |        "target": {"property": "n_name"}}}}},
           |    "valueText": "NATION_7"}}""".stripMargin)
       gg.get(params).orderBy(col("o_orderkey"))
-    }),
+    },
 
     // BM25 through the wire (query/properties/metadata.score), twin of q_bm25
-    "q_wire_bm25" -> ((s, dir) => {
+    Gate("q_wire_bm25", {
+      val terms = Seq("spark", "join", "stream", "window")
+      val (ctes, _) = sqlBm25(terms)
+      s"""WITH $ctes
+         |SELECT doc_id, round(score_exact, 4) AS score FROM scored
+         |WHERE terms_matched >= 1
+         |ORDER BY score_exact DESC, doc_id ASC LIMIT 20""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.WireDecoder.search(gg,
         """{"collection": "Document", "limit": 20,
@@ -1021,12 +1540,33 @@ object SparkEntryExt2 {
           |  "properties": {"nonRefProperties": ["doc_id"]},
           |  "bm25Search": {"query": "spark join stream window", "properties": ["text"]}}""".stripMargin)
       gg.get(params).select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
+    },
 
     // hybrid through the wire: alpha 0.7, FUSION_TYPE_RANKED, dense vector
     // as a JSON float list — twin of q_hybrid_rrf (the schema-configured
     // cosine resolves Metric.Default to the twin's explicit metric)
-    "q_wire_hybrid" -> ((s, dir) => {
+    Gate("q_wire_hybrid", {
+      val terms = Seq("spark", "join", "stream")
+      val (ctes, _) = sqlBm25(terms, source = sqlDocVec, fieldPropMeans = Seq(1.0, 1.0))
+      s"""WITH $ctes,
+         |sparse AS (
+         |  SELECT doc_id, score_exact, row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) AS r
+         |  FROM (SELECT * FROM scored WHERE terms_matched >= 1 ORDER BY score_exact DESC, doc_id ASC LIMIT 100)),
+         |${sqlQv(7)},
+         |densed AS (
+         |  SELECT d.doc_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q),
+         |dense AS (
+         |  SELECT doc_id, 1.0 - dist / 2.0 AS sdense, row_number() OVER (ORDER BY dist ASC, doc_id ASC) AS r
+         |  FROM (SELECT * FROM densed ORDER BY dist ASC, doc_id ASC LIMIT 100)),
+         |fused AS (
+         |  SELECT coalesce(s.doc_id, de.doc_id) AS doc_id,
+         |         coalesce(0.3 / (60 + s.r), 0.0) + coalesce(0.7 / (60 + de.r), 0.0) AS score_exact,
+         |         coalesce(s.score_exact, de.sdense) AS secondary
+         |  FROM sparse s FULL OUTER JOIN dense de ON s.doc_id = de.doc_id)
+         |SELECT doc_id, round(score_exact, 4) AS score FROM fused
+         |ORDER BY score_exact DESC, secondary DESC, doc_id ASC LIMIT 15""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       val vec = Fixtures.anchorVector(gg, 7L).mkString("[", ", ", "]")
       val params = graft.engine.WireDecoder.search(gg,
@@ -1036,12 +1576,20 @@ object SparkEntryExt2 {
            |  "hybridSearch": {"query": "spark join stream", "alpha": 0.7,
            |    "fusionType": "FUSION_TYPE_RANKED", "vector": $vec}}""".stripMargin)
       gg.get(params).select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
+    },
 
     // nearObject and base64 little-endian-fp32 vectorBytes (the encoding
     // real weaviate clients put on the wire, byteops.Fp32SliceFromBytes)
     // decode to the SAME cosine top-10 page
-    "q_wire_near" -> ((s, dir) => {
+    Gate("q_wire_near",
+      s"""WITH ${sqlQv(7)},
+         |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q),
+         |top AS (SELECT vec_id, round(dist, 4) AS dist FROM d
+         |        ORDER BY d.dist ASC, vec_id ASC LIMIT 10)
+         |SELECT 'object' AS arm, vec_id, dist FROM top
+         |UNION ALL SELECT 'bytes', vec_id, dist FROM top
+         |ORDER BY arm, dist, vec_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val anchor = Fixtures.anchorVector(gg, 7L)
       val bb = java.nio.ByteBuffer.allocate(anchor.length * 4)
@@ -1061,11 +1609,15 @@ object SparkEntryExt2 {
            |  "nearVector": {"vectorBytes": "$b64"}}""".stripMargin))
         .select(lit("bytes").as("arm"), col("vec_id"), round(col("_distance"), 4).as("dist"))
       byObject.unionAll(byBytes).orderBy(col("arm"), col("dist"), col("vec_id"))
-    }),
+    },
 
     // AggregateRequest through the wire: groupBy + the number-flags matrix
     // + objectsCount, twin of q_agg_group_numeric
-    "q_wire_aggregate" -> ((s, dir) => {
+    Gate("q_wire_aggregate",
+      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
+        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
+        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.WireDecoder.aggregate(gg,
         """{"collection": "Order", "objectsCount": true,
@@ -1082,7 +1634,7 @@ object SparkEntryExt2 {
           round(col("o_totalprice_minimum"), 4).as("min_price"),
           round(col("o_totalprice_maximum"), 4).as("max_price"))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
 
     // §2.3 IVF posting-balance under skew (reference: hfresh analyze.go
     // size trigger + split.go doSplit/splitPosting 2-means, re-enqueued
@@ -1091,7 +1643,20 @@ object SparkEntryExt2 {
     // under a max-posting cap — per-posting bound holds, every row stays
     // assigned exactly once, low-probe recall is intact because the split
     // recovers the latent structure, and full probe stays exact
-    "q_near_ivf_skew" -> ((s, dir) => {
+    // posting-balance arms: live row counts are SQL-derived; the
+    // bound/recall/idempotence arms certify the split loop's contract
+    Gate("q_near_ivf_skew",
+      """SELECT * FROM (VALUES
+        |  ('02_skew_before', 'true'),
+        |  ('03_bound_after', 'true'),
+        |  ('05_centroids_grew', 'true'),
+        |  ('06_recall_nprobe2', 'true'),
+        |  ('07_full_probe_exact', 'true'),
+        |  ('08_tighter_recap', 'true')
+        |) AS t(step, result)
+        |UNION ALL SELECT '01_rows', CAST((SELECT count(*) FROM embeddings) AS VARCHAR)
+        |UNION ALL SELECT '04_ids_preserved', CAST((SELECT count(DISTINCT vec_id) FROM embeddings) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val cap = 120L
@@ -1130,12 +1695,46 @@ object SparkEntryExt2 {
         rebound.assigned.select(col("vec_id")).distinct().count() ==
           balanced.assigned.count()).toString
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // malformed-input arms replay the reference's parse-time validation
     // errors verbatim; the live arms prove the decoded path reaches the
     // data plane (a decoded filter page's count is SQL-derived)
-    "q_wire_validate" -> ((s, dir) => {
+    // parse-time validation arms (texts from parse_search_request.go /
+    // filters.go / parse_aggregate_request.go) + live data-derived counts
+    Gate("q_wire_validate",
+      """SELECT * FROM (VALUES
+        |  ('01_float_for_int', 'filtering for integer, but received a floating point number 2.3'),
+        |  ('02_uneven_path', 'paths needs to have a uneven number of components: property, class, property, ...., got [o_custkey Customer]'),
+        |  ('03_unknown_operator', 'unknown filter operator OPERATOR_FROBNICATE'),
+        |  ('04_distance_and_certainty', 'near_vector: cannot provide distance and certainty'),
+        |  ('05_near_object_no_id', 'near_object: id is required'),
+        |  ('06_sort_with_search', 'sorting cannot be combined with search'),
+        |  ('07_groupby_two_paths', 'groupby path can only have one entry, received [lang source]'),
+        |  ('08_mmr_over_limit', 'MMR limit (20) cannot be larger than the query limit (10)'),
+        |  ('09_hybrid_neartext_and_vector', 'cannot combine nearText and query in hybrid search'),
+        |  ('10_weights_mismatch', 'number of weights (1) does not match number of targets (2)'),
+        |  ('11_unparseable_number', 'expected a number value, but could not parse string ''abc'' as float'),
+        |  ('12_agg_multi_target', 'found more than one target vector for aggregation'),
+        |  ('15_agg_multi_vector', 'near_vector: multi vector is not supported for aggregation'),
+        |  ('16_bad_vector_bytes', 'vector_bytes: payload of 10 bytes is not a whole number of fp32 values'),
+        |  ('17_mmr_negative', 'MMR limit must be at least 1'),
+        |  ('18_unparseable_int', 'limit: expected integer, got abc')
+        |) AS t(step, result)
+        |UNION ALL SELECT '13_live_filter_count',
+        |  CAST((SELECT count(*) FROM documents WHERE n_chars > 400) AS VARCHAR)
+        |UNION ALL SELECT '14_live_meta_count',
+        |  CAST((SELECT count(*) FROM lineitem WHERE l_quantity > 45.0) AS VARCHAR)
+        |UNION ALL SELECT '19_live_null_count_split',
+        |  CAST((SELECT count(*) FROM documents) AS VARCHAR) || ':' ||
+        |  CAST((SELECT count(CASE WHEN source = 'src13' THEN NULL ELSE source END)
+        |        FROM documents) AS VARCHAR)
+        |UNION ALL SELECT '20_live_cursor', (
+        |  SELECT CAST(count(*) AS VARCHAR) || ':' || CAST(min(k) AS VARCHAR)
+        |         || ':' || CAST(max(k) AS VARCHAR)
+        |  FROM (SELECT o_orderkey AS k FROM orders WHERE o_orderkey > 700
+        |        ORDER BY o_orderkey LIMIT 15))
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val W = graft.engine.WireDecoder
@@ -1202,7 +1801,7 @@ object SparkEntryExt2 {
           |  "filters": {"operator": "OPERATOR_GREATER_THAN", "on": ["l_quantity"], "valueNumber": 45.0}}""".stripMargin))
         .select(col("meta_count")).head().getLong(0))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 concurrent-writer linearization (reference: usecases/objects/
     // batch manager serializes writes per shard behind its lock;
@@ -1216,7 +1815,27 @@ object SparkEntryExt2 {
     // version count (each mutation claimed its own version), exact live
     // rows, per-writer landed counts, the v0-pinned reader's page, and the
     // prepare-time snapshot none of the racing writes leaked into
-    "q_store_race" -> ((s, dir) => {
+    // linearization arms: interleaving-invariant outcomes of real racing
+    // writer threads — exact version count (every mutation claimed its own
+    // version: a lost update shows as a smaller count), live/export row
+    // counts SQL-derived, disjoint per-writer ranges all present
+    Gate("q_store_race",
+      """SELECT * FROM (VALUES
+        |  ('01_writer_errors', '0'),
+        |  ('02_final_version', '8'),
+        |  ('05_per_writer_landed', '7000:20,7001:20,7002:20'),
+        |  ('08_export_max_id', '15009'),
+        |  ('09_raced_in_after_prepare', '20')
+        |) AS t(step, result)
+        |UNION ALL SELECT '03_live_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 50) + 80 AS VARCHAR)
+        |UNION ALL SELECT '04_distinct_ids', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 50) + 80 AS VARCHAR)
+        |UNION ALL SELECT '06_pinned_reader_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 50) AS VARCHAR)
+        |UNION ALL SELECT '07_export_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 50) + 60 AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val docs = gg.collection("Document").df.select(col("doc_id"), col("n_chars"))
@@ -1264,7 +1883,7 @@ object SparkEntryExt2 {
       out += "08_export_max_id" -> snap.agg(max(col("doc_id"))).head().getLong(0).toString
       out += "09_raced_in_after_prepare" -> (live.count() - snap.count()).toString
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 scheme-agnostic backup/export (reference: modules/backup-s3|gcs|
     // azure|filesystem — four byte-stream backends behind one contract;
@@ -1274,7 +1893,25 @@ object SparkEntryExt2 {
     // through hadoop Path/FileSystem — a real s3a:// or gs:// target is a
     // config change, not a code path — and that the metadata blob carries
     // no absolute backend paths (a mounted/moved backup stays restorable)
-    "q_backup_scheme" -> ((s, dir) => {
+    // scheme arms: live row counts SQL-derived; the backend/relative arms
+    // certify that bytes actually flowed through the registered scheme and
+    // the metadata blob stays path-free
+    Gate("q_backup_scheme",
+      """SELECT * FROM (VALUES
+        |  ('02_restored_matches_source', '0'),
+        |  ('03_schema_tokenization_kept', 'field'),
+        |  ('04_bytes_on_backend', 'true'),
+        |  ('05_export_status', 'SUCCESS'),
+        |  ('05b_commit_via_scheme', 'true'),
+        |  ('08_moved_restorable', 'true')
+        |) AS t(step, result)
+        |UNION ALL SELECT '01_restored_rows', CAST(
+        |  (SELECT count(*) FROM documents) AS VARCHAR)
+        |UNION ALL SELECT '06_export_rows', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 120) AS VARCHAR)
+        |UNION ALL SELECT '07_metadata_counts', CAST(
+        |  (SELECT count(*) FROM documents WHERE doc_id < 120) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       s.sparkContext.hadoopConfiguration
         .set("fs.mockfs.impl", classOf[graft.sources.MockFs].getName)
@@ -1342,7 +1979,7 @@ object SparkEntryExt2 {
           java.nio.file.Paths.get(s"$moved/sch-exp/export_metadata.json")), "UTF-8")
           .contains("\"status\":\"SUCCESS\"")).toString
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 RBAC-lite (reference: usecases/auth/authorization — types.go
     // {verb}_{domain} actions + resource formatters, rbac/authorizer.go,
@@ -1350,7 +1987,32 @@ object SparkEntryExt2 {
     // anonymous, group-rendering, tenant-scope and segment-match arms; the
     // allowed reads/aggregates are LIVE data-derived counts so the pass
     // path proves the data plane still serves under an active policy
-    "q_rbac" -> ((s, dir) => {
+    // rbac arms: reference error texts verbatim (errors.go Forbidden under
+    // authorizer.go's "rbac: %w" wrap, prettyPermissionsResources domain
+    // rendering); allowed arms are SQL-derived live counts
+    Gate("q_rbac",
+      """SELECT * FROM (VALUES
+        |  ('01_anonymous', 'rbac: user is not authenticated'),
+        |  ('03_alice_part_denied', 'rbac: authorization, forbidden action: user ''alice'' has insufficient permissions to read_data [[Domain: data, Collection: Part, Tenant: *, Object: *]]'),
+        |  ('04_alice_register_denied', 'rbac: authorization, forbidden action: user ''alice'' has insufficient permissions to create_collections [[Domain: collections, Collection: RbacNew]]'),
+        |  ('07_bob_register_denied', 'rbac: authorization, forbidden action: user ''bob'' has insufficient permissions to create_collections [[Domain: collections, Collection: RbacNew]]'),
+        |  ('08_carol_admin_registers', 'ok'),
+        |  ('09_group_error_text', 'rbac: authorization, forbidden action: user ''mallory'' (of groups ''eng'', ''ml'') has insufficient permissions to delete_data [[Domain: data, Collection: Document, Tenant: *, Object: *]]'),
+        |  ('10_tenant_scope_allowed', 'ok'),
+        |  ('11_tenant_scope_denied', 'rbac: authorization, forbidden action: user ''dave'' has insufficient permissions to read_data [[Domain: data, Collection: TenantDocs, Tenant: tenantB, Object: *]]'),
+        |  ('12_no_prefix_leak', 'rbac: authorization, forbidden action: user ''alice'' has insufficient permissions to read_data [[Domain: data, Collection: Document2, Tenant: *, Object: *]]'),
+        |  ('13_per_request_principal', 'rbac: authorization, forbidden action: user ''alice'' has insufficient permissions to read_data [[Domain: data, Collection: Part, Tenant: *, Object: *]]'),
+        |  ('14_per_request_anonymous', 'rbac: user is not authenticated'),
+        |  ('15_explore_denied', 'rbac: authorization, forbidden action: user ''alice'' has insufficient permissions to read_data [[Domain: data, Collection: Part, Tenant: *, Object: *]]'),
+        |  ('16_hash_tenant_no_bypass', 'rbac: authorization, forbidden action: user ''dave'' has insufficient permissions to read_data [[Domain: data, Collection: TenantDocs, Tenant: #, Object: *]]')
+        |) AS t(step, result)
+        |UNION ALL SELECT '02_alice_reads_document', CAST(
+        |  (SELECT count(*) FROM documents WHERE n_chars > 400) AS VARCHAR)
+        |UNION ALL SELECT '05_bob_viewer_reads_part', CAST(
+        |  (SELECT count(*) FROM part WHERE p_retailprice > 1500.0) AS VARCHAR)
+        |UNION ALL SELECT '06_bob_agg_meta_count', CAST(
+        |  (SELECT count(*) FROM documents) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.engine.Rbac
       val gg = g(s, dir)
@@ -1419,7 +2081,7 @@ object SparkEntryExt2 {
         Some(Rbac.Principal("dave")), Rbac.ReadData,
         Seq(Rbac.objects("TenantDocs", "#"))))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // the WRITE wire shape (grpc batch/parse.go BatchObjectsFromProto +
     // batch.proto): decoded JSON objects land in a typed store via the
@@ -1427,7 +2089,18 @@ object SparkEntryExt2 {
     // texts and the REST of the batch proceeds (partial-batch contract);
     // legacy vectorBytes and named vectors both route to the vector column;
     // missing properties land NULL; a later batch last-write-wins by id
-    "q_wire_batch" -> ((s, dir) => {
+    // batch-write arms: decoded objects land through the versioned upsert
+    // path; uuid error texts are google/uuid's own; null/last-write rows
+    // read back from the store
+    Gate("q_wire_batch",
+      """SELECT * FROM (VALUES
+        |  ('01_decode_errors', '1=invalid UUID length: 3|2=invalid UUID format'),
+        |  ('02_second_batch_clean', '0'),
+        |  ('03_rows', '3'),
+        |  ('04_last_write_wins', 'gamma:42:3.5:true:z:9.0'),
+        |  ('05_missing_props_null', 'beta:9:null:null:null:0.5'),
+        |  ('06_seed_intact', 'seed:1:0.5:true:s:0.1')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val W = graft.engine.WireDecoder
       val st = new graft.sources.CollectionStore(s,
@@ -1484,12 +2157,15 @@ object SparkEntryExt2 {
       out += "05_missing_props_null" -> rowStr("66666666-7777-4888-9999-aaaaaaaaaaaa")
       out += "06_seed_intact" -> rowStr("00000000-0000-4000-8000-00000000aaaa")
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // decoded sortBy/offset/limit drive a LIVE page hash-matched to the
     // programmatic q_sort_page twin — without this, a sort-direction flip
     // or dropped offset in the decoder passes every (error-arm-only) gate
-    "q_wire_sort" -> ((s, dir) => {
+    // decoded sort/offset/limit twin: identical SQL to q_sort_page
+    Gate("q_wire_sort",
+      """SELECT p_partkey, p_retailprice FROM part
+        |ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 20 OFFSET 5""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       gg.get(graft.engine.WireDecoder.search(gg,
         """{"collection": "Part", "offset": 5, "limit": 20,
@@ -1497,13 +2173,17 @@ object SparkEntryExt2 {
           |             {"ascending": true, "path": ["p_partkey"]}],
           |  "properties": {"nonRefProperties": ["p_partkey", "p_retailprice"]}}""".stripMargin))
         .select(col("p_partkey"), col("p_retailprice"))
-    }),
+    },
 
     // REST/GraphQL `where` wire format (reference: adapters/handlers/rest/
     // filterext — Pascal-case operators, `operands` nesting, value<Type>
     // leaves): a decoded REST tree must drive the SAME plan as the
     // programmatic q_filter_and_range twin and hash-match its oracle
-    "q_wire_rest_filter" -> ((s, dir) => {
+    // REST where twin: identical SQL to q_wire_filter / q_filter_and_range
+    Gate("q_wire_rest_filter",
+      """SELECT l_orderkey, l_linenumber FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val w = graft.engine.WireDecoder.restWhere(gg, "Lineitem",
         """{"operator": "And", "operands": [
@@ -1513,13 +2193,31 @@ object SparkEntryExt2 {
       gg.get(GetParams("Lineitem", where = Some(w),
         properties = Seq("l_orderkey", "l_linenumber")))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // REST filter parse-time validation errors verbatim (filterext/parse.go
     // + parse_value.go, including the per-level "invalid where filter:" /
     // "operand %d:" wrapping and case-sensitive operator names) + live
     // SQL-derived counts through the decoded path
-    "q_wire_rest_validate" -> ((s, dir) => {
+    // REST filterext error texts verbatim + live decoded counts
+    Gate("q_wire_rest_validate",
+      """SELECT * FROM (VALUES
+        |  ('01_case_sensitive_operator', 'unrecognized operator: equal'),
+        |  ('02_nested_with_path', 'invalid where filter: operator ''And'' not compatible with field ''path'', remove ''path'' or switch to compare operator (eg. Equal, NotEqual, etc.)'),
+        |  ('03_nested_with_value', 'invalid where filter: operator ''Or'' not compatible with field ''value<Type>'', remove value field or switch to compare operator (eg. Equal, NotEqual, etc.)'),
+        |  ('04_no_operands', 'invalid where filter: operator ''And'', but no operands set - add at least one operand'),
+        |  ('05_operand_wrap', 'invalid where filter: operand 0: unrecognized operator: Frobnicate'),
+        |  ('06_no_value', 'invalid where filter: got operator ''Equal'', but no value<Type> field set'),
+        |  ('07_two_values', 'invalid where filter: found more than one values the clause ''{"operator":"Equal","path":["lang"],"valueText":"en","valueInt":3}'''),
+        |  ('08_geo_no_distance', 'invalid where filter: valueGeoRange: field ''distance'' must be set'),
+        |  ('09_empty_path', 'invalid where filter: field ''path'': must have at least one element')
+        |) AS t(step, result)
+        |UNION ALL SELECT '10_live_or', CAST(
+        |  (SELECT count(*) FROM orders WHERE o_orderstatus = 'F' OR o_totalprice > 25000.0) AS VARCHAR)
+        |UNION ALL SELECT '11_live_isnull', CAST(
+        |  (SELECT count(*) FROM documents
+        |   WHERE (CASE WHEN source = 'src13' THEN NULL ELSE source END) IS NULL) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val W = graft.engine.WireDecoder
@@ -1557,13 +2255,18 @@ object SparkEntryExt2 {
         properties = Seq("doc_id"),
         pagination = Some(Pagination(limit = 1000000)))).count())
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // GraphQL query-document twin of q_wire_filter: the SAME where tree,
     // written as the reference's GraphQL argument literals (where/path/
     // operator enums/operands), must hash-match the gRPC-decoded twin's
     // oracle — three wire shapes, one plan
-    "q_wire_gql_get" -> ((s, dir) => {
+    // GraphQL document twin of q_wire_filter: identical SQL — the decoded
+    // GraphQL where tree must drive the same plan
+    Gate("q_wire_gql_get",
+      """SELECT l_orderkey, l_linenumber FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.GraphQL.get(gg,
         """{ Get { Lineitem(
@@ -1574,12 +2277,19 @@ object SparkEntryExt2 {
           |    limit: 1000000
           |  ) { l_orderkey l_linenumber } } }""".stripMargin)
       gg.get(params).orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // GraphQL nearObject by BEACON (entities/schema/crossref) + the
     // _additional { distance } selection — same cosine top-10 page as
     // q_wire_near's object arm
-    "q_wire_gql_near" -> ((s, dir) => {
+    // GraphQL nearObject-by-beacon: cosine top-10 around Embedding/7
+    Gate("q_wire_gql_near",
+      s"""WITH ${sqlQv(7)},
+         |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q),
+         |top AS (SELECT vec_id, round(dist, 4) AS dist FROM d
+         |        ORDER BY d.dist ASC, vec_id ASC LIMIT 10)
+         |SELECT vec_id, dist FROM top ORDER BY dist, vec_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.GraphQL.get(gg,
         """{ Get { Embedding(limit: 10,
@@ -1587,11 +2297,33 @@ object SparkEntryExt2 {
           |  { vec_id _additional { distance } } } }""".stripMargin)
       gg.get(params).select(col("vec_id"), round(col("_distance"), 4).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
-    }),
+    },
 
     // GraphQL hybrid twin of q_wire_hybrid: alpha 0.7, rankedFusion enum,
     // dense vector as a GraphQL float list, _additional { score }
-    "q_wire_gql_hybrid" -> ((s, dir) => {
+    // GraphQL hybrid twin of q_wire_hybrid: identical fused-RRF SQL
+    Gate("q_wire_gql_hybrid", {
+      val terms = Seq("spark", "join", "stream")
+      val (ctes, _) = sqlBm25(terms, source = sqlDocVec, fieldPropMeans = Seq(1.0, 1.0))
+      s"""WITH $ctes,
+         |sparse AS (
+         |  SELECT doc_id, score_exact, row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) AS r
+         |  FROM (SELECT * FROM scored WHERE terms_matched >= 1 ORDER BY score_exact DESC, doc_id ASC LIMIT 100)),
+         |${sqlQv(7)},
+         |densed AS (
+         |  SELECT d.doc_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q),
+         |dense AS (
+         |  SELECT doc_id, 1.0 - dist / 2.0 AS sdense, row_number() OVER (ORDER BY dist ASC, doc_id ASC) AS r
+         |  FROM (SELECT * FROM densed ORDER BY dist ASC, doc_id ASC LIMIT 100)),
+         |fused AS (
+         |  SELECT coalesce(s.doc_id, de.doc_id) AS doc_id,
+         |         coalesce(0.3 / (60 + s.r), 0.0) + coalesce(0.7 / (60 + de.r), 0.0) AS score_exact,
+         |         coalesce(s.score_exact, de.sdense) AS secondary
+         |  FROM sparse s FULL OUTER JOIN dense de ON s.doc_id = de.doc_id)
+         |SELECT doc_id, round(score_exact, 4) AS score FROM fused
+         |ORDER BY score_exact DESC, secondary DESC, doc_id ASC LIMIT 15""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       val vec = Fixtures.anchorVector(gg, 7L).mkString("[", ", ", "]")
       val params = graft.engine.GraphQL.get(gg,
@@ -1600,11 +2332,16 @@ object SparkEntryExt2 {
            |    vector: $vec})
            |  { doc_id _additional { score } } } }""".stripMargin)
       gg.get(params).select(col("doc_id"), round(col("_score"), 4).as("score"))
-    }),
+    },
 
     // GraphQL Aggregate: the selection set IS the aggregator matrix
     // (aggregate/resolver.go extractProperties) — twin of q_wire_aggregate
-    "q_wire_gql_aggregate" -> ((s, dir) => {
+    // GraphQL Aggregate twin of q_wire_aggregate: identical SQL
+    Gate("q_wire_gql_aggregate",
+      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
+        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
+        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val params = graft.engine.GraphQL.aggregate(gg,
         """{ Aggregate { Order(groupBy: ["o_orderstatus"]) {
@@ -1622,12 +2359,47 @@ object SparkEntryExt2 {
           round(col("o_totalprice_minimum"), 4).as("min_price"),
           round(col("o_totalprice_maximum"), 4).as("max_price"))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
 
     // GraphQL extraction-layer validation errors verbatim (common_filters
     // near_vector/hybrid/extract_targets/nearText, class_builder_fields
     // resolveGet wraps, aggregate/resolver.go) + live decoded counts
-    "q_wire_gql_validate" -> ((s, dir) => {
+    // GraphQL extraction-layer error texts verbatim (common_filters,
+    // class_builder_fields.go resolveGet wraps, aggregate/resolver.go)
+    // + live SQL-derived counts through decoded documents
+    Gate("q_wire_gql_validate",
+      """SELECT * FROM (VALUES
+        |  ('01_alpha_range', 'failed to extract hybrid params: alpha should be between 0.0 and 1.0'),
+        |  ('02_distance_and_certainty', 'failed to extract nearVector params: cannot provide distance and certainty'),
+        |  ('03_vector_or_per_target', 'failed to extract nearVector params: vector or vectorPerTarget is required field'),
+        |  ('04_weight_not_provided', 'failed to extract nearVector params: weight for target rev is not provided'),
+        |  ('05_target_vectors_required', 'failed to extract nearVector params: targetVectors is required field, got map[combinationMethod:sum]'),
+        |  ('06_unknown_subsearch', 'failed to extract hybrid params: unknown subsearch type: map[somethingElse:map[q:1] weight:0.5]'),
+        |  ('07_hybrid_near_both', 'failed to extract hybrid params: hybrid search cannot have both nearText and nearVector parameters'),
+        |  ('08_hybrid_vector_and_neartext', 'failed to extract hybrid params: cannot have both vector and nearTextParams'),
+        |  ('09_hybrid_subsearch_targets', 'failed to extract hybrid params: targetVectors need to be set in the hybrid search to be handled correctly'),
+        |  ('10_hybrid_neartext_autocorrect', 'failed to extract hybrid params: autocorrect is not supported for hybrid nearText'),
+        |  ('11_bm25_with_sort', 'bm25 search is not compatible with sort'),
+        |  ('12_where_wrap', 'could not extract filters: invalid where filter: operator ''And'', but no operands set - add at least one operand'),
+        |  ('13_where_type_wrap', 'could not extract filters: failed to extract filters: unsupported type: ''bool'''),
+        |  ('14_near_object_empty', 'failed to extract nearObject params: nearObject params: empty id and beacon'),
+        |  ('15_agg_unknown_aggregator', 'could not extract properties for class ''Document'': unrecognized aggregator prop ''bogus'''),
+        |  ('16_agg_object_limit_zero', 'objectLimit must be a positive integer'),
+        |  ('17_agg_object_limit_unused', 'objectLimit can only be used with a near<Media> or hybrid filter'),
+        |  ('18_agg_groupby_even_path', 'could not extract groupBy path: missing an argument after ''Document''')
+        |) AS t(step, result)
+        |UNION ALL SELECT '19_live_where_or', CAST(
+        |  (SELECT count(*) FROM orders WHERE o_orderstatus = 'F' OR o_totalprice > 25000.0) AS VARCHAR)
+        |UNION ALL SELECT '20_live_cursor', (
+        |  SELECT CAST(count(*) AS VARCHAR) || ':' || CAST(min(k) AS VARCHAR)
+        |         || ':' || CAST(max(k) AS VARCHAR)
+        |  FROM (SELECT o_orderkey AS k FROM orders WHERE o_orderkey > 700
+        |        ORDER BY o_orderkey LIMIT 15))
+        |UNION ALL SELECT '21_live_topoccurrences', (
+        |  SELECT string_agg(value || '=' || CAST(occurs AS VARCHAR), ',' ORDER BY occurs DESC, value ASC)
+        |  FROM (SELECT lang AS value, count(*) AS occurs FROM documents
+        |        GROUP BY lang ORDER BY occurs DESC, lang ASC LIMIT 2))
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val G = graft.engine.GraphQL
@@ -1695,13 +2467,30 @@ object SparkEntryExt2 {
           .collect().map(r => s"${r.get(0)}=${r.get(1)}").mkString(",")
       }
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // GraphQL Explore: the cross-class form with nearText moves, decoded
     // from a document — twin of q_explore_neartext (the certainty request
     // comes from the SELECTION, exercised and dropped before the distance
     // page so the metric gate stays cosine-compatible)
-    "q_wire_gql_explore" -> ((s, dir) => {
+    // GraphQL Explore twin: identical SQL to q_explore_neartext
+    Gate("q_wire_gql_explore", {
+      val embed = Fixtures.hashEmbedder(64)
+      var qv = Movements.centroid(Seq(embed("spark join stream")))
+      qv = Movements.moveTo(qv, Movements.centroid(Seq(embed("window batch"))), 0.6)
+      qv = Movements.moveAwayFrom(qv, Movements.centroid(Seq(embed("error slow"))), 0.4)
+      val vlit = qv.map(f => s"CAST($f AS FLOAT)").mkString("[", ", ", "]")
+      s"""WITH qv AS (SELECT $vlit AS v),
+         |legs AS (
+         |  SELECT 'DocVec' AS class_name, CAST(d.doc_id AS VARCHAR) AS beacon_id,
+         |         ${sqlCosine("e.embedding", "q.v")} AS d_exact
+         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q
+         |  UNION ALL
+         |  SELECT 'EmbRev', CAST(e.vec_id AS VARCHAR), ${sqlCosine("list_reverse(e.embedding)", "q.v")}
+         |  FROM embeddings e CROSS JOIN qv q)
+         |SELECT class_name, beacon_id, round(d_exact, 4) AS distance FROM legs
+         |ORDER BY d_exact ASC, class_name ASC, beacon_id ASC LIMIT 12""".stripMargin
+    }) { (s, dir) =>
       val gg = g(s, dir)
       embRevBedFor(gg)
       val e = graft.engine.GraphQL.explore(
@@ -1712,14 +2501,38 @@ object SparkEntryExt2 {
           |  { beacon className distance } }""".stripMargin)
       gg.explore(Seq("DocVec", "EmbRev"), e.nearText.get, limit = e.limit, offset = e.offset)
         .select(col("class_name"), col("beacon_id"), round(col("distance"), 4).as("distance"))
-    }),
+    },
 
     // §2.1 backup request wire: the POST /v1/backups/{backend} body decodes
     // through validateBackupRequest (id charset, base-backup rules,
     // include/exclude exclusivity + duplicates, wildcard expansion against
     // the registered classes) and the resolved list drives a real
     // backup→restore round-trip
-    "q_wire_backup_req" -> ((s, dir) => {
+    // backup-request-wire arms: scheduler validation texts verbatim,
+    // wildcard/exclude resolution, live round-trip counts SQL-derived
+    Gate("q_wire_backup_req",
+      """SELECT * FROM (VALUES
+        |  ('01_invalid_id', 'invalid backup id: ''Bad!ID'' allowed characters are lowercase, 0-9, _, -'),
+        |  ('02_base_id_wrap', 'base backup id: invalid backup id: ''UPPER'' allowed characters are lowercase, 0-9, _, -'),
+        |  ('03_base_same', 'base backup cannot be the same as the new backup ID: a1'),
+        |  ('04_include_and_exclude', 'malformed request: ''include'' and ''exclude'' cannot both contain values'),
+        |  ('05_dup_include', 'class list ''include'' contains duplicate: WireA'),
+        |  ('06_empty_after_exclude', 'empty class list: please choose from : [WireA WireB1 WireB2]'),
+        |  ('07_wildcard_include', 'WireB1,WireB2'),
+        |  ('08_glob_exclude', 'WireA')
+        |) AS t(step, result)
+        |UNION ALL SELECT '09_roundtrip_rows',
+        |  'WireA=' || CAST((SELECT count(*) FROM documents WHERE doc_id < 300) AS VARCHAR)
+        |  || ',WireB1=' || CAST((SELECT count(*) FROM documents WHERE doc_id < 300) AS VARCHAR)
+        |UNION ALL SELECT '10_restore_include_exclude',
+        |  'malformed request: ''include'' and ''exclude'' cannot both contain values'
+        |UNION ALL SELECT '11_restore_missing_class',
+        |  'class WireC doesn''t exist in the backup, but does have [WireA WireB1]: '
+        |UNION ALL SELECT '12_restore_nothing_left',
+        |  'nothing left to restore: please choose from : [WireA WireB1]'
+        |UNION ALL SELECT '13_restore_wildcard',
+        |  'WireB1=' || CAST((SELECT count(*) FROM documents WHERE doc_id < 300) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val W = graft.engine.WireDecoder
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -1772,13 +2585,45 @@ object SparkEntryExt2 {
         classes.map(n => s"$n=${restored.collection(n).df.count()}").mkString(",")
       }
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.6 aggregate reply wire: decoded AggregateRequests drive the engine
     // and the results encode as the AggregateReply JSON — int props render
     // long-valued tallies where number props render doubles, text carries
     // the proto's misspelled topOccurences items, groupedBy is typed
-    "q_wire_agg_reply" -> ((s, dir) => {
+    // aggregate-reply-wire arms: encoded AggregateReply values parsed back,
+    // all SQL-recomputed; the int arm's undecorated longs split the
+    // int-vs-number payload paths
+    Gate("q_wire_agg_reply",
+      """WITH g AS (
+        |  SELECT o_orderstatus, count(*) AS n, count(o_totalprice) AS cnt,
+        |         sum(o_totalprice) AS s, avg(o_totalprice) AS m,
+        |         min(o_totalprice) AS mn, max(o_totalprice) AS mx,
+        |         -- reply groups carry the reference's pinned order:
+        |         -- object count DESC, group value ASC (grouped.go)
+        |         row_number() OVER (ORDER BY count(*) DESC, o_orderstatus ASC) - 1 AS gi
+        |  FROM orders GROUP BY o_orderstatus)
+        |SELECT printf('01_group_%02d', gi) AS step,
+        |  printf('gb=%s|n=%d|cnt=%d|sum=%.4f|mean=%.4f|min=%.4f|max=%.4f',
+        |    o_orderstatus, n, cnt, round(s, 4), round(m, 4), round(mn, 4), round(mx, 4)) AS result
+        |FROM g
+        |UNION ALL SELECT '02_single_bool', (
+        |  SELECT printf('n=%d|tt=%d|tf=%d|pt=%.4f|pf=%.4f',
+        |    count(*), CAST(sum(CASE WHEN is_high THEN 1 ELSE 0 END) AS BIGINT),
+        |    CAST(sum(CASE WHEN is_high THEN 0 ELSE 1 END) AS BIGINT),
+        |    round(avg(CASE WHEN is_high THEN 1.0 ELSE 0.0 END), 4),
+        |    round(avg(CASE WHEN is_high THEN 0.0 ELSE 1.0 END), 4))
+        |  FROM (SELECT l_quantity > 25.0 AS is_high FROM lineitem))
+        |UNION ALL SELECT '03_single_int', (
+        |  SELECT printf('cnt=%d|min=%d|max=%d|sum=%d',
+        |    count(p_size), min(p_size), max(p_size), CAST(sum(p_size) AS BIGINT))
+        |  FROM part)
+        |UNION ALL SELECT '04_single_text_top', (
+        |  SELECT 'cnt=' || CAST((SELECT count(lang) FROM documents) AS VARCHAR) || '|' ||
+        |    string_agg(value || '=' || CAST(occurs AS VARCHAR), ',' ORDER BY occurs DESC, value ASC)
+        |  FROM (SELECT lang AS value, count(*) AS occurs FROM documents
+        |        GROUP BY lang ORDER BY occurs DESC, lang ASC LIMIT 2))
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.json4s._
       import org.json4s.jackson.JsonMethods
@@ -1847,12 +2692,33 @@ object SparkEntryExt2 {
         s"cnt=${(t \ "count").values}|$items"
       }
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 batch-delete wire: the BatchDeleteRequest decodes (collection /
     // filters / dryRun / verbose), drives the store's filter-delete, and the
     // reply encodes with the verbose per-object uuid bytes round-tripping
-    "q_wire_batch_delete" -> ((s, dir) => {
+    // batch-delete-wire arms: decode errors verbatim, dryRun leaves the
+    // store intact, the verbose reply's uuid bytes round-trip, counts
+    // SQL-derived
+    Gate("q_wire_batch_delete",
+      """WITH scope AS (
+        |  SELECT count(*) AS total,
+        |         count(CASE WHEN n_chars > 400 THEN 1 END) AS hits,
+        |         min(CASE WHEN n_chars > 400 THEN doc_id END) AS first_hit
+        |  FROM documents WHERE doc_id < 500)
+        |SELECT * FROM (VALUES
+        |  ('01_unknown_class', 'could not find class Ghost in schema'),
+        |  ('02_no_filters', 'no filters in batch delete request')
+        |) AS t(step, result)
+        |UNION ALL SELECT '03_dryrun_matches', CAST(hits AS VARCHAR) FROM scope
+        |UNION ALL SELECT '04_dryrun_untouched', CAST(total AS VARCHAR) FROM scope
+        |UNION ALL SELECT '05_reply_tallies',
+        |  CAST(hits AS VARCHAR) || ':' || CAST(hits AS VARCHAR) || ':0' FROM scope
+        |UNION ALL SELECT '06_first_deleted_uuid',
+        |  printf('00000000-0000-4000-8000-%012d|ok=true|err=', first_hit) FROM scope
+        |UNION ALL SELECT '07_rows_after', CAST(total - hits AS VARCHAR) FROM scope
+        |UNION ALL SELECT '08_objects_count', CAST(hits AS VARCHAR) FROM scope
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.json4s._
       import org.json4s.jackson.JsonMethods
@@ -1905,13 +2771,51 @@ object SparkEntryExt2 {
       out += "07_rows_after" -> valueOr(st.read().count())
       out += "08_objects_count" -> valueOr(objs.size)
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 reply-side wire: a decoded SearchRequest drives the engine and
     // the page encodes back as the SearchReply JSON (prepare_reply.go) —
     // metadata values + proto3 explicit-presence flags parsed BACK out of
     // the encoded reply and checked against SQL-derived truth
-    "q_wire_reply" -> ((s, dir) => {
+    // reply-wire arms: SearchReply metadata values + presence flags parsed
+    // back out of the encoded JSON, checked against SQL-recomputed pages
+    Gate("q_wire_reply", {
+      val (bmCtes, _) = sqlBm25(Seq("spark", "join", "stream", "window"))
+      s"""WITH $bmCtes,
+         |bmtop AS (SELECT doc_id, score_exact,
+         |            row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) AS rn
+         |          FROM scored WHERE terms_matched >= 1
+         |          ORDER BY score_exact DESC, doc_id ASC LIMIT 3),
+         |${sqlQv(7)},
+         |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q),
+         |top5 AS (SELECT vec_id, dist, row_number() OVER (ORDER BY dist ASC, vec_id ASC) AS rn
+         |         FROM d ORDER BY dist ASC, vec_id ASC LIMIT 5),
+         |ranked AS (SELECT vec_id, label, row_number() OVER (ORDER BY vec_id ASC) AS rnk FROM embeddings),
+         |grouped AS (
+         |  SELECT vec_id, label, rnk,
+         |         row_number() OVER (PARTITION BY label ORDER BY rnk ASC) AS ghr,
+         |         min(rnk) OVER (PARTITION BY label) AS gmin
+         |  FROM (SELECT * FROM ranked ORDER BY rnk LIMIT 12)),
+         |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS gi FROM grouped),
+         |keep AS (SELECT * FROM idx WHERE gi <= 4 AND ghr <= 3),
+         |per AS (SELECT gi, CAST(label AS VARCHAR) AS name, count(*) AS cnt,
+         |               string_agg(CAST(vec_id AS VARCHAR), '+' ORDER BY ghr) AS hits
+         |        FROM keep GROUP BY gi, label)
+         |SELECT printf('01_hit_%02d', rn - 1) AS step,
+         |       printf('id=%d|dist=%.4f|present=true|prop=%d', vec_id, round(dist, 4), vec_id) AS result
+         |FROM top5
+         |UNION ALL SELECT '02_took_present', 'true'
+         |UNION ALL SELECT '03_unrequested_absent', 'true:true'
+         |UNION ALL SELECT '04_present_false_default', '0.0000:false'
+         |UNION ALL SELECT printf('05_bm25_%02d', rn - 1),
+         |       printf('doc=%d|score=%.4f|present=true', doc_id, round(score_exact, 4))
+         |FROM bmtop
+         |UNION ALL SELECT '06_groups', (
+         |  SELECT string_agg(name || ':' || CAST(cnt AS VARCHAR) || ':' || hits, ',' ORDER BY gi)
+         |  FROM per)
+         |ORDER BY step""".stripMargin
+    }) { (s, dir) =>
       import s.implicits._
       import org.json4s._
       import org.json4s.jackson.JsonMethods
@@ -1999,13 +2903,34 @@ object SparkEntryExt2 {
           s"${(grp \ "name").values}:${(grp \ "numberOfObjects").values}:$hits"
         }.mkString(","))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.10 classification wire decoder: the POST /v1/classifications params
     // JSON decodes with the reference's settings-before-validation order,
     // the type/k defaults, and the validator's first-error texts verbatim;
     // the decoded filters drive live plans
-    "q_wire_classify" -> ((s, dir) => {
+    // classification-wire arms: classifier.go settings parse + validation.go
+    // first-error texts verbatim, decoded defaults, live sourceWhere count
+    Gate("q_wire_classify",
+      """SELECT * FROM (VALUES
+        |  ('01_no_class', 'invalid classification: class must be set'),
+        |  ('02_unknown_class', 'invalid classification: class ''Ghost'' not found in schema'),
+        |  ('03_contextual_training_where', 'invalid classification: type is ''text2vec-contextionary-contextual'', but ''trainingSetWhere'' filter is set, for ''text2vec-contextionary-contextual'' there is no training data, instead limit possible target data directly through setting ''targetWhere'''),
+        |  ('04_knn_target_where', 'invalid classification: type is ''knn'', but ''targetWhere'' filter is set, for ''knn'' you cannot limit target data directly, instead limit training data through setting ''trainingSetWhere'''),
+        |  ('05_based_on_empty', 'invalid classification: basedOnProperties must have at least one property'),
+        |  ('06_based_on_multiple', 'invalid classification: only a single property in basedOnProperties supported at the moment, got [text title]'),
+        |  ('07_based_on_missing', 'invalid classification: basedOnProperties: property ''ghost'' does not exist'),
+        |  ('08_based_on_non_text', 'invalid classification: basedOnProperties: property ''n_chars'' must be of type ''text'''),
+        |  ('09_classify_empty', 'invalid classification: classifyProperties must have at least one property'),
+        |  ('10_classify_non_ref', 'invalid classification: classifyProperties: property ''lang'' must be of reference type (cref)'),
+        |  ('11_settings_not_object', 'parse knn specific settings: settings must be an object got json.Number'),
+        |  ('12_settings_k_not_number', 'parse knn specific settings: settings.k must be number, got bool'),
+        |  ('13_decoded_params', 'Document|knn|text|links|k=5'),
+        |  ('14_default_type_k', 'knn|k=3')
+        |) AS t(step, result)
+        |UNION ALL SELECT '15_live_source_where', CAST(
+        |  (SELECT count(*) FROM documents WHERE n_chars > 400) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val gg = g(s, dir)
       val W = graft.engine.WireDecoder
@@ -2056,14 +2981,36 @@ object SparkEntryExt2 {
         properties = Seq("doc_id"),
         pagination = Some(Pagination(limit = 1000000)))).count())
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 batch-references wire decoder: POST /v1/batch/references beacon
     // pairs decode through the reference's crossref grammar (long-form
     // source, short/long target, localhost-only peers, the parser's
     // segment-index quirks replayed bug-for-bug), then land through the
     // store's set-wise reference append with the partial-batch contract
-    "q_wire_refs_batch" -> ((s, dir) => {
+    // batch-references-wire arms: crossref grammar errors verbatim (incl.
+    // the parser's property-segment and "%dnd" quirks) + live decoded edges
+    // landing through the store append, counts SQL-derived
+    Gate("q_wire_refs_batch",
+      """WITH srcs AS (
+        |  SELECT count(*) AS cnt, min(doc_id) AS first_id FROM documents
+        |  WHERE doc_id < 500 AND doc_id % 100 = 0)
+        |SELECT * FROM (VALUES
+        |  ('01_empty_batch', 'length cannot be 0, need at least one reference for batching'),
+        |  ('02_short_source', 'invalid cref URI: must use long-form: path must be of format ''/<className>/<uuid>/<propertyName>'', but got ''/00000000-0000-4000-8000-000000000001'''),
+        |  ('03_source_bad_uuid', 'invalid cref URI: 2nd path segment must be uuid, but got ''links'''),
+        |  ('04_lowercase_class', 'className must start with an uppercase letter, but got doc'),
+        |  ('05_target_bad_uuid', 'invalid cref URI: 1nd path segment must be uuid, but got ''xyz'''),
+        |  ('06_network_source', 'source class must always point to the local peer, but got other-peer'),
+        |  ('07_network_target', 'importing network references in batch is not possible. Please perform a regular non-batch import for network references, got peer remote')
+        |) AS t(step, result)
+        |UNION ALL SELECT '08_decode_split',
+        |  CAST(cnt + 1 AS VARCHAR) || ':1:' || CAST(cnt + 1 AS VARCHAR) FROM srcs
+        |UNION ALL SELECT '09_applied_dropped', CAST(cnt AS VARCHAR) || ':1' FROM srcs
+        |UNION ALL SELECT '10_lowercase_fold',
+        |  printf('00000000-0000-4000-8000-%012d', first_id + 1) FROM srcs
+        |UNION ALL SELECT '11_live_linked_count', CAST(cnt AS VARCHAR) FROM srcs
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val W = graft.engine.WireDecoder
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -2125,14 +3072,35 @@ object SparkEntryExt2 {
       out += "11_live_linked_count" -> valueOr(
         st.read().filter(size(col("links")) > 0).count())
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 tenants wire decoder: the POST/PUT /v1/schema/{class}/tenants
     // JSON array decodes through the reference's validateTenants /
     // validateActivityStatuses rules (incl. the ACTIVE/HOT alias fold and
     // the create-vs-update FROZEN split), then drives the engine's tenant
     // registry and the read gates end-to-end
-    "q_wire_tenants" -> ((s, dir) => {
+    // tenants-wire arms: validateTenants/validateActivityStatuses texts
+    // verbatim (incl. the reference's leading-space quirk in the name
+    // message and the comma-joined multi-violation form) + live registry
+    // walks with SQL-derived page counts
+    Gate("q_wire_tenants",
+      """SELECT * FROM (VALUES
+        |  ('01_bad_name_indexed', 'tenant name at index 1:  ''bad name'' is not a valid tenant name. should only contain alphanumeric characters (a-z, A-Z, 0-9), underscore (_), and hyphen (-), with a length between 1 and 64 characters'),
+        |  ('02_empty_name', 'tenant name at index 0: empty tenant name'),
+        |  ('03_duplicate', 'tenant name en existed multiple times'),
+        |  ('04_over_100', 'maximum number of tenants allowed to be updated simultaneously is 100. Please reduce the number of tenants in your request and try again'),
+        |  ('05_unknown_status', 'invalid activity status ''LUKEWARM'' for tenant "t1"'),
+        |  ('06_frozen_on_create', 'invalid activity status ''FROZEN'' for tenant "t1"'),
+        |  ('07_joined_violations', 'invalid activity status ''X'' for tenant "a", invalid activity status '''' for tenant "b"'),
+        |  ('08_created_statuses', 'de=INACTIVE,en=ACTIVE,fr=ACTIVE'),
+        |  ('09_updated_statuses', 'de=INACTIVE,en=ACTIVE,fr=OFFLOADED'),
+        |  ('10_inactive_rejected', 'tenant not active: de'),
+        |  ('11_offloaded_rejected', 'tenant not active: fr'),
+        |  ('12_unknown_rejected', 'tenant not found: nl')
+        |) AS t(step, result)
+        |UNION ALL SELECT '13_live_active_page', CAST(
+        |  (SELECT count(*) FROM documents WHERE lang = 'en') AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val W = graft.engine.WireDecoder
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -2178,14 +3146,40 @@ object SparkEntryExt2 {
       out += "12_unknown_rejected" -> res(page("nl"))
       out += "13_live_active_page" -> valueOr(page("en"))
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    }),
+    },
 
     // §2.1 schema wire decoder: a weaviate models.Class JSON (POST
     // /v1/schema body) decodes into CollectionSchema with the reference's
     // normalization/migration/validation verbatim, and the decoded schema
     // REGISTERS AND SERVES — config flags (indexPropertyLength,
     // multiTenancy, field tokenization) must actually reach the engine
-    "q_wire_schema" -> ((s, dir) => {
+    // schema-wire arms: models.Class creation-time validation texts verbatim
+    // (usecases/schema/class.go, entities/schema/validation.go,
+    // data_types.go, shard_init_vector.go, stopwords/detector.go) + live
+    // counts served through DECODED schemas
+    Gate("q_wire_schema",
+      """SELECT * FROM (VALUES
+        |  ('01_class_name', '''1Bad'' is not a valid class name'),
+        |  ('02_property_name', '''has-dash'' is not a valid property name. Property names in Weaviate are restricted to valid GraphQL names, which must be “/[_A-Za-z][_0-9A-Za-z]{0,230}/”'),
+        |  ('03_reserved_property', '''_additional'' is a reserved property name'),
+        |  ('04_reserved_suffix', '''foo_searchable'' is not a valid property name: suffix ''_searchable'' is reserved for internal indices'),
+        |  ('05_duplicate_property', 'class "Doc": conflict for property "text": already in use or provided multiple times'),
+        |  ('06_unknown_datatype', 'property ''x'': invalid dataType: [txet]: unknown primitive data type ''txet'''),
+        |  ('07_ref_nonexistent', 'property ''r'': invalid dataType: [Ghost]: reference property to nonexistent class'),
+        |  ('08_tokenization_int', 'tokenization is not allowed for data type ''int'''),
+        |  ('09_searchable_non_text', '`indexSearchable` is allowed only for text/text[] data types. For other data types set false or leave empty'),
+        |  ('10_bad_distance', 'unrecognized distance metric "euclid",choose one of ["cosine", "dot", "l2-squared", "manhattan","hamming"]'),
+        |  ('11_bad_stopword_preset', 'preset "de" not known to stopword detector'),
+        |  ('12_legacy_plus_named', 'creating a class with both a class level vector index and named vectors is forbidden'),
+        |  ('13_gse_env_gate', 'the GSE tokenizer is not enabled; set ''ENABLE_TOKENIZER_GSE'' to ''true'' to enable')
+        |) AS t(step, result)
+        |UNION ALL SELECT '14_live_field_equal', CAST(
+        |  (SELECT count(*) FROM documents WHERE lang = 'en') AS VARCHAR)
+        |UNION ALL SELECT '15_live_len_filter', CAST(
+        |  (SELECT count(*) FROM documents WHERE length(text) > 350) AS VARCHAR)
+        |UNION ALL SELECT '16_live_tenant_scope', CAST(
+        |  (SELECT count(*) FROM documents WHERE lang = 'en') AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       val S = graft.sources.SchemaWire
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -2252,1785 +3246,7 @@ object SparkEntryExt2 {
         tenant = Some("en"),
         pagination = Some(Pagination(limit = 10000)))).count())
       out.toSeq.toDF("step", "result").orderBy(col("step"))
-    })
+    }
   )
 
-  def oracleSql: Map[String, String] = Map(
-
-    "q_hybrid_sub_rrf" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join"), source = SparkEntry.sqlDocVec)
-      s"""WITH $ctes,
-         |s0 AS (SELECT doc_id, score_exact AS s FROM scored WHERE terms_matched >= 1
-         |       ORDER BY score_exact DESC, doc_id ASC LIMIT 100),
-         |l0 AS (SELECT doc_id, s, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS r FROM s0),
-         |qa AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 7),
-         |d1 AS (SELECT d.doc_id, 1.0 - ${sqlCosine("e.embedding", "q.v")} / 2.0 AS s
-         |       FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qa q
-         |       ORDER BY s DESC, d.doc_id ASC LIMIT 100),
-         |l1 AS (SELECT doc_id, s, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS r FROM d1),
-         |qb AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 13),
-         |d2 AS (SELECT d.doc_id, 1.0 - ${sqlCosine("e.embedding", "q.v")} / 2.0 AS s
-         |       FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qb q
-         |       ORDER BY s DESC, d.doc_id ASC LIMIT 100),
-         |l2 AS (SELECT doc_id, s, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS r FROM d2),
-         |f AS (SELECT coalesce(l0.doc_id, l1.doc_id, l2.doc_id) AS doc_id,
-         |             coalesce(0.5 / (60 + l0.r), 0.0) + coalesce(0.3 / (60 + l1.r), 0.0)
-         |               + coalesce(0.2 / (60 + l2.r), 0.0) AS sc,
-         |             coalesce(l0.s, l1.s, l2.s) AS secondary
-         |      FROM l0 FULL OUTER JOIN l1 ON l0.doc_id = l1.doc_id
-         |              FULL OUTER JOIN l2 ON coalesce(l0.doc_id, l1.doc_id) = l2.doc_id)
-         |SELECT doc_id, round(sc, 4) AS score FROM f
-         |ORDER BY sc DESC, secondary DESC, doc_id ASC LIMIT 15""".stripMargin
-    },
-
-    "q_hybrid_group" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join", "stream"), source = SparkEntry.sqlDocVec, fieldPropMeans = Seq(1.0, 1.0))
-      s"""WITH $ctes,
-         |sparse0 AS (SELECT doc_id, score_exact FROM scored WHERE terms_matched >= 1
-         |            ORDER BY score_exact DESC, doc_id ASC LIMIT 100),
-         |sparse AS (SELECT doc_id, score_exact, CASE WHEN max(score_exact) OVER () = min(score_exact) OVER () THEN 1.0
-         |             ELSE (score_exact - min(score_exact) OVER ()) / (max(score_exact) OVER () - min(score_exact) OVER ()) END AS sn
-         |           FROM sparse0),
-         |${sqlQv(7)},
-         |densed AS (SELECT d.doc_id, 1.0 - ${sqlCosine("e.embedding", "q.v")} / 2.0 AS sc
-         |           FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q
-         |           ORDER BY sc DESC, d.doc_id ASC LIMIT 100),
-         |dense AS (SELECT doc_id, sc, CASE WHEN max(sc) OVER () = min(sc) OVER () THEN 1.0
-         |            ELSE (sc - min(sc) OVER ()) / (max(sc) OVER () - min(sc) OVER ()) END AS dn
-         |          FROM densed),
-         |fused AS (SELECT coalesce(s.doc_id, d.doc_id) AS doc_id,
-         |                 coalesce(s.sn * 0.4, 0.0) + coalesce(d.dn * 0.6, 0.0) AS score_f,
-         |                 coalesce(s.score_exact, d.sc) AS secondary
-         |          FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id),
-         |pool AS (SELECT f.doc_id, d.lang, f.score_f FROM fused f JOIN documents d USING (doc_id)
-         |         ORDER BY f.score_f DESC, f.secondary DESC, f.doc_id ASC LIMIT 12),
-         |ranked AS (SELECT doc_id, lang,
-         |             row_number() OVER (ORDER BY score_f DESC, doc_id ASC) AS rnk FROM pool),
-         |grouped AS (SELECT doc_id, lang, rnk,
-         |              row_number() OVER (PARTITION BY lang ORDER BY rnk ASC) AS group_hit_rank,
-         |              min(rnk) OVER (PARTITION BY lang) AS gmin FROM ranked),
-         |idx AS (SELECT *, dense_rank() OVER (ORDER BY gmin ASC) AS group_index FROM grouped)
-         |SELECT group_index, lang, group_hit_rank, doc_id FROM idx
-         |WHERE group_index <= 3 AND group_hit_rank <= 2
-         |ORDER BY group_index, group_hit_rank""".stripMargin
-    },
-
-    "q_sort_nulls" ->
-      """SELECT doc_id, CASE WHEN source = 'src13' THEN NULL ELSE source END AS maybe_src
-        |FROM documents
-        |ORDER BY maybe_src ASC NULLS FIRST, doc_id ASC LIMIT 80""".stripMargin,
-
-    "q_sort_meta" ->
-      """SELECT event_id, user_id FROM (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS ns FROM events
-        |  WHERE event_type = 'click'
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(9000005 AS BIGINT), CAST(11 AS BIGINT), 1706745600000000000),
-        |    (9000001, 12, 1706745600000000000),
-        |    (9000003, 13, 1706745600000000000)) v(event_id, user_id, ns))
-        |ORDER BY ns DESC, event_id ASC LIMIT 15""".stripMargin,
-
-    "q_sort_array" ->
-      """WITH l AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 10 = 0 THEN NULL
-        |    ELSE list_transform(range(1, CAST(doc_id % 3 AS INT) + 2),
-        |      i -> (doc_id * i * 37) % 500) END AS links
-        |  FROM documents)
-        |SELECT doc_id, len(links) AS n_links, links[1] AS link0
-        |FROM l ORDER BY links ASC NULLS FIRST, doc_id ASC LIMIT 80""".stripMargin,
-
-    "q_hybrid_relative" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join", "stream"), source = SparkEntry.sqlDocVec, fieldPropMeans = Seq(1.0, 1.0))
-      s"""WITH $ctes,
-         |sparse0 AS (SELECT doc_id, score_exact FROM scored WHERE terms_matched >= 1
-         |            ORDER BY score_exact DESC, doc_id ASC LIMIT 100),
-         |sparse AS (SELECT doc_id, score_exact, CASE WHEN max(score_exact) OVER () = min(score_exact) OVER () THEN 1.0
-         |             ELSE (score_exact - min(score_exact) OVER ()) / (max(score_exact) OVER () - min(score_exact) OVER ()) END AS sn
-         |           FROM sparse0),
-         |${sqlQv(7)},
-         |densed AS (SELECT d.doc_id, 1.0 - ${sqlCosine("e.embedding", "q.v")} / 2.0 AS sc
-         |           FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q
-         |           ORDER BY sc DESC, d.doc_id ASC LIMIT 100),
-         |dense AS (SELECT doc_id, sc, CASE WHEN max(sc) OVER () = min(sc) OVER () THEN 1.0
-         |            ELSE (sc - min(sc) OVER ()) / (max(sc) OVER () - min(sc) OVER ()) END AS dn
-         |          FROM densed),
-         |fused AS (SELECT coalesce(s.doc_id, d.doc_id) AS doc_id,
-         |                 coalesce(s.sn * 0.4, 0.0) + coalesce(d.dn * 0.6, 0.0) AS score_f,
-         |                 coalesce(s.score_exact, d.sc) AS secondary
-         |          FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id)
-         |SELECT doc_id, round(score_f, 4) AS score FROM fused
-         |ORDER BY score_f DESC, secondary DESC, doc_id ASC LIMIT 15""".stripMargin
-    },
-
-    "q_autocut" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join"))
-      s"""WITH $ctes,
-         |top AS (SELECT doc_id, score_exact FROM scored WHERE terms_matched >= 1
-         |        ORDER BY score_exact DESC, doc_id ASC LIMIT 30),
-         |t1 AS (SELECT doc_id, score_exact,
-         |         row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) - 1 AS i,
-         |         count(*) OVER () AS n,
-         |         first_value(score_exact) OVER (ORDER BY score_exact DESC, doc_id ASC
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS y0,
-         |         last_value(score_exact) OVER (ORDER BY score_exact DESC, doc_id ASC
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS yl
-         |       FROM top),
-         |t2 AS (SELECT *, CASE WHEN n <= 1 OR yl = y0 THEN 0.0
-         |         ELSE (score_exact - y0) / (yl - y0) - CAST(i AS DOUBLE) / (n - 1) END AS diff FROM t1),
-         |t3 AS (SELECT *, lag(diff, 1) OVER (ORDER BY i) AS dp, lag(diff, 2) OVER (ORDER BY i) AS dp2,
-         |              lead(diff, 1) OVER (ORDER BY i) AS dn FROM t2),
-         |t4 AS (SELECT *, CASE WHEN i = 0 THEN 0
-         |         WHEN i = n - 1 THEN CASE WHEN diff > dp AND diff > coalesce(dp2, dp) THEN 1 ELSE 0 END
-         |         ELSE CASE WHEN diff > dp AND diff > dn THEN 1 ELSE 0 END END AS ext FROM t3),
-         |t5 AS (SELECT *, sum(ext) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) AS extcum FROM t4),
-         |t6 AS (SELECT *, min(CASE WHEN ext = 1 AND extcum >= 1 THEN i END) OVER () AS cutat FROM t5)
-         |SELECT doc_id, round(score_exact, 4) AS score FROM t6
-         |WHERE cutat IS NULL OR i < cutat ORDER BY i""".stripMargin
-    },
-
-    "q_agg_objectlimit" ->
-      s"""WITH ${sqlQv(5)},
-         |d AS (SELECT e.vec_id,
-         |      CASE WHEN e.vec_id % 7 = 0 THEN NULL ELSE e.label END AS label,
-         |      ${sqlL2("e.embedding", "q.v")} AS dist
-         |      FROM embeddings e CROSS JOIN qv q),
-         |top AS (SELECT * FROM d ORDER BY dist ASC, vec_id ASC LIMIT 100)
-         |SELECT count(*) AS meta_count, count(label) AS label_count,
-         |       round(avg(label), 4) AS label_mean,
-         |       min(label) AS label_min, max(label) AS label_max
-         |FROM top""".stripMargin,
-
-    // same fused-RRF CTE as q_hybrid_rrf's oracle, aggregated over the top 15
-    "q_agg_hybrid" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join", "stream"), source = SparkEntry.sqlDocVec, fieldPropMeans = Seq(1.0, 1.0))
-      s"""WITH $ctes,
-         |sparse AS (
-         |  SELECT doc_id, score_exact, row_number() OVER (ORDER BY score_exact DESC, doc_id ASC) AS r
-         |  FROM (SELECT * FROM scored WHERE terms_matched >= 1 ORDER BY score_exact DESC, doc_id ASC LIMIT 100)),
-         |${sqlQv(7)},
-         |densed AS (
-         |  SELECT d.doc_id, ${sqlCosine("e.embedding", "q.v")} AS dist
-         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q),
-         |dense AS (
-         |  SELECT doc_id, 1.0 - dist / 2.0 AS sdense, row_number() OVER (ORDER BY dist ASC, doc_id ASC) AS r
-         |  FROM (SELECT * FROM densed ORDER BY dist ASC, doc_id ASC LIMIT 100)),
-         |fused AS (
-         |  SELECT coalesce(s.doc_id, de.doc_id) AS doc_id,
-         |         coalesce(0.5 / (60 + s.r), 0.0) + coalesce(0.5 / (60 + de.r), 0.0) AS score_exact,
-         |         coalesce(s.score_exact, de.sdense) AS secondary
-         |  FROM sparse s FULL OUTER JOIN dense de ON s.doc_id = de.doc_id),
-         |top AS (SELECT doc_id FROM fused
-         |        ORDER BY score_exact DESC, secondary DESC, doc_id ASC LIMIT 15)
-         |SELECT count(*) AS meta_count, count(d.n_chars) AS n_chars_count,
-         |       round(avg(d.n_chars), 4) AS n_chars_mean,
-         |       max(d.n_chars) AS n_chars_max
-         |FROM top t JOIN documents d ON t.doc_id = d.doc_id""".stripMargin
-    },
-
-    "q_agg_nearobject" ->
-      s"""WITH ${sqlQv(9)},
-         |d AS (SELECT e.vec_id, e.label, ${sqlL2("e.embedding", "q.v")} AS dist
-         |      FROM embeddings e CROSS JOIN qv q),
-         |top AS (SELECT * FROM d ORDER BY dist ASC, vec_id ASC LIMIT 80)
-         |SELECT count(*) AS meta_count, count(label) AS label_count,
-         |       CAST(sum(label) AS BIGINT) AS label_sum,
-         |       round(avg(label), 4) AS label_mean
-         |FROM top""".stripMargin,
-
-    "q_explore" ->
-      s"""WITH ${sqlQv(7)},
-         |legs AS (
-         |  SELECT 'DocVec' AS class_name, CAST(d.doc_id AS VARCHAR) AS beacon_id,
-         |         ${sqlCosine("e.embedding", "q.v")} AS d_exact
-         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q
-         |  UNION ALL
-         |  SELECT 'EmbRev', CAST(e.vec_id AS VARCHAR), ${sqlCosine("list_reverse(e.embedding)", "q.v")}
-         |  FROM embeddings e CROSS JOIN qv q)
-         |SELECT class_name, beacon_id, round(d_exact, 4) AS distance FROM legs
-         |ORDER BY d_exact ASC, class_name ASC, beacon_id ASC LIMIT 10""".stripMargin,
-
-    // inlined RESOLVED query vector (same movement math as q_neartext's
-    // oracle) fanned over both class legs with the merged-ranking cut
-    "q_explore_neartext" -> {
-      val embed = Fixtures.hashEmbedder(64)
-      var qv = Movements.centroid(Seq(embed("spark join stream")))
-      qv = Movements.moveTo(qv, Movements.centroid(Seq(embed("window batch"))), 0.6)
-      qv = Movements.moveAwayFrom(qv, Movements.centroid(Seq(embed("error slow"))), 0.4)
-      val vlit = qv.map(f => s"CAST($f AS FLOAT)").mkString("[", ", ", "]")
-      s"""WITH qv AS (SELECT $vlit AS v),
-         |legs AS (
-         |  SELECT 'DocVec' AS class_name, CAST(d.doc_id AS VARCHAR) AS beacon_id,
-         |         ${sqlCosine("e.embedding", "q.v")} AS d_exact
-         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id CROSS JOIN qv q
-         |  UNION ALL
-         |  SELECT 'EmbRev', CAST(e.vec_id AS VARCHAR), ${sqlCosine("list_reverse(e.embedding)", "q.v")}
-         |  FROM embeddings e CROSS JOIN qv q)
-         |SELECT class_name, beacon_id, round(d_exact, 4) AS distance FROM legs
-         |ORDER BY d_exact ASC, class_name ASC, beacon_id ASC LIMIT 12""".stripMargin
-    },
-
-    "q_boost" -> {
-      val (ctes, _) = sqlBm25(Seq("spark", "join"))
-      s"""WITH $ctes,
-         |top AS (SELECT doc_id, score_exact FROM scored WHERE terms_matched >= 1
-         |        ORDER BY score_exact DESC, doc_id ASC LIMIT 50),
-         |j AS (SELECT t.doc_id, t.score_exact, d.lang, d.n_chars FROM top t JOIN documents d USING (doc_id)),
-         |n1 AS (SELECT *,
-         |  CASE WHEN max(score_exact) OVER () = min(score_exact) OVER () THEN 1.0
-         |    ELSE (score_exact - min(score_exact) OVER ()) / (max(score_exact) OVER () - min(score_exact) OVER ()) END AS pnorm,
-         |  CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END * 0.5 AS fb,
-         |  ln(1 + greatest(CAST(n_chars AS DOUBLE), 0)) AS lv FROM j),
-         |n2 AS (SELECT *,
-         |  CASE WHEN max(lv) OVER () = min(lv) OVER () THEN 1.0
-         |    ELSE (lv - min(lv) OVER ()) / (max(lv) OVER () - min(lv) OVER ()) END * 1.0 AS pvb FROM n1)
-         |SELECT doc_id, round(pnorm * 0.7 + (fb + pvb) * 0.3, 4) AS boosted FROM n2
-         |ORDER BY (pnorm * 0.7 + (fb + pvb) * 0.3) DESC, doc_id ASC""".stripMargin
-    },
-
-    "q_dedup_exact" ->
-      """SELECT user_id, event_type, min(event_id) AS canonical_id, count(*) AS dup_count
-        |FROM events GROUP BY user_id, event_type ORDER BY user_id, event_type""".stripMargin,
-
-    // true qualifying-pair set on the bounded bed: string-shingle Jaccard in
-    // list math (same shingle semantics as shingleHashes: <3 tokens → one
-    // whole-sequence shingle; empty-token docs excluded like the engine's
-    // size>0 filter)
-    "q_dedup_minhash" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < 500),
-        |synth AS (
-        |  SELECT CAST(9000001 AS BIGINT) AS doc_id,
-        |         array_to_string(list_transform(range(1, 101), i -> 'qw' || i), ' ') AS text
-        |  UNION ALL SELECT 9000002,
-        |         array_to_string(list_transform(range(1, 85), i -> 'qw' || i), ' ') || ' ' ||
-        |         array_to_string(list_transform(range(1, 17), i -> 'qu' || i), ' ')
-        |  UNION ALL SELECT 9000003,
-        |         array_to_string(list_transform(range(1, 101), i -> 'qv' || i), ' ')
-        |  UNION ALL SELECT 9000004,
-        |         array_to_string(list_transform(range(1, 80), i -> 'qv' || i), ' ') || ' ' ||
-        |         array_to_string(list_transform(range(1, 22), i -> 'qs' || i), ' ')),
-        |bed AS (SELECT doc_id, text FROM base
-        |        UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM base WHERE doc_id % 25 = 0
-        |        UNION ALL SELECT doc_id, text FROM synth),
-        |t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |sh AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(jac, 4) AS jaccard FROM pairs
-        |WHERE jac >= 0.7 ORDER BY id_a, id_b""".stripMargin,
-
-    "q_pipeline_curate" ->
-      """WITH t AS (SELECT doc_id, lang, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |g AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 3),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |b AS (SELECT list_distinct(flatten(list(s))) AS bs FROM g WHERE doc_id % 97 = 5),
-        |contaminated AS (SELECT doc_id FROM g CROSS JOIN b WHERE len(list_intersect(s, bs)) > 0),
-        |canonical AS (SELECT min(doc_id) AS doc_id FROM t
-        |  GROUP BY md5(array_to_string(toks, ' '))),
-        |clean AS (SELECT t.doc_id, t.text, t.toks FROM t
-        |  WHERE t.doc_id NOT IN (SELECT doc_id FROM contaminated)
-        |    AND t.doc_id IN (SELECT doc_id FROM canonical)),
-        |lid AS (SELECT doc_id, text, toks,
-        |  CAST(list_contains(toks,'der') AS INT) + CAST(list_contains(toks,'die') AS INT) + CAST(list_contains(toks,'und') AS INT) + CAST(list_contains(toks,'das') AS INT) + CAST(list_contains(toks,'ist') AS INT) + CAST(list_contains(toks,'nicht') AS INT) + CAST(list_contains(toks,'ein') AS INT) + CAST(list_contains(toks,'mit') AS INT) AS h_de,
-        |  CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'and') AS INT) + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT) + CAST(list_contains(toks,'is') AS INT) + CAST(list_contains(toks,'in') AS INT) + CAST(list_contains(toks,'that') AS INT) AS h_en,
-        |  CAST(list_contains(toks,'el') AS INT) + CAST(list_contains(toks,'la') AS INT) + CAST(list_contains(toks,'de') AS INT) + CAST(list_contains(toks,'los') AS INT) + CAST(list_contains(toks,'las') AS INT) + CAST(list_contains(toks,'que') AS INT) + CAST(list_contains(toks,'y') AS INT) + CAST(list_contains(toks,'es') AS INT) AS h_es,
-        |  CAST(list_contains(toks,'le') AS INT) + CAST(list_contains(toks,'la') AS INT) + CAST(list_contains(toks,'les') AS INT) + CAST(list_contains(toks,'et') AS INT) + CAST(list_contains(toks,'des') AS INT) + CAST(list_contains(toks,'que') AS INT) + CAST(list_contains(toks,'est') AS INT) + CAST(list_contains(toks,'une') AS INT) AS h_fr
-        |  FROM clean),
-        |scored AS (SELECT doc_id,
-        |  CASE
-        |    WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-        |    WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-        |    WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-        |    ELSE 'fr' END AS lang_pred,
-        |  (least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-        |   + greatest(1.0 - (CASE WHEN len(regexp_replace(text, '\s+', '', 'g')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_replace(text, '[\p{L}\p{N}\s]+', '', 'g')) AS DOUBLE)
-        |          / len(regexp_replace(text, '\s+', '', 'g')) END) * 4.0, 0.0)
-        |   + least((CASE WHEN len(toks) = 0 THEN 0.0
-        |       ELSE CAST(len(list_filter(toks, x -> list_contains(['a','an','and','are','as','at','be','but','by','for','if','in','into','is','it','no','not','of','on','or','such','that','the','their','then','there','these','they','this','to','was','will','with'], x))) AS DOUBLE) / len(toks) END) * 10.0, 1.0)) / 3.0 AS qx
-        |  FROM lid),
-        |r AS (SELECT doc_id, lang_pred, qx,
-        |  row_number() OVER (PARTITION BY lang_pred ORDER BY qx DESC, doc_id) AS rk FROM scored)
-        |SELECT lang_pred, doc_id, CAST(rk AS BIGINT) AS sample_rank, round(qx, 4) AS quality
-        |FROM r WHERE rk <= 3 ORDER BY lang_pred, sample_rank""".stripMargin,
-
-    "q_decontaminate" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |g AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 3),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |b AS (SELECT list_distinct(flatten(list(s))) AS bs FROM g WHERE doc_id % 97 = 5),
-        |h AS (SELECT doc_id, len(list_intersect(s, bs)) AS o FROM g CROSS JOIN b)
-        |SELECT doc_id, CAST(o AS BIGINT) AS overlap_grams FROM h
-        |WHERE o > 0 ORDER BY doc_id""".stripMargin,
-
-    "q_curate_sample" ->
-      """WITH t AS (SELECT doc_id, lang, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |q AS (SELECT doc_id, lang,
-        |  (least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-        |   + greatest(1.0 - (CASE WHEN len(regexp_replace(text, '\s+', '', 'g')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_replace(text, '[\p{L}\p{N}\s]+', '', 'g')) AS DOUBLE)
-        |          / len(regexp_replace(text, '\s+', '', 'g')) END) * 4.0, 0.0)
-        |   + least((CASE WHEN len(toks) = 0 THEN 0.0
-        |       ELSE CAST(len(list_filter(toks, x -> list_contains(['a','an','and','are','as','at','be','but','by','for','if','in','into','is','it','no','not','of','on','or','such','that','the','their','then','there','these','they','this','to','was','will','with'], x))) AS DOUBLE) / len(toks) END) * 10.0, 1.0)) / 3.0 AS qx
-        |  FROM t),
-        |r AS (SELECT doc_id, lang, qx,
-        |  row_number() OVER (PARTITION BY lang ORDER BY qx DESC, doc_id) AS rk FROM q)
-        |SELECT lang, doc_id, CAST(rk AS BIGINT) AS sample_rank, round(qx, 4) AS quality
-        |FROM r WHERE rk <= 5 ORDER BY lang, sample_rank""".stripMargin,
-
-    "q_curate_pack" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)) AS BIGINT) AS nt
-        |  FROM documents),
-        |c AS (SELECT doc_id, source,
-        |  CAST(sum(nt) OVER (PARTITION BY source ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - nt AS BIGINT) AS off
-        |  FROM t)
-        |SELECT source, doc_id, off AS bin_offset,
-        |  CAST(floor(CAST(off AS DOUBLE) / 256.0) AS BIGINT) AS bin
-        |FROM c ORDER BY source, doc_id""".stripMargin,
-
-    "q_dedup_cluster" ->
-      """WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id < 500),
-        |bed AS (SELECT doc_id, text FROM base
-        |        UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM base WHERE doc_id % 25 = 0
-        |        UNION ALL SELECT p.doc_id, p.txt FROM (
-        |          SELECT 2000001 AS doc_id,
-        |            array_to_string(list_transform(range(1,84), i -> 'qcx'||i), ' ') || ' ' ||
-        |            array_to_string(list_transform(range(1,18), i -> 'qca'||i), ' ') AS txt
-        |          UNION ALL SELECT 2000002,
-        |            array_to_string(list_transform(range(1,84), i -> 'qcx'||i), ' ') || ' ' ||
-        |            array_to_string(list_transform(range(1,18), i -> 'qcy'||i), ' ')
-        |          UNION ALL SELECT 2000003,
-        |            array_to_string(list_transform(range(1,18), i -> 'qcc'||i), ' ') || ' ' ||
-        |            array_to_string(list_transform(range(18,84), i -> 'qcx'||i), ' ') || ' ' ||
-        |            array_to_string(list_transform(range(1,18), i -> 'qcy'||i), ' ')) p),
-        |t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |sh AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.7),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION SELECT id_b AS src, id_a AS dst FROM pairs),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM sym
-        |  UNION
-        |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-        |comp AS (
-        |  SELECT src AS id, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src)
-        |SELECT id, cluster_id FROM comp ORDER BY id""".stripMargin,
-
-    // exact windowed all-pairs restricted to pairs touching a new doc
-    "q_dedup_incremental" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < 500),
-        |bed AS (SELECT doc_id, text, false AS nw FROM base
-        |        UNION ALL SELECT doc_id + 1000000 AS doc_id, text, true AS nw
-        |                  FROM base WHERE doc_id % 25 = 0
-        |        UNION ALL SELECT doc_id + 2000000 AS doc_id, text, true AS nw
-        |                  FROM base WHERE doc_id % 50 = 0),
-        |t AS (SELECT doc_id, nw, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |sh AS (SELECT doc_id, nw,
-        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE a.nw OR b.nw)
-        |SELECT id_a, id_b, round(jac, 4) AS jaccard FROM pairs
-        |WHERE jac >= 0.7 ORDER BY id_a, id_b""".stripMargin,
-
-    // exact membership semantics: dup_of = smallest corpus id sharing the
-    // normalized (lowercased, whitespace-collapsed) content — the Bloom
-    // sketch is a pure pre-filter, so the oracle never models it
-    "q_dedup_bloom" ->
-      """WITH corpus AS (
-        |  SELECT doc_id AS cid,
-        |         lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ckey
-        |  FROM documents WHERE doc_id < 400),
-        |inc AS (
-        |  SELECT doc_id AS id,
-        |         lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS key
-        |  FROM documents WHERE doc_id >= 400
-        |  UNION ALL
-        |  SELECT 9000001, lower(regexp_replace(trim(
-        |           upper(replace(text, ' ', '  '))), '\s+', ' ', 'g'))
-        |  FROM documents WHERE doc_id = 100
-        |  UNION ALL
-        |  SELECT 9000002, lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |  FROM documents WHERE doc_id = 7
-        |  UNION ALL
-        |  SELECT 9000003, lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |  FROM documents WHERE doc_id = 450),
-        |owners AS (SELECT ckey, min(cid) AS dup_of FROM corpus GROUP BY ckey)
-        |SELECT id, dup_of IS NOT NULL AS is_duplicate, dup_of
-        |FROM inc LEFT JOIN owners ON key = ckey
-        |ORDER BY id""".stripMargin,
-
-    // same transitive closure as q_dedup_cluster, then canonical selection:
-    // rank 1 by (n_chars desc, id asc) per cluster is kept; singletons keep
-    "q_dedup_keep" ->
-      """WITH RECURSIVE base AS (SELECT doc_id, text, n_chars FROM documents WHERE doc_id < 500),
-        |px AS (SELECT
-        |  array_to_string(list_transform(range(1, 84), i -> 'qkx' || i), ' ') AS x,
-        |  array_to_string(list_transform(range(18, 84), i -> 'qkx' || i), ' ') AS x2,
-        |  array_to_string(list_transform(range(1, 18), i -> 'qky' || i), ' ') AS y,
-        |  array_to_string(list_transform(range(1, 18), i -> 'qka' || i), ' ') AS a,
-        |  array_to_string(list_transform(range(1, 18), i -> 'qkc' || i), ' ') AS c),
-        |bed AS (SELECT doc_id, text, n_chars FROM base
-        |        UNION ALL SELECT doc_id + 1000000 AS doc_id, text, n_chars FROM base WHERE doc_id % 25 = 0
-        |        UNION ALL SELECT CAST(2000001 AS BIGINT), x || ' ' || a, 9000 FROM px
-        |        UNION ALL SELECT CAST(2000002 AS BIGINT), x || ' ' || y, 8000 FROM px
-        |        UNION ALL SELECT CAST(2000003 AS BIGINT), c || ' ' || x2 || ' ' || y, 7000 FROM px),
-        |t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |sh AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.7),
-        |sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |        UNION SELECT id_b AS src, id_a AS dst FROM pairs),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM sym
-        |  UNION
-        |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-        |comp AS (
-        |  SELECT src AS id, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src),
-        |lab AS (SELECT b.doc_id AS id, coalesce(c.cluster_id, b.doc_id) AS cluster_id,
-        |               b.n_chars AS quality
-        |        FROM bed b LEFT JOIN comp c ON c.id = b.doc_id),
-        |r AS (SELECT id, cluster_id, quality, row_number() OVER (
-        |        PARTITION BY cluster_id ORDER BY quality DESC, id ASC) AS rn
-        |      FROM lab)
-        |SELECT id, cluster_id, CAST(quality AS BIGINT) AS quality, rn = 1 AS kept
-        |FROM r ORDER BY id""".stripMargin,
-
-    // every size-64 window advancing by 48, tail windows only when they add
-    // a new token; chunk text compared via md5 of the space-joined slice
-    "q_curate_chunk" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |b AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-        |s AS (SELECT doc_id, toks, n, unnest(range(0, n, 48)) AS st FROM b),
-        |f AS (SELECT doc_id, toks, n, st,
-        |        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY st) - 1 AS INTEGER) AS chunk_index
-        |      FROM s WHERE st = 0 OR st < n - 16)
-        |SELECT doc_id, chunk_index, CAST(st AS BIGINT) AS start_token,
-        |  CAST(least(64, n - st) AS BIGINT) AS n_tokens,
-        |  md5(array_to_string(list_slice(toks, st + 1, st + 64), ' ')) AS chunk_md5
-        |FROM f ORDER BY doc_id, chunk_index""".stripMargin,
-
-    // the UniMax recurrence as a recursive CTE over languages ordered by
-    // (count, name): rn-th language takes min(n*cap, remaining/(tot-rn+1))
-    "q_curate_unimax" ->
-      """WITH RECURSIVE o AS (
-        |  SELECT lang, n, row_number() OVER (ORDER BY n, lang) AS rn,
-        |         count(*) OVER () AS tot
-        |  FROM (SELECT lang, count(*) AS n FROM documents GROUP BY lang)),
-        |a(rn, lang, n, quota, rem) AS (
-        |  SELECT rn, lang, n,
-        |         least(n * 2.0, 700.0 / tot),
-        |         700.0 - least(n * 2.0, 700.0 / tot)
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.rn, o.lang, o.n,
-        |         least(o.n * 2.0, a.rem / (o.tot - a.rn)),
-        |         a.rem - least(o.n * 2.0, a.rem / (o.tot - a.rn))
-        |  FROM a JOIN o ON o.rn = a.rn + 1)
-        |SELECT lang, CAST(n AS BIGINT) AS n_docs, round(quota, 4) AS quota,
-        |       round(quota / n, 6) AS epochs
-        |FROM a ORDER BY lang""".stripMargin,
-
-    // tf / df / N and the sklearn-smoothed weight in identical double math;
-    // rank window (weight desc, term asc) cut at 3
-    "q_text_tfidf" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |           FROM documents WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-        |tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-        |dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM t),
-        |w AS (SELECT tf.doc_id, tf.term, tf.tf,
-        |        tf.tf * (ln((1.0 + n.n) / (1.0 + dfr.df)) + 1.0) AS weight
-        |      FROM tf JOIN dfr USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tf, weight,
-        |        CAST(row_number() OVER (PARTITION BY doc_id
-        |          ORDER BY weight DESC, term ASC) AS INTEGER) AS term_rank
-        |      FROM w)
-        |SELECT doc_id, term, tf, round(weight, 4) AS weight, term_rank
-        |FROM r WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin,
-
-    // planted-pair oracle: exact copies have identical simhash (hamming 0)
-    // and share every pigeonhole chunk, so detection is certain; the bed has
-    // no natural hamming ≤ 3 pair (verified locally at both sf)
-    "q_dedup_simhash" ->
-      """SELECT doc_id AS id_a, doc_id + 1000000 AS id_b, CAST(0 AS BIGINT) AS hamming
-        |FROM documents
-        |WHERE doc_id % 51 = 3 AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // exact oracle: same-source pairs with shingle-set Jaccard ≥ 0.5 (the
-    // engine's bucketed candidate space is identical by construction)
-    "q_dedup_jaccard" ->
-      """WITH docs_p AS (
-        |  SELECT doc_id, source, text FROM documents
-        |  UNION ALL SELECT p.doc_id, 'src1', p.txt FROM (
-        |    SELECT 8000001 AS doc_id,
-        |      array_to_string(list_transform(range(1,91), i -> 'qjx'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,11), i -> 'qja'||i), ' ') AS txt
-        |    UNION ALL SELECT 8000002,
-        |      array_to_string(list_transform(range(1,91), i -> 'qjx'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,11), i -> 'qjb'||i), ' ')
-        |    UNION ALL SELECT 8000003,
-        |      array_to_string(list_transform(range(1,89), i -> 'qjy'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,13), i -> 'qjc'||i), ' ')
-        |    UNION ALL SELECT 8000004,
-        |      array_to_string(list_transform(range(1,89), i -> 'qjy'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,13), i -> 'qjd'||i), ' ')) p),
-        |t AS (
-        |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM docs_p),
-        |sh AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |    ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-        |  FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, round(jac, 4) AS jaccard FROM pairs
-        |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-
-    // span-coverage model restated in SQL: same whitespace tokens, same
-    // n-gram join (on the gram STRING — Spark joins on its xxhash64, an
-    // 8-byte shuffle key; a 64-bit collision would be the only divergence),
-    // same n + Σ min(n, gap) interval-union length
-    "q_dedup_substring" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
-        |  FROM documents),
-        |base AS (SELECT doc_id, t, len(t) AS ntok FROM toks),
-        |grams AS (
-        |  SELECT doc_id, ntok, i - 1 AS pos,
-        |         array_to_string(list_slice(t, i, i + 7), ' ') AS g
-        |  FROM base, UNNEST(range(1, ntok - 8 + 2)) AS u(i)
-        |  WHERE ntok >= 8),
-        |dup AS (SELECT g FROM grams GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-        |agg AS (
-        |  SELECT doc_id, ntok, count(*) AS dup_ngrams, list_sort(list(pos)) AS ps
-        |  FROM grams WHERE g IN (SELECT g FROM dup)
-        |  GROUP BY doc_id, ntok)
-        |SELECT doc_id, CAST(dup_ngrams AS BIGINT) AS dup_ngrams,
-        |  round((8 + coalesce(list_sum(list_transform(range(2, len(ps) + 1),
-        |      i -> least(ps[i] - ps[i-1], 8))), 0)) / CAST(ntok AS DOUBLE), 4) AS dup_fraction
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // same detection model as q_dedup_substring, then position-level
-    // excision: covered (doc, pos) pairs unioned, surviving tokens
-    // re-assembled in position order
-    "q_dedup_substr_clean" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
-        |  FROM documents),
-        |base AS (SELECT doc_id, t, len(t) AS ntok FROM toks),
-        |grams AS (
-        |  SELECT doc_id, i - 1 AS pos, array_to_string(list_slice(t, i, i + 7), ' ') AS g
-        |  FROM base, UNNEST(range(1, ntok - 8 + 2)) AS u(i)
-        |  WHERE ntok >= 8),
-        |dup AS (SELECT g FROM grams GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-        |cov AS (SELECT DISTINCT doc_id, pos + k AS cp
-        |  FROM grams, UNNEST(range(0, 8)) AS kk(k) WHERE g IN (SELECT g FROM dup)),
-        |tokpos AS (SELECT doc_id, i - 1 AS pos, t[i] AS w
-        |  FROM base, UNNEST(range(1, ntok + 1)) AS u(i)),
-        |kept AS (SELECT tp.doc_id, tp.pos, tp.w FROM tokpos tp
-        |  LEFT JOIN cov c ON tp.doc_id = c.doc_id AND tp.pos = c.cp
-        |  WHERE c.cp IS NULL),
-        |agg AS (SELECT doc_id, count(*) AS kept_tokens,
-        |    string_agg(w, ' ' ORDER BY pos) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT b.doc_id, coalesce(a.clean_text, '') AS clean_text,
-        |  CAST(coalesce(a.kept_tokens, 0) AS BIGINT) AS kept_tokens,
-        |  CAST(b.ntok - coalesce(a.kept_tokens, 0) AS BIGINT) AS removed_tokens
-        |FROM base b LEFT JOIN agg a USING (doc_id)
-        |WHERE b.ntok - coalesce(a.kept_tokens, 0) > 0
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // CDC replay: context via list slices (≡ the engine's lag window with
-    // concat_ws null-skip at doc heads), md5-uniform cutpoints mod 16,
-    // chunk index = boundaries strictly before the position, chunk hash =
-    // md5 of the position-ordered tokens
-    "q_dedup_cdc" ->
-      """WITH bed AS (SELECT doc_id, CASE WHEN doc_id % 25 = 0 THEN text ||
-        |    ' alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike november oscar papa quebec romeo sierra tango uniform victor whiskey xray'
-        |    ELSE text END AS t FROM documents),
-        |tok AS (SELECT doc_id, list_filter(regexp_split_to_array(t, '\s+'), x -> x <> '') AS toks FROM bed),
-        |pos AS (SELECT doc_id, i, toks[i] AS w,
-        |    CASE WHEN ('0x' || substr(md5(array_to_string(toks[greatest(1, i-3):i], ' ')), 1, 8))::UBIGINT % 16 = 0
-        |      THEN 1 ELSE 0 END AS bd
-        |  FROM tok, unnest(range(1, len(toks)+1)) AS u(i)),
-        |c AS (SELECT doc_id, i, w, coalesce(sum(bd) OVER (PARTITION BY doc_id ORDER BY i
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk FROM pos),
-        |ch AS (SELECT doc_id, chunk, count(*) AS clen,
-        |    md5(string_agg(w, ' ' ORDER BY i)) AS chash FROM c GROUP BY 1, 2),
-        |dup AS (SELECT chash FROM ch GROUP BY chash HAVING count(DISTINCT doc_id) >= 2),
-        |agg AS (SELECT doc_id, count(*) AS dup_chunks, sum(clen) AS dup_toks
-        |  FROM ch WHERE chash IN (SELECT chash FROM dup) GROUP BY 1),
-        |n AS (SELECT doc_id, count(*) AS n_chunks FROM ch GROUP BY 1),
-        |tot AS (SELECT doc_id, len(toks) AS ntok FROM tok)
-        |SELECT t.doc_id, CAST(n.n_chunks AS BIGINT) AS n_chunks,
-        |  CAST(a.dup_chunks AS BIGINT) AS dup_chunks,
-        |  round(CAST(a.dup_toks AS DOUBLE) / t.ntok, 4) AS dup_token_frac
-        |FROM tot t JOIN n USING (doc_id) JOIN agg a USING (doc_id)
-        |WHERE a.dup_chunks > 0 ORDER BY t.doc_id""".stripMargin,
-
-    // planted-pair oracle (same argument; copies are bit-identical → dist 0,
-    // natural pairs all ≥ 0.3 cosine distance)
-    // exact copies + the one near-threshold plant pair (cos 0.951, dist
-    // computed in the engine's own double-over-float32 cosine); the 0.949
-    // pair and every natural pair (min dist 0.487) stay absent
-    "q_dedup_embed" ->
-      s"""WITH pl AS (
-         |  SELECT 8000001 AS id, list_transform(range(1,65),
-         |    i -> CASE WHEN i = 1 THEN CAST(1.0 AS FLOAT) ELSE CAST(0.0 AS FLOAT) END) AS v
-         |  UNION ALL SELECT 8000002, list_transform(range(1,65),
-         |    i -> CASE WHEN i = 1 THEN CAST(0.951 AS FLOAT)
-         |          WHEN i = 2 THEN CAST(sqrt(1 - 0.951*0.951) AS FLOAT)
-         |          ELSE CAST(0.0 AS FLOAT) END)),
-         |pd AS (SELECT ${SparkEntry.sqlCosine("a.v", "b.v")} AS d
-         |       FROM pl a JOIN pl b ON a.id = 8000001 AND b.id = 8000002)
-         |SELECT * FROM (
-         |  SELECT vec_id AS id_a, vec_id + 1000000 AS id_b, 0.0 AS dist
-         |  FROM embeddings WHERE vec_id % 50 = 0
-         |  UNION ALL SELECT 8000001, 8000002, round(abs(d), 4) FROM pd)
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // full SemDeDup replay: seed assignment (argmin L2 over the 8 smallest-id
-    // rows, lower seed index on ties), centroid similarity, and the
-    // keep-lowest-centroid-similarity rule — double math throughout, matching
-    // the codegen'd kernels bit-for-bit
-    // cluster-balance replay: same seed/assignment CTEs as q_dedup_semantic,
-    // then the per-cluster representative-first quota window
-    "q_curate_clusterbalance" ->
-      s"""WITH bed AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cidx, v AS sv
-         |  FROM bed ORDER BY id ASC LIMIT 8),
-         |d AS (SELECT b.id, b.v, s.cidx, s.sv, ${sqlL2("b.v", "s.sv")} AS dist
-         |      FROM bed b CROSS JOIN seeds s),
-         |a0 AS (SELECT id, v, cidx, sv,
-         |         row_number() OVER (PARTITION BY id ORDER BY dist ASC, cidx ASC) AS rn
-         |       FROM d),
-         |asg AS (SELECT id, cidx AS cluster, (1.0 - ${sqlCosine("v", "sv")}) AS csim
-         |        FROM a0 WHERE rn = 1),
-         |ranked AS (SELECT id, cluster, csim,
-         |    row_number() OVER (PARTITION BY cluster ORDER BY csim DESC, id ASC) AS rank
-         |  FROM asg)
-         |SELECT id AS vec_id, cluster, round(csim, 4) AS cent_sim,
-         |       CAST(rank AS BIGINT) AS sample_rank
-         |FROM ranked WHERE rank <= 10 ORDER BY vec_id""".stripMargin,
-
-    "q_dedup_semantic" ->
-      s"""WITH bed AS (
-         |  SELECT vec_id AS id, embedding AS v FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS id, embedding AS v FROM embeddings WHERE vec_id % 50 = 0
-         |  UNION ALL SELECT p.id, p.v FROM (
-         |    SELECT 8000001 AS id, list_transform(range(1,65),
-         |      i -> CASE WHEN i = 1 THEN CAST(1.0 AS FLOAT) ELSE CAST(0.0 AS FLOAT) END) AS v
-         |    UNION ALL SELECT 8000002, list_transform(range(1,65),
-         |      i -> CASE WHEN i = 1 THEN CAST(0.951 AS FLOAT)
-         |            WHEN i = 2 THEN CAST(sqrt(1 - 0.951*0.951) AS FLOAT)
-         |            ELSE CAST(0.0 AS FLOAT) END)
-         |    UNION ALL SELECT 8000003, list_transform(range(1,65),
-         |      i -> CASE WHEN i = 3 THEN CAST(1.0 AS FLOAT) ELSE CAST(0.0 AS FLOAT) END)
-         |    UNION ALL SELECT 8000004, list_transform(range(1,65),
-         |      i -> CASE WHEN i = 3 THEN CAST(0.949 AS FLOAT)
-         |            WHEN i = 4 THEN CAST(sqrt(1 - 0.949*0.949) AS FLOAT)
-         |            ELSE CAST(0.0 AS FLOAT) END)) p),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cidx, v AS sv
-         |  FROM bed ORDER BY id ASC LIMIT 8),
-         |d AS (SELECT b.id, b.v, s.cidx, s.sv, ${sqlL2("b.v", "s.sv")} AS dist
-         |      FROM bed b CROSS JOIN seeds s),
-         |a0 AS (SELECT id, v, cidx, sv,
-         |         row_number() OVER (PARTITION BY id ORDER BY dist ASC, cidx ASC) AS rn
-         |       FROM d),
-         |asg AS (SELECT id, v, cidx AS cluster, (1.0 - ${sqlCosine("v", "sv")}) AS csim
-         |        FROM a0 WHERE rn = 1),
-         |dropped AS (
-         |  SELECT DISTINCT a.id
-         |  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.id <> b.id
-         |   AND (1.0 - ${sqlCosine("a.v", "b.v")}) > 0.95
-         |   AND (b.csim < a.csim OR (b.csim = a.csim AND b.id < a.id)))
-         |SELECT a.id AS vec_id, a.cluster AS cluster, round(a.csim, 4) AS cent_sim,
-         |       (d.id IS NULL) AS kept
-         |FROM asg a LEFT JOIN dropped d ON a.id = d.id
-         |ORDER BY vec_id""".stripMargin,
-
-    "q_text_stats" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)) AS BIGINT) AS ws_tokens,
-        |  CAST(list_sum(list_transform(
-        |    regexp_extract_all(lower(text), '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]'),
-        |    p -> CAST(ceil(len(p) / 4.0) AS BIGINT))) AS BIGINT) AS bpe_tokens,
-        |  round(CASE WHEN len(regexp_replace(text, '\s+', '', 'g')) = 0 THEN 0.0
-        |    ELSE CAST(len(regexp_replace(text, '[\p{L}\p{N}\s]+', '', 'g')) AS DOUBLE)
-        |       / len(regexp_replace(text, '\s+', '', 'g')) END, 4) AS punct_ratio,
-        |  round(CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE CAST(len(list_filter(toks, x -> list_contains(['a','an','and','are','as','at','be','but','by','for','if','in','into','is','it','no','not','of','on','or','such','that','the','their','then','there','these','they','this','to','was','will','with'], x))) AS DOUBLE) / len(toks) END, 4) AS stopword_ratio,
-        |  round(CASE WHEN len(toks) = 0 THEN 0.0
-        |    ELSE CAST(list_sum(list_transform(toks, t -> len(t))) AS DOUBLE) / len(toks) END, 4) AS mean_token_len,
-        |  round((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-        |       + greatest(1.0 - (CASE WHEN len(regexp_replace(text, '\s+', '', 'g')) = 0 THEN 0.0
-        |           ELSE CAST(len(regexp_replace(text, '[\p{L}\p{N}\s]+', '', 'g')) AS DOUBLE)
-        |              / len(regexp_replace(text, '\s+', '', 'g')) END) * 4.0, 0.0)
-        |       + least((CASE WHEN len(toks) = 0 THEN 0.0
-        |           ELSE CAST(len(list_filter(toks, x -> list_contains(['a','an','and','are','as','at','be','but','by','for','if','in','into','is','it','no','not','of','on','or','such','that','the','their','then','there','these','they','this','to','was','will','with'], x))) AS DOUBLE) / len(toks) END) * 10.0, 1.0)) / 3.0, 4) AS quality
-        |FROM (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_langid" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |h AS (SELECT doc_id,
-        |  CAST(list_contains(toks,'der') AS INT) + CAST(list_contains(toks,'die') AS INT) + CAST(list_contains(toks,'und') AS INT) + CAST(list_contains(toks,'das') AS INT) + CAST(list_contains(toks,'ist') AS INT) + CAST(list_contains(toks,'nicht') AS INT) + CAST(list_contains(toks,'ein') AS INT) + CAST(list_contains(toks,'mit') AS INT) AS h_de,
-        |  CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'and') AS INT) + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT) + CAST(list_contains(toks,'is') AS INT) + CAST(list_contains(toks,'in') AS INT) + CAST(list_contains(toks,'that') AS INT) AS h_en,
-        |  CAST(list_contains(toks,'el') AS INT) + CAST(list_contains(toks,'la') AS INT) + CAST(list_contains(toks,'de') AS INT) + CAST(list_contains(toks,'los') AS INT) + CAST(list_contains(toks,'las') AS INT) + CAST(list_contains(toks,'que') AS INT) + CAST(list_contains(toks,'y') AS INT) + CAST(list_contains(toks,'es') AS INT) AS h_es,
-        |  CAST(list_contains(toks,'le') AS INT) + CAST(list_contains(toks,'la') AS INT) + CAST(list_contains(toks,'les') AS INT) + CAST(list_contains(toks,'et') AS INT) + CAST(list_contains(toks,'des') AS INT) + CAST(list_contains(toks,'que') AS INT) + CAST(list_contains(toks,'est') AS INT) + CAST(list_contains(toks,'une') AS INT) AS h_fr
-        |FROM t)
-        |SELECT doc_id, CASE
-        |  WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-        |  WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-        |  WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-        |  ELSE 'fr' END AS lang_pred
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    "q_text_fingerprint" ->
-      """SELECT doc_id, md5(array_to_string(regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // identical bed construction + identical C4 rules in SQL; len(list) is
-    // BIGINT so the Spark side casts its counts to long
-    "q_text_c4" ->
-      """WITH b1 AS (
-        |  SELECT doc_id,
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    regexp_replace(text,
-        |      '(\S+\s+\S+\s+\S+)\s+', '\1' || chr(10), 'g'),
-        |      '([a-d])\n', '\1.' || chr(10), 'g'), '([a-d])$', '\1.'),
-        |      '([e-g])\n', '\1!' || chr(10), 'g'), '([e-g])$', '\1!'),
-        |      '([h-j])\n', '\1?' || chr(10), 'g'), '([h-j])$', '\1?'),
-        |      '([k-m])\n', '\1"' || chr(10), 'g'), '([k-m])$', '\1"') AS t
-        |  FROM documents),
-        |b2 AS (SELECT doc_id, CASE WHEN doc_id % 13 = 0
-        |         THEN t || chr(10) || 'this javascript line should vanish.' ELSE t END AS t FROM b1),
-        |b3 AS (SELECT doc_id, CASE WHEN doc_id % 17 = 0
-        |         THEN t || chr(10) || 'code { block }' ELSE t END AS t FROM b2),
-        |bed AS (SELECT doc_id, CASE WHEN doc_id % 19 = 0
-        |         THEN t || chr(10) || 'lorem ipsum dolor sit amet.' ELSE t END AS page FROM b3),
-        |cleaned AS (
-        |  SELECT doc_id, page,
-        |    list_filter(string_split(page, chr(10)), l ->
-        |      regexp_matches(trim(l), '[.!?"'']$')
-        |      AND len(string_split_regex(trim(l), '\s+')) >= 3
-        |      AND NOT regexp_matches(lower(l), '\bjavascript\b')) AS kept,
-        |    string_split(page, chr(10)) AS all_lines
-        |  FROM bed)
-        |SELECT doc_id, array_to_string(kept, chr(10)) AS c4_text,
-        |  len(kept) AS c4_lines_kept, len(all_lines) AS c4_lines_total
-        |FROM cleaned
-        |WHERE NOT contains(lower(page), 'lorem ipsum')
-        |  AND NOT contains(page, '{')
-        |  AND length(regexp_replace(array_to_string(kept, chr(10)), '[^.!?]', '', 'g')) >= 5
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_redact" ->
-      """SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(
-        |    'contact john.doe+spam@mail-host.org or 192.168.10.42 or +1 (415) 555-0133 :: ' || text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '\b(\d{1,3}\.){3}\d{1,3}\b', '[IP]', 'g'),
-        |    '\+?(\d{1,3}[-. ])?\(?\d{2,4}\)?[-. ]\d{3,4}([-. ]\d{2,4})?\b', '[PHONE]', 'g') AS redacted
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    "q_text_repetition" ->
-      """WITH bed AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || chr(10) || text ELSE text END AS text
-        |  FROM documents WHERE doc_id < 300),
-        |t AS (SELECT doc_id,
-        |  list_filter(string_split(text, chr(10)), l -> trim(l) <> '') AS ls,
-        |  regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |bgl AS (SELECT doc_id, list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]) AS bgs
-        |  FROM t WHERE len(toks) >= 2),
-        |bg AS (SELECT doc_id, unnest(bgs) AS b FROM bgl),
-        |cnt AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
-        |agg AS (SELECT doc_id, max(c) AS top, sum(c) AS total FROM cnt GROUP BY 1),
-        |ln AS (SELECT doc_id, len(ls) AS n_lines, len(list_distinct(ls)) AS nd FROM t)
-        |SELECT l.doc_id, CAST(l.n_lines AS BIGINT) AS n_lines,
-        |  round(CASE WHEN l.n_lines = 0 THEN 0.0 ELSE 1.0 - CAST(l.nd AS DOUBLE) / l.n_lines END, 4) AS dup_line_frac,
-        |  round(coalesce(CAST(a.top AS DOUBLE) / a.total, 0.0), 4) AS top_bigram_frac
-        |FROM ln l LEFT JOIN agg a USING (doc_id) ORDER BY l.doc_id""".stripMargin,
-
-    // identical md5-uniform draw: u = first 8 md5 hex chars / 2^32 —
-    // DuckDB parses the hex via a '0x' UBIGINT cast; same CASE rates
-    "q_curate_mix" ->
-      """SELECT doc_id, lang,
-        |  round(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft'), 1, 8))::UBIGINT
-        |    / 4294967296.0, 4) AS sample_u
-        |FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft'), 1, 8))::UBIGINT
-        |    / 4294967296.0
-        |  < CASE WHEN lang = 'en' THEN 0.3 WHEN lang = 'zh' THEN 0.8 ELSE 1.0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical bed plants + identical Gopher rules in DuckDB list SQL;
-    // whitespace words via regexp split, all ratios in double math
-    "q_text_gopher" ->
-      """WITH b1 AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN text || ' of and that have with' ELSE text END AS t FROM documents),
-        |b2 AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0
-        |    THEN t || ' 10 11 12 13 14 15 16 17 18 19 20 21 22 23 24 25' ELSE t END AS t FROM b1),
-        |b3 AS (SELECT doc_id, CASE WHEN doc_id % 9 = 0
-        |    THEN t || chr(10) || 'this line trails off...' || chr(10) || 'and this one too…' ELSE t END AS t FROM b2),
-        |b4 AS (SELECT doc_id, CASE WHEN doc_id % 11 = 0
-        |    THEN t || chr(10) || '- bullet one' || chr(10) || '- bullet two' || chr(10) || '• bullet three' ELSE t END AS t FROM b3),
-        |bed AS (SELECT doc_id, CASE WHEN doc_id % 13 = 0
-        |    THEN t || ' ## ### #' ELSE t END AS t FROM b4),
-        |w AS (SELECT doc_id, t,
-        |    list_filter(regexp_split_to_array(t, '\s+'), x -> x <> '') AS words,
-        |    list_filter(string_split(t, chr(10)), l -> trim(l) <> '') AS ls FROM bed),
-        |m AS (SELECT doc_id,
-        |    CAST(len(words) AS DOUBLE) AS nw,
-        |    CASE WHEN len(words) > 0 THEN
-        |      CAST(list_sum(list_transform(words, x -> length(x))) AS DOUBLE) / len(words)
-        |      ELSE 0.0 END AS mean_len,
-        |    CAST(length(t) - length(regexp_replace(t, '#|…', '', 'g')) AS DOUBLE)
-        |      + (len(string_split(t, '...')) - 1) AS n_sym,
-        |    CASE WHEN len(ls) > 0 THEN
-        |      CAST(len(list_filter(ls, l -> regexp_matches(trim(l), '^[•‣◦⁃∙*-]'))) AS DOUBLE) / len(ls)
-        |      ELSE 0.0 END AS bullet_frac,
-        |    CASE WHEN len(ls) > 0 THEN
-        |      CAST(len(list_filter(ls, l -> regexp_matches(trim(l), '(\.\.\.|…)$'))) AS DOUBLE) / len(ls)
-        |      ELSE 0.0 END AS ellipsis_frac,
-        |    CASE WHEN len(words) > 0 THEN
-        |      CAST(len(list_filter(words, x -> regexp_matches(x, '[\p{L}]'))) AS DOUBLE) / len(words)
-        |      ELSE 0.0 END AS alpha_frac,
-        |    len(list_filter(['the','be','to','of','and','that','have','with'],
-        |      r -> list_contains(list_transform(words, x -> lower(x)), r))) AS req
-        |  FROM w),
-        |r AS (SELECT doc_id,
-        |    (nw >= 50 AND nw <= 100000) AS r_word_count,
-        |    (mean_len >= 3.0 AND mean_len <= 10.0) AS r_mean_len,
-        |    ((CASE WHEN nw > 0 THEN n_sym / nw ELSE 0.0 END) <= 0.1) AS r_symbol,
-        |    (bullet_frac < 0.9 AND ellipsis_frac < 0.3) AS r_lines,
-        |    (alpha_frac >= 0.8) AS r_alpha,
-        |    (req >= 2) AS r_required
-        |  FROM m)
-        |SELECT doc_id,
-        |  CAST(r_word_count AS BIGINT) AS r_word_count,
-        |  CAST(r_mean_len AS BIGINT) AS r_mean_len,
-        |  CAST(r_symbol AS BIGINT) AS r_symbol,
-        |  CAST(r_lines AS BIGINT) AS r_lines,
-        |  CAST(r_alpha AS BIGINT) AS r_alpha,
-        |  CAST(r_required AS BIGINT) AS r_required,
-        |  CAST(r_word_count AND r_mean_len AND r_symbol AND r_lines AND r_alpha AND r_required AS BIGINT) AS pass
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // identical bed plants + every Gopher repetition fraction in DuckDB:
-    // line/para dup math on lists, n-grams via position range + list slices,
-    // top gram per (doc, n) by (count desc, gram asc), dup-gram covered
-    // positions unioned before the char sum — mirroring the Spark shapes
-    "q_text_gopher_rep" ->
-      """WITH b1 AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0
-        |    THEN text || repeat(' the quick brown fox jumps over the lazy dog', 3)
-        |    ELSE text END AS t FROM documents),
-        |b2 AS (SELECT doc_id, CASE WHEN doc_id % 4 = 0
-        |    THEN t || chr(10) || 'dup line alpha' || chr(10) || 'dup line alpha' || chr(10) || 'dup line alpha'
-        |    ELSE t END AS t FROM b1),
-        |bed AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN t || chr(10) || chr(10) || 'same paragraph text' || chr(10) || chr(10) || 'same paragraph text'
-        |    ELSE t END AS t FROM b2),
-        |lp AS (SELECT doc_id, t,
-        |    list_filter(regexp_split_to_array(t, '\s+'), x -> x <> '') AS toks,
-        |    list_filter(string_split(t, chr(10)), l -> trim(l) <> '') AS ls,
-        |    list_filter(string_split(t, chr(10) || chr(10)), p -> trim(p) <> '') AS pr FROM bed),
-        |rowm AS (SELECT doc_id,
-        |    CAST(coalesce(list_sum(list_transform(toks, w -> length(w))), 0) AS DOUBLE) AS twc,
-        |    CASE WHEN len(ls) > 0 THEN CAST(len(ls) - len(list_distinct(ls)) AS DOUBLE) / len(ls) ELSE 0.0 END AS dlf,
-        |    CASE WHEN coalesce(list_sum(list_transform(ls, l -> length(l))), 0) > 0 THEN
-        |      CAST(list_sum(list_transform(ls, l -> length(l))) - list_sum(list_transform(list_distinct(ls), l -> length(l))) AS DOUBLE)
-        |        / list_sum(list_transform(ls, l -> length(l))) ELSE 0.0 END AS dlcf,
-        |    CASE WHEN len(pr) > 0 THEN CAST(len(pr) - len(list_distinct(pr)) AS DOUBLE) / len(pr) ELSE 0.0 END AS dpf,
-        |    CASE WHEN coalesce(list_sum(list_transform(pr, p -> length(p))), 0) > 0 THEN
-        |      CAST(list_sum(list_transform(pr, p -> length(p))) - list_sum(list_transform(list_distinct(pr), p -> length(p))) AS DOUBLE)
-        |        / list_sum(list_transform(pr, p -> length(p))) ELSE 0.0 END AS dpcf
-        |  FROM lp),
-        |g AS (SELECT doc_id, i, n, array_to_string(toks[i:i+n-1], ' ') AS gram,
-        |    CAST(list_sum(list_transform(toks[i:i+n-1], w -> length(w))) AS BIGINT) AS gchars
-        |  FROM lp, unnest(range(1, len(toks)+1)) AS tt(i), unnest([2,3,4,5,6,7,8,9,10]) AS nn(n)
-        |  WHERE i + n - 1 <= len(toks)),
-        |topc AS (SELECT doc_id, n, gram, count(*) AS cnt, min(gchars) AS gchars
-        |  FROM g WHERE n <= 4 GROUP BY 1, 2, 3),
-        |topr AS (SELECT doc_id, n, gchars * cnt AS tchars,
-        |    row_number() OVER (PARTITION BY doc_id, n ORDER BY cnt DESC, gram ASC) AS rn FROM topc),
-        |topw AS (SELECT doc_id,
-        |    sum(CASE WHEN n = 2 THEN tchars END) AS t2,
-        |    sum(CASE WHEN n = 3 THEN tchars END) AS t3,
-        |    sum(CASE WHEN n = 4 THEN tchars END) AS t4
-        |  FROM topr WHERE rn = 1 GROUP BY 1),
-        |dupg AS (SELECT doc_id, n, gram, count(*) AS cnt, list(i) AS ps
-        |  FROM g WHERE n >= 5 GROUP BY 1, 2, 3 HAVING count(*) > 1),
-        |cov AS (SELECT DISTINCT doc_id, n, i + k AS cp
-        |  FROM dupg, unnest(ps) AS oo(i), unnest(range(0, n)) AS kk(k)),
-        |wl AS (SELECT doc_id, i AS cp, length(toks[i]) AS w FROM lp, unnest(range(1, len(toks)+1)) AS tt(i)),
-        |dch AS (SELECT c.doc_id, c.n, sum(w.w) AS d FROM cov c JOIN wl w USING (doc_id, cp) GROUP BY 1, 2),
-        |dupw AS (SELECT doc_id,
-        |    sum(CASE WHEN n = 5 THEN d END) AS d5, sum(CASE WHEN n = 6 THEN d END) AS d6,
-        |    sum(CASE WHEN n = 7 THEN d END) AS d7, sum(CASE WHEN n = 8 THEN d END) AS d8,
-        |    sum(CASE WHEN n = 9 THEN d END) AS d9, sum(CASE WHEN n = 10 THEN d END) AS d10
-        |  FROM dch GROUP BY 1),
-        |f AS (SELECT r.doc_id, r.dlf, r.dlcf, r.dpf, r.dpcf,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(t.t2 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS t2,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(t.t3 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS t3,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(t.t4 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS t4,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d5 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d5,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d6 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d6,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d7 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d7,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d8 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d8,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d9 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d9,
-        |    CASE WHEN r.twc > 0 THEN coalesce(CAST(d.d10 AS DOUBLE), 0.0) / r.twc ELSE 0.0 END AS d10
-        |  FROM rowm r LEFT JOIN topw t USING (doc_id) LEFT JOIN dupw d USING (doc_id))
-        |SELECT doc_id,
-        |  round(dlf, 4) AS dup_line_frac, round(dlcf, 4) AS dup_line_char_frac,
-        |  round(dpf, 4) AS dup_para_frac, round(dpcf, 4) AS dup_para_char_frac,
-        |  round(t2, 4) AS top_2gram_char_frac, round(t3, 4) AS top_3gram_char_frac,
-        |  round(t4, 4) AS top_4gram_char_frac,
-        |  round(d5, 4) AS dup_5gram_char_frac, round(d6, 4) AS dup_6gram_char_frac,
-        |  round(d7, 4) AS dup_7gram_char_frac, round(d8, 4) AS dup_8gram_char_frac,
-        |  round(d9, 4) AS dup_9gram_char_frac, round(d10, 4) AS dup_10gram_char_frac,
-        |  CAST(dlf <= 0.30 AND dpf <= 0.30 AND dlcf <= 0.20 AND dpcf <= 0.20
-        |    AND t2 <= 0.20 AND t3 <= 0.18 AND t4 <= 0.16 AND d5 <= 0.15
-        |    AND d6 <= 0.14 AND d7 <= 0.13 AND d8 <= 0.12 AND d9 <= 0.11
-        |    AND d10 <= 0.10 AS BIGINT) AS rep_pass
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // full bigram-LM replay: corpus unigram/bigram counts, vocabulary size,
-    // add-0.4 smoothing, per-doc mean −log2 P — double math end to end
-    "q_text_perplexity" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |uni AS (SELECT w, CAST(count(*) AS DOUBLE) AS cw
-        |        FROM (SELECT unnest(toks) AS w FROM tok) GROUP BY w),
-        |v AS (SELECT CAST(count(*) AS DOUBLE) AS vocab FROM uni),
-        |bgl AS (SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i+1] AS b
-        |        FROM tok, unnest(range(1, len(toks))) AS t(i)
-        |        WHERE len(toks) >= 2),
-        |bg AS (SELECT b, CAST(count(*) AS DOUBLE) AS cbg FROM bgl GROUP BY b),
-        |nll AS (SELECT l.doc_id,
-        |          -log2((coalesce(g.cbg, 0.0) + 0.4) / (coalesce(u.cw, 0.0) + 0.4 * v.vocab)) AS h
-        |        FROM bgl l LEFT JOIN bg g ON l.b = g.b LEFT JOIN uni u ON l.w1 = u.w CROSS JOIN v)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |       round(avg(h), 4) AS cross_entropy,
-        |       round(pow(2.0, avg(h)), 4) AS perplexity
-        |FROM nll GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the perplexity replay + per-language ntile(3) terciles (ties on
-    // rounded perplexity then id, same as the engine window)
-    "q_text_ccnet" ->
-      """WITH tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
-        |uni AS (SELECT w, CAST(count(*) AS DOUBLE) AS cw
-        |        FROM (SELECT unnest(toks) AS w FROM tok) GROUP BY w),
-        |v AS (SELECT CAST(count(*) AS DOUBLE) AS vocab FROM uni),
-        |bgl AS (SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i+1] AS b
-        |        FROM tok, unnest(range(1, len(toks))) AS t(i)
-        |        WHERE len(toks) >= 2),
-        |bg AS (SELECT b, CAST(count(*) AS DOUBLE) AS cbg FROM bgl GROUP BY b),
-        |nll AS (SELECT l.doc_id,
-        |          -log2((coalesce(g.cbg, 0.0) + 0.4) / (coalesce(u.cw, 0.0) + 0.4 * v.vocab)) AS h
-        |        FROM bgl l LEFT JOIN bg g ON l.b = g.b LEFT JOIN uni u ON l.w1 = u.w CROSS JOIN v),
-        |ppl AS (SELECT doc_id, pow(2.0, avg(h)) AS perplexity FROM nll GROUP BY doc_id),
-        |j AS (SELECT p.doc_id, d.lang, p.perplexity
-        |      FROM ppl p JOIN documents d USING (doc_id)),
-        |b AS (SELECT doc_id, lang, perplexity, ntile(3) OVER (
-        |        PARTITION BY lang ORDER BY round(perplexity, 4) ASC, doc_id ASC) AS t
-        |      FROM j)
-        |SELECT doc_id, lang, round(perplexity, 4) AS perplexity,
-        |       ['head', 'middle', 'tail'][t] AS ppl_bucket
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // text[] BM25 replay: word-tokenize the space-rejoined split elements —
-    // identical token multiset to the engine's per-element merge
-    "q_bm25_textarray" -> {
-      val terms = Seq("spark", "join", "window", "batch")
-      val (ctes, _) = SparkEntry.sqlBm25(terms,
-        tokExpr = "regexp_extract_all(lower(array_to_string(string_split(text, ' stream '), ' ')), '[a-z0-9]+')")
-      s"""WITH $ctes
-         |SELECT doc_id, round(score_exact, 4) AS score FROM scored
-         |WHERE terms_matched >= 1
-         |ORDER BY score_exact DESC, doc_id ASC LIMIT 20""".stripMargin
-    },
-
-    // summary replay: page by source, extractive lead-20-token stand-in
-    "q_summary" ->
-      """WITH page AS (SELECT doc_id, text FROM documents
-        |  WHERE source = 'src5' ORDER BY doc_id LIMIT 15)
-        |SELECT doc_id, 'text' AS sum_prop,
-        |  array_to_string(list_slice(regexp_split_to_array(text, '\s+'), 1, 20), ' ') AS summary
-        |FROM page ORDER BY doc_id""".stripMargin,
-
-    // answer replay: 60-char window at the first 'window' occurrence in the
-    // lowercased passage, findProperty via strpos on the newline-flattened
-    // lowercased property value (Go 0-based start)
-    "q_ask" ->
-      """WITH page AS (SELECT doc_id, text FROM documents
-        |  WHERE source = 'src7' ORDER BY doc_id LIMIT 20),
-        |a AS (SELECT doc_id, text, strpos(lower(text), 'window') AS p FROM page),
-        |ans AS (SELECT doc_id, text,
-        |         CASE WHEN p > 0 THEN substr(lower(text), p, 60) END AS res FROM a),
-        |loc AS (SELECT doc_id, res,
-        |         CASE WHEN res IS NOT NULL THEN
-        |           CASE WHEN strpos(lower(replace(text, chr(10), ' ')), res) > 0 THEN 'text' ELSE '' END
-        |         END AS ans_prop,
-        |         CASE WHEN res IS NOT NULL THEN
-        |           CASE WHEN strpos(lower(replace(text, chr(10), ' ')), res) > 0
-        |                THEN strpos(lower(replace(text, chr(10), ' ')), res) - 1 ELSE 0 END
-        |         END AS sp
-        |        FROM ans)
-        |SELECT doc_id, res AS ans, ans_prop,
-        |  CAST(sp AS BIGINT) AS start_pos,
-        |  CAST(CASE WHEN res IS NOT NULL THEN
-        |    CASE WHEN ans_prop = '' THEN 0 ELSE sp + length(res) END
-        |  END AS BIGINT) AS end_pos,
-        |  res IS NOT NULL AS has_answer
-        |FROM loc ORDER BY doc_id""".stripMargin,
-
-    // text[] aggregation replay: element multiset = lang ∪ source values
-    "q_agg_textarray" ->
-      """WITH el AS (
-        |  SELECT lang AS v FROM documents UNION ALL SELECT source FROM documents),
-        |tot AS (SELECT (SELECT count(*) FROM documents) AS meta_count,
-        |               count(*) AS n_elements FROM el),
-        |ranked AS (
-        |  SELECT v AS value, count(*) AS occurs,
-        |         row_number() OVER (ORDER BY count(*) DESC, v ASC) AS rank
-        |  FROM el GROUP BY v)
-        |SELECT t.meta_count, t.n_elements, r.rank, r.value, CAST(r.occurs AS BIGINT) AS occurs
-        |FROM tot t CROSS JOIN ranked r WHERE r.rank <= 4 ORDER BY r.rank""".stripMargin,
-
-    // spellCheck replay: the module output is query-scoped, so the oracle
-    // carries the expected corrections literally (strem→stream,
-    // windoww→window from the fixture dictionary) over the same page
-    "q_spellcheck" ->
-      """SELECT doc_id, 'strem the windoww' AS original_text,
-        |  'stream the window' AS did_you_mean,
-        |  'ask.question' AS location, CAST(2 AS BIGINT) AS n_changes
-        |FROM documents WHERE source = 'src1' ORDER BY doc_id LIMIT 5""".stripMargin,
-
-    // corpus replay: class name split+lowercased, props in name order
-    // (lang with its name prefix, source skipped, text plain), single-space
-    // joined
-    "q_vectorizer_corpus" ->
-      """SELECT doc_id,
-        |  'training document' || ' lang ' || lower(lang) || ' ' || lower(text) AS corpus
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-
-    // selection-MMR replay (balance=1): top-8 by cosine distance with rank
-    // full MMR replay: 8 unrolled greedy steps (Mmr.diversify semantics —
-    // first pick = lowest query dist; then argmax of −0.5·dist + 0.5·min
-    // pair-distance-to-selected, ties to the earlier page position; every
-    // step CTE MATERIALIZED against DuckDB's inlining blowup)
-    "q_mmr_selection" -> {
-      val steps = new StringBuilder
-      steps.append(
-        """s1 AS MATERIALIZED (SELECT vec_id, pidx FROM page ORDER BY dist ASC, pidx ASC LIMIT 1),
-          |m1 AS MATERIALIZED (
-          |  SELECT p.vec_id, p.pidx, p.dist, pd.pdist AS mind
-          |  FROM page p JOIN pd ON pd.ia = (SELECT vec_id FROM s1) AND pd.ib = p.vec_id
-          |  WHERE p.vec_id <> (SELECT vec_id FROM s1)),
-          |""".stripMargin)
-      for (k <- 2 to 8) {
-        steps.append(
-          s"""s$k AS MATERIALIZED (SELECT vec_id, pidx FROM m${k - 1}
-             |  ORDER BY (-0.5 * dist + 0.5 * mind) DESC, pidx ASC LIMIT 1),
-             |""".stripMargin)
-        if (k < 8) steps.append(
-          s"""m$k AS MATERIALIZED (
-             |  SELECT m.vec_id, m.pidx, m.dist, least(m.mind, pd.pdist) AS mind
-             |  FROM m${k - 1} m JOIN pd ON pd.ia = (SELECT vec_id FROM s$k) AND pd.ib = m.vec_id
-             |  WHERE m.vec_id <> (SELECT vec_id FROM s$k)),
-             |""".stripMargin)
-      }
-      val sel = (2 to 8).map(k => s"UNION ALL SELECT vec_id, $k FROM s$k").mkString(" ")
-      s"""WITH ${sqlQv(7)},
-         |d AS (SELECT e.vec_id, ${sqlCosine("e.embedding", "q.v")} AS dist
-         |      FROM embeddings e CROSS JOIN qv q),
-         |page AS (SELECT vec_id, dist,
-         |           row_number() OVER (ORDER BY dist ASC, vec_id ASC) AS pidx
-         |         FROM d ORDER BY dist ASC, vec_id ASC LIMIT 40),
-         |pv AS (SELECT p.vec_id, e.embedding FROM page p JOIN embeddings e USING (vec_id)),
-         |pd AS MATERIALIZED (
-         |  SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |         ${sqlCosine("a.embedding", "b.embedding")} AS pdist
-         |  FROM pv a JOIN pv b ON a.vec_id <> b.vec_id),
-         |${steps.toString}sel AS (SELECT vec_id, 1 AS rank FROM s1 $sel)
-         |SELECT p.vec_id, CAST(sel.rank AS BIGINT) AS mmr_rank, round(p.dist, 4) AS dist
-         |FROM sel JOIN page p USING (vec_id) ORDER BY mmr_rank""".stripMargin
-    },
-
-    // schema-metric replay: identical to the explicit-L2 nearObject oracle —
-    // proving Default resolved to the class-configured l2-squared
-    "q_near_schema_metric" ->
-      s"""WITH ${sqlQv(7)},
-         |d AS (SELECT e.vec_id, ${sqlL2("e.embedding", "q.v")} AS dist
-         |      FROM embeddings e CROSS JOIN qv q)
-         |SELECT vec_id, round(dist, 4) AS dist FROM d
-         |ORDER BY d.dist ASC, vec_id ASC LIMIT 10""".stripMargin,
-
-    // edit-join replay: brute-force all-pairs Levenshtein over the same bed
-    // (oracle-side filter-free, so any pair the engine's q-gram filter
-    // dropped would surface as a mismatch)
-    "q_dedup_edit" ->
-      """WITH bed AS (
-        |  SELECT doc_id, substr(text, 1, 32) AS sx FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000,
-        |    substr(substr(text, 1, 32), 1, 10) || 'Z' || substr(substr(text, 1, 32), 12, 21)
-        |  FROM documents WHERE doc_id % 25 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000,
-        |    substr(substr(text, 1, 32), 1, 4) || 'Y' || substr(substr(text, 1, 32), 6, 5)
-        |    || 'Z' || substr(substr(text, 1, 32), 12, 21)
-        |  FROM documents WHERE doc_id = 50
-        |  UNION ALL
-        |  SELECT doc_id + 3000000,
-        |    substr(substr(text, 1, 32), 1, 4) || 'Y' || substr(substr(text, 1, 32), 6, 5)
-        |    || 'Z' || substr(substr(text, 1, 32), 12, 5) || 'X'
-        |    || substr(substr(text, 1, 32), 18, 15)
-        |  FROM documents WHERE doc_id = 75)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(levenshtein(a.sx, b.sx) AS BIGINT) AS edit_distance
-        |FROM bed a JOIN bed b ON a.doc_id < b.doc_id
-        |WHERE levenshtein(a.sx, b.sx) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // span-contamination replay: corpus grams joined on the STRING gram
-    // against the benchmark slice's gram set (Spark joins the xxhash64),
-    // same n + Σ min(n, gap) interval union as q_dedup_substring
-    "q_decontaminate_span" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS t
-        |  FROM documents),
-        |base AS (SELECT doc_id, t, len(t) AS ntok FROM toks),
-        |grams AS (
-        |  SELECT doc_id, ntok, i - 1 AS pos,
-        |         array_to_string(list_slice(t, i, i + 7), ' ') AS g
-        |  FROM base, UNNEST(range(1, ntok - 8 + 2)) AS u(i)
-        |  WHERE ntok >= 8),
-        |bgrams AS (
-        |  SELECT DISTINCT array_to_string(list_slice(t, i, i + 7), ' ') AS g
-        |  FROM base, UNNEST(range(1, ntok - 8 + 2)) AS u(i)
-        |  WHERE ntok >= 8 AND doc_id % 97 = 5),
-        |agg AS (
-        |  SELECT doc_id, ntok, count(*) AS cn, list_sort(list(pos)) AS ps
-        |  FROM grams WHERE g IN (SELECT g FROM bgrams)
-        |  GROUP BY doc_id, ntok)
-        |SELECT b.doc_id,
-        |  CAST(coalesce(a.cn, 0) AS BIGINT) AS contaminated_ngrams,
-        |  round(CASE WHEN b.ntok > 0 THEN
-        |    coalesce(8 + list_sum(list_transform(range(2, len(a.ps) + 1),
-        |        i -> least(a.ps[i] - a.ps[i-1], 8))), COALESCE(CASE WHEN a.cn IS NOT NULL THEN 8 END, 0))
-        |      / CAST(b.ntok AS DOUBLE) ELSE 0.0 END, 4) AS contaminated_fraction
-        |FROM base b LEFT JOIN agg a USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // validation replay: same planted bed, same checks as UNION ALL arms
-    "q_validate" ->
-      """WITH e AS (SELECT event_id, user_id FROM events WHERE event_id < 120),
-        |bed AS (SELECT event_id,
-        |  CASE WHEN event_id % 4 = 0 THEN '2024-01-02T03:04:05Z' ELSE '02.01.2024' END AS published,
-        |  CASE WHEN event_id % 3 = 0 THEN 'c56a4180-65aa-42ec-a945-5fd21dec0538' ELSE 'not-a-uuid' END AS ext_id,
-        |  CAST(user_id % 200 - 100 AS DOUBLE) AS lat,
-        |  CAST(user_id % 400 - 200 AS DOUBLE) AS lon
-        |  FROM e),
-        |v AS (
-        |  SELECT event_id AS id, 'published' AS property,
-        |    'requires a string with a RFC3339 formatted date, but the given value is ''' || published || '''' AS error
-        |  FROM bed WHERE event_id % 4 <> 0
-        |  UNION ALL
-        |  SELECT event_id, 'ext_id',
-        |    'requires a string of UUID format, but the given value is ''' || ext_id || ''''
-        |  FROM bed WHERE event_id % 3 <> 0
-        |  UNION ALL
-        |  SELECT event_id, 'place',
-        |    'invalid latitude: must be between -90 and 90, got ' || lat::VARCHAR
-        |  FROM bed WHERE lat < -90 OR lat > 90
-        |  UNION ALL
-        |  SELECT event_id, 'place',
-        |    'invalid longitude: must be between -180 and 180, got ' || lon::VARCHAR
-        |  FROM bed WHERE lon < -180 OR lon > 180
-        |  UNION ALL
-        |  SELECT * FROM (VALUES
-        |    (CAST(9000001 AS BIGINT), 'published',
-        |     'requires a string with a RFC3339 formatted date, but the given value is ''2024-13-01T00:00:00Z'''),
-        |    (9000001, 'ext_id',
-        |     'requires a string of UUID format, but the given value is ''c56a4180-65aa-42ec-a945-5fd21dec053'''),
-        |    (9000001, 'place',
-        |     'invalid latitude: must be between -90 and 90, got 95.0'),
-        |    (9000001, 'place',
-        |     'invalid longitude: must be between -180 and 180, got 200.0'),
-        |    (9000002, 'published',
-        |     'requires a string with a RFC3339 formatted date, but the given value is ''2024-01-02T03:04:05Z' || chr(10) || ''''),
-        |    (9000004, 'published',
-        |     'requires a string with a RFC3339 formatted date, but the given value is ''2024-01-02T24:00:00Z'''),
-        |    (9000004, 'place',
-        |     'invalid latitude: must be between -90 and 90, got -90.5'),
-        |    (9000004, 'place',
-        |     'invalid longitude: must be between -180 and 180, got 180.5')
-        |  ) AS pv(id, property, error))
-        |SELECT id, property, error FROM v ORDER BY id, property, error""".stripMargin,
-
-    // phone replay: the three bed shapes resolve case-wise (intl DE →
-    // cc 49 after prefix strip; national US → cc 1 via defaultCountry;
-    // '12' → invalid)
-    "q_phone" ->
-      """WITH e AS (SELECT event_id, user_id FROM events WHERE event_id < 200),
-        |p AS (SELECT event_id,
-        |  CASE WHEN event_id = 7 THEN '123'
-        |       WHEN event_id = 8 THEN '1234'
-        |       WHEN event_id = 9 THEN '12345678901234'
-        |       WHEN event_id = 10 THEN '123456789012345'
-        |       WHEN event_id % 3 = 0 THEN '30' || lpad(user_id::VARCHAR, 6, '0')
-        |       WHEN event_id % 3 = 1 THEN '415555' || lpad((user_id % 10000)::VARCHAR, 4, '0')
-        |  END AS nat,
-        |  CASE WHEN event_id IN (7, 8, 9, 10) THEN 49
-        |       WHEN event_id % 3 = 0 THEN 49 WHEN event_id % 3 = 1 THEN 1 END AS cc
-        |  FROM e),
-        |v AS (SELECT *, cc IS NOT NULL AND len(nat) BETWEEN 4 AND 14 AS valid FROM p)
-        |SELECT event_id, CAST(cc AS BIGINT) AS country_code,
-        |  CASE WHEN valid THEN CAST(nat AS BIGINT) END AS national,
-        |  CASE WHEN valid THEN '+' || cc || ' ' || nat END AS intl,
-        |  valid
-        |FROM v ORDER BY event_id""".stripMargin,
-
-    // stream-index replay: after the drain the served corpus IS the full
-    // documents table, so the oracle is the standard BM25 replay
-    "q_stream_index" -> {
-      val terms = Seq("spark", "join", "stream", "window")
-      val (ctes, _) = SparkEntry.sqlBm25(terms)
-      s"""WITH $ctes
-         |SELECT doc_id, round(score_exact, 4) AS score FROM scored
-         |WHERE terms_matched >= 1
-         |ORDER BY score_exact DESC, doc_id ASC LIMIT 20""".stripMargin
-    },
-
-    // clustered-store replay: the surviving version = base corpus with the
-    // src3 upsert applied; the filter selects exactly the mutated rows
-    "q_store_clustered" ->
-      """SELECT doc_id, lang, CAST(n_chars + 1000000 AS BIGINT) AS n_chars
-        |FROM documents WHERE source = 'src3' ORDER BY doc_id""".stripMargin,
-
-    // alias replay: the alias is pure name indirection — the oracle is the
-    // direct-class query
-    "q_alias" ->
-      """SELECT doc_id, lang FROM documents WHERE source = 'src9'
-        |ORDER BY doc_id""".stripMargin,
-
-    // scripted lifecycle: literal error texts; the two live page counts are
-    // data-derived so the repoint is proven at the data plane
-    "q_alias_lifecycle" ->
-      """WITH a AS (SELECT count(*) AS n FROM documents WHERE doc_id < 100),
-        |b AS (SELECT count(*) AS n FROM orders WHERE o_orderkey < 500)
-        |SELECT step, result FROM (VALUES
-        |  ('01_create_ok', 'ok'),
-        |  ('02_create_dup_alias', 'create alias: ScriptAlias, alias already exists'),
-        |  ('03_create_unknown_class', 'create alias: Other, class not found, NoSuchClass'),
-        |  ('04_create_class_collision', 'create alias: class AliasB already exists'),
-        |  ('05_create_bad_syntax', '''Bad-Name'' is not a valid class name'),
-        |  ('06_page_initial', (SELECT CAST(n AS VARCHAR) FROM a)),
-        |  ('07_update_unknown_alias', 'replace alias: alias Ghost does not exist'),
-        |  ('08_update_unknown_class', 'replace alias: class NoSuch does not exist'),
-        |  ('09_update_ok', 'ok'),
-        |  ('10_page_repointed', (SELECT CAST(n AS VARCHAR) FROM b)),
-        |  ('11_list_for_b', 'ScriptAlias->AliasB'),
-        |  ('12_delete_ok', 'ok'),
-        |  ('13_delete_missing', 'alias ScriptAlias not found'),
-        |  ('14_resolve_after_delete', 'unknown collection ScriptAlias')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // NER replay: gazetteer entries above the certainty cutoff in dictionary
-    // order, first-occurrence strpos positions, list truncated to 3
-    "q_ner" ->
-      """WITH page AS (SELECT doc_id, text FROM documents
-        |  WHERE source = 'src2' ORDER BY doc_id LIMIT 25),
-        |toks AS (SELECT doc_id, list_slice(list_filter([
-        |    CASE WHEN strpos(lower(text), 'spark') > 0 THEN
-        |      {'entity': 'PRODUCT', 'word': 'spark', 'certainty': 0.95,
-        |       'sp': strpos(lower(text), 'spark') - 1} END,
-        |    CASE WHEN strpos(lower(text), 'window') > 0 THEN
-        |      {'entity': 'CONCEPT', 'word': 'window', 'certainty': 0.85,
-        |       'sp': strpos(lower(text), 'window') - 1} END,
-        |    CASE WHEN strpos(lower(text), 'merge') > 0 THEN
-        |      {'entity': 'OPERATION', 'word': 'merge', 'certainty': 0.8,
-        |       'sp': strpos(lower(text), 'merge') - 1} END,
-        |    CASE WHEN strpos(lower(text), 'stream') > 0 THEN
-        |      {'entity': 'CONCEPT', 'word': 'stream', 'certainty': 0.75,
-        |       'sp': strpos(lower(text), 'stream') - 1} END
-        |  ], x -> x IS NOT NULL), 1, 3) AS ts FROM page)
-        |SELECT doc_id, CAST(i AS BIGINT) AS rank,
-        |  ts[i].entity AS entity, ts[i].word AS word,
-        |  round(ts[i].certainty, 2) AS certainty,
-        |  CAST(ts[i].sp AS BIGINT) AS start_pos,
-        |  CAST(ts[i].sp + length(ts[i].word) AS BIGINT) AS end_pos
-        |FROM toks, unnest(range(1, len(ts) + 1)) AS u(i)
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // text[] filter replay: token membership over the space-rejoined split
-    // elements (≡ the engine's merged element tokens), Like as per-element
-    // containment
-    "q_filter_textarray" ->
-      """WITH t AS (SELECT doc_id,
-        |    regexp_extract_all(lower(array_to_string(string_split(text, ' stream '), ' ')), '[a-z0-9]+') AS toks,
-        |    string_split(text, ' stream ') AS elems
-        |  FROM documents)
-        |SELECT doc_id FROM t
-        |WHERE list_contains(toks, 'spark')
-        |  AND (list_contains(toks, 'window') OR list_contains(toks, 'batch')
-        |       OR len(list_filter(elems, e -> contains(e, 'join'))) > 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    // value-inference replay: same bed, same RFC3339/uuid accepting-set
-    // regexes, same all-or-text merge CASE per string column, literal type
-    // map for the typed columns
-    "q_autoschema_values" ->
-      """WITH bed AS (
-        |  SELECT event_id,
-        |    strftime(ts, '%Y-%m-%dT%H:%M:%SZ') AS ts_rfc,
-        |    md5(event_id::VARCHAR) AS h,
-        |    event_type, props,
-        |    CASE WHEN event_id % 2 = 0 THEN strftime(ts, '%Y-%m-%dT%H:%M:%SZ')
-        |         ELSE props END AS mixed,
-        |    CASE WHEN event_id = 0 THEN '2024-13-01T00:00:00Z'
-        |         ELSE strftime(ts, '%Y-%m-%dT%H:%M:%SZ') END AS near_date,
-        |    CASE WHEN event_id = 0 THEN 'c56a4180-65aa-42ec-a945-5fd21dec053'
-        |         ELSE NULL END AS near_uuid_miss,
-        |    NULL::VARCHAR AS unseen
-        |  FROM events),
-        |u AS (SELECT *, substr(h,1,8) || '-' || substr(h,9,4) || '-' || substr(h,13,4)
-        |        || '-' || substr(h,17,4) || '-' || substr(h,21,12) AS obj_uuid,
-        |        coalesce(near_uuid_miss, substr(h,1,8) || '-' || substr(h,9,4) || '-'
-        |        || substr(h,13,4) || '-' || substr(h,17,4) || '-' || substr(h,21,12)) AS near_uuid
-        |      FROM bed),
-        |agg AS (SELECT
-        |  count(ts_rfc) AS n1,
-        |  count(CASE WHEN regexp_matches(ts_rfc, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d1,
-        |  count(CASE WHEN regexp_matches(ts_rfc, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u1,
-        |  count(obj_uuid) AS n2,
-        |  count(CASE WHEN regexp_matches(obj_uuid, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d2,
-        |  count(CASE WHEN regexp_matches(obj_uuid, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u2,
-        |  count(event_type) AS n3,
-        |  count(CASE WHEN regexp_matches(event_type, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d3,
-        |  count(CASE WHEN regexp_matches(event_type, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u3,
-        |  count(props) AS n4,
-        |  count(CASE WHEN regexp_matches(props, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d4,
-        |  count(CASE WHEN regexp_matches(props, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u4,
-        |  count(mixed) AS n5,
-        |  count(CASE WHEN regexp_matches(mixed, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d5,
-        |  count(CASE WHEN regexp_matches(mixed, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u5,
-        |  count(unseen) AS n6,
-        |  count(near_date) AS n7,
-        |  count(CASE WHEN regexp_matches(near_date, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d7,
-        |  count(CASE WHEN regexp_matches(near_date, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u7,
-        |  count(near_uuid) AS n8,
-        |  count(CASE WHEN regexp_matches(near_uuid, '^\d{4}-(0[1-9]|1[0-2])-(0[1-9]|[12]\d|3[01])T([01]\d|2[0-3]):[0-5]\d:[0-5]\d(\.\d+)?(Z|[+-]([01]\d|2[0-3]):[0-5]\d)$') THEN 1 END) AS d8,
-        |  count(CASE WHEN regexp_matches(near_uuid, '^(urn:uuid:)?[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$|^\{[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\}$|^[0-9a-fA-F]{32}$') THEN 1 END) AS u8
-        |  FROM u),
-        |v AS (
-        |  SELECT 'ts_rfc' AS prop, CASE WHEN n1 = 0 THEN 'text' WHEN d1 = n1 THEN 'date'
-        |    WHEN u1 = n1 THEN 'uuid' ELSE 'text' END AS dtype FROM agg
-        |  UNION ALL SELECT 'obj_uuid', CASE WHEN n2 = 0 THEN 'text' WHEN d2 = n2 THEN 'date'
-        |    WHEN u2 = n2 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'event_type', CASE WHEN n3 = 0 THEN 'text' WHEN d3 = n3 THEN 'date'
-        |    WHEN u3 = n3 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'props', CASE WHEN n4 = 0 THEN 'text' WHEN d4 = n4 THEN 'date'
-        |    WHEN u4 = n4 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'mixed', CASE WHEN n5 = 0 THEN 'text' WHEN d5 = n5 THEN 'date'
-        |    WHEN u5 = n5 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'near_date', CASE WHEN n7 = 0 THEN 'text' WHEN d7 = n7 THEN 'date'
-        |    WHEN u7 = n7 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'near_uuid', CASE WHEN n8 = 0 THEN 'text' WHEN d8 = n8 THEN 'date'
-        |    WHEN u8 = n8 THEN 'uuid' ELSE 'text' END FROM agg
-        |  UNION ALL SELECT 'unseen', 'text' FROM agg WHERE n6 = 0
-        |  UNION ALL SELECT 'user_id', 'int'
-        |  UNION ALL SELECT 'value', 'number'
-        |  UNION ALL SELECT 'flag', 'boolean')
-        |SELECT prop, dtype FROM v ORDER BY prop""".stripMargin,
-
-    // hash-split replay: the identical md5-prefix uniform and the same
-    // normalized cumulative boundaries (8/10, 9/10), strict-< on both
-    "q_curate_split" ->
-      """SELECT doc_id,
-        |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-        |       ELSE 'test' END AS split,
-        |  round(u, 4) AS split_u
-        |FROM (SELECT doc_id,
-        |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft-split'), 1, 8))::UBIGINT
-        |    / 4294967296.0 AS u
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // temperature-rate replay: per-lang count → p^(τ−1) normalized by the
-    // max (rarest lang → rate 1), then the same md5-uniform acceptance draw
-    "q_curate_temperature" ->
-      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |r AS (SELECT lang, pow(n, -0.5) / (SELECT max(pow(n, -0.5)) FROM c) AS rate FROM c),
-        |s AS (SELECT d.doc_id, d.lang, r.rate,
-        |        ('0x' || substr(md5(d.doc_id::VARCHAR || 'temp'), 1, 8))::UBIGINT / 4294967296.0 AS u
-        |      FROM documents d JOIN r USING (lang))
-        |SELECT doc_id, lang, round(rate, 4) AS mix_rate FROM s
-        |WHERE u < rate ORDER BY doc_id""".stripMargin,
-
-    // DSIR model replay: same tokenization, same md5-mod-64 bucketing, same
-    // add-1 smoothed bucket log-probs over BOTH corpora (target = lang='en',
-    // raw = all), same per-doc Σ cnt·log_ratio (ln, not DuckDB's base-10 log)
-    "q_dsir_weights" ->
-      """WITH tok AS (SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
-        |gr AS (SELECT doc_id, lang, unnest(list_concat(t,
-        |         list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS g
-        |       FROM tok),
-        |dc AS (SELECT doc_id, lang,
-        |         ('0x' || substr(md5(g), 1, 8))::UBIGINT % 64 AS bucket, count(*) AS cnt
-        |       FROM gr GROUP BY 1, 2, 3),
-        |pt AS (SELECT bucket, sum(cnt) AS c FROM dc WHERE lang = 'en' GROUP BY 1),
-        |qt AS (SELECT bucket, sum(cnt) AS c FROM dc GROUP BY 1),
-        |model AS (
-        |  SELECT r.range AS bucket,
-        |    ln((coalesce(p.c, 0) + 1.0) / ((SELECT sum(c) FROM pt) + 64.0))
-        |    - ln((coalesce(q.c, 0) + 1.0) / ((SELECT sum(c) FROM qt) + 64.0)) AS log_ratio
-        |  FROM range(0, 64) r
-        |  LEFT JOIN pt p ON p.bucket = r.range
-        |  LEFT JOIN qt q ON q.bucket = r.range),
-        |w AS (SELECT dc.doc_id, sum(dc.cnt * m.log_ratio) AS logw
-        |      FROM dc JOIN model m USING (bucket) GROUP BY 1)
-        |SELECT d.doc_id, d.lang, round(coalesce(w.logw, 0), 4) AS dsir_logw
-        |FROM documents d LEFT JOIN w USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // same model, then Gumbel top-k: score = logw − ln(−ln(u)) with the
-    // md5-derived per-doc uniform, top 60 by (score desc, id asc)
-    "q_dsir_select" ->
-      """WITH tok AS (SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
-        |gr AS (SELECT doc_id, lang, unnest(list_concat(t,
-        |         list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS g
-        |       FROM tok),
-        |dc AS (SELECT doc_id, lang,
-        |         ('0x' || substr(md5(g), 1, 8))::UBIGINT % 64 AS bucket, count(*) AS cnt
-        |       FROM gr GROUP BY 1, 2, 3),
-        |pt AS (SELECT bucket, sum(cnt) AS c FROM dc WHERE lang = 'en' GROUP BY 1),
-        |qt AS (SELECT bucket, sum(cnt) AS c FROM dc GROUP BY 1),
-        |model AS (
-        |  SELECT r.range AS bucket,
-        |    ln((coalesce(p.c, 0) + 1.0) / ((SELECT sum(c) FROM pt) + 64.0))
-        |    - ln((coalesce(q.c, 0) + 1.0) / ((SELECT sum(c) FROM qt) + 64.0)) AS log_ratio
-        |  FROM range(0, 64) r
-        |  LEFT JOIN pt p ON p.bucket = r.range
-        |  LEFT JOIN qt q ON q.bucket = r.range),
-        |w AS (SELECT dc.doc_id, sum(dc.cnt * m.log_ratio) AS logw
-        |      FROM dc JOIN model m USING (bucket) GROUP BY 1),
-        |scored AS (
-        |  SELECT d.doc_id, d.lang, coalesce(w.logw, 0)
-        |    - ln(-ln((('0x' || substr(md5(d.doc_id::VARCHAR || 'dsir'), 1, 8))::UBIGINT + 1.0)
-        |             / 4294967297.0)) AS score
-        |  FROM documents d LEFT JOIN w USING (doc_id)),
-        |sel AS (SELECT * FROM scored ORDER BY score DESC, doc_id ASC LIMIT 60)
-        |SELECT doc_id, lang, round(score, 4) AS dsir_score FROM sel ORDER BY doc_id""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(900001 AS BIGINT), CAST(9100001 AS BIGINT), 1707000000000000),
-        |    (900001, 9100002, 1707001800000000),
-        |    (900002, 9100003, 1707000000000000),
-        |    (900002, 9100004, 1707001800000001)) v(user_id, event_id, us)),
-        |m AS (SELECT user_id, event_id, us,
-        |  CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-        |         OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > 1800000000
-        |       THEN 1 ELSE 0 END AS newsess FROM e),
-        |m2 AS (SELECT user_id, sum(newsess) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |         ROWS UNBOUNDED PRECEDING) AS sess FROM m),
-        |c AS (SELECT user_id, sess, count(*) AS cnt FROM m2 GROUP BY user_id, sess)
-        |SELECT user_id, count(*) AS n_sessions, CAST(max(cnt) AS BIGINT) AS max_session_events
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // batch mirror of the stream: sessionize on epoch millis (the stateful
-    // operator's clock), keep sessions whose timeout (end + gap) the final
-    // watermark (max event ms, 0s delay) strictly passed
-    // windowed all-pairs replay of the deterministic emission rule:
-    // (ts_a, id_a) < (ts_b, id_b), Δts within the horizon, shingle Jaccard
-    // ≥ 0.7 in list math (same shingle semantics as the batch oracle)
-    "q_dedup_stream" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |bed AS (
-        |  SELECT doc_id, (doc_id + 60) * 60000 AS ts_ms, text FROM base
-        |  UNION ALL SELECT doc_id + 1000000, (doc_id + 97) * 60000, text
-        |            FROM base WHERE doc_id % 25 = 0
-        |  UNION ALL SELECT doc_id + 2000000, (doc_id + 760) * 60000, text
-        |            FROM base WHERE doc_id % 25 = 0
-        |  UNION ALL SELECT p.doc_id, p.m * 60000, p.txt FROM (
-        |    SELECT 3000001 AS doc_id, 10000 AS m,
-        |      array_to_string(list_transform(range(1,84), i -> 'qsx'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,18), i -> 'qsa'||i), ' ') AS txt
-        |    UNION ALL SELECT 3000002, 10060,
-        |      array_to_string(list_transform(range(1,84), i -> 'qsx'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,18), i -> 'qsb'||i), ' ')
-        |    UNION ALL SELECT 3000003, 10010,
-        |      array_to_string(list_transform(range(1,83), i -> 'qsy'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,19), i -> 'qsc'||i), ' ')
-        |    UNION ALL SELECT 3000004, 10040,
-        |      array_to_string(list_transform(range(1,83), i -> 'qsy'||i), ' ') || ' ' ||
-        |      array_to_string(list_transform(range(1,19), i -> 'qsd'||i), ' ')
-        |    UNION ALL SELECT 3000005, 10020,
-        |      array_to_string(list_transform(range(1,41), i -> 'qsct'||i), ' ')
-        |    UNION ALL SELECT 3000006, 10140,
-        |      array_to_string(list_transform(range(1,41), i -> 'qsct'||i), ' ')
-        |    UNION ALL SELECT 3000007, 10030,
-        |      array_to_string(list_transform(range(1,41), i -> 'qsdt'||i), ' ')
-        |    UNION ALL SELECT 3000008, 10151,
-        |      array_to_string(list_transform(range(1,41), i -> 'qsdt'||i), ' ')) p),
-        |t AS (SELECT doc_id, ts_ms,
-        |      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM bed),
-        |sh AS (SELECT doc_id, ts_ms,
-        |  CASE WHEN len(toks) < 3 THEN list_distinct([array_to_string(toks, ' ')])
-        |  ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS s
-        |  FROM t WHERE len(toks) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-        |  FROM sh a JOIN sh b
-        |    ON (a.ts_ms < b.ts_ms OR (a.ts_ms = b.ts_ms AND a.doc_id < b.doc_id))
-        |   AND b.ts_ms - a.ts_ms <= 7200000)
-        |SELECT id_a, id_b, round(jac, 4) AS jaccard FROM pairs
-        |WHERE jac >= 0.7 ORDER BY id_a, id_b""".stripMargin,
-
-    // append-mode windowed counts replayed batch-side: tumbling 120-min
-    // windows, only windows whose end is within the final watermark
-    // (max event time) emit; top-3 rank per window (count desc, term asc)
-    "q_stream_trending" ->
-      """WITH t AS (SELECT (doc_id + 102) * 60000 AS ts_ms,
-        |             unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |           FROM documents),
-        |mx AS (SELECT max((doc_id + 102) * 60000) AS wm FROM documents),
-        |c AS (SELECT (ts_ms // 7200000) * 7200000 AS ws, term, count(*) AS cnt
-        |      FROM t GROUP BY 1, 2),
-        |closed AS (SELECT c.* FROM c CROSS JOIN mx WHERE c.ws + 7200000 <= mx.wm),
-        |r AS (SELECT ws, term, cnt, row_number() OVER (
-        |        PARTITION BY ws ORDER BY cnt DESC, term ASC) AS rnk
-        |      FROM closed)
-        |SELECT CAST(ws AS BIGINT) AS window_start_ms, term,
-        |       CAST(cnt AS BIGINT) AS cnt, CAST(rnk AS INTEGER) AS rnk
-        |FROM r WHERE rnk <= 3 ORDER BY window_start_ms, rnk""".stripMargin,
-
-    "q_sessionize_stream" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (CAST(900001 AS BIGINT), CAST(9100001 AS BIGINT), CAST(1707000000000 AS BIGINT)),
-        |    (900001, 9100002, 1707001800000),
-        |    (900002, 9100003, 1707000000000),
-        |    (900002, 9100004, 1707001800001),
-        |    (900003, 9100005, 1707089400000),
-        |    (900004, 9100006, 1707089399999),
-        |    (900009, 9100007, 1707091200000)) AS pv(user_id, event_id, ms)),
-        |mx AS (SELECT max(ms) AS wm FROM e),
-        |marked AS (
-        |  SELECT user_id, event_id, ms,
-        |         CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) IS NULL
-        |               OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) > 1800000
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, ms,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM marked),
-        |agg AS (
-        |  SELECT user_id, sid, count(*) AS n_events, max(ms) AS end_ms
-        |  FROM sess GROUP BY user_id, sid),
-        |closed AS (SELECT a.* FROM agg a CROSS JOIN mx WHERE a.end_ms + 1800000 < mx.wm)
-        |SELECT CAST(user_id AS BIGINT) AS user_id,
-        |       CAST(count(*) AS BIGINT) AS n_closed,
-        |       CAST(sum(n_events) AS BIGINT) AS events_closed,
-        |       CAST(max(n_events) AS BIGINT) AS max_session_events
-        |FROM closed GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // the md5 stub-feature rule replayed verbatim (payload = props UTF-8
-    // bytes ‖ dim-index byte; chr(1) encodes as the single byte 0x01, same
-    // bytes Spark's binary concat feeds md5); float32 cast mirrors the
-    // engine's array<float> storage
-    "q_multimodal_stub" ->
-      """SELECT event_id,
-        |  round(CAST(CAST(('0x' || substr(md5(props || chr(1)), 1, 8))::UBIGINT % 100000
-        |    AS DOUBLE) / 100000.0 AS REAL)::DOUBLE, 4) AS feat0
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // pure-arithmetic mirror of the real PNG round-trip: pixel i of doc d is
-    // (d*31+i) mod 256 gray, so mean luminance = list mean of that sequence
-    "q_multimodal_decode" ->
-      """SELECT doc_id,
-        |  CAST(4 + doc_id % 5 AS INT) AS width,
-        |  CAST(3 + doc_id % 7 AS INT) AS height,
-        |  round(list_avg(list_transform(
-        |    range((4 + doc_id % 5) * (3 + doc_id % 7)),
-        |    i -> CAST((doc_id * 31 + i) % 256 AS DOUBLE))), 4) AS mean_lum
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    // pure-arithmetic mirror of the real WAV round-trip: sample i of doc d is
-    // ((d*7+i) mod 201 - 100)*327 / 32768, so RMS = sqrt(mean of squares)
-    "q_multimodal_wav" ->
-      """SELECT doc_id,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(500 + doc_id % 300 AS BIGINT) AS n_samples,
-        |  round((500 + doc_id % 300) * 1000.0 / 8000, 4) AS duration_ms,
-        |  round(sqrt(list_avg(list_transform(
-        |    range(500 + doc_id % 300),
-        |    i -> pow(((doc_id * 7 + i) % 201 - 100) * 327 / 32768.0, 2)))), 4) AS rms
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    "q_classify_knn" ->
-      s"""WITH probes AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id % 100 = 0),
-         |pairs AS (
-         |  SELECT p.probe_id, e.vec_id, e.label, ${sqlL2("e.embedding", "p.pv")} AS dist
-         |  FROM embeddings e CROSS JOIN probes p WHERE e.vec_id <> p.probe_id),
-         |top AS (SELECT * FROM (
-         |  SELECT probe_id, vec_id, label,
-         |         row_number() OVER (PARTITION BY probe_id ORDER BY dist ASC, vec_id ASC) AS rnk
-         |  FROM pairs) WHERE rnk <= 5),
-         |v AS (SELECT probe_id, label, count(*) AS votes FROM top GROUP BY probe_id, label),
-         |pick AS (SELECT probe_id, label, votes,
-         |         row_number() OVER (PARTITION BY probe_id ORDER BY votes DESC, label ASC) AS rn FROM v)
-         |SELECT probe_id, label AS predicted_label, votes FROM pick WHERE rn = 1 ORDER BY probe_id""".stripMargin,
-
-    "q_classify_writeback" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, embedding, CAST(label AS BIGINT) AS lbl FROM embeddings),
-         |train AS (
-         |  SELECT vec_id, embedding, lbl, 1 AS nlab FROM base WHERE vec_id % 5 <> 0
-         |  UNION ALL
-         |  SELECT 100000, embedding, NULL, 2 FROM base WHERE vec_id = 0),
-         |probes AS (SELECT vec_id AS pid, embedding AS pv FROM base WHERE vec_id % 5 = 0),
-         |pairs AS (
-         |  SELECT p.pid, t.vec_id, t.lbl, t.nlab,
-         |         ${sqlCosine("t.embedding", "p.pv")} / 2 AS nd
-         |  FROM train t CROSS JOIN probes p),
-         |top AS (SELECT * FROM (
-         |  SELECT pid, vec_id, lbl, nlab, nd,
-         |         row_number() OVER (PARTITION BY pid ORDER BY nd ASC, vec_id ASC) AS rnk
-         |  FROM pairs) WHERE rnk <= 5),
-         |bad AS (SELECT pid FROM top GROUP BY pid HAVING max(nlab) > 1),
-         |ok AS (SELECT * FROM top WHERE pid NOT IN (SELECT pid FROM bad)),
-         |perlbl AS (SELECT pid, lbl, count(*) AS votes, min(nd) AS mind, sum(nd) AS sumd
-         |  FROM ok GROUP BY pid, lbl),
-         |win AS (SELECT pid, lbl AS wlbl, votes AS wc, mind AS cwd, sumd / votes AS mwd FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY pid ORDER BY votes DESC, lbl ASC) AS rn
-         |  FROM perlbl) WHERE rn = 1),
-         |lose AS (SELECT p.pid, sum(p.votes) AS lc, min(p.mind) AS cld,
-         |         sum(p.sumd) / sum(p.votes) AS mld
-         |  FROM perlbl p JOIN win w ON p.pid = w.pid AND p.lbl <> w.wlbl GROUP BY p.pid),
-         |tot AS (SELECT pid, count(*) AS oc, min(nd) AS cod FROM ok GROUP BY pid),
-         |rep AS (SELECT (SELECT count(*) FROM probes) AS cnt,
-         |               (SELECT count(*) FROM bad) AS failed)
-         |SELECT w.pid AS vec_id, w.wlbl AS assigned,
-         |  t.oc AS overall_count, CAST(w.wc AS BIGINT) AS winning_count,
-         |  CAST(coalesce(l.lc, 0) AS BIGINT) AS losing_count,
-         |  round(t.cod, 4) AS closest_overall, round(w.cwd, 4) AS closest_winning,
-         |  round(w.mwd, 4) AS mean_winning, round(l.cld, 4) AS closest_losing,
-         |  round(l.mld, 4) AS mean_losing,
-         |  'label_ref' AS fields, 'label_ref' AS scope,
-         |  rep.cnt AS rp_count, rep.cnt - rep.failed AS rp_succeeded,
-         |  rep.failed AS rp_failed, 'completed' AS rp_status
-         |FROM win w JOIN tot t ON w.pid = t.pid LEFT JOIN lose l ON w.pid = l.pid
-         |CROSS JOIN rep
-         |ORDER BY vec_id""".stripMargin,
-
-    "q_ref2vec" ->
-      """SELECT d.lang,
-        |  round(avg(CAST(e.embedding[1] AS DOUBLE)), 4) AS dim0,
-        |  round(avg(CAST(e.embedding[2] AS DOUBLE)), 4) AS dim1
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-
-    "q_bpe_train" -> (bpeCtes(6) + """
-        |SELECT rank, pair, cnt FROM (
-        |""".stripMargin +
-      (1 to 6).map(i => s"  SELECT $i AS rank, pair, cnt FROM b$i")
-        .mkString("", "\n  UNION ALL\n", "\n") +
-      ") ORDER BY rank"),
-
-    "q_wordpiece_train" -> (wpCtes(6) + """
-        |SELECT rank, pair, cnt FROM (
-        |""".stripMargin +
-      (1 to 6).map(i => s"  SELECT $i AS rank, pair, cnt FROM b$i")
-        .mkString("", "\n  UNION ALL\n", "\n") +
-      ") ORDER BY rank"),
-
-    "q_wordpiece_encode" -> (wpCtes(6) + wpGreedyCtes(6, steps = 12) + """
-        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-        |       array_to_string(toks[1:10], '|') AS head
-        |FROM enc ORDER BY doc_id""".stripMargin),
-
-    "q_unigram_train" -> (unigramCtes(seedSize = 96, maxL = 4, rounds = 2,
-      positions = 12, withEncode = false) + """
-        |SELECT c.piece, c.cnt, round(q.p, 6) AS prob
-        |FROM c2 c JOIN q2 q USING (piece)
-        |WHERE (SELECT ok FROM scan_ok)
-        |ORDER BY q.p DESC, c.piece ASC""".stripMargin),
-
-    "q_unigram_encode" -> (unigramCtes(seedSize = 96, maxL = 4, rounds = 2,
-      positions = 12, withEncode = true) + """
-        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-        |       array_to_string(toks[1:10], '|') AS head
-        |FROM enc ORDER BY doc_id""".stripMargin),
-
-    "q_bpe_encode" -> (bpeCtes(6) + """,
-        |dw AS (SELECT doc_id, i, ws[i] AS w FROM (
-        |    SELECT doc_id,
-        |           list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS ws
-        |    FROM documents) d, unnest(range(1, len(ws) + 1)) AS u(i)),
-        |jt AS (SELECT dw.doc_id, dw.i, string_split(trim(wk.seg), '  ') AS syms
-        |       FROM dw JOIN w6 wk ON dw.w = wk.w),
-        |enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS toks
-        |        FROM jt GROUP BY doc_id)
-        |SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-        |       array_to_string(toks[1:10], '|') AS head
-        |FROM enc ORDER BY doc_id""".stripMargin)
-  )
 }

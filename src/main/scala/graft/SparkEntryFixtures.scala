@@ -29,15 +29,14 @@ import graft.engine.{Graft, GraphQL}
  */
 object SparkEntryFixtures {
 
+  import Gate.{okOr, steps}
+
   private def cg(s: SparkSession): Graft = CitiesFixture.graft(s)
 
   /** One Get document → the name column joined "a,b,∅" in returned order. */
   private def namesCsv(g: Graft, doc: String): String =
     g.get(GraphQL.get(g, doc)).select(col("name")).collect()
       .map(r => if (r.isNullAt(0)) "∅" else r.getString(0)).mkString(",")
-
-  private def okOr(body: => Any): String =
-    try { body; "ok" } catch { case e: Throwable => e.getMessage }
 
   /** Compact numeric render: round(4) then strip trailing zeros; null = ∅. */
   private def fmt(a: Any): String = a match {
@@ -49,52 +48,52 @@ object SparkEntryFixtures {
     case other => other.toString
   }
 
-  private def steps(s: SparkSession,
-                    rows: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("step", "result").orderBy(col("step"))
-  }
-
   /** The boost suite's Song bed (boost_test.go): 100 songs with formulaic
    * likes/dates/4-d trig vectors. Read-only after registration →
    * session-cached (same pattern as CitiesFixture). */
   private def songVecOf(i: Int): Seq[Float] = Seq(
     (math.sin(i * 0.7) * 0.5).toFloat, (math.cos(i * 1.3) * 0.5).toFloat,
     (math.sin(i * 2.1 + 1.0) * 0.5).toFloat, (math.cos(i * 0.3 + 2.0) * 0.5).toFloat)
-  private val songCache = scala.collection.mutable.Map.empty[SparkSession, Graft]
-  private[graft] def songGraft(s: SparkSession): Graft =
-    songCache.synchronized(songCache.getOrElseUpdate(s, {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      import graft.model.{CollectionSchema, Property, PropType, Tokenization}
-      val gg = new Graft(s)
-      val baseMs = java.time.Instant.parse("2025-01-01T00:00:00Z").toEpochMilli
-      gg.register(CollectionSchema("Song", "uuid", Seq(
-        Property("name", PropType.Text, Tokenization.Word),
-        Property("likes", PropType.Number),
-        Property("date_published", PropType.Date)),
-        vectors = Map("default" -> "vector"), defaultVector = Some("default")),
-        s.createDataFrame(java.util.Arrays.asList((0 until 100).map { i =>
-          val likes = ((i * 7 + 13) % 100 * 10).toDouble
-          val dayOffset = (i * 3 + 5) % 200
-          Row(f"77000000-0000-4000-8000-$i%012d", f"Song $i%03d", likes,
-            new java.sql.Timestamp(baseMs - dayOffset * 24L * 3600 * 1000),
-            songVecOf(i))
-        }: _*), StructType(Seq(StructField("uuid", StringType),
-          StructField("name", StringType), StructField("likes", DoubleType),
-          StructField("date_published", TimestampType),
-          StructField("vector", ArrayType(FloatType))))).cache())
-      gg
-    }))
+  private[graft] def songGraft(s: SparkSession): Graft = Fixtures.cached(s, "songs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.model.{CollectionSchema, Property, PropType, Tokenization}
+    val gg = new Graft(s)
+    val baseMs = java.time.Instant.parse("2025-01-01T00:00:00Z").toEpochMilli
+    gg.register(CollectionSchema("Song", "uuid", Seq(
+      Property("name", PropType.Text, Tokenization.Word),
+      Property("likes", PropType.Number),
+      Property("date_published", PropType.Date)),
+      vectors = Map("default" -> "vector"), defaultVector = Some("default")),
+      s.createDataFrame(java.util.Arrays.asList((0 until 100).map { i =>
+        val likes = ((i * 7 + 13) % 100 * 10).toDouble
+        val dayOffset = (i * 3 + 5) % 200
+        Row(f"77000000-0000-4000-8000-$i%012d", f"Song $i%03d", likes,
+          new java.sql.Timestamp(baseMs - dayOffset * 24L * 3600 * 1000),
+          songVecOf(i))
+      }: _*), StructType(Seq(StructField("uuid", StringType),
+        StructField("name", StringType), StructField("likes", DoubleType),
+        StructField("date_published", TimestampType),
+        StructField("vector", ArrayType(FloatType))))).cache())
+    gg
+  }
 
   // ==========================================================================
   // queries
   // ==========================================================================
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def gates: Seq[Gate] = Seq(
 
     // local_get_test.go: uuid-ordered listing/paging + cref relations
-    "q_fixture_get" -> ((s, _) => {
+    Gate("q_fixture_get", values(Seq(
+      "01_all" -> "Rotterdam,Dusseldorf,Missing Island,∅,Amsterdam,Berlin",
+      "02_limit" -> "Rotterdam,Dusseldorf",
+      "03_offset_limit" -> "Missing Island,∅",
+      "04_offset" -> "Missing Island,∅,Amsterdam,Berlin",
+      "05_offset_limit_beyond" -> "Berlin",
+      "06_offset_beyond" -> "",
+      "07_relations" -> ("Rotterdam>[Netherlands],Dusseldorf>[Germany]," +
+        "Missing Island>∅,∅>∅,Amsterdam>[Netherlands],Berlin>[Germany]")))) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       out += "01_all" -> namesCsv(g, "{ Get { City { name } } }")
@@ -114,11 +113,80 @@ object SparkEntryFixtures {
           }.mkString(",")
       }
       steps(s, out.result())
-    }),
+    },
 
     // local_get_with_sort_test.go:38-581 — every simple + complex sort case,
     // each also re-run with the suite's limit-4 variant
-    "q_fixture_sort" -> ((s, _) => {
+    Gate("q_fixture_sort", values(Seq(
+      "01_name_asc_full" -> "∅,Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
+      "01_name_asc_lim4" -> "∅,Amsterdam,Berlin,Dusseldorf",
+      "02_name_desc_full" -> "Rotterdam,Missing Island,Dusseldorf,Berlin,Amsterdam,∅",
+      "02_name_desc_lim4" -> "Rotterdam,Missing Island,Dusseldorf,Berlin",
+      "03_pop_asc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Amsterdam,Berlin",
+      "03_pop_asc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
+      "04_pop_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
+      "04_pop_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
+      "05_cap_asc_full" -> "∅,Rotterdam,Dusseldorf,Missing Island,Amsterdam,Berlin",
+      "05_cap_asc_lim4" -> "∅,Rotterdam,Dusseldorf,Missing Island",
+      "06_cap_desc_full" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf,Missing Island,∅",
+      "06_cap_desc_lim4" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf",
+      "07_area_asc_full" -> "Missing Island,∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "07_area_asc_lim4" -> "Missing Island,∅,Dusseldorf,Rotterdam",
+      "08_area_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
+      "08_area_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
+      "09_rights_asc_full" -> "Missing Island,∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "09_rights_asc_lim4" -> "Missing Island,∅,Dusseldorf,Rotterdam",
+      "10_rights_desc_full" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf,Missing Island,∅",
+      "10_rights_desc_lim4" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf",
+      "11_tz_asc_full" -> "Missing Island,∅,Rotterdam,Dusseldorf,Amsterdam,Berlin",
+      "11_tz_asc_lim4" -> "Missing Island,∅,Rotterdam,Dusseldorf",
+      "12_tz_desc_full" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin,Missing Island,∅",
+      "12_tz_desc_lim4" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin",
+      "13_museums_asc_full" -> "Missing Island,∅,Berlin,Rotterdam,Dusseldorf,Amsterdam",
+      "13_museums_asc_lim4" -> "Missing Island,∅,Berlin,Rotterdam",
+      "14_museums_desc_full" -> "Amsterdam,Dusseldorf,Rotterdam,Berlin,Missing Island,∅",
+      "14_museums_desc_lim4" -> "Amsterdam,Dusseldorf,Rotterdam,Berlin",
+      "15_history_asc_full" -> "Missing Island,∅,Amsterdam,Rotterdam,Berlin,Dusseldorf",
+      "15_history_asc_lim4" -> "Missing Island,∅,Amsterdam,Rotterdam",
+      "16_history_desc_full" -> "Dusseldorf,Berlin,Rotterdam,Amsterdam,Missing Island,∅",
+      "16_history_desc_lim4" -> "Dusseldorf,Berlin,Rotterdam,Amsterdam",
+      "17_phone_asc_full" -> "Missing Island,∅,Rotterdam,Dusseldorf,Berlin,Amsterdam",
+      "17_phone_asc_lim4" -> "Missing Island,∅,Rotterdam,Dusseldorf",
+      "18_phone_desc_full" -> "Amsterdam,Berlin,Dusseldorf,Rotterdam,Missing Island,∅",
+      "18_phone_desc_lim4" -> "Amsterdam,Berlin,Dusseldorf,Rotterdam",
+      "19_loc_asc_full" -> "Rotterdam,∅,Berlin,Missing Island,Amsterdam,Dusseldorf",
+      "19_loc_asc_lim4" -> "Rotterdam,∅,Berlin,Missing Island",
+      "20_loc_desc_full" -> "Dusseldorf,Amsterdam,Missing Island,Rotterdam,∅,Berlin",
+      "20_loc_desc_lim4" -> "Dusseldorf,Amsterdam,Missing Island,Rotterdam",
+      "21_pop_name_asc_full" -> "∅,Missing Island,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "21_pop_name_asc_lim4" -> "∅,Missing Island,Dusseldorf,Rotterdam",
+      "22_pop_asc_name_desc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Amsterdam,Berlin",
+      "22_pop_asc_name_desc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
+      "23_name_asc_pop_desc_full" -> "∅,Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
+      "23_name_asc_pop_desc_lim4" -> "∅,Amsterdam,Berlin,Dusseldorf",
+      "24_pop_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
+      "24_pop_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
+      "25_phone_pop_name_asc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Berlin,Amsterdam",
+      "25_phone_pop_name_asc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
+      "26_cap_asc_name_asc_full" -> "∅,Dusseldorf,Missing Island,Rotterdam,Amsterdam,Berlin",
+      "26_cap_asc_name_asc_lim4" -> "∅,Dusseldorf,Missing Island,Rotterdam",
+      "27_cap_asc_name_desc_full" -> "∅,Rotterdam,Missing Island,Dusseldorf,Berlin,Amsterdam",
+      "27_cap_asc_name_desc_lim4" -> "∅,Rotterdam,Missing Island,Dusseldorf",
+      "28_cap_desc_name_asc_full" -> "Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam,∅",
+      "28_cap_desc_name_asc_lim4" -> "Amsterdam,Berlin,Dusseldorf,Missing Island",
+      "29_cap_desc_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Missing Island,Dusseldorf,∅",
+      "29_cap_desc_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Missing Island",
+      "30_cap_asc_pop_desc_name_asc_full" -> "∅,Dusseldorf,Rotterdam,Missing Island,Berlin,Amsterdam",
+      "30_cap_asc_pop_desc_name_asc_lim4" -> "∅,Dusseldorf,Rotterdam,Missing Island",
+      "31_cap_desc_pop_desc_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
+      "31_cap_desc_pop_desc_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
+      "32_cap_tz_rights_name_asc_full" -> "∅,Missing Island,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "32_cap_tz_rights_name_asc_lim4" -> "∅,Missing Island,Dusseldorf,Rotterdam",
+      "33_cap_desc_tz_rights_asc_name_desc_full" -> "Berlin,Amsterdam,Missing Island,Dusseldorf,Rotterdam,∅",
+      "33_cap_desc_tz_rights_asc_name_desc_lim4" -> "Berlin,Amsterdam,Missing Island,Dusseldorf",
+      "34_sort_where_loc_asc" -> "Missing Island,Dusseldorf",
+      "35_sort_where_loc_desc" -> "Dusseldorf,Missing Island",
+      "36_sort_where_nonexistent" -> ""))) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       def simple(step: String, prop: String, order: String): Unit = {
@@ -177,11 +245,27 @@ object SparkEntryFixtures {
         """{ Get { City(sort: [{path: ["location"] order: asc}]
           |  where: {valueText: "non-existent-uuid", path: ["id"], operator: Equal}) { name } } }""".stripMargin)
       steps(s, out.result())
-    }),
+    },
 
     // local_get_with_sort_test.go:660-1134 — sort combined with nearText
     // radii/certainties, with and without limits and where
-    "q_fixture_sort_near" -> ((s, _) => {
+    Gate("q_fixture_sort_near", values(Seq(
+      "01_dist_name_asc" -> "∅,Amsterdam,Berlin,Dusseldorf,Rotterdam",
+      "02_dist_name_desc" -> "Rotterdam,Dusseldorf,Berlin,Amsterdam,∅",
+      "03_dist_pop_asc" -> "∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "04_dist_pop_desc" -> "Berlin,Amsterdam,Dusseldorf,Rotterdam,∅",
+      "05_cert_name_asc" -> "∅,Amsterdam,Berlin,Dusseldorf,Rotterdam",
+      "06_cert_name_desc" -> "Rotterdam,Dusseldorf,Berlin,Amsterdam,∅",
+      "07_cert_pop_asc" -> "∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
+      "08_cert_pop_desc" -> "Berlin,Amsterdam,Dusseldorf,Rotterdam,∅",
+      "09_dist_lim2_name_asc" -> "Amsterdam,Berlin",
+      "10_dist_lim2_name_desc" -> "Berlin,Amsterdam",
+      "11_dist_lim2_pop_asc" -> "Amsterdam,Berlin",
+      "12_cert_lim2_pop_desc" -> "Berlin,Amsterdam",
+      "13_where_dist_name_asc" -> "Amsterdam,Berlin",
+      "14_where_dist_name_desc" -> "Berlin,Amsterdam",
+      "15_where_cert_pop_asc" -> "Amsterdam,Berlin",
+      "16_where_cert_pop_desc" -> "Berlin,Amsterdam"))) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       def near(step: String, argName: String, argVal: String, sort: String,
@@ -214,10 +298,21 @@ object SparkEntryFixtures {
       whereNear("15_where_cert_pop_asc", "certainty", "0.7", k("population", "asc"))
       whereNear("16_where_cert_pop_desc", "certainty", "0.7", k("population", "desc"))
       steps(s, out.result())
-    }),
+    },
 
     // local_get_with_filter_test.go — the cities-schema filter journeys
-    "q_fixture_filter" -> ((s, _) => {
+    Gate("q_fixture_filter", values(Seq(
+      "01_control" -> "10000,30000,40000,20000",
+      "02_neartext_len" -> "Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
+      "03_neartext_isnull" -> "∅",
+      "04_ref_2hop" -> "40000",
+      "05_phone_via_ref" -> "+31 1234567|31|1234567",
+      "06_uuid_ranges" -> "20000",
+      "07_filter_by_id" -> "+31 1234567|31|1234567",
+      "08_isnull_true" -> "Missing Island,∅",
+      "09_isnull_false" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin",
+      "10_creation_ms_text" -> "4770bb19-20fd-406e-ac64-9dac54c27a0f",
+      "11_creation_date_gte" -> "4"))) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       def codes(doc: String): String =
@@ -275,11 +370,14 @@ object SparkEntryFixtures {
              |  valueDate: "$date"}) { _additional { id } } } }""".stripMargin)).count().toString
       }
       steps(s, out.result())
-    }),
+    },
 
     // local_get_with_geo_range_filter_test.go — incl. the gh-825 (0,0) case;
     // lat/lon render as the reference's float32 values
-    "q_fixture_geo" -> ((s, _) => {
+    Gate("q_fixture_geo", values(Seq(
+      "01_100km_dusseldorf" -> "Dusseldorf@51.225555,6.782778",
+      "02_200km_dusseldorf" -> "Dusseldorf@51.225555,6.782778;Amsterdam@52.36667,4.9",
+      "03_null_island" -> "Missing Island@0.0,0.0"))) { (s, _) =>
       val g = cg(s)
       def geo(lat: String, lon: String, meters: Int): String =
         cgGeo(g, lat, lon, meters)
@@ -287,12 +385,28 @@ object SparkEntryFixtures {
         "01_100km_dusseldorf" -> geo("51.225556", "6.782778", 100000),
         "02_200km_dusseldorf" -> geo("51.225556", "6.782778", 200000),
         "03_null_island" -> geo("0", "0", 20)))
-    }),
+    },
 
     // broken sort clauses + unknown class + aggregate search-bound errors —
     // verbatim reference texts (sort_test.go:1136-1219,
     // local_aggregate_with_expected_failures.go)
-    "q_fixture_errors" -> ((s, _) => {
+    Gate("q_fixture_errors", values(Seq(
+      "01_empty_path" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
+        "path parameter cannot be empty"),
+      "02_empty_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
+        "no such prop with name '' found in class 'City' in the schema. " +
+        "Check your schema files for which properties in this class are available"),
+      "03_ref_path" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
+        "sorting by reference not supported, path must have exactly one argument"),
+      "04_unknown_class" -> """Cannot query field "NonExistentClass" on type "GetObjectsObj".""",
+      "05_unknown_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
+        "no such prop with name 'nonexistentproperty' found in class 'City' in the schema. " +
+        "Check your schema files for which properties in this class are available"),
+      "06_ref_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
+        "sorting by reference not supported, " +
+        "property \"inCountry\" is a ref prop to the class \"Country\""),
+      "07_agg_near_unbounded" -> "must provide certainty or objectLimit with vector search",
+      "08_agg_objectlimit_no_near" -> "objectLimit can only be used with a near<Media> or hybrid filter"))) { (s, _) =>
       val g = cg(s)
       def getErr(doc: String): String = okOr(g.get(GraphQL.get(g, doc)))
       steps(s, Seq(
@@ -309,11 +423,26 @@ object SparkEntryFixtures {
              |  { meta { count } } } }""".stripMargin))),
         "08_agg_objectlimit_no_near" -> okOr(GraphQL.aggregate(g,
           "{ Aggregate { City(objectLimit: 1) { meta { count } } } }"))))
-    }),
+    },
 
     // the aggregate matrix, City class, no groupBy
     // (local_aggregate_matrix_no_groupby_test.go:195-290 × setup:893-1060)
-    "q_fixture_agg" -> ((s, _) => {
+    Gate("q_fixture_agg", values(Seq(
+      "a01_without_filters" -> AggAll,
+      "a02_where_like_all" -> AggAll,
+      "a03_where_iscapital" -> AggWithData,
+      "a04_where_like_nullisland" -> AggWithoutData,
+      "a05_where_like_nonexistent" -> AggNoResults,
+      "a06_nearobj_cert01" -> AggAll,
+      "a07_nearobj_cert081" -> AggWithData,
+      "a08_nearobj_null_cert09" -> AggWithoutData,
+      "a09_where_all_nearobj_cert01" -> AggAll,
+      "a10_where_cap_nearobj_cert081" -> AggWithData,
+      "a11_where_null_nearobj_null_cert09" -> AggWithoutData,
+      "a12_where_none_nearobj_cert01" -> AggNoResults,
+      "a13_topocc_name" -> ("Amsterdam=1,Berlin=1,Dusseldorf=1,Missing Island=1,Rotterdam=1"),
+      "a14_topocc_museums" -> ("German Historical Museum=1,Museum Boijmans Van Beuningen=1," +
+        "Onomato=1,Rijksmuseum=1,Schiffahrt Museum=1")))) { (s, _) =>
       val g = cg(s)
       def arm(filters: String): String = {
         val row = g.aggregate(GraphQL.aggregate(g,
@@ -382,11 +511,19 @@ object SparkEntryFixtures {
              |nearObject: {id: "$berlin" certainty: 0.1}""".stripMargin),
         "a13_topocc_name" -> topOcc("name"),
         "a14_topocc_museums" -> topOcc("museums")))
-    }),
+    },
 
     // the aggregate matrix, City class, groupBy cityArea
     // (local_aggregate_matrix_groupby_test.go:943-1070)
-    "q_fixture_agg_group" -> ((s, _) => {
+    Gate("q_fixture_agg_group", values(Seq(
+      "g01_217.22" -> "meta=1;pop=600000;museums=3;name=1",
+      "g01_319.35" -> "meta=1;pop=600000;museums=3;name=1",
+      "g01_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
+      "g01_891.96" -> "meta=1;pop=3470000;museums=1;name=1",
+      "g02_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
+      "g02_891.96" -> "meta=1;pop=3470000;museums=1;name=1",
+      "g03_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
+      "g03_891.96" -> "meta=1;pop=3470000;museums=1;name=1"))) { (s, _) =>
       val g = cg(s)
       def arm(tag: String, filters: String): Seq[(String, String)] =
         g.aggregate(GraphQL.aggregate(g,
@@ -406,14 +543,20 @@ object SparkEntryFixtures {
       steps(s, arm("g01", "") ++
         arm("g02", """where: {operator: Equal, path: ["isCapital"], valueBoolean: true}""") ++
         arm("g03", s"""nearObject: {id: "${CitiesFixture.Berlin}" certainty: 0.81}"""))
-    }),
+    },
 
     // groupBy + bm25 over the CompanyGroup bed
     // (local_get_with_group_by_test.go groupByBm25): group order by best
     // BM25 rank, in-group hits in rank order, pinned ids verbatim —
     // zero-score objects form no hit, so the google-only city set still
     // yields exactly three groups
-    "q_fixture_group_bm25" -> ((s, _) => {
+    // groupBy+bm25: the acceptance-pinned group order and hit ids
+    Gate("q_fixture_group_bm25",
+      """SELECT * FROM (VALUES
+        |  ('01_group', 'berlin;hits=177fec91-1292-4928-8f53-f0ff49c76900|1343f51d-7e05-4084-bd66-d504db3b6bec'),
+        |  ('02_group', 'dusseldorf;hits=1fa3b21e-ca4f-4db7-a432-7fc6a23c534d|1b2cfdba-d4ba-4cf8-abda-e719ef35ac33'),
+        |  ('03_group', 'amsterdam;hits=171d2b4c-3da1-4684-9c5e-aabd2a4f2998|1c2e21fc-46fe-4999-b41c-a800595129af|1f75ed97-39dd-4294-bff7-ecabd7923062')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val page = g.get(GraphQL.get(g,
         """{ Get { CompanyGroup(
@@ -426,14 +569,21 @@ object SparkEntryFixtures {
         val ordered = hits.sortBy(_.getLong(1)).map(_.getString(3)).mkString("|")
         s"0${idx}_group" -> s"${hits.head.getString(2)};hits=$ordered"
       })
-    }),
+    },
 
     // the shadowed-uuid suite (local_get_shadow_test.go + setup
     // addTestDataNearObjectSearch): the same uuids live in two classes —
     // Get/Aggregate nearObject resolve the anchor from the QUERIED class
     // (certainty 0.98 returns only itself), while Explore fans across both
     // classes and returns both shadows of the anchor id
-    "q_fixture_shadow" -> ((s, _) => {
+    // shadow suite: the reference-asserted pages/beacons
+    Gate("q_fixture_shadow",
+      """SELECT * FROM (VALUES
+        |  ('01_get', 'Mount Everest'),
+        |  ('02_aggregate', '1'),
+        |  ('03_explore_same', 'weaviate://localhost/NearObjectSearch/aa44bbee-ca5f-4db7-a412-5fc6a2300011,weaviate://localhost/NearObjectSearchShadow/aa44bbee-ca5f-4db7-a412-5fc6a2300011'),
+        |  ('04_explore_diff', 'weaviate://localhost/NearObjectSearch/aa44bbee-ca5f-4db7-a412-5fc6a2300001,weaviate://localhost/NearObjectSearchShadow/aa44bbee-ca5f-4db7-a412-5fc6a2300001')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val anchor1 = "aa44bbee-ca5f-4db7-a412-5fc6a2300001"
       val same = "aa44bbee-ca5f-4db7-a412-5fc6a2300011"
@@ -458,7 +608,7 @@ object SparkEntryFixtures {
       out += "03_explore_same" -> explore(same)
       out += "04_explore_diff" -> explore(anchor1)
       steps(s, out.result())
-    }),
+    },
 
     // TestMultipleRefTypeIssues (multi_reftype_bug_test.go — the regression
     // suite for weaviate issue #1410): ONE cref property whose dataType
@@ -469,7 +619,19 @@ object SparkEntryFixtures {
     // (multi_reftype_bug_test.go:37-38); source uuids are engine-assigned
     // (the test auto-generates them) and rows render SORTED BY NAME because
     // the Go test asserts with ElementsMatch (order-insensitive).
-    "q_fixture_multiref" -> ((s, _) => {
+    // multi-class cref regression (issue #1410): the reference-asserted
+    // pages of multi_reftype_bug_test.go:150-501, rows sorted by name
+    // (the Go test compares with ElementsMatch)
+    Gate("q_fixture_multiref",
+      """SELECT * FROM (VALUES
+        |  ('01_norefs', 'source with ref to One,source with ref to Two,source with ref to both,source without refs'),
+        |  ('02_one', 'source with ref to One>[target a],source with ref to Two>∅,source with ref to both>[target a],source without refs>∅'),
+        |  ('03_one_id', 'source with ref to One>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source with ref to Two>∅,source with ref to both>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source without refs>∅'),
+        |  ('04_two', 'source with ref to One>∅,source with ref to Two>[target b],source with ref to both>[target b],source without refs>∅'),
+        |  ('05_two_id', 'source with ref to One>∅,source with ref to Two>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source with ref to both>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source without refs>∅'),
+        |  ('06_both', 'source with ref to One>[target a],source with ref to Two>[target b],source with ref to both>[target a|target b],source without refs>∅'),
+        |  ('07_both_id', 'source with ref to One>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source with ref to Two>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source with ref to both>[target a@155c5914-6594-4cde-b3ab-f8570b561965|target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source without refs>∅')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.sources.SchemaWire
@@ -545,7 +707,7 @@ object SparkEntryFixtures {
            |  ${frag("MultiRefTypeBugTargetOne", true)}
            |  ${frag("MultiRefTypeBugTargetTwo", true)} } } } }""".stripMargin, true)
       steps(s, out.result())
-    }),
+    },
 
     // getWithHybridSearch (local_get_hybrid_search_test.go): the hybrid
     // acceptance arms over the Airport/Company beds. The suite's appleVec
@@ -554,7 +716,20 @@ object SparkEntryFixtures {
     // (assert.Contains) render as name-sorted pages. The _additional.vector
     // arm asserts non-empty vectors per row (the stand-in space is 3-dim
     // where contextionary is 300 — the count contract is what replays).
-    "q_fixture_hybrid" -> ((s, _) => {
+    // hybrid acceptance arms (local_get_hybrid_search_test.go): the
+    // reference-asserted pages/counts — top-2 membership for the Apple arms,
+    // full-corpus counts for the unbounded ones, all four airports with
+    // their cities for the with-references arm
+    Gate("q_fixture_hybrid",
+      """SELECT * FROM (VALUES
+        |  ('01_alpha0_bm25', '10000'),
+        |  ('02_limit_vector', 'Apple,Apple Inc.'),
+        |  ('03_limit_novector', 'Apple,Apple Inc.'),
+        |  ('04_all_vector', '9'),
+        |  ('05_all_novector', '9'),
+        |  ('06_additional_vector', 'rows=9;vecs=9'),
+        |  ('07_refs', '10000>[Amsterdam],20000>[Rotterdam],30000>[Dusseldorf],40000>[Berlin]')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val vecLit = CitiesFixture.appleVec.mkString("[", ", ", "]")
       def names(doc: String): Array[String] =
@@ -587,14 +762,22 @@ object SparkEntryFixtures {
         .collect().map(r => s"${r.getString(0)}>${r.getSeq[String](1).mkString("[", "|", "]")}")
         .sorted.mkString(",")
       steps(s, out.result())
-    }),
+    },
 
     // hybridSearchGroupByArrayTests (hybrid_group_by_array_test.go): hybrid
     // + groupBy over text[] properties, the suite's own 4-document bed with
     // its verbatim uuids/tags/categories. Stand-in vectors unit(i*10) — the
     // replayed assertions (group membership + counts after objectsPerGroup)
     // are rank-independent, rendered value-sorted.
-    "q_fixture_hybrid_group" -> ((s, _) => {
+    // hybrid groupBy over text[] (hybrid_group_by_array_test.go): every tag
+    // forms a group (objects join EVERY element's group), red=2, vehicle=3,
+    // and objectsPerGroup: 1 caps the red group at one hit
+    Gate("q_fixture_hybrid_group",
+      """SELECT * FROM (VALUES
+        |  ('01_tags_vehicle', 'blue=1,emergency=1,garden=1,green=1,red=2,sports=1,tool=1,vehicle=3,water=1'),
+        |  ('02_categories_automotive', 'automotive=2,emergency=1,garden=1,luxury=1,nautical=1,recreation=1,tools=1'),
+        |  ('03_objects_per_group_1', 'blue=1,emergency=1,garden=1,green=1,red=1,sports=1,tool=1,vehicle=1,water=1')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.sources.SchemaWire
@@ -648,13 +831,24 @@ object SparkEntryFixtures {
           |    groupBy: {path: ["tags"] groups: 10 objectsPerGroup: 1})
           |  { _additional { group { groupedBy { value } count hits { _additional { id } } } } } } }""".stripMargin)
       steps(s, out.result())
-    }),
+    },
 
     // aggregationWithHybridSearch (local_aggregate_hybrid_search_test.go):
     // hybrid-scoped aggregation over the Company bed — topOccurrences under
     // objectLimit, groupBy with a sparse-only leg, nearText subsearches
     // (plain / with moves), and the nearText+nearVector conflict error.
-    "q_fixture_hybrid_agg" -> ((s, _) => {
+    // hybrid aggregation (local_aggregate_hybrid_search_test.go): the 5
+    // topOccurrences values (count ties broken value-asc), the 3 sparse-only
+    // Google groups, 9 groups under each nearText subsearch, and the
+    // nearText+nearVector conflict rejection
+    Gate("q_fixture_hybrid_agg",
+      """SELECT * FROM (VALUES
+        |  ('01_topoccurrences', 'Apple|Apple Inc.|Apple Incorporated|Google|Google Inc.'),
+        |  ('02_group_sparse', 'Google,Google Inc.,Google Incorporated'),
+        |  ('03_group_neartext', '9'),
+        |  ('04_group_moves', '9'),
+        |  ('05_conflict', 'failed to extract hybrid params: hybrid search cannot have both nearText and nearVector parameters')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       out += "01_topoccurrences" -> {
@@ -698,14 +892,26 @@ object SparkEntryFixtures {
           |      nearVector: {vector: [0.1, 0.2, 0.3]}}})
           |  { name { topOccurrences { value } } } } }""".stripMargin))
       steps(s, out.result())
-    }),
+    },
 
     // gettingObjectsWithAdditionalProps (local_get_with_additional_test.go):
     // the `_additional` resolver matrix over Company/City — vector validity,
     // the EXACT interpretation concepts (vectorizeClassName: false, word-
     // tokenized corpus), nearestNeighbors non-emptiness, featureProjection
     // dimensions, and vector/timestamps on RESOLVED REFERENCES.
-    "q_fixture_additional" -> ((s, _) => {
+    // _additional resolver matrix (local_get_with_additional_test.go): the
+    // interpretation concepts verbatim (ElementsMatch → name-sorted), the
+    // validity counts of the vector/neighbors/featureProjection arms, and
+    // non-null metadata on resolved references
+    Gate("q_fixture_additional",
+      """SELECT * FROM (VALUES
+        |  ('01_vector', 'rows=9;ok=9'),
+        |  ('02_interpretation', 'Apple Inc.>apple|inc,Apple Incorporated>apple|incorporated,Apple>apple,Google Inc.>google|inc,Google Incorporated>google|incorporated,Google>google,Microsoft Inc.>microsoft|inc,Microsoft Incorporated>microsoft|incorporated,Microsoft>microsoft'),
+        |  ('03_neighbors', 'rows=9;ok=9'),
+        |  ('04_feature_projection', 'rows=9;dims3=9'),
+        |  ('05_ref_vector', 'Amsterdam>ok,Berlin>ok,Dusseldorf>ok,Missing Island>∅,Rotterdam>ok,∅>∅'),
+        |  ('06_ref_times', 'Amsterdam>ok/ok,Berlin>ok/ok,Dusseldorf>ok/ok,Missing Island>∅,Rotterdam>ok/ok,∅>∅')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       out += "01_vector" -> {
@@ -758,14 +964,29 @@ object SparkEntryFixtures {
           |  { _additional { creationTimeUnix lastUpdateTimeUnix } } } } } }""".stripMargin,
         Seq("_refcreated", "_refupdated"))
       steps(s, out.result())
-    }),
+    },
 
     // getsWithExpectedFailures + aggregatesWithExpectedFailures +
     // exploreWithExpectedFailures: the reference's NEGATIVE expectations —
     // exact error texts for certainty on non-cosine classes, unscoped
     // vector-leg aggregations (checked BEFORE the object lookup), bare
     // objectLimit, and Explore across mixed distance metrics.
-    "q_fixture_failures" -> ((s, _) => {
+    // expected-failure suites (local_get_with_expected_failures.go,
+    // local_aggregate_with_expected_failures.go incl. explore): the
+    // reference's exact negative texts
+    Gate("q_fixture_failures",
+      """SELECT * FROM (VALUES
+        |  ('01_get_certainty_l2', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
+        |  ('02_get_certainty_dot', 'can''t compute and return certainty when vector index is configured with dot distance'),
+        |  ('03_agg_nearvector', 'must provide certainty or objectLimit with vector search'),
+        |  ('04_agg_nearobject', 'must provide certainty or objectLimit with vector search'),
+        |  ('05_agg_neartext', 'must provide certainty or objectLimit with vector search'),
+        |  ('06_agg_nearvector_where', 'must provide certainty or objectLimit with vector search'),
+        |  ('07_agg_nearobject_where', 'must provide certainty or objectLimit with vector search'),
+        |  ('08_agg_neartext_where', 'must provide certainty or objectLimit with vector search'),
+        |  ('09_agg_objectlimit_bare', 'objectLimit can only be used with a near<Media> or hybrid filter'),
+        |  ('10_explore_mixed_metrics', 'vector search across classes not possible: found different distance metrics: class ''L2DistanceClass'' uses distance metric ''l2-squared'', class ''CosineClassA'' uses distance metric ''cosine''')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{Property, PropType, Tokenization}
@@ -855,7 +1076,7 @@ object SparkEntryFixtures {
           Array(1.0f, 1.0f, 1.0f), graft.model.Metric.Cosine).collect()
       }
       steps(s, out.result())
-    }),
+    },
 
     // TestGQLGetTenantObjects (+ _MissingTenant) from
     // test/acceptance/multi_tenancy/gql_get_tenant_objects_test.go, plus the
@@ -863,7 +1084,24 @@ object SparkEntryFixtures {
     // create_delete_update_tenants_test.go: tenant-scoped Get across every
     // search leg, the shared-uuid-across-tenants bed VERBATIM (uuids from
     // the Go test), and the missing-tenant explorer error text.
-    "q_fixture_tenants" -> ((s, _) => {
+    // multi-tenancy journey: tenant-scoped pages/counts + the reference's
+    // missing-tenant explorer text and lifecycle error texts verbatim
+    Gate("q_fixture_tenants",
+      """SELECT * FROM (VALUES
+        |  ('01_objects', '0927a1e0-398e-4e76-91fb-04a7a8f0405c@Tenant1>Tenant1/meat,831ae1d0-f441-44b1-bb2a-46548048e26f@Tenant1>Tenant1/bananas,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59@Tenant1>Tenant1/kiwi,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59@otherTenant>Tenant1/kiwi'),
+        |  ('02_get', '0927a1e0-398e-4e76-91fb-04a7a8f0405c,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59,831ae1d0-f441-44b1-bb2a-46548048e26f'),
+        |  ('03_nearobject', '3'),
+        |  ('04_neartext', '3'),
+        |  ('05_bm25', 'n=1;6f3363e0-c0a0-4618-bf1f-b6cad9cdff59'),
+        |  ('06_hybrid', 'n=1;kiwi'),
+        |  ('07_missing_tenant', 'explorer: list class: search: object search at index multitenantclass: class MultiTenantClass has multi-tenancy enabled, but request was without tenant'),
+        |  ('08_list', 'Tenant1=Active,Tenant2=Active,Tenant3=Active'),
+        |  ('09_duplicate_in_batch', 'tenant name DoubleTenant existed multiple times'),
+        |  ('10_recreate_idempotent', 'ok'),
+        |  ('11_frozen_on_create', 'invalid activity status ''FROZEN'' for tenant "tenant"'),
+        |  ('12_deactivated', 'tenant not active: Tenant1'),
+        |  ('13_reactivated', 'ok')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{CollectionSchema, Property, PropType, Tenant, TenantStatus}
@@ -948,7 +1186,7 @@ object SparkEntryFixtures {
       gg.updateTenant("TenantLifecycle", "Tenant1", TenantStatus.Active)
       out += "13_reactivated" -> scoped()
       steps(s, out.result())
-    }),
+    },
 
     // Test_Batch (test/acceptance/batch_request_endpoints/): the batch
     // journey (batch objects → batch crefs long-from/short-to → GraphQL
@@ -956,7 +1194,23 @@ object SparkEntryFixtures {
     // with the Matches/Successful/Failed tallies, then the real deletes) —
     // all through the wire decoders against real stores. Object uuids are
     // engine-chosen (the Go suite random-generates them).
-    "q_fixture_batch" -> ((s, _) => {
+    // batch endpoints journeys: the reference-asserted tallies — error-free
+    // imports, 3 refs per source, Matches/Successful/Failed under dry-run
+    // vs real deletes, and untouched-data verifications between them
+    Gate("q_fixture_batch",
+      """SELECT * FROM (VALUES
+        |  ('01_batch_create', 'errors=0;sources=10;targets=3'),
+        |  ('02_batch_refs', 'errors=0;applied=30;dropped=0'),
+        |  ('03_gql_verify', 'items=10;with3refs=10'),
+        |  ('04_dryrun_by_ref', 'matches=20;successful=0;failed=0;objects=20'),
+        |  ('05_dryrun_untouched', 'targets=20'),
+        |  ('06_dryrun_by_prop', 'matches=20;successful=0;failed=0;objects=20'),
+        |  ('07_dryrun_prop_untouched', 'sources=20'),
+        |  ('08_delete_by_ref', 'matches=20;successful=20;failed=0;objects=20'),
+        |  ('09_ref_deleted', 'targets=0'),
+        |  ('10_delete_by_prop', 'matches=20;successful=20;failed=0;objects=20'),
+        |  ('11_prop_deleted', 'sources=0;journey_sources=10')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import org.json4s.jackson.JsonMethods
@@ -1075,7 +1329,7 @@ object SparkEntryFixtures {
       out += "10_delete_by_prop" -> batchDelete("BulkTestSource", propFilter, dryRun = false)
       out += "11_prop_deleted" -> s"sources=${countByProp()};journey_sources=${srcSt.read().count()}"
       steps(s, out.result())
-    }),
+    },
 
     // gettingObjectsWithNearFields (+ MultiShard arms) from
     // local_get_with_unlimited_vector_search_test.go: the
@@ -1087,7 +1341,26 @@ object SparkEntryFixtures {
     // within 6° of the anchor, 440 spread 40°–180°) so every count contract
     // (>100 / <100 / ==limit) resolves to an exact pinned number. The
     // anchor uuid is the suite's own (ransomNoteAnchorID).
-    "q_fixture_unlimited" -> ((s, _) => {
+    // unlimited-vector-search contracts: thresholds without a positive
+    // limit run unlimited (384/199 > the 100 default the suite pins),
+    // explicit limits bound (10/13/5), tight radii stay under it (60),
+    // multi-shard twins return all 3
+    Gate("q_fixture_unlimited",
+      """SELECT * FROM (VALUES
+        |  ('01_nv_nolimit_dist', '384'), ('02_nv_nolimit_cert', '384'),
+        |  ('03_nv_neglimit_dist', '199'), ('04_nv_neglimit_cert', '384'),
+        |  ('05_nv_limit10_dist', '10'), ('06_nv_limit10_cert', '10'),
+        |  ('07_nv_tight_dist', '60'), ('08_nv_tight_cert', '60'),
+        |  ('09_no_nolimit_dist', '384'), ('10_no_nolimit_cert', '384'),
+        |  ('11_no_neglimit_dist', '199'), ('12_no_neglimit_cert', '384'),
+        |  ('13_no_limit13_dist', '13'), ('14_no_limit13_cert', '13'),
+        |  ('15_no_tight_dist', '60'), ('16_no_tight_cert', '60'),
+        |  ('17_nt_nolimit_dist', '384'), ('18_nt_nolimit_cert', '384'),
+        |  ('19_nt_neglimit_dist', '384'), ('20_nt_neglimit_cert', '384'),
+        |  ('21_nt_limit5_dist', '5'), ('22_nt_limit5_cert', '5'),
+        |  ('23_nt_tight_dist', '60'), ('24_nt_tight_cert', '60'),
+        |  ('25_ms_dist', '3'), ('26_ms_cert', '3')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{CollectionSchema, Property, PropType}
@@ -1179,7 +1452,7 @@ object SparkEntryFixtures {
       out += "26_ms_cert" -> arm("MultiShard",
         """nearText: {certainty: 0.1 concepts: ["multi shard"]}""", None)
       steps(s, out.result())
-    }),
+    },
 
     // gettingObjectsWithCustomVectors + exploreObjectsWithCustomVectors
     // (local_get_with_custom_vectors_test.go): client-supplied vectors,
@@ -1187,7 +1460,13 @@ object SparkEntryFixtures {
     // exact id order through Get and the exact beacons through Explore
     // (the reference runs these after deleting every other class, so the
     // bed has only CustomVectorClass)
-    "q_fixture_cvc" -> ((s, _) => {
+    // custom vectors: the reference-asserted EXACT orders
+    // (local_get_with_custom_vectors_test.go expected lists)
+    Gate("q_fixture_cvc",
+      """SELECT * FROM (VALUES
+        |  ('01_get', '1ffeb3e1-1258-4c2a-afc3-55543f6c44b8,df22e5c4-5d17-49f9-a71d-f392a82bc086,c28a039a-d509-4c2e-940a-8b109e5bebf4'),
+        |  ('02_explore', 'weaviate://localhost/CustomVectorClass/1ffeb3e1-1258-4c2a-afc3-55543f6c44b8,weaviate://localhost/CustomVectorClass/df22e5c4-5d17-49f9-a71d-f392a82bc086,weaviate://localhost/CustomVectorClass/c28a039a-d509-4c2e-940a-8b109e5bebf4')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{CollectionSchema, Property, PropType, Metric}
@@ -1213,14 +1492,23 @@ object SparkEntryFixtures {
             s"weaviate://localhost/${r.getString(0)}/${r.getString(1)}").mkString(",")
       }
       steps(s, out.result())
-    }),
+    },
 
     // gqlResultsOrder + gqlMalformedRequest
     // (batch_request_endpoints/graphql_test.go): POST /v1/graphql/batch —
     // per-query replies IN ORDER with graphql-go's location-annotated
     // Syntax Error text verbatim, the 422 non-map-variables rejection, and
     // an engine-honest happy-path batch the Go TODO never added
-    "q_fixture_gql_batch" -> ((s, _) => {
+    // graphql batch endpoint: graphql-go's syntax texts (DuckDB e''
+    // literals carry the embedded newlines), the 422 rejection, a happy path
+    Gate("q_fixture_gql_batch",
+      """SELECT * FROM (VALUES
+        |  ('01_order_first', e'Syntax Error GraphQL request (1:1) Unexpected Name "testQuery"\n\n1: testQuery\n   ^\n'),
+        |  ('02_order_second', e'Syntax Error GraphQL request (1:1) Unexpected Name "testQuery2"\n\n1: testQuery2\n   ^\n'),
+        |  ('03_malformed_first', '422: expected map[string]interface{}, received [1 2 3]'),
+        |  ('04_malformed_second', '422: expected map[string]interface{}, received [1 2 3]'),
+        |  ('05_happy_batch', 'rows=3,rows=1')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val out = Seq.newBuilder[(String, String)]
       def errs(json: String): Seq[String] =
@@ -1243,7 +1531,7 @@ object SparkEntryFixtures {
           |  {"query": "{ Aggregate { Country { meta { count } } } }"}]""".stripMargin)
         .mkString(",")
       steps(s, out.result())
-    }),
+    },
 
     // test/acceptance/vector_distances (Test_GraphQL): every distance
     // metric's acceptance arms with the suite's VERBATIM beds and expected
@@ -1253,7 +1541,53 @@ object SparkEntryFixtures {
     // cuts), and the two-class L2 Explore with its exact (class, distance)
     // merge order. The suite compares with InDelta 0.01; the replay pins
     // the engine's exact 4-dp renders.
-    "q_fixture_distances" -> ((s, _) => {
+    // vector-distances acceptance: the per-metric expected distances
+    // verbatim (the suite asserts InDelta 0.01; these are the engine's
+    // exact 4-dp renders of the same values)
+    Gate("q_fixture_distances",
+      """SELECT * FROM (VALUES
+        |  ('c01_plain', '0|0|0.0715|2'),
+        |  ('c02_cert0', '0/1|0/1|0.0715/0.9642|2/0'),
+        |  ('c03_cert095', '0/1|0/1|0.0715/0.9642'),
+        |  ('c04_cert097', '0/1|0/1'),
+        |  ('c05_cert1', '0/1|0/1'),
+        |  ('c06_dist2', '0|0|0.0715|2'),
+        |  ('c07_dist199', '0|0|0.0715'),
+        |  ('c08_dist008', '0|0|0.0715'),
+        |  ('c09_dist001', '0|0'),
+        |  ('c10_explore_cert0', '0|0|0.0715|2'),
+        |  ('c11_explore_cert095', '0|0|0.0715'),
+        |  ('c12_explore_dist199', '0|0|0.0715'),
+        |  ('c13_explore_dist001', '0|0'),
+        |  ('d01_plain', '-50|-12|0|50'),
+        |  ('d02_cert_rejected', 'can''t compute and return certainty when vector index is configured with dot distance'),
+        |  ('d03_dist50', '-50|-12|0|50'),
+        |  ('d04_dist30', '-50|-12|0'),
+        |  ('d05_dist0', '-50|-12|0'),
+        |  ('d06_dist_neg40', '-50'),
+        |  ('d07_dist_neg60_empty', ''),
+        |  ('h01_plain', '0|1|2'),
+        |  ('h02_cert_rejected', 'can''t compute and return certainty when vector index is configured with hamming distance'),
+        |  ('h03_dist365', '0|1|2'),
+        |  ('h04_dist15', '0|1'),
+        |  ('h05_dist05', '0'),
+        |  ('h06_dist0', '0'),
+        |  ('l01_plain', '0|50|365'),
+        |  ('l02_cert_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
+        |  ('l03_cert_prop_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
+        |  ('l04_dist365', '0|50|365'),
+        |  ('l05_dist364', '0|50'),
+        |  ('l06_dist49', '0'),
+        |  ('l07_dist0', '0'),
+        |  ('m01_plain', '0|12|33'),
+        |  ('m02_cert_rejected', 'can''t compute and return certainty when vector index is configured with manhattan distance'),
+        |  ('m03_dist365', '0|12|33'),
+        |  ('m04_dist30', '0|12'),
+        |  ('m05_dist10', '0'),
+        |  ('m06_dist0', '0'),
+        |  ('x01_explore_l2', 'L2Squared_Class_2/12|L2Squared_Class_2/27|L2Squared_Class/50|L2Squared_Class/147|L2Squared_Class/365'),
+        |  ('x02_explore_cert_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{CollectionSchema, Property, PropType, Metric}
@@ -1378,7 +1712,7 @@ object SparkEntryFixtures {
           .count().toString
       }
       steps(s, out.result())
-    }),
+    },
 
     // TestHybridDiversitySelection (test/acceptance/hybrid_diversity/):
     // hybrid MMR as a POST-FUSION pass, driven through the BINARY gRPC
@@ -1388,7 +1722,16 @@ object SparkEntryFixtures {
     // keeping the most-relevant seed. The suite's clustered vectors
     // verbatim; ids render as the doc texts (the Go bed random-generates
     // uuids).
-    "q_fixture_hybrid_mmr" -> ((s, _) => {
+    // hybrid MMR diversity via binary gRPC: balance=1 = baseline, balance=0
+    // reorders within the relevance window keeping the seed (the window =
+    // the request limit, explorer.go:280-330 — picking a1 then the
+    // farther-from-a1 a3 is the reference's own selection math)
+    Gate("q_fixture_hybrid_mmr",
+      """SELECT * FROM (VALUES
+        |  ('01_baseline', 'doc a1,doc a2,doc a3'),
+        |  ('02_balance1_matches', 'doc a1,doc a2,doc a3;same=true'),
+        |  ('03_balance0_diverse', 'doc a1,doc a3,doc a2;differs=true;keeps_seed=true')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import org.json4s._
@@ -1438,7 +1781,7 @@ object SparkEntryFixtures {
       out += "03_balance0_diverse" -> (s"${balance0.mkString(",")};" +
         s"differs=${balance0 != balance1};keeps_seed=${balance0.contains(baseline.head)}")
       steps(s, out.result())
-    }),
+    },
 
     // TestBoost (test/acceptance/boost/boost_test.go): the boost
     // post-scoring pipeline driven END TO END through BINARY SearchRequests
@@ -1453,7 +1796,43 @@ object SparkEntryFixtures {
     // way.) The Song bed is read-only after registration, so it is
     // session-cached like the other acceptance beds — in-suite passes time
     // the 30 replay arms, not a fresh store build.
-    "q_fixture_boost" -> ((s, _) => {
+    // boost acceptance: the suite's ordering/equality contracts plus the
+    // engine's deterministic boosted orders over the formula bed (origin-now
+    // decay at this bed's ages underflows to a flat boost → primary order,
+    // exactly the reference a year past the bed date)
+    Gate("q_fixture_boost",
+      """SELECT * FROM (VALUES
+        |  ('b01_nv_base', 'Song 000,Song 063,Song 009,Song 072,Song 048,Song 087,Song 024,Song 039,Song 030,Song 004'),
+        |  ('b02_no_base', '10'),
+        |  ('b03_filter_likes', 'Song 063,Song 009,Song 024,Song 039,Song 006,Song 049,Song 054,Song 093,Song 010,Song 081'),
+        |  ('b04_filter_likes_and_date', 'Song 009,Song 006,Song 010,Song 081,Song 067,Song 069,Song 078,Song 068,Song 082,Song 066'),
+        |  ('b05_pv_none', 'Song 069,Song 054,Song 039,Song 024,Song 068,Song 025,Song 009,Song 096,Song 083,Song 082'),
+        |  ('b06_pv_log1p', 'Song 009,Song 024,Song 039,Song 063,Song 054,Song 069,Song 048,Song 096,Song 010,Song 081'),
+        |  ('b07_pv_sqrt', 'Song 024,Song 069,Song 039,Song 009,Song 054,Song 096,Song 025,Song 068,Song 010,Song 067'),
+        |  ('b08_log1p_vs_none_differs', 'true'),
+        |  ('b09_decay_exp', 'Song 000,Song 066,Song 065,Song 067,Song 001,Song 068,Song 069,Song 004,Song 003,Song 072'),
+        |  ('b10_decay_gauss', 'Song 000,Song 067,Song 066,Song 001,Song 068,Song 069,Song 065,Song 003,Song 004,Song 002'),
+        |  ('b11_decay_linear', 'Song 000,Song 066,Song 067,Song 065,Song 001,Song 068,Song 069,Song 004,Song 003,Song 072'),
+        |  ('b12_decay_origin_now', 'Song 000,Song 063,Song 009,Song 072,Song 048,Song 087,Song 024,Song 039,Song 030,Song 004'),
+        |  ('b13_tight_vs_wide_differs', 'true'),
+        |  ('b14_decay_value_differs', 'true'),
+        |  ('b15_curves_differ', 'true'),
+        |  ('b16_blend_filter_decay', 'Song 009,Song 067,Song 066,Song 069,Song 068,Song 006,Song 024,Song 063,Song 010,Song 078'),
+        |  ('b17_blend_pv_decay', 'Song 000,Song 067,Song 066,Song 068,Song 069,Song 001,Song 009,Song 063,Song 004,Song 024'),
+        |  ('b18_weight_differs', 'true'),
+        |  ('b19_depth1_equals_base', 'true'),
+        |  ('b20_depth_large_promotes', 'true'),
+        |  ('b21_negative_weight', '10'),
+        |  ('h01_hybrid_base', '10'),
+        |  ('h02_hybrid_filter_differs', 'true'),
+        |  ('h03_hybrid_pv', '10'),
+        |  ('h04_hybrid_decay', '10'),
+        |  ('h05_hybrid_weight0_noop', 'true'),
+        |  ('p01_page_through_nv', 'true'),
+        |  ('p02_page_through_hybrid', 'true'),
+        |  ('p03_page_through_bm25', 'true'),
+        |  ('p04_boost_reorders_offset', 'true')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.json4s._
       import org.json4s.jackson.JsonMethods
       import graft.engine.ProtoWire
@@ -1605,7 +1984,7 @@ object SparkEntryFixtures {
         (unboosted != boosted).toString
       }
       steps(s, out.result())
-    }),
+    },
 
     // TestRESTSearchNearText (test/acceptance/rest_search/near_text_test.go):
     // the experimental POST /v1/search/{collection}/near-text wire — the
@@ -1615,7 +1994,26 @@ object SparkEntryFixtures {
     // full error-status matrix (404/422/400) with the suite's verbatim
     // uuids. Stand-in vectors angle the two movies so "spaceship galaxy"
     // ranks movie1 first.
-    "q_fixture_rest_search" -> ((s, _) => {
+    // REST search endpoint: the envelope/status contracts verbatim
+    Gate("q_fixture_rest_search",
+      """SELECT * FROM (VALUES
+        |  ('01_happy', 'status=200;n=2;first_id=aa44bbee-ca5f-4db7-a412-5fc6a2300002;first_title=spaceship galaxy adventure;props=title;asc=true;took=true'),
+        |  ('02_metadata_keys', 'status=200;keys=certainty|creationTime|distance|lastUpdateTime'),
+        |  ('03_id_always', 'status=200;id=aa44bbee-ca5f-4db7-a412-5fc6a2300002;no_metadata=true'),
+        |  ('04_id_not_metadata', 'status=422;msg_has_key=true;shaped=true'),
+        |  ('05_metadata_prop', 'status=200;prop=user data;dist=true;id=aa44bbee-ca5f-4db7-a412-5fc6a2300002'),
+        |  ('06_where', 'status=200;n=1;title=cooking dinner recipes'),
+        |  ('07_no_index_422', 'status=422;has_flag=true'),
+        |  ('08_references', 'status=200;not_in_props=true;ref_name=famous writer'),
+        |  ('09_refs_omitted', 'status=200;no_refs=true'),
+        |  ('10_nested_object', 'status=200;summary=a journey through space;duration=120'),
+        |  ('11_no_vectorizer_422', 'status=422;has_word=true'),
+        |  ('12_unknown_404', '404'),
+        |  ('13_mt_statuses', 'ok=200/1;ghost=404;missing=422;non_mt=422'),
+        |  ('14_certainty_non_cosine', 'status=422;has_word=true'),
+        |  ('15_unknown_prop_400', 'status=400;has_text=true'),
+        |  ('16_absent_query_422', 'status=422;has_word=true;shaped=true')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import org.json4s._
@@ -1792,7 +2190,7 @@ object SparkEntryFixtures {
         s"status=$st;has_word=${errMsg(o).contains("query")};shaped=${(o \ "error") != JNothing}"
       }
       steps(s, out.result())
-    }),
+    },
 
     // testAliasesAPI (test/acceptance/aliases/aliases_api_test.go): the full
     // alias lifecycle journey over the suite's Books/Document/Passage beds
@@ -1801,7 +2199,36 @@ object SparkEntryFixtures {
     // rejections with their exact texts, alias-resolved object reads and
     // GraphQL Get/Aggregate, tenant MUTATIONS failing via alias while reads
     // resolve, and schema update via alias failing.
-    "q_fixture_aliases" -> ((s, _) => {
+    // alias lifecycle journey: counts, case-canonical lookups, the clash
+    // texts verbatim, alias-resolved reads, alias-rejected mutations
+    Gate("q_fixture_aliases",
+      """SELECT * FROM (VALUES
+        |  ('01_created', '8'),
+        |  ('02_get', 'RestBookAlias>Books'),
+        |  ('03_get_case', 'RestBookAlias'),
+        |  ('04_get_missing', '0'),
+        |  ('05_replace', 'Document'),
+        |  ('06_replace_case', 'Passage'),
+        |  ('07_replace_missing', 'replace alias: alias AliasThatDoesntExist does not exist'),
+        |  ('08_replace_bad_target', 'replace alias: class ErrorCollection does not exist'),
+        |  ('09_update_with_class_name', 'replace alias: alias Document does not exist'),
+        |  ('10_delete', '7'),
+        |  ('11_delete_case', '0'),
+        |  ('12_delete_missing', 'alias RestAliasThatWillBeReplaced not found'),
+        |  ('13_clash_class_name', 'create alias: class Books already exists'),
+        |  ('14_clash_alias_name', 'create alias: RestBookAlias, alias already exists'),
+        |  ('15_class_shadows_alias', 'alias name RestBookAlias already exists'),
+        |  ('16_create_bad_target', 'create alias: NonExistingAlias, class not found, NonExistingCollection'),
+        |  ('17_object_via_alias', 'n=1;title=Dune'),
+        |  ('18_gql_get_via_alias', 'n=3;all_filled=true'),
+        |  ('19_gql_neartext_via_alias', '3'),
+        |  ('20_gql_aggregate_via_alias', '3'),
+        |  ('21_tenant_create_via_alias', 'class MultiTenantAlias not found'),
+        |  ('22_tenant_update_via_alias', 'class MultiTenantAlias not found'),
+        |  ('23_tenant_delete_via_alias', 'class MultiTenantAlias not found'),
+        |  ('24_tenant_read_via_alias', 'Tenant2'),
+        |  ('25_schema_update_via_alias', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.model.{CollectionSchema, Property, PropType, Tenant}
@@ -1920,7 +2347,7 @@ object SparkEntryFixtures {
             |  {"name": "newProperty", "dataType": ["int"]}]}""".stripMargin)
       }
       steps(s, out.result())
-    }),
+    },
 
     // TestGRPC_ListValueReturn (test/acceptance/grpc/list_value_return_
     // test.go): every typed LIST kind over the FULL binary round-trip —
@@ -1931,7 +2358,21 @@ object SparkEntryFixtures {
     // binary SearchReply's RAW Value oneof kinds are verified byte-level:
     // uuid[]→uuid_values, date[]→date_values, int[]→int_values(i64LE),
     // number[]→number_values(f64LE), object[]→object_values.
-    "q_fixture_grpc_lists" -> ((s, _) => {
+    // typed gRPC list kinds: the raw Value oneof tags per property plus the
+    // round-tripped values (the suite's GetTextValues/GetIntValues/...
+    // accessors ARE these kind tags)
+    Gate("q_fixture_grpc_lists",
+      """SELECT * FROM (VALUES
+        |  ('01_batch', 'errors=0;stored=1'),
+        |  ('02_kinds', 'texts=list:text_values,ints=list:int_values,bools=list:bool_values,numbers=list:number_values,uuids=list:uuid_values,dates=list:date_values,objects=list:object_values'),
+        |  ('03_texts', 'text1|text2'),
+        |  ('04_ints', '1|2'),
+        |  ('05_bools', 'true|false'),
+        |  ('06_numbers', '1.1|2.2'),
+        |  ('07_uuids', '99000000-0000-4000-8000-000000000001|99000000-0000-4000-8000-000000000002'),
+        |  ('08_dates', '2020-01-01T00:00:00Z'),
+        |  ('09_objects', 'text1|text2')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import org.json4s._
@@ -2035,13 +2476,20 @@ object SparkEntryFixtures {
         case o => o.toString
       })
       steps(s, out.result())
-    }),
+    },
 
     // TestGRPCTenantsGet (test/acceptance/grpc/tenants_test.go): the binary
     // TenantsGet round-trip — all tenants (HOT statuses), selection by
     // names IN ORDER, the set-but-empty names error, and the unknown-name
     // empty reply.
-    "q_fixture_grpc_tenants" -> ((s, _) => {
+    // binary TenantsGet: all/by-names/empty-error/unknown-empty contracts
+    Gate("q_fixture_grpc_tenants",
+      """SELECT * FROM (VALUES
+        |  ('01_all', 'Tenant1=TENANT_ACTIVITY_STATUS_HOT,Tenant2=TENANT_ACTIVITY_STATUS_HOT,Tenant3=TENANT_ACTIVITY_STATUS_HOT'),
+        |  ('02_by_names', 'Tenant1=TENANT_ACTIVITY_STATUS_HOT,Tenant3=TENANT_ACTIVITY_STATUS_HOT'),
+        |  ('03_names_empty_error', 'error: tenant names must not be empty when the names parameter is set'),
+        |  ('04_unknown_empty', '')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import org.json4s._
@@ -2076,13 +2524,18 @@ object SparkEntryFixtures {
       out += "03_names_empty_error" -> call(Some(Nil))
       out += "04_unknown_empty" -> call(Some(List("NonExistentTenant")))
       steps(s, out.result())
-    }),
+    },
 
     // Test_UnindexedProperty (unindexed_property_test.go): a class created
     // THROUGH THE SCHEMA WIRE with indexFilterable/indexSearchable false on
     // one prop — filtering the indexed prop serves, filtering the hidden
     // prop is impossible (the reference's query errors)
-    "q_fixture_unindexed" -> ((s, _) => {
+    // unindexed-property journey: indexed filter serves, hidden prop errors
+    Gate("q_fixture_unindexed",
+      """SELECT * FROM (VALUES
+        |  ('01_indexed_filter', 'elephant/zebra'),
+        |  ('02_hidden_filter_rejected', 'Filtering by property ''hiddenName'' requires inverted index. Is `indexFilterable` option of property ''hiddenName'' enabled? Set it to `true` or leave empty')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
       import graft.sources.SchemaWire
@@ -2112,12 +2565,26 @@ object SparkEntryFixtures {
       steps(s, Seq(
         "01_indexed_filter" -> live("name", "elephant"),
         "02_hidden_filter_rejected" -> q("hiddenName", "zebra")))
-    }),
+    },
 
     // the cursor api journey (local_get_cursor_test.go): full keyset walks
     // page by page plus every "cursor api: invalid 'after' parameter"
     // error text verbatim
-    "q_fixture_cursor" -> ((s, _) => {
+    // cursor api: the walks' id pages + verbatim validation texts
+    Gate("q_fixture_cursor",
+      """SELECT * FROM (VALUES
+        |  ('01_walk_from_start', '001,002,003,004,005,006,007'),
+        |  ('02_walk_after_id4', '005,006,007'),
+        |  ('03_offset', 'cursor api: invalid ''after'' parameter: offset cannot be set with after and limit parameters'),
+        |  ('04_nearobject', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
+        |  ('05_nearvector', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
+        |  ('06_hybrid', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
+        |  ('07_bm25', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
+        |  ('08_sort', 'cursor api: invalid ''after'' parameter: sort cannot be set with after and limit parameters'),
+        |  ('09_where', 'cursor api: invalid ''after'' parameter: where cannot be set with after and limit parameters'),
+        |  ('10_multi', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
+        |  ('11_no_limit', 'cursor api: invalid ''after'' parameter: limit parameter must be set')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       def walk(afterStart: String, limit: scala.Int): String = {
         val ids = Seq.newBuilder[String]
@@ -2148,14 +2615,35 @@ object SparkEntryFixtures {
         "09_where" -> err("""limit: 1 after: "" where: {path: "id" operator: Like valueText: "*"}"""),
         "10_multi" -> err("""limit: 1 after: "" bm25: {query: "cursor api"} hybrid: {query: "cursor api"} offset: 1"""),
         "11_no_limit" -> err("""after: "00000000-0000-0000-0000-000000000000"""")))
-    }),
+    },
 
     // the ArrayClass aggregate matrix (matrix_no_groupby_test.go:21-90 x
     // setup:626-790): array-prop count/min/max/mode/sum/median/mean,
     // boolean-array tallies and text-array topOccurrences across the four
     // data shapes (all / with-data / without-data / none), scoped by id-Like
     // wildcards and nearObject certainty bands
-    "q_fixture_agg_arrays" -> ((s, _) => {
+    // ArrayClass/DuplicatesClass matrix: the reference-asserted stat sets
+    // (booleanArray/textArray/numberArray/intArray/dateArray expectations,
+    // matrix_no_groupby_test.go:26-130), floats at the repo's round-4
+    Gate("q_fixture_agg_arrays",
+      """SELECT * FROM (VALUES
+        |  ('a01_without', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
+        |  ('a02_where_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
+        |  ('a03_where_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
+        |  ('a04_where_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
+        |  ('a05_where_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
+        |  ('a06_near_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
+        |  ('a07_near_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
+        |  ('a08_near_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
+        |  ('a09_where_near_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
+        |  ('a10_where_near_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
+        |  ('a11_where_near_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
+        |  ('a12_where_near_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
+        |  ('d01_without', 'meta=3;bool=9/3/6/0.3333/0.6667;texts=9;top=Alpha=6,Bravo=3;nums=9/2/1/1/12/1/1.3333;ints=9/102/101/101/912/101/101.3333;dates=9'),
+        |  ('d02_where_all', 'meta=3;bool=9/3/6/0.3333/0.6667;texts=9;top=Alpha=6,Bravo=3;nums=9/2/1/1/12/1/1.3333;ints=9/102/101/101/912/101/101.3333;dates=9'),
+        |  ('d03_where_some', 'meta=1;bool=4/1/3/0.25/0.75;texts=4;top=Alpha=3,Bravo=1;nums=4/2/1/1/5/1/1.25;ints=4/102/101/101/405/101/101.25;dates=4'),
+        |  ('d04_where_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       def arm(cls: String, filters: String): String = {
         val row = g.aggregate(GraphQL.aggregate(g,
@@ -2223,11 +2711,22 @@ object SparkEntryFixtures {
           """where: {operator: Like path: ["id"] valueText: "a8076f34-ec16-4333-a963-00c89c5ba001"}"""),
         "d04_where_none" -> arm("DuplicatesClass",
           s"""where: {operator: Like path: ["id"] valueText: "$none"}""")))
-    }),
+    },
 
     // ClassWithoutProperties matrix (matrix_no_groupby_test.go:132-193):
     // meta-only aggregation over a property-less class
-    "q_fixture_agg_noprops" -> ((s, _) => {
+    // ClassWithoutProperties matrix: meta-only counts
+    Gate("q_fixture_agg_noprops",
+      """SELECT * FROM (VALUES
+        |  ('n01_without', '2'),
+        |  ('n02_where_all', '2'),
+        |  ('n03_where_some', '1'),
+        |  ('n04_where_none', '0'),
+        |  ('n05_near_all', '2'),
+        |  ('n06_where_near_all', '2'),
+        |  ('n07_where_near_some', '1'),
+        |  ('n08_where_near_none', '0')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       def arm(filters: String): String =
         g.aggregate(GraphQL.aggregate(g,
@@ -2251,12 +2750,26 @@ object SparkEntryFixtures {
         "n08_where_near_none" -> arm(
           s"""where: {operator: Like path: ["id"] valueText: "$none"}
              |nearObject: {id: "$id1" certainty: 0.1}""".stripMargin)))
-    }),
+    },
 
     // the Person-bed filter journeys (local_get_with_filter_test.go:258-436):
     // ref-count filters on livesIn (gh-1101) and FIELD-tokenization Equal on
     // scalar + array text props (gh-1821)
-    "q_fixture_persons" -> ((s, _) => {
+    // Person-bed filter journeys: reference-asserted member sets
+    Gate("q_fixture_persons",
+      """SELECT * FROM (VALUES
+        |  ('01_refcount_eq0', 'Alice'),
+        |  ('02_refcount_eq1', 'Bob'),
+        |  ('03_refcount_gte2', 'John,Petra'),
+        |  ('04_prof_partial', ''),
+        |  ('05_prof_bob', 'Bob'),
+        |  ('06_prof_john', 'John'),
+        |  ('07_prof_petra', 'Petra'),
+        |  ('08_about_partial', ''),
+        |  ('09_about_john', 'John'),
+        |  ('10_about_two', 'Bob,John'),
+        |  ('11_about_petra', 'Petra')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       def names(where: String): String =
         g.get(GraphQL.get(g, s"{ Get { Person(where: $where) { name } } }"))
@@ -2273,14 +2786,28 @@ object SparkEntryFixtures {
         "09_about_john" -> names("""{valueText: "hates swimming" operator: Equal, path: ["about"]}"""),
         "10_about_two" -> names("""{valueText: "loves travelling" operator: Equal, path: ["about"]}"""),
         "11_about_petra" -> names("""{valueText: "likes cooking for family" operator: Equal, path: ["about"]}""")))
-    }),
+    },
 
     // the legacy group{merge|closest} journeys over the Company bed
     // (local_get_with_grouping_test.go). Merged-name member ORDER follows
     // this engine's stable uuid page order — the reference itself documents
     // its member order as internal-docID-dependent (gh-1958 note in the
     // test), asserting set equality only.
-    "q_fixture_group_legacy" -> ((s, _) => {
+    // legacy grouping over the Company bed; member order = the engine's
+    // stable uuid page order (the reference documents its own order as
+    // internal-docID-dependent, gh-1958 test note)
+    Gate("q_fixture_group_legacy",
+      """SELECT * FROM (VALUES
+        |  ('01_control', 'Apple,Apple Inc.,Apple Incorporated,Google,Google Inc.,Google Incorporated,Microsoft,Microsoft Inc.,Microsoft Incorporated'),
+        |  ('02_merge_force1_rows', '1'),
+        |  ('03_merge_force1_name', 'Apple Inc. (Google Incorporated, Google Inc., Microsoft Incorporated, Apple, Apple Incorporated, Google, Microsoft Inc., Microsoft)'),
+        |  ('04_merge_force1_cities', 'Amsterdam,Berlin,Dusseldorf'),
+        |  ('05_merge_force0_rows', '9'),
+        |  ('06_merge_force0_ms_cities', 'Microsoft Inc.=1,Microsoft Incorporated=2,Microsoft=1'),
+        |  ('07_closest_force01_rows', '3'),
+        |  ('08_closest_neartext_rows', '1'),
+        |  ('09_merge_where_name', 'Apple Inc. (Google Incorporated, Google Inc., Microsoft Incorporated, Apple, Apple Incorporated, Google, Microsoft Inc., Microsoft)')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       import graft.operators.MergeGrouper
       def grouped(doc: String, force: Double, strategy: MergeGrouper.Strategy) = {
@@ -2331,12 +2858,19 @@ object SparkEntryFixtures {
         m.head.getString(m.head.fieldIndex("name"))
       }
       steps(s, out.result())
-    }),
+    },
 
     // modern groupBy: people by livesIn beacon (local_get_with_group_by_
     // test.go:25-120) — group order by search rank around the Bob anchor,
     // the empty-ref person in the nil ("") group, beacon-rendered values
-    "q_fixture_group_by" -> ((s, _) => {
+    // people-by-city groupBy: the acceptance group order/beacons/hit sets
+    Gate("q_fixture_group_by",
+      """SELECT * FROM (VALUES
+        |  ('01_group', 'weaviate://localhost/City/8f5f8e44-d348-459c-88b1-c1a44bb8f8be;count=3;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c|3ef44474-b5e5-455d-91dc-d917b5b76165|8615585a-2960-482d-b19d-8bee98ade52c'),
+        |  ('02_group', 'weaviate://localhost/City/9b9cbea5-e87e-4cd0-89af-e2f424fd52d6;count=2;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c|3ef44474-b5e5-455d-91dc-d917b5b76165'),
+        |  ('03_group', ';count=1;hits=5d0fa6ee-21c4-4b46-a735-f0208717837d'),
+        |  ('04_group', 'weaviate://localhost/City/6ffb03f8-a853-4ec5-a5d8-302e45aaaf13;count=1;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       val g = cg(s)
       val page = g.get(GraphQL.get(g,
         s"""{ Get { Person(
@@ -2352,7 +2886,7 @@ object SparkEntryFixtures {
         val ids = hits.map(_.getString(2)).sorted.mkString("|")
         s"0${idx}_group" -> s"$beacon;count=${hits.length};hits=$ids"
       })
-    }),
+    },
 
     // aggregatesOnDateFields (local_aggregate_test.go:1441-1627): the
     // HasDateField bed VERBATIM — ten RFC3339 NANOSECOND timestamps
@@ -2363,7 +2897,22 @@ object SparkEntryFixtures {
     // ns); the bed stores ns OFFSETS from a base instant so the even-count
     // median mean stays exactly representable through the double-typed
     // median, and the render adds the base back.
-    "q_fixture_agg_dates" -> ((s, _) => {
+    // aggregatesOnDateFields: the reference's expected RFC3339Nano strings
+    Gate("q_fixture_agg_dates",
+      """SELECT * FROM (VALUES
+        |  ('01_no_group', 'count=10;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:06.1449075Z'),
+        |  ('02_#1', 'count=1;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:18:59.640162Z;median=2022-06-16T22:18:59.640162Z;mode=2022-06-16T22:18:59.640162Z'),
+        |  ('02_#10', 'count=1;min=2022-06-16T22:19:11.837473Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:11.837473Z;mode=2022-06-16T22:19:11.837473Z'),
+        |  ('02_#2', 'count=1;min=2022-06-16T22:19:01.495967Z;max=2022-06-16T22:19:01.495967Z;median=2022-06-16T22:19:01.495967Z;mode=2022-06-16T22:19:01.495967Z'),
+        |  ('02_#3', 'count=1;min=2022-06-16T22:19:03.495596Z;max=2022-06-16T22:19:03.495596Z;median=2022-06-16T22:19:03.495596Z;mode=2022-06-16T22:19:03.495596Z'),
+        |  ('02_#4', 'count=1;min=2022-06-16T22:19:04.3828349Z;max=2022-06-16T22:19:04.3828349Z;median=2022-06-16T22:19:04.3828349Z;mode=2022-06-16T22:19:04.3828349Z'),
+        |  ('02_#5', 'count=1;min=2022-06-16T22:19:05.894857Z;max=2022-06-16T22:19:05.894857Z;median=2022-06-16T22:19:05.894857Z;mode=2022-06-16T22:19:05.894857Z'),
+        |  ('02_#6', 'count=1;min=2022-06-16T22:19:06.394958Z;max=2022-06-16T22:19:06.394958Z;median=2022-06-16T22:19:06.394958Z;mode=2022-06-16T22:19:06.394958Z'),
+        |  ('02_#7', 'count=1;min=2022-06-16T22:19:07.589828Z;max=2022-06-16T22:19:07.589828Z;median=2022-06-16T22:19:07.589828Z;mode=2022-06-16T22:19:07.589828Z'),
+        |  ('02_#8', 'count=1;min=2022-06-16T22:19:08.112395Z;max=2022-06-16T22:19:08.112395Z;median=2022-06-16T22:19:08.112395Z;mode=2022-06-16T22:19:08.112395Z'),
+        |  ('02_#9', 'count=1;min=2022-06-16T22:19:10.339493Z;max=2022-06-16T22:19:10.339493Z;median=2022-06-16T22:19:10.339493Z;mode=2022-06-16T22:19:10.339493Z'),
+        |  ('03_hello!', 'count=10;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:06.1449075Z')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.Row
       import graft.model._
@@ -2434,11 +2983,19 @@ object SparkEntryFixtures {
         out += s"03_$k" -> fmt(r, grouped = true, withMode = false)
       }
       steps(s, out.result())
-    }),
+    },
 
     // localMeta with where + nearText/nearObject radii
     // (local_aggregate_test.go:48-487, both distance and certainty forms)
-    "q_fixture_agg_near" -> ((s, _) => {
+    Gate("q_fixture_agg_near", values(Seq(
+      "n01_neartext_ams_dist" -> ("meta=1;cap=1/0/1/0/1;" +
+        "pop=1/1800000/1800000/1800000/1800000;top=Amsterdam=1;pointing=Country"),
+      "n02_neartext_ams_cert" -> ("meta=1;cap=1/0/1/0/1;" +
+        "pop=1/1800000/1800000/1800000/1800000;top=Amsterdam=1;pointing=Country"),
+      "n03_nearobj_ber_dist" -> ("meta=1;cap=1/0/1/0/1;" +
+        "pop=1/3470000/3470000/3470000/3470000;top=Berlin=1;pointing=Country"),
+      "n04_nearobj_ber_cert" -> ("meta=1;cap=1/0/1/0/1;" +
+        "pop=1/3470000/3470000/3470000/3470000;top=Berlin=1;pointing=Country")))) { (s, _) =>
       val g = cg(s)
       def arm(filters: String): String = {
         val row = g.aggregate(GraphQL.aggregate(g,
@@ -2472,7 +3029,8 @@ object SparkEntryFixtures {
         "n02_neartext_ams_cert" -> arm("""nearText: {concepts: ["Amsterdam"] certainty: 0.9}"""),
         "n03_nearobj_ber_dist" -> arm(s"""nearObject: {id: "$berlin" distance: 0.2}"""),
         "n04_nearobj_ber_cert" -> arm(s"""nearObject: {id: "$berlin" certainty: 0.9}""")))
-    }))
+    }
+  )
 
   private def cgGeo(g: Graft, lat: String, lon: String, meters: Int): String =
     g.get(GraphQL.get(g,
@@ -2506,652 +3064,4 @@ object SparkEntryFixtures {
     "meta=0;pop=0/∅/∅/∅/∅/∅/∅;area=0/∅/∅/∅/∅/∅/∅;" +
     "cap=0/∅/∅/∅/∅;name=0;museums=0;tz=0;history=0;rights=0;pointing=Country"
 
-  val oracleSql: Map[String, String] = Map(
-
-    "q_fixture_get" -> values(Seq(
-      "01_all" -> "Rotterdam,Dusseldorf,Missing Island,∅,Amsterdam,Berlin",
-      "02_limit" -> "Rotterdam,Dusseldorf",
-      "03_offset_limit" -> "Missing Island,∅",
-      "04_offset" -> "Missing Island,∅,Amsterdam,Berlin",
-      "05_offset_limit_beyond" -> "Berlin",
-      "06_offset_beyond" -> "",
-      "07_relations" -> ("Rotterdam>[Netherlands],Dusseldorf>[Germany]," +
-        "Missing Island>∅,∅>∅,Amsterdam>[Netherlands],Berlin>[Germany]"))),
-
-    "q_fixture_sort" -> values(Seq(
-      "01_name_asc_full" -> "∅,Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
-      "01_name_asc_lim4" -> "∅,Amsterdam,Berlin,Dusseldorf",
-      "02_name_desc_full" -> "Rotterdam,Missing Island,Dusseldorf,Berlin,Amsterdam,∅",
-      "02_name_desc_lim4" -> "Rotterdam,Missing Island,Dusseldorf,Berlin",
-      "03_pop_asc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Amsterdam,Berlin",
-      "03_pop_asc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
-      "04_pop_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
-      "04_pop_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
-      "05_cap_asc_full" -> "∅,Rotterdam,Dusseldorf,Missing Island,Amsterdam,Berlin",
-      "05_cap_asc_lim4" -> "∅,Rotterdam,Dusseldorf,Missing Island",
-      "06_cap_desc_full" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf,Missing Island,∅",
-      "06_cap_desc_lim4" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf",
-      "07_area_asc_full" -> "Missing Island,∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "07_area_asc_lim4" -> "Missing Island,∅,Dusseldorf,Rotterdam",
-      "08_area_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
-      "08_area_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
-      "09_rights_asc_full" -> "Missing Island,∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "09_rights_asc_lim4" -> "Missing Island,∅,Dusseldorf,Rotterdam",
-      "10_rights_desc_full" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf,Missing Island,∅",
-      "10_rights_desc_lim4" -> "Amsterdam,Berlin,Rotterdam,Dusseldorf",
-      "11_tz_asc_full" -> "Missing Island,∅,Rotterdam,Dusseldorf,Amsterdam,Berlin",
-      "11_tz_asc_lim4" -> "Missing Island,∅,Rotterdam,Dusseldorf",
-      "12_tz_desc_full" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin,Missing Island,∅",
-      "12_tz_desc_lim4" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin",
-      "13_museums_asc_full" -> "Missing Island,∅,Berlin,Rotterdam,Dusseldorf,Amsterdam",
-      "13_museums_asc_lim4" -> "Missing Island,∅,Berlin,Rotterdam",
-      "14_museums_desc_full" -> "Amsterdam,Dusseldorf,Rotterdam,Berlin,Missing Island,∅",
-      "14_museums_desc_lim4" -> "Amsterdam,Dusseldorf,Rotterdam,Berlin",
-      "15_history_asc_full" -> "Missing Island,∅,Amsterdam,Rotterdam,Berlin,Dusseldorf",
-      "15_history_asc_lim4" -> "Missing Island,∅,Amsterdam,Rotterdam",
-      "16_history_desc_full" -> "Dusseldorf,Berlin,Rotterdam,Amsterdam,Missing Island,∅",
-      "16_history_desc_lim4" -> "Dusseldorf,Berlin,Rotterdam,Amsterdam",
-      "17_phone_asc_full" -> "Missing Island,∅,Rotterdam,Dusseldorf,Berlin,Amsterdam",
-      "17_phone_asc_lim4" -> "Missing Island,∅,Rotterdam,Dusseldorf",
-      "18_phone_desc_full" -> "Amsterdam,Berlin,Dusseldorf,Rotterdam,Missing Island,∅",
-      "18_phone_desc_lim4" -> "Amsterdam,Berlin,Dusseldorf,Rotterdam",
-      "19_loc_asc_full" -> "Rotterdam,∅,Berlin,Missing Island,Amsterdam,Dusseldorf",
-      "19_loc_asc_lim4" -> "Rotterdam,∅,Berlin,Missing Island",
-      "20_loc_desc_full" -> "Dusseldorf,Amsterdam,Missing Island,Rotterdam,∅,Berlin",
-      "20_loc_desc_lim4" -> "Dusseldorf,Amsterdam,Missing Island,Rotterdam",
-      "21_pop_name_asc_full" -> "∅,Missing Island,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "21_pop_name_asc_lim4" -> "∅,Missing Island,Dusseldorf,Rotterdam",
-      "22_pop_asc_name_desc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Amsterdam,Berlin",
-      "22_pop_asc_name_desc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
-      "23_name_asc_pop_desc_full" -> "∅,Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
-      "23_name_asc_pop_desc_lim4" -> "∅,Amsterdam,Berlin,Dusseldorf",
-      "24_pop_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
-      "24_pop_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
-      "25_phone_pop_name_asc_full" -> "∅,Missing Island,Rotterdam,Dusseldorf,Berlin,Amsterdam",
-      "25_phone_pop_name_asc_lim4" -> "∅,Missing Island,Rotterdam,Dusseldorf",
-      "26_cap_asc_name_asc_full" -> "∅,Dusseldorf,Missing Island,Rotterdam,Amsterdam,Berlin",
-      "26_cap_asc_name_asc_lim4" -> "∅,Dusseldorf,Missing Island,Rotterdam",
-      "27_cap_asc_name_desc_full" -> "∅,Rotterdam,Missing Island,Dusseldorf,Berlin,Amsterdam",
-      "27_cap_asc_name_desc_lim4" -> "∅,Rotterdam,Missing Island,Dusseldorf",
-      "28_cap_desc_name_asc_full" -> "Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam,∅",
-      "28_cap_desc_name_asc_lim4" -> "Amsterdam,Berlin,Dusseldorf,Missing Island",
-      "29_cap_desc_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Missing Island,Dusseldorf,∅",
-      "29_cap_desc_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Missing Island",
-      "30_cap_asc_pop_desc_name_asc_full" -> "∅,Dusseldorf,Rotterdam,Missing Island,Berlin,Amsterdam",
-      "30_cap_asc_pop_desc_name_asc_lim4" -> "∅,Dusseldorf,Rotterdam,Missing Island",
-      "31_cap_desc_pop_desc_name_desc_full" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf,Missing Island,∅",
-      "31_cap_desc_pop_desc_name_desc_lim4" -> "Berlin,Amsterdam,Rotterdam,Dusseldorf",
-      "32_cap_tz_rights_name_asc_full" -> "∅,Missing Island,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "32_cap_tz_rights_name_asc_lim4" -> "∅,Missing Island,Dusseldorf,Rotterdam",
-      "33_cap_desc_tz_rights_asc_name_desc_full" -> "Berlin,Amsterdam,Missing Island,Dusseldorf,Rotterdam,∅",
-      "33_cap_desc_tz_rights_asc_name_desc_lim4" -> "Berlin,Amsterdam,Missing Island,Dusseldorf",
-      "34_sort_where_loc_asc" -> "Missing Island,Dusseldorf",
-      "35_sort_where_loc_desc" -> "Dusseldorf,Missing Island",
-      "36_sort_where_nonexistent" -> "")),
-
-    "q_fixture_sort_near" -> values(Seq(
-      "01_dist_name_asc" -> "∅,Amsterdam,Berlin,Dusseldorf,Rotterdam",
-      "02_dist_name_desc" -> "Rotterdam,Dusseldorf,Berlin,Amsterdam,∅",
-      "03_dist_pop_asc" -> "∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "04_dist_pop_desc" -> "Berlin,Amsterdam,Dusseldorf,Rotterdam,∅",
-      "05_cert_name_asc" -> "∅,Amsterdam,Berlin,Dusseldorf,Rotterdam",
-      "06_cert_name_desc" -> "Rotterdam,Dusseldorf,Berlin,Amsterdam,∅",
-      "07_cert_pop_asc" -> "∅,Dusseldorf,Rotterdam,Amsterdam,Berlin",
-      "08_cert_pop_desc" -> "Berlin,Amsterdam,Dusseldorf,Rotterdam,∅",
-      "09_dist_lim2_name_asc" -> "Amsterdam,Berlin",
-      "10_dist_lim2_name_desc" -> "Berlin,Amsterdam",
-      "11_dist_lim2_pop_asc" -> "Amsterdam,Berlin",
-      "12_cert_lim2_pop_desc" -> "Berlin,Amsterdam",
-      "13_where_dist_name_asc" -> "Amsterdam,Berlin",
-      "14_where_dist_name_desc" -> "Berlin,Amsterdam",
-      "15_where_cert_pop_asc" -> "Amsterdam,Berlin",
-      "16_where_cert_pop_desc" -> "Berlin,Amsterdam")),
-
-    "q_fixture_filter" -> values(Seq(
-      "01_control" -> "10000,30000,40000,20000",
-      "02_neartext_len" -> "Amsterdam,Berlin,Dusseldorf,Missing Island,Rotterdam",
-      "03_neartext_isnull" -> "∅",
-      "04_ref_2hop" -> "40000",
-      "05_phone_via_ref" -> "+31 1234567|31|1234567",
-      "06_uuid_ranges" -> "20000",
-      "07_filter_by_id" -> "+31 1234567|31|1234567",
-      "08_isnull_true" -> "Missing Island,∅",
-      "09_isnull_false" -> "Rotterdam,Dusseldorf,Amsterdam,Berlin",
-      "10_creation_ms_text" -> "4770bb19-20fd-406e-ac64-9dac54c27a0f",
-      "11_creation_date_gte" -> "4")),
-
-    "q_fixture_geo" -> values(Seq(
-      "01_100km_dusseldorf" -> "Dusseldorf@51.225555,6.782778",
-      "02_200km_dusseldorf" -> "Dusseldorf@51.225555,6.782778;Amsterdam@52.36667,4.9",
-      "03_null_island" -> "Missing Island@0.0,0.0")),
-
-    "q_fixture_errors" -> values(Seq(
-      "01_empty_path" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
-        "path parameter cannot be empty"),
-      "02_empty_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
-        "no such prop with name '' found in class 'City' in the schema. " +
-        "Check your schema files for which properties in this class are available"),
-      "03_ref_path" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
-        "sorting by reference not supported, path must have exactly one argument"),
-      "04_unknown_class" -> """Cannot query field "NonExistentClass" on type "GetObjectsObj".""",
-      "05_unknown_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
-        "no such prop with name 'nonexistentproperty' found in class 'City' in the schema. " +
-        "Check your schema files for which properties in this class are available"),
-      "06_ref_prop" -> ("invalid 'sort' parameter: sort parameter at position 0: " +
-        "sorting by reference not supported, " +
-        "property \"inCountry\" is a ref prop to the class \"Country\""),
-      "07_agg_near_unbounded" -> "must provide certainty or objectLimit with vector search",
-      "08_agg_objectlimit_no_near" -> "objectLimit can only be used with a near<Media> or hybrid filter")),
-
-    "q_fixture_agg" -> values(Seq(
-      "a01_without_filters" -> AggAll,
-      "a02_where_like_all" -> AggAll,
-      "a03_where_iscapital" -> AggWithData,
-      "a04_where_like_nullisland" -> AggWithoutData,
-      "a05_where_like_nonexistent" -> AggNoResults,
-      "a06_nearobj_cert01" -> AggAll,
-      "a07_nearobj_cert081" -> AggWithData,
-      "a08_nearobj_null_cert09" -> AggWithoutData,
-      "a09_where_all_nearobj_cert01" -> AggAll,
-      "a10_where_cap_nearobj_cert081" -> AggWithData,
-      "a11_where_null_nearobj_null_cert09" -> AggWithoutData,
-      "a12_where_none_nearobj_cert01" -> AggNoResults,
-      "a13_topocc_name" -> ("Amsterdam=1,Berlin=1,Dusseldorf=1,Missing Island=1,Rotterdam=1"),
-      "a14_topocc_museums" -> ("German Historical Museum=1,Museum Boijmans Van Beuningen=1," +
-        "Onomato=1,Rijksmuseum=1,Schiffahrt Museum=1"))),
-
-    "q_fixture_agg_group" -> values(Seq(
-      "g01_217.22" -> "meta=1;pop=600000;museums=3;name=1",
-      "g01_319.35" -> "meta=1;pop=600000;museums=3;name=1",
-      "g01_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
-      "g01_891.96" -> "meta=1;pop=3470000;museums=1;name=1",
-      "g02_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
-      "g02_891.96" -> "meta=1;pop=3470000;museums=1;name=1",
-      "g03_891.95" -> "meta=1;pop=1800000;museums=2;name=1",
-      "g03_891.96" -> "meta=1;pop=3470000;museums=1;name=1")),
-
-
-
-
-
-
-
-
-    // groupBy+bm25: the acceptance-pinned group order and hit ids
-    "q_fixture_group_bm25" ->
-      """SELECT * FROM (VALUES
-        |  ('01_group', 'berlin;hits=177fec91-1292-4928-8f53-f0ff49c76900|1343f51d-7e05-4084-bd66-d504db3b6bec'),
-        |  ('02_group', 'dusseldorf;hits=1fa3b21e-ca4f-4db7-a432-7fc6a23c534d|1b2cfdba-d4ba-4cf8-abda-e719ef35ac33'),
-        |  ('03_group', 'amsterdam;hits=171d2b4c-3da1-4684-9c5e-aabd2a4f2998|1c2e21fc-46fe-4999-b41c-a800595129af|1f75ed97-39dd-4294-bff7-ecabd7923062')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // shadow suite: the reference-asserted pages/beacons
-    "q_fixture_shadow" ->
-      """SELECT * FROM (VALUES
-        |  ('01_get', 'Mount Everest'),
-        |  ('02_aggregate', '1'),
-        |  ('03_explore_same', 'weaviate://localhost/NearObjectSearch/aa44bbee-ca5f-4db7-a412-5fc6a2300011,weaviate://localhost/NearObjectSearchShadow/aa44bbee-ca5f-4db7-a412-5fc6a2300011'),
-        |  ('04_explore_diff', 'weaviate://localhost/NearObjectSearch/aa44bbee-ca5f-4db7-a412-5fc6a2300001,weaviate://localhost/NearObjectSearchShadow/aa44bbee-ca5f-4db7-a412-5fc6a2300001')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // multi-class cref regression (issue #1410): the reference-asserted
-    // pages of multi_reftype_bug_test.go:150-501, rows sorted by name
-    // (the Go test compares with ElementsMatch)
-    "q_fixture_multiref" ->
-      """SELECT * FROM (VALUES
-        |  ('01_norefs', 'source with ref to One,source with ref to Two,source with ref to both,source without refs'),
-        |  ('02_one', 'source with ref to One>[target a],source with ref to Two>∅,source with ref to both>[target a],source without refs>∅'),
-        |  ('03_one_id', 'source with ref to One>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source with ref to Two>∅,source with ref to both>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source without refs>∅'),
-        |  ('04_two', 'source with ref to One>∅,source with ref to Two>[target b],source with ref to both>[target b],source without refs>∅'),
-        |  ('05_two_id', 'source with ref to One>∅,source with ref to Two>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source with ref to both>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source without refs>∅'),
-        |  ('06_both', 'source with ref to One>[target a],source with ref to Two>[target b],source with ref to both>[target a|target b],source without refs>∅'),
-        |  ('07_both_id', 'source with ref to One>[target a@155c5914-6594-4cde-b3ab-f8570b561965],source with ref to Two>[target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source with ref to both>[target a@155c5914-6594-4cde-b3ab-f8570b561965|target b@ebf85a07-6b34-4e3b-b7c5-077f904fc955],source without refs>∅')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // hybrid acceptance arms (local_get_hybrid_search_test.go): the
-    // reference-asserted pages/counts — top-2 membership for the Apple arms,
-    // full-corpus counts for the unbounded ones, all four airports with
-    // their cities for the with-references arm
-    "q_fixture_hybrid" ->
-      """SELECT * FROM (VALUES
-        |  ('01_alpha0_bm25', '10000'),
-        |  ('02_limit_vector', 'Apple,Apple Inc.'),
-        |  ('03_limit_novector', 'Apple,Apple Inc.'),
-        |  ('04_all_vector', '9'),
-        |  ('05_all_novector', '9'),
-        |  ('06_additional_vector', 'rows=9;vecs=9'),
-        |  ('07_refs', '10000>[Amsterdam],20000>[Rotterdam],30000>[Dusseldorf],40000>[Berlin]')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // hybrid groupBy over text[] (hybrid_group_by_array_test.go): every tag
-    // forms a group (objects join EVERY element's group), red=2, vehicle=3,
-    // and objectsPerGroup: 1 caps the red group at one hit
-    "q_fixture_hybrid_group" ->
-      """SELECT * FROM (VALUES
-        |  ('01_tags_vehicle', 'blue=1,emergency=1,garden=1,green=1,red=2,sports=1,tool=1,vehicle=3,water=1'),
-        |  ('02_categories_automotive', 'automotive=2,emergency=1,garden=1,luxury=1,nautical=1,recreation=1,tools=1'),
-        |  ('03_objects_per_group_1', 'blue=1,emergency=1,garden=1,green=1,red=1,sports=1,tool=1,vehicle=1,water=1')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // hybrid aggregation (local_aggregate_hybrid_search_test.go): the 5
-    // topOccurrences values (count ties broken value-asc), the 3 sparse-only
-    // Google groups, 9 groups under each nearText subsearch, and the
-    // nearText+nearVector conflict rejection
-    "q_fixture_hybrid_agg" ->
-      """SELECT * FROM (VALUES
-        |  ('01_topoccurrences', 'Apple|Apple Inc.|Apple Incorporated|Google|Google Inc.'),
-        |  ('02_group_sparse', 'Google,Google Inc.,Google Incorporated'),
-        |  ('03_group_neartext', '9'),
-        |  ('04_group_moves', '9'),
-        |  ('05_conflict', 'failed to extract hybrid params: hybrid search cannot have both nearText and nearVector parameters')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // _additional resolver matrix (local_get_with_additional_test.go): the
-    // interpretation concepts verbatim (ElementsMatch → name-sorted), the
-    // validity counts of the vector/neighbors/featureProjection arms, and
-    // non-null metadata on resolved references
-    "q_fixture_additional" ->
-      """SELECT * FROM (VALUES
-        |  ('01_vector', 'rows=9;ok=9'),
-        |  ('02_interpretation', 'Apple Inc.>apple|inc,Apple Incorporated>apple|incorporated,Apple>apple,Google Inc.>google|inc,Google Incorporated>google|incorporated,Google>google,Microsoft Inc.>microsoft|inc,Microsoft Incorporated>microsoft|incorporated,Microsoft>microsoft'),
-        |  ('03_neighbors', 'rows=9;ok=9'),
-        |  ('04_feature_projection', 'rows=9;dims3=9'),
-        |  ('05_ref_vector', 'Amsterdam>ok,Berlin>ok,Dusseldorf>ok,Missing Island>∅,Rotterdam>ok,∅>∅'),
-        |  ('06_ref_times', 'Amsterdam>ok/ok,Berlin>ok/ok,Dusseldorf>ok/ok,Missing Island>∅,Rotterdam>ok/ok,∅>∅')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // expected-failure suites (local_get_with_expected_failures.go,
-    // local_aggregate_with_expected_failures.go incl. explore): the
-    // reference's exact negative texts
-    "q_fixture_failures" ->
-      """SELECT * FROM (VALUES
-        |  ('01_get_certainty_l2', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
-        |  ('02_get_certainty_dot', 'can''t compute and return certainty when vector index is configured with dot distance'),
-        |  ('03_agg_nearvector', 'must provide certainty or objectLimit with vector search'),
-        |  ('04_agg_nearobject', 'must provide certainty or objectLimit with vector search'),
-        |  ('05_agg_neartext', 'must provide certainty or objectLimit with vector search'),
-        |  ('06_agg_nearvector_where', 'must provide certainty or objectLimit with vector search'),
-        |  ('07_agg_nearobject_where', 'must provide certainty or objectLimit with vector search'),
-        |  ('08_agg_neartext_where', 'must provide certainty or objectLimit with vector search'),
-        |  ('09_agg_objectlimit_bare', 'objectLimit can only be used with a near<Media> or hybrid filter'),
-        |  ('10_explore_mixed_metrics', 'vector search across classes not possible: found different distance metrics: class ''L2DistanceClass'' uses distance metric ''l2-squared'', class ''CosineClassA'' uses distance metric ''cosine''')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // multi-tenancy journey: tenant-scoped pages/counts + the reference's
-    // missing-tenant explorer text and lifecycle error texts verbatim
-    "q_fixture_tenants" ->
-      """SELECT * FROM (VALUES
-        |  ('01_objects', '0927a1e0-398e-4e76-91fb-04a7a8f0405c@Tenant1>Tenant1/meat,831ae1d0-f441-44b1-bb2a-46548048e26f@Tenant1>Tenant1/bananas,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59@Tenant1>Tenant1/kiwi,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59@otherTenant>Tenant1/kiwi'),
-        |  ('02_get', '0927a1e0-398e-4e76-91fb-04a7a8f0405c,6f3363e0-c0a0-4618-bf1f-b6cad9cdff59,831ae1d0-f441-44b1-bb2a-46548048e26f'),
-        |  ('03_nearobject', '3'),
-        |  ('04_neartext', '3'),
-        |  ('05_bm25', 'n=1;6f3363e0-c0a0-4618-bf1f-b6cad9cdff59'),
-        |  ('06_hybrid', 'n=1;kiwi'),
-        |  ('07_missing_tenant', 'explorer: list class: search: object search at index multitenantclass: class MultiTenantClass has multi-tenancy enabled, but request was without tenant'),
-        |  ('08_list', 'Tenant1=Active,Tenant2=Active,Tenant3=Active'),
-        |  ('09_duplicate_in_batch', 'tenant name DoubleTenant existed multiple times'),
-        |  ('10_recreate_idempotent', 'ok'),
-        |  ('11_frozen_on_create', 'invalid activity status ''FROZEN'' for tenant "tenant"'),
-        |  ('12_deactivated', 'tenant not active: Tenant1'),
-        |  ('13_reactivated', 'ok')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // batch endpoints journeys: the reference-asserted tallies — error-free
-    // imports, 3 refs per source, Matches/Successful/Failed under dry-run
-    // vs real deletes, and untouched-data verifications between them
-    "q_fixture_batch" ->
-      """SELECT * FROM (VALUES
-        |  ('01_batch_create', 'errors=0;sources=10;targets=3'),
-        |  ('02_batch_refs', 'errors=0;applied=30;dropped=0'),
-        |  ('03_gql_verify', 'items=10;with3refs=10'),
-        |  ('04_dryrun_by_ref', 'matches=20;successful=0;failed=0;objects=20'),
-        |  ('05_dryrun_untouched', 'targets=20'),
-        |  ('06_dryrun_by_prop', 'matches=20;successful=0;failed=0;objects=20'),
-        |  ('07_dryrun_prop_untouched', 'sources=20'),
-        |  ('08_delete_by_ref', 'matches=20;successful=20;failed=0;objects=20'),
-        |  ('09_ref_deleted', 'targets=0'),
-        |  ('10_delete_by_prop', 'matches=20;successful=20;failed=0;objects=20'),
-        |  ('11_prop_deleted', 'sources=0;journey_sources=10')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // unlimited-vector-search contracts: thresholds without a positive
-    // limit run unlimited (384/199 > the 100 default the suite pins),
-    // explicit limits bound (10/13/5), tight radii stay under it (60),
-    // multi-shard twins return all 3
-    "q_fixture_unlimited" ->
-      """SELECT * FROM (VALUES
-        |  ('01_nv_nolimit_dist', '384'), ('02_nv_nolimit_cert', '384'),
-        |  ('03_nv_neglimit_dist', '199'), ('04_nv_neglimit_cert', '384'),
-        |  ('05_nv_limit10_dist', '10'), ('06_nv_limit10_cert', '10'),
-        |  ('07_nv_tight_dist', '60'), ('08_nv_tight_cert', '60'),
-        |  ('09_no_nolimit_dist', '384'), ('10_no_nolimit_cert', '384'),
-        |  ('11_no_neglimit_dist', '199'), ('12_no_neglimit_cert', '384'),
-        |  ('13_no_limit13_dist', '13'), ('14_no_limit13_cert', '13'),
-        |  ('15_no_tight_dist', '60'), ('16_no_tight_cert', '60'),
-        |  ('17_nt_nolimit_dist', '384'), ('18_nt_nolimit_cert', '384'),
-        |  ('19_nt_neglimit_dist', '384'), ('20_nt_neglimit_cert', '384'),
-        |  ('21_nt_limit5_dist', '5'), ('22_nt_limit5_cert', '5'),
-        |  ('23_nt_tight_dist', '60'), ('24_nt_tight_cert', '60'),
-        |  ('25_ms_dist', '3'), ('26_ms_cert', '3')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // custom vectors: the reference-asserted EXACT orders
-    // (local_get_with_custom_vectors_test.go expected lists)
-    "q_fixture_cvc" ->
-      """SELECT * FROM (VALUES
-        |  ('01_get', '1ffeb3e1-1258-4c2a-afc3-55543f6c44b8,df22e5c4-5d17-49f9-a71d-f392a82bc086,c28a039a-d509-4c2e-940a-8b109e5bebf4'),
-        |  ('02_explore', 'weaviate://localhost/CustomVectorClass/1ffeb3e1-1258-4c2a-afc3-55543f6c44b8,weaviate://localhost/CustomVectorClass/df22e5c4-5d17-49f9-a71d-f392a82bc086,weaviate://localhost/CustomVectorClass/c28a039a-d509-4c2e-940a-8b109e5bebf4')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // graphql batch endpoint: graphql-go's syntax texts (DuckDB e''
-    // literals carry the embedded newlines), the 422 rejection, a happy path
-    "q_fixture_gql_batch" ->
-      """SELECT * FROM (VALUES
-        |  ('01_order_first', e'Syntax Error GraphQL request (1:1) Unexpected Name "testQuery"\n\n1: testQuery\n   ^\n'),
-        |  ('02_order_second', e'Syntax Error GraphQL request (1:1) Unexpected Name "testQuery2"\n\n1: testQuery2\n   ^\n'),
-        |  ('03_malformed_first', '422: expected map[string]interface{}, received [1 2 3]'),
-        |  ('04_malformed_second', '422: expected map[string]interface{}, received [1 2 3]'),
-        |  ('05_happy_batch', 'rows=3,rows=1')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // vector-distances acceptance: the per-metric expected distances
-    // verbatim (the suite asserts InDelta 0.01; these are the engine's
-    // exact 4-dp renders of the same values)
-    "q_fixture_distances" ->
-      """SELECT * FROM (VALUES
-        |  ('c01_plain', '0|0|0.0715|2'),
-        |  ('c02_cert0', '0/1|0/1|0.0715/0.9642|2/0'),
-        |  ('c03_cert095', '0/1|0/1|0.0715/0.9642'),
-        |  ('c04_cert097', '0/1|0/1'),
-        |  ('c05_cert1', '0/1|0/1'),
-        |  ('c06_dist2', '0|0|0.0715|2'),
-        |  ('c07_dist199', '0|0|0.0715'),
-        |  ('c08_dist008', '0|0|0.0715'),
-        |  ('c09_dist001', '0|0'),
-        |  ('c10_explore_cert0', '0|0|0.0715|2'),
-        |  ('c11_explore_cert095', '0|0|0.0715'),
-        |  ('c12_explore_dist199', '0|0|0.0715'),
-        |  ('c13_explore_dist001', '0|0'),
-        |  ('d01_plain', '-50|-12|0|50'),
-        |  ('d02_cert_rejected', 'can''t compute and return certainty when vector index is configured with dot distance'),
-        |  ('d03_dist50', '-50|-12|0|50'),
-        |  ('d04_dist30', '-50|-12|0'),
-        |  ('d05_dist0', '-50|-12|0'),
-        |  ('d06_dist_neg40', '-50'),
-        |  ('d07_dist_neg60_empty', ''),
-        |  ('h01_plain', '0|1|2'),
-        |  ('h02_cert_rejected', 'can''t compute and return certainty when vector index is configured with hamming distance'),
-        |  ('h03_dist365', '0|1|2'),
-        |  ('h04_dist15', '0|1'),
-        |  ('h05_dist05', '0'),
-        |  ('h06_dist0', '0'),
-        |  ('l01_plain', '0|50|365'),
-        |  ('l02_cert_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
-        |  ('l03_cert_prop_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance'),
-        |  ('l04_dist365', '0|50|365'),
-        |  ('l05_dist364', '0|50'),
-        |  ('l06_dist49', '0'),
-        |  ('l07_dist0', '0'),
-        |  ('m01_plain', '0|12|33'),
-        |  ('m02_cert_rejected', 'can''t compute and return certainty when vector index is configured with manhattan distance'),
-        |  ('m03_dist365', '0|12|33'),
-        |  ('m04_dist30', '0|12'),
-        |  ('m05_dist10', '0'),
-        |  ('m06_dist0', '0'),
-        |  ('x01_explore_l2', 'L2Squared_Class_2/12|L2Squared_Class_2/27|L2Squared_Class/50|L2Squared_Class/147|L2Squared_Class/365'),
-        |  ('x02_explore_cert_rejected', 'can''t compute and return certainty when vector index is configured with l2-squared distance')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // hybrid MMR diversity via binary gRPC: balance=1 = baseline, balance=0
-    // reorders within the relevance window keeping the seed (the window =
-    // the request limit, explorer.go:280-330 — picking a1 then the
-    // farther-from-a1 a3 is the reference's own selection math)
-    "q_fixture_hybrid_mmr" ->
-      """SELECT * FROM (VALUES
-        |  ('01_baseline', 'doc a1,doc a2,doc a3'),
-        |  ('02_balance1_matches', 'doc a1,doc a2,doc a3;same=true'),
-        |  ('03_balance0_diverse', 'doc a1,doc a3,doc a2;differs=true;keeps_seed=true')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // boost acceptance: the suite's ordering/equality contracts plus the
-    // engine's deterministic boosted orders over the formula bed (origin-now
-    // decay at this bed's ages underflows to a flat boost → primary order,
-    // exactly the reference a year past the bed date)
-    "q_fixture_boost" ->
-      """SELECT * FROM (VALUES
-        |  ('b01_nv_base', 'Song 000,Song 063,Song 009,Song 072,Song 048,Song 087,Song 024,Song 039,Song 030,Song 004'),
-        |  ('b02_no_base', '10'),
-        |  ('b03_filter_likes', 'Song 063,Song 009,Song 024,Song 039,Song 006,Song 049,Song 054,Song 093,Song 010,Song 081'),
-        |  ('b04_filter_likes_and_date', 'Song 009,Song 006,Song 010,Song 081,Song 067,Song 069,Song 078,Song 068,Song 082,Song 066'),
-        |  ('b05_pv_none', 'Song 069,Song 054,Song 039,Song 024,Song 068,Song 025,Song 009,Song 096,Song 083,Song 082'),
-        |  ('b06_pv_log1p', 'Song 009,Song 024,Song 039,Song 063,Song 054,Song 069,Song 048,Song 096,Song 010,Song 081'),
-        |  ('b07_pv_sqrt', 'Song 024,Song 069,Song 039,Song 009,Song 054,Song 096,Song 025,Song 068,Song 010,Song 067'),
-        |  ('b08_log1p_vs_none_differs', 'true'),
-        |  ('b09_decay_exp', 'Song 000,Song 066,Song 065,Song 067,Song 001,Song 068,Song 069,Song 004,Song 003,Song 072'),
-        |  ('b10_decay_gauss', 'Song 000,Song 067,Song 066,Song 001,Song 068,Song 069,Song 065,Song 003,Song 004,Song 002'),
-        |  ('b11_decay_linear', 'Song 000,Song 066,Song 067,Song 065,Song 001,Song 068,Song 069,Song 004,Song 003,Song 072'),
-        |  ('b12_decay_origin_now', 'Song 000,Song 063,Song 009,Song 072,Song 048,Song 087,Song 024,Song 039,Song 030,Song 004'),
-        |  ('b13_tight_vs_wide_differs', 'true'),
-        |  ('b14_decay_value_differs', 'true'),
-        |  ('b15_curves_differ', 'true'),
-        |  ('b16_blend_filter_decay', 'Song 009,Song 067,Song 066,Song 069,Song 068,Song 006,Song 024,Song 063,Song 010,Song 078'),
-        |  ('b17_blend_pv_decay', 'Song 000,Song 067,Song 066,Song 068,Song 069,Song 001,Song 009,Song 063,Song 004,Song 024'),
-        |  ('b18_weight_differs', 'true'),
-        |  ('b19_depth1_equals_base', 'true'),
-        |  ('b20_depth_large_promotes', 'true'),
-        |  ('b21_negative_weight', '10'),
-        |  ('h01_hybrid_base', '10'),
-        |  ('h02_hybrid_filter_differs', 'true'),
-        |  ('h03_hybrid_pv', '10'),
-        |  ('h04_hybrid_decay', '10'),
-        |  ('h05_hybrid_weight0_noop', 'true'),
-        |  ('p01_page_through_nv', 'true'),
-        |  ('p02_page_through_hybrid', 'true'),
-        |  ('p03_page_through_bm25', 'true'),
-        |  ('p04_boost_reorders_offset', 'true')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // REST search endpoint: the envelope/status contracts verbatim
-    "q_fixture_rest_search" ->
-      """SELECT * FROM (VALUES
-        |  ('01_happy', 'status=200;n=2;first_id=aa44bbee-ca5f-4db7-a412-5fc6a2300002;first_title=spaceship galaxy adventure;props=title;asc=true;took=true'),
-        |  ('02_metadata_keys', 'status=200;keys=certainty|creationTime|distance|lastUpdateTime'),
-        |  ('03_id_always', 'status=200;id=aa44bbee-ca5f-4db7-a412-5fc6a2300002;no_metadata=true'),
-        |  ('04_id_not_metadata', 'status=422;msg_has_key=true;shaped=true'),
-        |  ('05_metadata_prop', 'status=200;prop=user data;dist=true;id=aa44bbee-ca5f-4db7-a412-5fc6a2300002'),
-        |  ('06_where', 'status=200;n=1;title=cooking dinner recipes'),
-        |  ('07_no_index_422', 'status=422;has_flag=true'),
-        |  ('08_references', 'status=200;not_in_props=true;ref_name=famous writer'),
-        |  ('09_refs_omitted', 'status=200;no_refs=true'),
-        |  ('10_nested_object', 'status=200;summary=a journey through space;duration=120'),
-        |  ('11_no_vectorizer_422', 'status=422;has_word=true'),
-        |  ('12_unknown_404', '404'),
-        |  ('13_mt_statuses', 'ok=200/1;ghost=404;missing=422;non_mt=422'),
-        |  ('14_certainty_non_cosine', 'status=422;has_word=true'),
-        |  ('15_unknown_prop_400', 'status=400;has_text=true'),
-        |  ('16_absent_query_422', 'status=422;has_word=true;shaped=true')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // alias lifecycle journey: counts, case-canonical lookups, the clash
-    // texts verbatim, alias-resolved reads, alias-rejected mutations
-    "q_fixture_aliases" ->
-      """SELECT * FROM (VALUES
-        |  ('01_created', '8'),
-        |  ('02_get', 'RestBookAlias>Books'),
-        |  ('03_get_case', 'RestBookAlias'),
-        |  ('04_get_missing', '0'),
-        |  ('05_replace', 'Document'),
-        |  ('06_replace_case', 'Passage'),
-        |  ('07_replace_missing', 'replace alias: alias AliasThatDoesntExist does not exist'),
-        |  ('08_replace_bad_target', 'replace alias: class ErrorCollection does not exist'),
-        |  ('09_update_with_class_name', 'replace alias: alias Document does not exist'),
-        |  ('10_delete', '7'),
-        |  ('11_delete_case', '0'),
-        |  ('12_delete_missing', 'alias RestAliasThatWillBeReplaced not found'),
-        |  ('13_clash_class_name', 'create alias: class Books already exists'),
-        |  ('14_clash_alias_name', 'create alias: RestBookAlias, alias already exists'),
-        |  ('15_class_shadows_alias', 'alias name RestBookAlias already exists'),
-        |  ('16_create_bad_target', 'create alias: NonExistingAlias, class not found, NonExistingCollection'),
-        |  ('17_object_via_alias', 'n=1;title=Dune'),
-        |  ('18_gql_get_via_alias', 'n=3;all_filled=true'),
-        |  ('19_gql_neartext_via_alias', '3'),
-        |  ('20_gql_aggregate_via_alias', '3'),
-        |  ('21_tenant_create_via_alias', 'class MultiTenantAlias not found'),
-        |  ('22_tenant_update_via_alias', 'class MultiTenantAlias not found'),
-        |  ('23_tenant_delete_via_alias', 'class MultiTenantAlias not found'),
-        |  ('24_tenant_read_via_alias', 'Tenant2'),
-        |  ('25_schema_update_via_alias', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // typed gRPC list kinds: the raw Value oneof tags per property plus the
-    // round-tripped values (the suite's GetTextValues/GetIntValues/...
-    // accessors ARE these kind tags)
-    "q_fixture_grpc_lists" ->
-      """SELECT * FROM (VALUES
-        |  ('01_batch', 'errors=0;stored=1'),
-        |  ('02_kinds', 'texts=list:text_values,ints=list:int_values,bools=list:bool_values,numbers=list:number_values,uuids=list:uuid_values,dates=list:date_values,objects=list:object_values'),
-        |  ('03_texts', 'text1|text2'),
-        |  ('04_ints', '1|2'),
-        |  ('05_bools', 'true|false'),
-        |  ('06_numbers', '1.1|2.2'),
-        |  ('07_uuids', '99000000-0000-4000-8000-000000000001|99000000-0000-4000-8000-000000000002'),
-        |  ('08_dates', '2020-01-01T00:00:00Z'),
-        |  ('09_objects', 'text1|text2')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // binary TenantsGet: all/by-names/empty-error/unknown-empty contracts
-    "q_fixture_grpc_tenants" ->
-      """SELECT * FROM (VALUES
-        |  ('01_all', 'Tenant1=TENANT_ACTIVITY_STATUS_HOT,Tenant2=TENANT_ACTIVITY_STATUS_HOT,Tenant3=TENANT_ACTIVITY_STATUS_HOT'),
-        |  ('02_by_names', 'Tenant1=TENANT_ACTIVITY_STATUS_HOT,Tenant3=TENANT_ACTIVITY_STATUS_HOT'),
-        |  ('03_names_empty_error', 'error: tenant names must not be empty when the names parameter is set'),
-        |  ('04_unknown_empty', '')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // unindexed-property journey: indexed filter serves, hidden prop errors
-    "q_fixture_unindexed" ->
-      """SELECT * FROM (VALUES
-        |  ('01_indexed_filter', 'elephant/zebra'),
-        |  ('02_hidden_filter_rejected', 'Filtering by property ''hiddenName'' requires inverted index. Is `indexFilterable` option of property ''hiddenName'' enabled? Set it to `true` or leave empty')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // cursor api: the walks' id pages + verbatim validation texts
-    "q_fixture_cursor" ->
-      """SELECT * FROM (VALUES
-        |  ('01_walk_from_start', '001,002,003,004,005,006,007'),
-        |  ('02_walk_after_id4', '005,006,007'),
-        |  ('03_offset', 'cursor api: invalid ''after'' parameter: offset cannot be set with after and limit parameters'),
-        |  ('04_nearobject', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
-        |  ('05_nearvector', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
-        |  ('06_hybrid', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
-        |  ('07_bm25', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
-        |  ('08_sort', 'cursor api: invalid ''after'' parameter: sort cannot be set with after and limit parameters'),
-        |  ('09_where', 'cursor api: invalid ''after'' parameter: where cannot be set with after and limit parameters'),
-        |  ('10_multi', 'cursor api: invalid ''after'' parameter: other params cannot be set with after and limit parameters'),
-        |  ('11_no_limit', 'cursor api: invalid ''after'' parameter: limit parameter must be set')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // ArrayClass/DuplicatesClass matrix: the reference-asserted stat sets
-    // (booleanArray/textArray/numberArray/intArray/dateArray expectations,
-    // matrix_no_groupby_test.go:26-130), floats at the repo's round-4
-    "q_fixture_agg_arrays" ->
-      """SELECT * FROM (VALUES
-        |  ('a01_without', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
-        |  ('a02_where_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
-        |  ('a03_where_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
-        |  ('a04_where_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
-        |  ('a05_where_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
-        |  ('a06_near_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
-        |  ('a07_near_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
-        |  ('a08_near_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
-        |  ('a09_where_near_all', 'meta=7;bool=10/4/6/0.4/0.6;texts=10;top=Alpha=4,Bravo=3,Charlie=2,Delta=1;nums=10/4/1/1/20/2/2;ints=10/104/101/101/1020/102/102;dates=10'),
-        |  ('a10_where_near_withdata', 'meta=2;bool=7/2/5/0.2857/0.7143;texts=7;top=Alpha=2,Bravo=2,Charlie=2,Delta=1;nums=7/4/1/1/16/2/2.2857;ints=7/104/101/101/716/102/102.2857;dates=7'),
-        |  ('a11_where_near_withoutdata', 'meta=3;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
-        |  ('a12_where_near_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0'),
-        |  ('d01_without', 'meta=3;bool=9/3/6/0.3333/0.6667;texts=9;top=Alpha=6,Bravo=3;nums=9/2/1/1/12/1/1.3333;ints=9/102/101/101/912/101/101.3333;dates=9'),
-        |  ('d02_where_all', 'meta=3;bool=9/3/6/0.3333/0.6667;texts=9;top=Alpha=6,Bravo=3;nums=9/2/1/1/12/1/1.3333;ints=9/102/101/101/912/101/101.3333;dates=9'),
-        |  ('d03_where_some', 'meta=1;bool=4/1/3/0.25/0.75;texts=4;top=Alpha=3,Bravo=1;nums=4/2/1/1/5/1/1.25;ints=4/102/101/101/405/101/101.25;dates=4'),
-        |  ('d04_where_none', 'meta=0;bool=0/∅/∅/∅/∅;texts=0;top=;nums=0/∅/∅/∅/∅/∅/∅;ints=0/∅/∅/∅/∅/∅/∅;dates=0')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // ClassWithoutProperties matrix: meta-only counts
-    "q_fixture_agg_noprops" ->
-      """SELECT * FROM (VALUES
-        |  ('n01_without', '2'),
-        |  ('n02_where_all', '2'),
-        |  ('n03_where_some', '1'),
-        |  ('n04_where_none', '0'),
-        |  ('n05_near_all', '2'),
-        |  ('n06_where_near_all', '2'),
-        |  ('n07_where_near_some', '1'),
-        |  ('n08_where_near_none', '0')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // Person-bed filter journeys: reference-asserted member sets
-    "q_fixture_persons" ->
-      """SELECT * FROM (VALUES
-        |  ('01_refcount_eq0', 'Alice'),
-        |  ('02_refcount_eq1', 'Bob'),
-        |  ('03_refcount_gte2', 'John,Petra'),
-        |  ('04_prof_partial', ''),
-        |  ('05_prof_bob', 'Bob'),
-        |  ('06_prof_john', 'John'),
-        |  ('07_prof_petra', 'Petra'),
-        |  ('08_about_partial', ''),
-        |  ('09_about_john', 'John'),
-        |  ('10_about_two', 'Bob,John'),
-        |  ('11_about_petra', 'Petra')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // legacy grouping over the Company bed; member order = the engine's
-    // stable uuid page order (the reference documents its own order as
-    // internal-docID-dependent, gh-1958 test note)
-    "q_fixture_group_legacy" ->
-      """SELECT * FROM (VALUES
-        |  ('01_control', 'Apple,Apple Inc.,Apple Incorporated,Google,Google Inc.,Google Incorporated,Microsoft,Microsoft Inc.,Microsoft Incorporated'),
-        |  ('02_merge_force1_rows', '1'),
-        |  ('03_merge_force1_name', 'Apple Inc. (Google Incorporated, Google Inc., Microsoft Incorporated, Apple, Apple Incorporated, Google, Microsoft Inc., Microsoft)'),
-        |  ('04_merge_force1_cities', 'Amsterdam,Berlin,Dusseldorf'),
-        |  ('05_merge_force0_rows', '9'),
-        |  ('06_merge_force0_ms_cities', 'Microsoft Inc.=1,Microsoft Incorporated=2,Microsoft=1'),
-        |  ('07_closest_force01_rows', '3'),
-        |  ('08_closest_neartext_rows', '1'),
-        |  ('09_merge_where_name', 'Apple Inc. (Google Incorporated, Google Inc., Microsoft Incorporated, Apple, Apple Incorporated, Google, Microsoft Inc., Microsoft)')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // people-by-city groupBy: the acceptance group order/beacons/hit sets
-    "q_fixture_group_by" ->
-      """SELECT * FROM (VALUES
-        |  ('01_group', 'weaviate://localhost/City/8f5f8e44-d348-459c-88b1-c1a44bb8f8be;count=3;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c|3ef44474-b5e5-455d-91dc-d917b5b76165|8615585a-2960-482d-b19d-8bee98ade52c'),
-        |  ('02_group', 'weaviate://localhost/City/9b9cbea5-e87e-4cd0-89af-e2f424fd52d6;count=2;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c|3ef44474-b5e5-455d-91dc-d917b5b76165'),
-        |  ('03_group', ';count=1;hits=5d0fa6ee-21c4-4b46-a735-f0208717837d'),
-        |  ('04_group', 'weaviate://localhost/City/6ffb03f8-a853-4ec5-a5d8-302e45aaaf13;count=1;hits=15d222c9-8c36-464b-bedb-113faa1c1e4c')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // aggregatesOnDateFields: the reference's expected RFC3339Nano strings
-    "q_fixture_agg_dates" ->
-      """SELECT * FROM (VALUES
-        |  ('01_no_group', 'count=10;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:06.1449075Z'),
-        |  ('02_#1', 'count=1;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:18:59.640162Z;median=2022-06-16T22:18:59.640162Z;mode=2022-06-16T22:18:59.640162Z'),
-        |  ('02_#10', 'count=1;min=2022-06-16T22:19:11.837473Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:11.837473Z;mode=2022-06-16T22:19:11.837473Z'),
-        |  ('02_#2', 'count=1;min=2022-06-16T22:19:01.495967Z;max=2022-06-16T22:19:01.495967Z;median=2022-06-16T22:19:01.495967Z;mode=2022-06-16T22:19:01.495967Z'),
-        |  ('02_#3', 'count=1;min=2022-06-16T22:19:03.495596Z;max=2022-06-16T22:19:03.495596Z;median=2022-06-16T22:19:03.495596Z;mode=2022-06-16T22:19:03.495596Z'),
-        |  ('02_#4', 'count=1;min=2022-06-16T22:19:04.3828349Z;max=2022-06-16T22:19:04.3828349Z;median=2022-06-16T22:19:04.3828349Z;mode=2022-06-16T22:19:04.3828349Z'),
-        |  ('02_#5', 'count=1;min=2022-06-16T22:19:05.894857Z;max=2022-06-16T22:19:05.894857Z;median=2022-06-16T22:19:05.894857Z;mode=2022-06-16T22:19:05.894857Z'),
-        |  ('02_#6', 'count=1;min=2022-06-16T22:19:06.394958Z;max=2022-06-16T22:19:06.394958Z;median=2022-06-16T22:19:06.394958Z;mode=2022-06-16T22:19:06.394958Z'),
-        |  ('02_#7', 'count=1;min=2022-06-16T22:19:07.589828Z;max=2022-06-16T22:19:07.589828Z;median=2022-06-16T22:19:07.589828Z;mode=2022-06-16T22:19:07.589828Z'),
-        |  ('02_#8', 'count=1;min=2022-06-16T22:19:08.112395Z;max=2022-06-16T22:19:08.112395Z;median=2022-06-16T22:19:08.112395Z;mode=2022-06-16T22:19:08.112395Z'),
-        |  ('02_#9', 'count=1;min=2022-06-16T22:19:10.339493Z;max=2022-06-16T22:19:10.339493Z;median=2022-06-16T22:19:10.339493Z;mode=2022-06-16T22:19:10.339493Z'),
-        |  ('03_hello!', 'count=10;min=2022-06-16T22:18:59.640162Z;max=2022-06-16T22:19:11.837473Z;median=2022-06-16T22:19:06.1449075Z')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    "q_fixture_agg_near" -> values(Seq(
-      "n01_neartext_ams_dist" -> ("meta=1;cap=1/0/1/0/1;" +
-        "pop=1/1800000/1800000/1800000/1800000;top=Amsterdam=1;pointing=Country"),
-      "n02_neartext_ams_cert" -> ("meta=1;cap=1/0/1/0/1;" +
-        "pop=1/1800000/1800000/1800000/1800000;top=Amsterdam=1;pointing=Country"),
-      "n03_nearobj_ber_dist" -> ("meta=1;cap=1/0/1/0/1;" +
-        "pop=1/3470000/3470000/3470000/3470000;top=Berlin=1;pointing=Country"),
-      "n04_nearobj_ber_cert" -> ("meta=1;cap=1/0/1/0/1;" +
-        "pop=1/3470000/3470000/3470000/3470000;top=Berlin=1;pointing=Country"))))
 }

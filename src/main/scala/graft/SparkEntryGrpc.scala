@@ -32,10 +32,8 @@ import graft.model.{CollectionSchema, Property, PropType, Tokenization, Stopword
  */
 object SparkEntryGrpc {
 
-  private def steps(s: SparkSession, rows: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("step", "result").orderBy(col("step"))
-  }
+  import Fixtures.cached
+  import Gate.steps
 
   /** LE fp32 → base64 (byteops.Fp32SliceToBytes). */
   private def b64Fp32(vs: Seq[Float]): String = {
@@ -81,10 +79,6 @@ object SparkEntryGrpc {
    * 2 objects, 3 named vector spaces — colbert (multi-vector), regular
    * (3-dim), description (vectorized from the description property with
    * vectorizeClassName=false). */
-  private val bedCache = scala.collection.mutable.Map.empty[(SparkSession, String), Any]
-  private def cached[T](s: SparkSession, key: String)(build: => T): T =
-    bedCache.synchronized(bedCache.getOrElseUpdate((s, key), build)).asInstanceOf[T]
-
   private def planetsGraft(s: SparkSession): Graft = cached(s, "planets") {
     val earthDesc = "The Earth's surface is predominantly covered by oceans, accounting " +
       "for about 71% of its total area, while continents provide the stage for bustling " +
@@ -1577,113 +1571,7 @@ object SparkEntryGrpc {
     cityNsGraft(s)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fixture_mcp_hybrid" -> ((s, _) => mcpHybridGate(s)),
-    "q_fixture_grpc_agg" -> ((s, _) => grpcAggGate(s)),
-    "q_fixture_grpc_batch" -> ((s, _) => grpcBatchGate(s)),
-    "q_fixture_grpc_search" -> ((s, _) => grpcSearchGate(s)),
-    "q_fixture_grpc_base" -> ((s, _) => grpcBaseGate(s)),
-    "q_fixture_mcp_upsert" -> ((s, _) => mcpUpsertGate(s)),
-    "q_fixture_grpc_vectors" -> ((s, _) => grpcNamedVectorsGate(s)),
-    "q_fixture_grpc_mixed" -> ((s, _) => grpcMixedVectorsGate(s)),
-    "q_fixture_grpc_filtered" -> ((s, _) => grpcFilteredGate(s)))
-
-  def oracleSql: Map[String, String] = Map(
-    // grpc_test.go: the 3-book batch import over the binary wire, the
-    // nested-props matrix (title/meta.isbn/meta.obj.text/meta.objs[0].text/
-    // reviews[0].tags per book — identical with and without an explicit
-    // PropertiesRequest), hybrid/nearText first-hit Dune ± 1-group groupBy,
-    // the implicit nested-object render (reviews absent when unselected),
-    // Aggregate objects_count=3, the binary BatchDelete dry-run with gRPC
-    // reply semantics (successful=matches on dry run, the 16-byte uuid),
-    // and the empty-request rejection
-    "q_fixture_grpc_base" ->
-      """SELECT * FROM (VALUES
-        |  ('b01_batch', 'errors=0;stored=3'),
-        |  ('b02_search_props', 'n=3;Dune|978-0593099322|some text|some text|sci-fi+epic;Project Hail Mary|978-0593135204|some text|some text|sci-fi;The Lord of the Ice Garden|978-8374812962|some text|some text|sci-fi+fantasy'),
-        |  ('b03_search_noprops', 'n=3;Dune|978-0593099322|some text|some text|sci-fi+epic;Project Hail Mary|978-0593135204|some text|some text|sci-fi;The Lord of the Ice Garden|978-8374812962|some text|some text|sci-fi+fantasy'),
-        |  ('b04_hybrid', 'first=Dune;n=1'),
-        |  ('b05_hybrid_group', 'groups=1'),
-        |  ('b06_neartext', 'first=Dune'),
-        |  ('b07_neartext_group', 'groups=1'),
-        |  ('b08_implicit_nested', 'title=Dune;isbn=978-0593099322;obj=some text;objs0=some text;reviews_absent=true'),
-        |  ('b09_aggregate', 'objects_count=3'),
-        |  ('b10_batch_delete', 'matches=1;successful=1;failed=0;uuid_is_dune=true'),
-        |  ('b11_empty_rejected', 'rejected')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-    // mcp/objects_upsert_test.go + get_config_test.go: insert/update/mixed
-    // batches with deterministic ids, the function-level throws (empty
-    // batch, malformed uuid — objects_upsert.go:58,84) vs per-item errors
-    // (unknown class batch_add.go:227, tenant gates, property validation
-    // texts, the named-vector config check vector_validation.go:60, the
-    // dimension contract), partial-batch accounting, the 100-object batch,
-    // arrays/unicode/null props, and the read tools (config all/one,
-    // tenants-list)
-    "q_fixture_mcp_upsert" ->
-      """SELECT * FROM (VALUES
-        |  ('g01_config_all', 'ComplexObject,Paragraph,ParagraphMT'),
-        |  ('g02_config_one', 'Paragraph'),
-        |  ('g03_tenants', 'tenant1:ACTIVE,tenant2:ACTIVE'),
-        |  ('u01_insert_one', '0dc00000-0000-4000-8000-000000000001'),
-        |  ('u01_verify', 'Test Article Content|Test Article'),
-        |  ('u02_insert_multi', '0dc00000-0000-4000-8000-000000000002,0dc00000-0000-4000-8000-000000000003,0dc00000-0000-4000-8000-000000000004'),
-        |  ('u02_verify', 'Second Article Content'),
-        |  ('u03_update', '0dc00000-0000-4000-8000-000000000001'),
-        |  ('u03_verify', 'Updated Content'),
-        |  ('u04_mixed', '0dc00000-0000-4000-8000-000000000001,0dc00000-0000-4000-8000-000000000005,0dc00000-0000-4000-8000-000000000006'),
-        |  ('u05_vector', '0dc00000-0000-4000-8000-000000000007'),
-        |  ('u05_verify', 'dim=5'),
-        |  ('u06_empty', 'throw(at least one object is required)'),
-        |  ('u07_unknown_class', 'err(class ''NonExistentCollection9999'' not present in schema)'),
-        |  ('u08_tenant', '0dc00000-0000-4000-8000-000000000008'),
-        |  ('u08_verify', 'Tenant 1 Content|t2=absent'),
-        |  ('u09_invalid_tenant', 'err(tenant not found: nonexistent)'),
-        |  ('u10_missing_tenant', 'err(class ParagraphMT has multi-tenancy enabled, but request was without tenant)'),
-        |  ('u11_invalid_uuid', 'throw(invalid UUID for object)'),
-        |  ('u12_partial_props', '0dc00000-0000-4000-8000-000000000009'),
-        |  ('u13_bad_int', 'err(invalid object: invalid integer property ''intProp'' on class ''ComplexObject'': requires an integer, the given value is ''"not-an-integer"'')'),
-        |  ('u14_dates', '0dc00000-0000-4000-8000-000000000010;err(invalid object: invalid date property ''dateProp'' on class ''ComplexObject'': requires a string with a RFC3339 formatted date, but the given value is ''2023-01-15'')'),
-        |  ('u15_unconfigured_vectors', 'err(collection Paragraph does not have configuration for vector text)'),
-        |  ('u16_dim_mismatch', 'err(vector lengths don''t match for vector "default": 5 vs 3)'),
-        |  ('u17_partial', 'ok=2;fail=1;fail_idx=1'),
-        |  ('u18_large', 'n=100;ok=100'),
-        |  ('u19_noop', '0dc00000-0000-4000-8000-000000000001'),
-        |  ('u20_arrays', '0dc00000-0000-4000-8000-000000000113'),
-        |  ('u20_verify', '[value1+value2+value3]|[1+2+3+4+5]'),
-        |  ('u21_unicode', '0dc00000-0000-4000-8000-000000000114'),
-        |  ('u21_verify', '海賊王に、俺はなる！'),
-        |  ('u22_nulls', '0dc00000-0000-4000-8000-000000000115'),
-        |  ('u22_verify', 'Valid Text|int=null')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-    // TestGRPC_Aggregate: every expected value verbatim — meta counts,
-    // the int/text/boolean matrices, the DATE aggregation's int64-ns
-    // wraparound renders (1135/1283/1400 → 1719/1867/1984 with the
-    // .709551616 artifact — the reference's own physical behavior for
-    // pre-1677 dates, reproduced by storing the same wrapped int64 ns),
-    // cref pointingTo, the filtered multi-aggregation, per-group date/
-    // text[] contracts (group KEYS render the wrapped instant where the
-    // reference echoes the raw +02:00 input string — documented
-    // divergence; counts/medians/topOccurrences are verbatim), and the
-    // nearText/nearObject/nearVector scoped arms (only Amsterdam passes
-    // the 0.2 radius + isCapital filter)
-    "q_fixture_grpc_agg" ->
-      """SELECT * FROM (VALUES
-        |  ('g01_count_Country', 'count=2'),
-        |  ('g02_count_City', 'count=6'),
-        |  ('g03_count_Airport', 'count=4'),
-        |  ('g04_int', 'count=5;type=int;mean=1294000;maximum=3470000;minimum=0;sum=6470000'),
-        |  ('g05_text', 'type=text;top=Amsterdamx1|Berlinx1|Dusseldorfx1|Missing Islandx1|Rotterdamx1'),
-        |  ('g06_boolean', 'count=5;type=boolean;totalTrue=2;totalFalse=3;percentageTrue=0.4;percentageFalse=0.6'),
-        |  ('g07_date', 'count=4;max=1984-07-21T21:34:33.709551616Z;median=1926-01-21T09:34:33.709551616Z;min=1719-07-21T21:34:33.709551616Z;mode=1984-07-21T21:34:33.709551616Z'),
-        |  ('g08_reference', 'type=cref;pointingTo=Country'),
-        |  ('g09_filtered', 'refType=cref;pointingTo=Country;nameTop=Dusseldorfx1|Missing Islandx1|Rotterdamx1;popCount=3;popMax=600000;popMean=400000;popMin=0;popMode=600000;popSum=1200000'),
-        |  ('g10_group00', 'key=1867-07-22T21:34:33.709551616Z;n=1;median=1867-07-22T21:34:33.709551616Z;names=1;tzType=text[];tzCount=2;tzTop=CESTx1|CETx1'),
-        |  ('g10_group01', 'key=1719-07-21T21:34:33.709551616Z;n=1;median=1719-07-21T21:34:33.709551616Z;names=1;tzType=text[];tzCount=2;tzTop=CESTx1|CETx1'),
-        |  ('g10_group02', 'key=1984-07-21T21:34:33.709551616Z;n=2;median=1984-07-21T21:34:33.709551616Z;names=2;tzType=text[];tzCount=4;tzTop=CESTx2|CETx2'),
-        |  ('g11_neartext', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1'),
-        |  ('g12_nearobject', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1'),
-        |  ('g13_nearvector', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+  private[graft] def gates: Seq[Gate] = Seq(
     // mcp/query_hybrid_test.go: the tool's full contract — pure-BM25
     // counts, limit incl. 0, property selection (absent = all), metadata
     // mapping, target properties, the REST-style filter tree (text/int/
@@ -1691,7 +1579,7 @@ object SparkEntryGrpc {
     // arms, DefaultAlpha 0.75 falling back to the sparse leg without a
     // vectorizer, and the tools_list descriptor. m06: hybrid pages
     // carry the fusion's own ExplainScore string.
-    "q_fixture_mcp_hybrid" ->
+    Gate("q_fixture_mcp_hybrid",
       """SELECT * FROM (VALUES
         |  ('m01_pure_bm25', 'n=3;first=Machine Learning Basics'),
         |  ('m02_limit', 'n2=2;n0=0'),
@@ -1711,14 +1599,43 @@ object SparkEntryGrpc {
         |  ('m16_unknown_collection', 'error=unknown collection NonExistentCollection'),
         |  ('m17_default_alpha', 'n=3'),
         |  ('m18_tools_list', 'description=Performs hybrid search (vector + keyword) for data in a collection.;destructiveHint=false;idempotentHint=true;name=weaviate-query-hybrid;readOnlyHint=true')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => mcpHybridGate(s)),
+    // TestGRPC_Aggregate: every expected value verbatim — meta counts,
+    // the int/text/boolean matrices, the DATE aggregation's int64-ns
+    // wraparound renders (1135/1283/1400 → 1719/1867/1984 with the
+    // .709551616 artifact — the reference's own physical behavior for
+    // pre-1677 dates, reproduced by storing the same wrapped int64 ns),
+    // cref pointingTo, the filtered multi-aggregation, per-group date/
+    // text[] contracts (group KEYS render the wrapped instant where the
+    // reference echoes the raw +02:00 input string — documented
+    // divergence; counts/medians/topOccurrences are verbatim), and the
+    // nearText/nearObject/nearVector scoped arms (only Amsterdam passes
+    // the 0.2 radius + isCapital filter)
+    Gate("q_fixture_grpc_agg",
+      """SELECT * FROM (VALUES
+        |  ('g01_count_Country', 'count=2'),
+        |  ('g02_count_City', 'count=6'),
+        |  ('g03_count_Airport', 'count=4'),
+        |  ('g04_int', 'count=5;type=int;mean=1294000;maximum=3470000;minimum=0;sum=6470000'),
+        |  ('g05_text', 'type=text;top=Amsterdamx1|Berlinx1|Dusseldorfx1|Missing Islandx1|Rotterdamx1'),
+        |  ('g06_boolean', 'count=5;type=boolean;totalTrue=2;totalFalse=3;percentageTrue=0.4;percentageFalse=0.6'),
+        |  ('g07_date', 'count=4;max=1984-07-21T21:34:33.709551616Z;median=1926-01-21T09:34:33.709551616Z;min=1719-07-21T21:34:33.709551616Z;mode=1984-07-21T21:34:33.709551616Z'),
+        |  ('g08_reference', 'type=cref;pointingTo=Country'),
+        |  ('g09_filtered', 'refType=cref;pointingTo=Country;nameTop=Dusseldorfx1|Missing Islandx1|Rotterdamx1;popCount=3;popMax=600000;popMean=400000;popMin=0;popMode=600000;popSum=1200000'),
+        |  ('g10_group00', 'key=1867-07-22T21:34:33.709551616Z;n=1;median=1867-07-22T21:34:33.709551616Z;names=1;tzType=text[];tzCount=2;tzTop=CESTx1|CETx1'),
+        |  ('g10_group01', 'key=1719-07-21T21:34:33.709551616Z;n=1;median=1719-07-21T21:34:33.709551616Z;names=1;tzType=text[];tzCount=2;tzTop=CESTx1|CETx1'),
+        |  ('g10_group02', 'key=1984-07-21T21:34:33.709551616Z;n=2;median=1984-07-21T21:34:33.709551616Z;names=2;tzType=text[];tzCount=4;tzTop=CESTx2|CETx2'),
+        |  ('g11_neartext', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1'),
+        |  ('g12_nearobject', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1'),
+        |  ('g13_nearvector', 'popCount=1;popSum=1800000;nameTop=Amsterdamx1')
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcAggGate(s)),
     // TestGRPC_Batching + TestGRPC_OutOfMemoryBatching: the BatchStream
     // frame protocol — Started/Acks/Results sequencing, objects-then-refs
     // success order with uuid/beacon details, the suite's verbatim
     // multi-tenancy and unknown-ref-prop error texts, count preservation at
     // scale through binary Aggregate/Search, and the no-ack
     // Backoff+OutOfMemory sequence on an over-budget frame
-    "q_fixture_grpc_batch" ->
+    Gate("q_fixture_grpc_batch",
       """SELECT * FROM (VALUES
         |  ('a1_01_frames', 'started;acks[u=3,b=2];results[ok=u:U0|u:U1|u:U2|b:weaviate://localhost/Article/U0/hasParagraphs|b:weaviate://localhost/Article/U0/hasParagraphs;err=];shutting_down'),
         |  ('a1_02_article_refs', 'articles=1;paras=2;has=2'),
@@ -1731,12 +1648,12 @@ object SparkEntryGrpc {
         |  ('a4b_unary_refs', 'errors=0;has=2'),
         |  ('a5_01_frames', 'backoff[500];oom[u=100]'),
         |  ('a5_02_unapplied', 'articles=0')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcBatchGate(s)),
     // TestGRPCSearch: the suite pins result COUNTS per arm (2 planets; the
     // "Mars" hybrids 1); the engine's deterministic orders are pinned too.
     // Colbert/dot arms rank Mars first (larger-magnitude rows win raw
     // MaxSim dot) — the suite never asserts order.
-    "q_fixture_grpc_search" ->
+    Gate("q_fixture_grpc_search",
       """SELECT * FROM (VALUES
         |  ('h01_earth_legacy_avg', 'n=2;names=Earth|Mars'),
         |  ('h01_earth_legacy_man', 'n=2;names=Earth|Mars'),
@@ -1786,10 +1703,76 @@ object SparkEntryGrpc {
         |  ('w05_reg_desc_min', 'n=2;names=Earth|Mars'),
         |  ('w05_reg_desc_rel', 'n=2;names=Mars|Earth'),
         |  ('w05_reg_desc_sum', 'n=2;names=Mars|Earth')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcSearchGate(s)),
+    // grpc_test.go: the 3-book batch import over the binary wire, the
+    // nested-props matrix (title/meta.isbn/meta.obj.text/meta.objs[0].text/
+    // reviews[0].tags per book — identical with and without an explicit
+    // PropertiesRequest), hybrid/nearText first-hit Dune ± 1-group groupBy,
+    // the implicit nested-object render (reviews absent when unselected),
+    // Aggregate objects_count=3, the binary BatchDelete dry-run with gRPC
+    // reply semantics (successful=matches on dry run, the 16-byte uuid),
+    // and the empty-request rejection
+    Gate("q_fixture_grpc_base",
+      """SELECT * FROM (VALUES
+        |  ('b01_batch', 'errors=0;stored=3'),
+        |  ('b02_search_props', 'n=3;Dune|978-0593099322|some text|some text|sci-fi+epic;Project Hail Mary|978-0593135204|some text|some text|sci-fi;The Lord of the Ice Garden|978-8374812962|some text|some text|sci-fi+fantasy'),
+        |  ('b03_search_noprops', 'n=3;Dune|978-0593099322|some text|some text|sci-fi+epic;Project Hail Mary|978-0593135204|some text|some text|sci-fi;The Lord of the Ice Garden|978-8374812962|some text|some text|sci-fi+fantasy'),
+        |  ('b04_hybrid', 'first=Dune;n=1'),
+        |  ('b05_hybrid_group', 'groups=1'),
+        |  ('b06_neartext', 'first=Dune'),
+        |  ('b07_neartext_group', 'groups=1'),
+        |  ('b08_implicit_nested', 'title=Dune;isbn=978-0593099322;obj=some text;objs0=some text;reviews_absent=true'),
+        |  ('b09_aggregate', 'objects_count=3'),
+        |  ('b10_batch_delete', 'matches=1;successful=1;failed=0;uuid_is_dune=true'),
+        |  ('b11_empty_rejected', 'rejected')
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcBaseGate(s)),
+    // mcp/objects_upsert_test.go + get_config_test.go: insert/update/mixed
+    // batches with deterministic ids, the function-level throws (empty
+    // batch, malformed uuid — objects_upsert.go:58,84) vs per-item errors
+    // (unknown class batch_add.go:227, tenant gates, property validation
+    // texts, the named-vector config check vector_validation.go:60, the
+    // dimension contract), partial-batch accounting, the 100-object batch,
+    // arrays/unicode/null props, and the read tools (config all/one,
+    // tenants-list)
+    Gate("q_fixture_mcp_upsert",
+      """SELECT * FROM (VALUES
+        |  ('g01_config_all', 'ComplexObject,Paragraph,ParagraphMT'),
+        |  ('g02_config_one', 'Paragraph'),
+        |  ('g03_tenants', 'tenant1:ACTIVE,tenant2:ACTIVE'),
+        |  ('u01_insert_one', '0dc00000-0000-4000-8000-000000000001'),
+        |  ('u01_verify', 'Test Article Content|Test Article'),
+        |  ('u02_insert_multi', '0dc00000-0000-4000-8000-000000000002,0dc00000-0000-4000-8000-000000000003,0dc00000-0000-4000-8000-000000000004'),
+        |  ('u02_verify', 'Second Article Content'),
+        |  ('u03_update', '0dc00000-0000-4000-8000-000000000001'),
+        |  ('u03_verify', 'Updated Content'),
+        |  ('u04_mixed', '0dc00000-0000-4000-8000-000000000001,0dc00000-0000-4000-8000-000000000005,0dc00000-0000-4000-8000-000000000006'),
+        |  ('u05_vector', '0dc00000-0000-4000-8000-000000000007'),
+        |  ('u05_verify', 'dim=5'),
+        |  ('u06_empty', 'throw(at least one object is required)'),
+        |  ('u07_unknown_class', 'err(class ''NonExistentCollection9999'' not present in schema)'),
+        |  ('u08_tenant', '0dc00000-0000-4000-8000-000000000008'),
+        |  ('u08_verify', 'Tenant 1 Content|t2=absent'),
+        |  ('u09_invalid_tenant', 'err(tenant not found: nonexistent)'),
+        |  ('u10_missing_tenant', 'err(class ParagraphMT has multi-tenancy enabled, but request was without tenant)'),
+        |  ('u11_invalid_uuid', 'throw(invalid UUID for object)'),
+        |  ('u12_partial_props', '0dc00000-0000-4000-8000-000000000009'),
+        |  ('u13_bad_int', 'err(invalid object: invalid integer property ''intProp'' on class ''ComplexObject'': requires an integer, the given value is ''"not-an-integer"'')'),
+        |  ('u14_dates', '0dc00000-0000-4000-8000-000000000010;err(invalid object: invalid date property ''dateProp'' on class ''ComplexObject'': requires a string with a RFC3339 formatted date, but the given value is ''2023-01-15'')'),
+        |  ('u15_unconfigured_vectors', 'err(collection Paragraph does not have configuration for vector text)'),
+        |  ('u16_dim_mismatch', 'err(vector lengths don''t match for vector "default": 5 vs 3)'),
+        |  ('u17_partial', 'ok=2;fail=1;fail_idx=1'),
+        |  ('u18_large', 'n=100;ok=100'),
+        |  ('u19_noop', '0dc00000-0000-4000-8000-000000000001'),
+        |  ('u20_arrays', '0dc00000-0000-4000-8000-000000000113'),
+        |  ('u20_verify', '[value1+value2+value3]|[1+2+3+4+5]'),
+        |  ('u21_unicode', '0dc00000-0000-4000-8000-000000000114'),
+        |  ('u21_verify', '海賊王に、俺はなる！'),
+        |  ('u22_nulls', '0dc00000-0000-4000-8000-000000000115'),
+        |  ('u22_verify', 'Valid Text|int=null')
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => mcpUpsertGate(s)),
     // TestGRPC_NamedVectors: title=Dune first hit; vector=true serves all 3
     // named spaces, vectors=["all"] exactly one, on plain and grouped pages
-    "q_fixture_grpc_vectors" ->
+    Gate("q_fixture_grpc_vectors",
       """SELECT * FROM (VALUES
         |  ('00_batch', 'errors=0;stored=3'),
         |  ('all3_01_hybrid', 'title=Dune;nvecs=3;names=all|description|title;n=1'),
@@ -1802,10 +1785,10 @@ object SparkEntryGrpc {
         |  ('one_03_hybrid_neartext_group', 'title=Dune;nvecs=1;names=all;n=1'),
         |  ('one_04_neartext', 'title=Dune;nvecs=1;names=all;n=3'),
         |  ('one_05_neartext_group', 'title=Dune;nvecs=1;names=all;n=1')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcNamedVectorsGate(s)),
     // TestGRPC_MixedVectors: legacy vector byte-equal to contextionary_all;
     // 2 named spaces; hybrid/nearText/aggregate contracts incl. count 3 / 1
-    "q_fixture_grpc_mixed" ->
+    Gate("q_fixture_grpc_mixed",
       """SELECT * FROM (VALUES
         |  ('01_search_all', 'n=3;nvecs=2;names=contextionary_all|title;legacy_eq_ctx=true'),
         |  ('ctx_02_hybrid', 'n=1;title=Dune'),
@@ -1822,11 +1805,11 @@ object SparkEntryGrpc {
         |  ('notgt_06_agg_simple', 'count=3'),
         |  ('notgt_07_agg_hybrid', 'count=1'),
         |  ('notgt_08_agg_hybrid_top', 'top=Dune')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcMixedVectorsGate(s)),
     // TestGRPC_FilteredSearch: the effective NotEqual contract (625 = 26²
     // − 2·26 + 1 for the combined two-token value), single-term denylists
     // (650), and the sort+limit windows
-    "q_fixture_grpc_filtered" ->
+    Gate("q_fixture_grpc_filtered",
       """SELECT * FROM (VALUES
         |  ('01_batch', 'errors=0;stored=676'),
         |  ('02_A_combined', 'n=625;clean=true'),
@@ -1840,5 +1823,7 @@ object SparkEntryGrpc {
         |  ('04_Z_repeated', 'n=650'),
         |  ('05_sort_asc', 'n=10;first=AAA A;last=AAA J;ordered=true'),
         |  ('06_sort_desc', 'n=10;first=ZZZ Z;last=ZZZ Q;ordered=true')
-        |) AS t(step, result) ORDER BY step""".stripMargin)
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcFilteredGate(s))
+  )
+
 }

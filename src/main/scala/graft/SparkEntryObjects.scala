@@ -22,10 +22,7 @@ import graft.sources.AutoSchema
  */
 object SparkEntryObjects {
 
-  private def steps(s: SparkSession, rows: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("step", "result").orderBy(col("step"))
-  }
+  import Gate.steps
 
   /** A tiny auto-schema world: classes evolve per create like the
    * reference's AutoSchemaManager; objects accumulate per class. */
@@ -325,19 +322,14 @@ object SparkEntryObjects {
     steps(s, out.result())
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fixture_objects" -> ((s, _) => grpcObjectsGate(s)),
-    "q_fixture_objects_crefs" -> ((s, _) => crefsGate(s)),
-    "q_fixture_schema_defaults" -> ((s, _) => schemaDefaultsGate(s)))
-
-  def oracleSql: Map[String, String] = Map(
+  private[graft] def gates: Seq[Gate] = Seq(
     // TestAutoSchemaWithDifferentProperties + autoSchemaObjects +
     // Test_RapidlyAddingReferences: lowercased property normalization, the
     // reference's inference defaults (json numbers → number, RFC3339 →
     // date, geo/phone maps, beacon arrays → refs targeting the pointed
     // objects' classes — two classes for the mixed-beacon prop), and the
     // no-edge-lost contract over 10 sequential reference POSTs
-    "q_fixture_objects" ->
+    Gate("q_fixture_objects",
       """SELECT * FROM (VALUES
         |  ('o1_Upper', 'nonExistingProperty:text,otherNonExistingProperty:text'),
         |  ('o1_lower', 'nonExistingProperty:text,otherNonExistingProperty:text'),
@@ -346,14 +338,14 @@ object SparkEntryObjects {
         |  ('o4_typed_props', 'nonExistingDateProperty:date,nonExistingNumberProperty:number,nonExistingProperty:text'),
         |  ('o5_cross_refs', 'hasNonExistingClass:NonExistingClass,hasNonExistingClassAndTestObject:NonExistingClass&TestObject,nonExistingDateProperty:date,nonExistingNumberProperty:number,nonExistingProperty:text'),
         |  ('r1_refs_set', 'n=10;all=true')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => grpcObjectsGate(s)),
     // TestRefsWithoutToClass + TestRefsMultiTarget: short beacons qualify
     // with the single-target prop's class on read-back; multi-target props
     // render verbatim; DELETE empties (never nulls) the list. c2 records
     // ONE qualified beacon where the reference shows the same beacon twice
     // — this store's cref lists are set-valued (documented divergence,
     // CollectionStore.replaceReferences)
-    "q_fixture_objects_crefs" ->
+    Gate("q_fixture_objects_crefs",
       """SELECT * FROM (VALUES
         |  ('c1_post_short', 'weaviate://localhost/ReferenceTo/0c1f0000-0000-4000-8000-000000000001|/v1/objects/ReferenceTo/0c1f0000-0000-4000-8000-000000000001'),
         |  ('c2_put_two', 'weaviate://localhost/ReferenceTo/0c1f0000-0000-4000-8000-000000000001|/v1/objects/ReferenceTo/0c1f0000-0000-4000-8000-000000000001'),
@@ -361,14 +353,14 @@ object SparkEntryObjects {
         |  ('c4_m1', 'weaviate://localhost/0c1f0000-0000-4000-8000-000000000001|/v1/objects/0c1f0000-0000-4000-8000-000000000001'),
         |  ('c4_m2', 'weaviate://localhost/ReferenceTo/0c1f0000-0000-4000-8000-000000000001|/v1/objects/ReferenceTo/0c1f0000-0000-4000-8000-000000000001'),
         |  ('c4_m3', 'weaviate://localhost/ReferenceFrom/0c1f0000-0000-4000-8000-000000000002|/v1/objects/ReferenceFrom/0c1f0000-0000-4000-8000-000000000002')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => crefsGate(s)),
     // default_vector_index/default_quantization/auto_tenant_activation/
     // update_shard_status_cold_tenant: hnsw default (env override flows
     // through), the RQ-8/RQ-1 matrix with per-index rescore defaults (hnsw
     // 20/512, flat -1) incl. the dynamic index's dual sections, skip and
     // explicit-quantizer overrides (track=false), reads on a deactivated
     // tenant succeeding and flipping ACTIVE, and READONLY on a cold tenant
-    "q_fixture_schema_defaults" ->
+    Gate("q_fixture_schema_defaults",
       """SELECT * FROM (VALUES
         |  ('d1_env_hfresh', 'hfresh'),
         |  ('d1_legacy_absent', 'hnsw'),
@@ -392,5 +384,7 @@ object SparkEntryObjects {
         |  ('t1_agg_cold', 'count=1;after=ACTIVE'),
         |  ('t2_search_cold', 'n=1;after=ACTIVE'),
         |  ('t3_cold_readonly', 'update=ok;status=READONLY')
-        |) AS t(step, result) ORDER BY step""".stripMargin)
+        |) AS t(step, result) ORDER BY step""".stripMargin)((s, _) => schemaDefaultsGate(s))
+  )
+
 }

@@ -17,24 +17,18 @@ import graft.streaming.Ingest
  */
 object SparkEntryWire2 {
 
-  private def g(spark: SparkSession, dir: String): Graft = Fixtures.graft(spark, dir)
+  import Gate.{g, okOr, steps, valueOr}
 
-  private def okOr(body: => Any): String =
-    try { body; "ok" } catch { case e: Throwable => e.getMessage }
-  private def valueOr(body: => Any): String =
-    try { body.toString } catch { case e: Throwable => e.getMessage }
-
-  private def steps(s: SparkSession, rows: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("step", "result").orderBy(col("step"))
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def gates: Seq[Gate] = Seq(
 
     // the q_wire_gql_get bed re-served through a VARIABLE-driven document
     // with ALIAS'd selections — same where tree, same plan, same oracle
     // (columns keyed by the aliases)
-    "q_wire_gql_vars" -> ((s, dir) => {
+    // identical SQL to q_wire_gql_get, keyed by the alias'd output names
+    Gate("q_wire_gql_vars",
+      """SELECT l_orderkey AS ok, l_linenumber AS ln FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY ok, ln""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val full = GraphQL.getFull(gg,
         """query Filtered($flag: String!, $qty: Float!, $ship: String, $lim: Int = 1000000) {
@@ -48,13 +42,32 @@ object SparkEntryWire2 {
         """{"flag": "R", "qty": 30.0, "ship": "1995-06-17T00:00:00Z"}""")
       GraphQL.applyAliases(gg.get(full.params), full.aliases)
         .select(col("ok"), col("ln")).orderBy(col("ok"), col("ln"))
-    }),
+    },
 
     // scripted variable/alias semantics: enum coercion through variables,
     // float-list variables into vector legs, declared defaults, the
     // graphql-go missing/undeclared variable error texts, duplicate aliases
     // of one property, and alias'd aggregate selections
-    "q_wire_gql_vars_script" -> ((s, dir) => {
+    Gate("q_wire_gql_vars_script",
+      """SELECT '01_enum_var_sort' AS step, (
+        |  SELECT string_agg(CAST(p_partkey AS VARCHAR), ',' ORDER BY rn)
+        |  FROM (SELECT p_partkey, row_number() OVER (ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
+        |        FROM part ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 5)) AS result
+        |UNION ALL SELECT '02_vector_var', '10:7'
+        |UNION ALL SELECT '03_default_used', CAST(
+        |  (SELECT least(count(*), 3) FROM region) AS VARCHAR)
+        |UNION ALL SELECT '04_required_missing',
+        |  'Variable "$lim" of required type "Int!" was not provided.'
+        |UNION ALL SELECT '05_undeclared', 'Variable "$lim" is not defined.'
+        |UNION ALL SELECT '06_duplicate_aliases', (
+        |  SELECT string_agg(r_name || '=' || r_name, ',' ORDER BY r_regionkey)
+        |  FROM (SELECT * FROM region ORDER BY r_regionkey LIMIT 2))
+        |UNION ALL SELECT '07_agg_alias', (
+        |  SELECT CAST(count(o_totalprice) AS VARCHAR) || ':' ||
+        |         CAST(round(max(o_totalprice), 2) AS VARCHAR) FROM orders)
+        |UNION ALL SELECT '08_where_var', CAST(
+        |  (SELECT count(*) FROM orders WHERE o_totalprice > 25000.0) AS VARCHAR)
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       // enum-valued variable: sort order (string variable coerces to the
@@ -114,7 +127,7 @@ object SparkEntryWire2 {
         """{"w": {"operator": "GreaterThan", "path": ["o_totalprice"], "valueNumber": 25000.0}}"""))
         .count())
       steps(s, out.toSeq)
-    }),
+    },
 
     // BINARY protobuf transport: the same SearchRequest a real gRPC client
     // puts on the wire, hand-encoded through ProtoWire's descriptors
@@ -122,7 +135,11 @@ object SparkEntryWire2 {
     // into the SAME GetParams the protojson path builds — one plan, proven
     // by sharing q_wire_gql_get's oracle; plus a vector_bytes near leg
     // (the fp32-LE encoding clients actually send)
-    "q_wire_proto_bin" -> ((s, dir) => {
+    // binary proto twin of the gRPC-JSON filter query — identical SQL
+    Gate("q_wire_proto_bin",
+      """SELECT l_orderkey, l_linenumber FROM lineitem
+        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       import graft.engine.ProtoWire
       import org.json4s.jackson.JsonMethods
       val gg = g(s, dir)
@@ -138,11 +155,18 @@ object SparkEntryWire2 {
       val bytes = ProtoWire.write(doc, "SearchRequest")
       val params = ProtoWire.searchRequest(gg, bytes)
       gg.get(params).orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // binary near_vector leg with the fp32 vector_bytes payload — twin of
     // q_wire_gql_near's cosine top-10 page around Embedding/7
-    "q_wire_proto_bin_near" -> ((s, dir) => {
+    // binary vector_bytes near leg: cosine top-10 around Embedding/7
+    Gate("q_wire_proto_bin_near",
+      s"""WITH ${SparkEntry.sqlQv(7)},
+         |d AS (SELECT e.vec_id, ${SparkEntry.sqlCosine("e.embedding", "q.v")} AS dist
+         |      FROM embeddings e CROSS JOIN qv q),
+         |top AS (SELECT vec_id, round(dist, 4) AS dist FROM d
+         |        ORDER BY d.dist ASC, vec_id ASC LIMIT 10)
+         |SELECT vec_id, dist FROM top ORDER BY dist, vec_id""".stripMargin) { (s, dir) =>
       import graft.engine.ProtoWire
       import org.json4s._
       val gg = g(s, dir)
@@ -160,13 +184,33 @@ object SparkEntryWire2 {
       val params = ProtoWire.searchRequest(gg, ProtoWire.write(doc, "SearchRequest"))
       gg.get(params).select(col("vec_id"), round(col("_distance"), 4).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
-    }),
+    },
 
     // Named fragment definitions + @skip/@include (GraphQL spec §2.8/§3.13 —
     // the Apollo-codegen document shape): an existing green page re-served
     // through a fragment-factored, directive-gated document, plus the parser's
     // negative contracts (unknown fragment, cycle, unknown directive)
-    "q_wire_gql_fragments" -> ((s, dir) => {
+    // fragment-factored document: pages recomputed from the parquet, parser
+    // negatives pinned verbatim
+    Gate("q_wire_gql_fragments",
+      """WITH top AS (
+        |  SELECT c_name, c_acctbal, c_mktsegment, c_nationkey FROM customer
+        |  WHERE c_acctbal > 9000.0 ORDER BY c_name LIMIT 4),
+        |joined AS (
+        |  SELECT t.*, n.n_name FROM top t JOIN nation n ON n.n_nationkey = t.c_nationkey)
+        |SELECT '01_frag_include' AS step, (
+        |  SELECT string_agg(c_name || '/' || printf('%.2f', c_acctbal) || '/' || n_name, ',' ORDER BY c_name)
+        |  FROM joined) AS result
+        |UNION ALL SELECT '02_frag_all', (
+        |  SELECT string_agg(c_name || '/' || printf('%.2f', c_acctbal) || '/' || c_mktsegment || '/' || n_name, ',' ORDER BY c_name)
+        |  FROM joined)
+        |UNION ALL SELECT '03_frag_skipped', (
+        |  SELECT string_agg(c_name || '/' || n_name, ',' ORDER BY c_name) FROM joined)
+        |UNION ALL SELECT '04_unknown_fragment', 'Unknown fragment "Nope".'
+        |UNION ALL SELECT '05_cycle', 'graphql parse: fragment cycle through "A"'
+        |UNION ALL SELECT '06_unknown_directive', 'graphql parse: unknown directive "@deprecated"'
+        |UNION ALL SELECT '07_skip_static', 'cols=r_name;rows=2'
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val doc =
@@ -221,13 +265,19 @@ object SparkEntryWire2 {
         s"cols=${page.columns.sorted.mkString("|")};rows=${page.count()}"
       }
       steps(s, out.toSeq)
-    }),
+    },
 
     // Binary AggregateRequest (grpc/proto/v1/aggregate.proto): the grouped
     // number matrix authored as PROTO BYTES through the same descriptors,
     // decoded into the identical AggregateParams as its protojson twin
     // (asserted), then executed — the oracle is real SQL over the parquet
-    "q_wire_proto_agg" -> ((s, dir) => {
+    // binary AggregateRequest: same grouped matrix as q_agg_group_numeric —
+    // the oracle recomputes it from the parquet
+    Gate("q_wire_proto_agg",
+      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
+        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
+        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       import graft.engine.{ProtoWire, WireDecoder}
       import org.json4s.jackson.JsonMethods
       val gg = g(s, dir)
@@ -251,14 +301,26 @@ object SparkEntryWire2 {
           round(col("o_totalprice_minimum"), 4).as("min_price"),
           round(col("o_totalprice_maximum"), 4).as("max_price"))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
 
     // Full binary gRPC round-trip: SearchRequest BYTES → engine →
     // SearchReply BYTES → parsed back and canonically compared against the
     // protojson reply (fp32 reply floats compare at 4 decimals). Plus a
     // binary BatchObjectsRequest decode with the google.protobuf.Struct
     // property payload and the per-index error contract.
-    "q_wire_proto_roundtrip" -> ((s, dir) => {
+    // binary round-trip: reply bytes parse back byte-faithfully (canonical
+    // compare), the flat page's first row recomputed from the parquet, the
+    // Struct-typed batch decode with its per-index uuid error
+    Gate("q_wire_proto_roundtrip",
+      """SELECT '01_flat' AS step, 'bytes=true;match=true' AS result
+        |UNION ALL SELECT '02_flat_first', (
+        |  SELECT '"' || c_name || '"' FROM customer
+        |  WHERE c_acctbal > 9000.0 ORDER BY c_name LIMIT 1)
+        |UNION ALL SELECT '03_grouped', 'bytes=true;match=true'
+        |UNION ALL SELECT '04_batch_decoded',
+        |  '0:BinBatch/00000000-0000-0000-0000-0000000000b1{flag=true;n=7.0;name=alpha;ranks=[3|1];score=0.25;tags=[a|b]}'
+        |UNION ALL SELECT '05_batch_errors', '1:invalid UUID length: 10'
+        |ORDER BY step""".stripMargin) { (s, dir) =>
       import graft.engine.{ProtoWire, WireEncoder}
       import org.json4s._
       import org.json4s.jackson.JsonMethods
@@ -352,14 +414,31 @@ object SparkEntryWire2 {
       out += "05_batch_errors" -> errs.toSeq.sorted
         .map { case (i, e) => s"$i:$e" }.mkString(",")
       steps(s, out.toSeq)
-    }),
+    },
 
     // PUT /v1/schema/{class} + POST /v1/schema/{class}/properties wire:
     // the update path's immutable-field rules verbatim
     // (usecases/schema/class.go:459-632, parser.go:275-375) and live arms —
     // a mutable stopword update re-serves a previously-rejected filter, and
     // a wire-decoded added property round-trips through schema evolution
-    "q_wire_schema_update" -> ((s, dir) => {
+    // schema-update wire: the reference's immutable-field texts verbatim
+    // (class.go validateImmutableFields + parser.go ParseClassUpdate)
+    Gate("q_wire_schema_update",
+      """SELECT * FROM (VALUES
+        |  ('01_not_found', 'class "Nope": not found'),
+        |  ('02_rename', 'class name is immutable: attempted change from "WireUpd" to "Renamed"'),
+        |  ('03_mt_enable', 'enabling multi-tenancy for an existing class is not supported'),
+        |  ('04_flag_timestamps', '"indexTimestamp" setting is immutable. Value changed from "false" to "true"'),
+        |  ('05_distance', 'validate vector index config: distance is immutable: attempted change from "cosine" to "l2-squared"'),
+        |  ('06_prop_type_change', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties'),
+        |  ('07_prop_added', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties'),
+        |  ('08_stopword_filter_before', 'invalid search term, only stopwords provided. Stopwords can be configured in class.invertedIndexConfig.stopwords'),
+        |  ('09_update_applies', 'none'),
+        |  ('10_stopword_filter_after', '1'),
+        |  ('11_add_property', 'note:text:field'),
+        |  ('12_new_prop_null', '3'),
+        |  ('13_add_conflict', 'class "WireUpd": conflict for property "txt": already in use or provided multiple times')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.sources.SchemaWire
       import graft.model._
@@ -426,14 +505,37 @@ object SparkEntryWire2 {
       out += "13_add_conflict" -> okOr(SchemaWire.decodeAddProperty(
         gg.collection("WireUpd").schema, """{"name": "txt", "dataType": ["text"]}"""))
       steps(s, out.toSeq)
-    }),
+    },
 
     // single-object REST CRUD wire (POST/PUT/PATCH/DELETE /v1/objects):
     // models.Object decode + the validation texts of usecases/objects/
     // {add,update,merge}.go and validation/properties_validation.go, driving
     // a REAL store walk (insert, lowercase-id normalization gh-2647,
     // duplicate-id rejection, PUT full replace vs PATCH merge, delete)
-    "q_wire_object" -> ((s, dir) => {
+    // single-object CRUD wire: reference texts + live walk outcomes
+    Gate("q_wire_object",
+      """SELECT * FROM (VALUES
+        |  ('01_post', 'ok'),
+        |  ('02_post_upper', 'ok'),
+        |  ('03_stored_lowercase', '8f5f8e44-d348-459c-88b1-c1a44bb8f8be,9b9cbea5-e87e-4cd0-89af-e2f424fd52d6'),
+        |  ('04_post_duplicate', 'id ''8F5F8E44-D348-459C-88B1-C1A44BB8F8BE'' already exists'),
+        |  ('05_put_id_immutable', 'invalid update: field ''id'' is immutable'),
+        |  ('06_put_replaces', 'ok'),
+        |  ('07_after_put', 'Amsterdam2:∅'),
+        |  ('08_patch_merges', 'ok'),
+        |  ('09_after_patch', 'Berlin:3470000'),
+        |  ('10_patch_empty_class', 'empty class'),
+        |  ('11_patch_empty_uuid', 'empty uuid'),
+        |  ('12_patch_missing_404', 'not found'),
+        |  ('13_unknown_prop', 'invalid object: unknown property ''bogus'''),
+        |  ('14_bad_date', 'invalid object: invalid date property ''cityRights'' on class ''WireObj'': requires a string with a RFC3339 formatted date, but the given value is ''nope'''),
+        |  ('15_bad_uuid_prop', 'invalid object: invalid uuid property ''code'' on class ''WireObj'': requires a string of UUID format, but the given value is ''zz'''),
+        |  ('16_not_a_string', 'invalid object: invalid text property ''name'' on class ''WireObj'': not a string, but json.Number'),
+        |  ('17_int_conversion', 'invalid object: invalid integer property ''population'' on class ''WireObj'': the JSON number ''1.5'' could not be converted to an int'),
+        |  ('18_bad_id', 'invalid UUID length: 5'),
+        |  ('19_delete', '1'),
+        |  ('20_head_after_delete', 'not found')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.Row
       import graft.engine.WireDecoder
@@ -555,7 +657,7 @@ object SparkEntryWire2 {
         if (!exists(B)) throw new IllegalArgumentException("not found")
       }
       steps(s, out.toSeq)
-    }),
+    },
 
     // §2.10 backpressure-shaped ingest: a 10x burst (20 files at once vs the
     // 2-file trigger budget) must drain through BOUNDED micro-batches — the
@@ -565,7 +667,17 @@ object SparkEntryWire2 {
     // memory stays flat no matter how deep the backlog). The dedup arm
     // proves the STATE bound: 1000 burst rows with 100 distinct keys hold
     // exactly 100 state rows under dropDuplicatesWithinWatermark.
-    "q_stream_backpressure" -> ((s, dir) => {
+    // backpressure: 20 files through a 2-file trigger = 10 bounded batches
+    // of <= 100 rows; 1000 rows drain; dedup keeps exactly the 100 keys
+    // with a 100-row state ceiling
+    Gate("q_stream_backpressure",
+      """SELECT * FROM (VALUES
+        |  ('01_batches', '10'),
+        |  ('02_max_batch_rows', '100'),
+        |  ('03_drained', '1000'),
+        |  ('04_dedup_rows', '100'),
+        |  ('05_max_state_rows', '100')
+        |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.types._
       val base = java.nio.file.Files.createTempDirectory("graft-bp").toString
@@ -576,7 +688,7 @@ object SparkEntryWire2 {
       // starts. The file set is deterministic fixture I/O, so it is built
       // once per session (the replayDir memo pattern) — the timed work is
       // the two stream drains, not 20 tiny write jobs
-      val inDir = SparkEntryExt.replayDir("bp", "-") { d =>
+      val inDir = SparkEntryExt.replayDir(s, "bp", "-") { d =>
         (0 until 20).foreach { fileNo =>
           val rows = (0 until 50).map { r =>
             val id = fileNo * 50L + r
@@ -613,153 +725,11 @@ object SparkEntryWire2 {
         "03_drained" -> drained.toString,
         "04_dedup_rows" -> deduped.toString,
         "05_max_state_rows" -> maxState.toString))
-    }))
+    }
+  )
 
   // ==========================================================================
   // oracles
   // ==========================================================================
 
-  val oracleSql: Map[String, String] = Map(
-
-    // identical SQL to q_wire_gql_get, keyed by the alias'd output names
-    "q_wire_gql_vars" ->
-      """SELECT l_orderkey AS ok, l_linenumber AS ln FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
-        |ORDER BY ok, ln""".stripMargin,
-
-    "q_wire_gql_vars_script" ->
-      """SELECT '01_enum_var_sort' AS step, (
-        |  SELECT string_agg(CAST(p_partkey AS VARCHAR), ',' ORDER BY rn)
-        |  FROM (SELECT p_partkey, row_number() OVER (ORDER BY p_retailprice DESC, p_partkey ASC) AS rn
-        |        FROM part ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 5)) AS result
-        |UNION ALL SELECT '02_vector_var', '10:7'
-        |UNION ALL SELECT '03_default_used', CAST(
-        |  (SELECT least(count(*), 3) FROM region) AS VARCHAR)
-        |UNION ALL SELECT '04_required_missing',
-        |  'Variable "$lim" of required type "Int!" was not provided.'
-        |UNION ALL SELECT '05_undeclared', 'Variable "$lim" is not defined.'
-        |UNION ALL SELECT '06_duplicate_aliases', (
-        |  SELECT string_agg(r_name || '=' || r_name, ',' ORDER BY r_regionkey)
-        |  FROM (SELECT * FROM region ORDER BY r_regionkey LIMIT 2))
-        |UNION ALL SELECT '07_agg_alias', (
-        |  SELECT CAST(count(o_totalprice) AS VARCHAR) || ':' ||
-        |         CAST(round(max(o_totalprice), 2) AS VARCHAR) FROM orders)
-        |UNION ALL SELECT '08_where_var', CAST(
-        |  (SELECT count(*) FROM orders WHERE o_totalprice > 25000.0) AS VARCHAR)
-        |ORDER BY step""".stripMargin,
-
-    // fragment-factored document: pages recomputed from the parquet, parser
-    // negatives pinned verbatim
-    "q_wire_gql_fragments" ->
-      """WITH top AS (
-        |  SELECT c_name, c_acctbal, c_mktsegment, c_nationkey FROM customer
-        |  WHERE c_acctbal > 9000.0 ORDER BY c_name LIMIT 4),
-        |joined AS (
-        |  SELECT t.*, n.n_name FROM top t JOIN nation n ON n.n_nationkey = t.c_nationkey)
-        |SELECT '01_frag_include' AS step, (
-        |  SELECT string_agg(c_name || '/' || printf('%.2f', c_acctbal) || '/' || n_name, ',' ORDER BY c_name)
-        |  FROM joined) AS result
-        |UNION ALL SELECT '02_frag_all', (
-        |  SELECT string_agg(c_name || '/' || printf('%.2f', c_acctbal) || '/' || c_mktsegment || '/' || n_name, ',' ORDER BY c_name)
-        |  FROM joined)
-        |UNION ALL SELECT '03_frag_skipped', (
-        |  SELECT string_agg(c_name || '/' || n_name, ',' ORDER BY c_name) FROM joined)
-        |UNION ALL SELECT '04_unknown_fragment', 'Unknown fragment "Nope".'
-        |UNION ALL SELECT '05_cycle', 'graphql parse: fragment cycle through "A"'
-        |UNION ALL SELECT '06_unknown_directive', 'graphql parse: unknown directive "@deprecated"'
-        |UNION ALL SELECT '07_skip_static', 'cols=r_name;rows=2'
-        |ORDER BY step""".stripMargin,
-
-    // binary AggregateRequest: same grouped matrix as q_agg_group_numeric —
-    // the oracle recomputes it from the parquet
-    "q_wire_proto_agg" ->
-      """SELECT o_orderstatus, count(*) AS meta_count, count(o_totalprice) AS cnt,
-        |  round(sum(o_totalprice), 4) AS sum_price, round(avg(o_totalprice), 4) AS mean_price,
-        |  round(min(o_totalprice), 4) AS min_price, round(max(o_totalprice), 4) AS max_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // binary round-trip: reply bytes parse back byte-faithfully (canonical
-    // compare), the flat page's first row recomputed from the parquet, the
-    // Struct-typed batch decode with its per-index uuid error
-    "q_wire_proto_roundtrip" ->
-      """SELECT '01_flat' AS step, 'bytes=true;match=true' AS result
-        |UNION ALL SELECT '02_flat_first', (
-        |  SELECT '"' || c_name || '"' FROM customer
-        |  WHERE c_acctbal > 9000.0 ORDER BY c_name LIMIT 1)
-        |UNION ALL SELECT '03_grouped', 'bytes=true;match=true'
-        |UNION ALL SELECT '04_batch_decoded',
-        |  '0:BinBatch/00000000-0000-0000-0000-0000000000b1{flag=true;n=7.0;name=alpha;ranks=[3|1];score=0.25;tags=[a|b]}'
-        |UNION ALL SELECT '05_batch_errors', '1:invalid UUID length: 10'
-        |ORDER BY step""".stripMargin,
-
-    // binary proto twin of the gRPC-JSON filter query — identical SQL
-    "q_wire_proto_bin" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity > 30 AND l_shipdate < TIMESTAMP '1995-06-17'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // binary vector_bytes near leg: cosine top-10 around Embedding/7
-    "q_wire_proto_bin_near" ->
-      s"""WITH ${SparkEntry.sqlQv(7)},
-         |d AS (SELECT e.vec_id, ${SparkEntry.sqlCosine("e.embedding", "q.v")} AS dist
-         |      FROM embeddings e CROSS JOIN qv q),
-         |top AS (SELECT vec_id, round(dist, 4) AS dist FROM d
-         |        ORDER BY d.dist ASC, vec_id ASC LIMIT 10)
-         |SELECT vec_id, dist FROM top ORDER BY dist, vec_id""".stripMargin,
-
-    // schema-update wire: the reference's immutable-field texts verbatim
-    // (class.go validateImmutableFields + parser.go ParseClassUpdate)
-    "q_wire_schema_update" ->
-      """SELECT * FROM (VALUES
-        |  ('01_not_found', 'class "Nope": not found'),
-        |  ('02_rename', 'class name is immutable: attempted change from "WireUpd" to "Renamed"'),
-        |  ('03_mt_enable', 'enabling multi-tenancy for an existing class is not supported'),
-        |  ('04_flag_timestamps', '"indexTimestamp" setting is immutable. Value changed from "false" to "true"'),
-        |  ('05_distance', 'validate vector index config: distance is immutable: attempted change from "cosine" to "l2-squared"'),
-        |  ('06_prop_type_change', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties'),
-        |  ('07_prop_added', 'property fields other than description cannot be updated through updating the class. Use the add property feature (e.g. "POST /v1/schema/{className}/properties") to add additional properties'),
-        |  ('08_stopword_filter_before', 'invalid search term, only stopwords provided. Stopwords can be configured in class.invertedIndexConfig.stopwords'),
-        |  ('09_update_applies', 'none'),
-        |  ('10_stopword_filter_after', '1'),
-        |  ('11_add_property', 'note:text:field'),
-        |  ('12_new_prop_null', '3'),
-        |  ('13_add_conflict', 'class "WireUpd": conflict for property "txt": already in use or provided multiple times')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // single-object CRUD wire: reference texts + live walk outcomes
-    "q_wire_object" ->
-      """SELECT * FROM (VALUES
-        |  ('01_post', 'ok'),
-        |  ('02_post_upper', 'ok'),
-        |  ('03_stored_lowercase', '8f5f8e44-d348-459c-88b1-c1a44bb8f8be,9b9cbea5-e87e-4cd0-89af-e2f424fd52d6'),
-        |  ('04_post_duplicate', 'id ''8F5F8E44-D348-459C-88B1-C1A44BB8F8BE'' already exists'),
-        |  ('05_put_id_immutable', 'invalid update: field ''id'' is immutable'),
-        |  ('06_put_replaces', 'ok'),
-        |  ('07_after_put', 'Amsterdam2:∅'),
-        |  ('08_patch_merges', 'ok'),
-        |  ('09_after_patch', 'Berlin:3470000'),
-        |  ('10_patch_empty_class', 'empty class'),
-        |  ('11_patch_empty_uuid', 'empty uuid'),
-        |  ('12_patch_missing_404', 'not found'),
-        |  ('13_unknown_prop', 'invalid object: unknown property ''bogus'''),
-        |  ('14_bad_date', 'invalid object: invalid date property ''cityRights'' on class ''WireObj'': requires a string with a RFC3339 formatted date, but the given value is ''nope'''),
-        |  ('15_bad_uuid_prop', 'invalid object: invalid uuid property ''code'' on class ''WireObj'': requires a string of UUID format, but the given value is ''zz'''),
-        |  ('16_not_a_string', 'invalid object: invalid text property ''name'' on class ''WireObj'': not a string, but json.Number'),
-        |  ('17_int_conversion', 'invalid object: invalid integer property ''population'' on class ''WireObj'': the JSON number ''1.5'' could not be converted to an int'),
-        |  ('18_bad_id', 'invalid UUID length: 5'),
-        |  ('19_delete', '1'),
-        |  ('20_head_after_delete', 'not found')
-        |) AS t(step, result) ORDER BY step""".stripMargin,
-
-    // backpressure: 20 files through a 2-file trigger = 10 bounded batches
-    // of <= 100 rows; 1000 rows drain; dedup keeps exactly the 100 keys
-    // with a 100-row state ceiling
-    "q_stream_backpressure" ->
-      """SELECT * FROM (VALUES
-        |  ('01_batches', '10'),
-        |  ('02_max_batch_rows', '100'),
-        |  ('03_drained', '1000'),
-        |  ('04_dedup_rows', '100'),
-        |  ('05_max_state_rows', '100')
-        |) AS t(step, result) ORDER BY step""".stripMargin)
 }

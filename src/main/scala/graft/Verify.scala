@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.gates result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,12 +9,12 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local-iteration convenience: SPARK_GRAFT_ONLY=q_a,q_b runs a subset
     // (the driver never sets it, so its runs always cover every query)
+    // subset runs dump only the selected oracles too: the local mirror
+    // iterates oracle_sql.json, so a full dump would FAIL every unselected
+    // query (or worse, compare stale result dirs from an older run)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    val selected = SparkEntry.gates.filter(gt => only.forall(_.contains(gt.name)))
     // a reused outDir must not leave a STALE result dir behind a now-failing
     // query — the compare would silently grade old output as a PASS. Every
     // selected query's dir is removed up front; a failure mid-write removes
@@ -29,9 +29,10 @@ object Verify {
       }
     }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { gt =>
+      val name = gt.name
       rmTree(s"$outDir/$name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try gt.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -40,15 +41,8 @@ object Verify {
       }
     }
     val q = Fixtures.jsonString _
-    // subset runs dump only the selected oracles: the local mirror iterates
-    // oracle_sql.json, so a full dump would FAIL every unselected query
-    // (or worse, compare stale result dirs from an older run)
-    val oracles = only match {
-      case Some(names) => SparkEntry.oracleSql.filter(kv => names(kv._1))
-      case None        => SparkEntry.oracleSql
-    }
-    val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(gt => s"${q(gt.name)}: ${q(gt.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // failed queries must leave a durable per-query error record (round-9
     // lesson: stderr-only reporting let 99 broken queries vanish from the

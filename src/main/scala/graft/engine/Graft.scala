@@ -1338,8 +1338,9 @@ final class Graft(val spark: SparkSession) {
 
     // the rank the hits come in, decided once: boost's blended score when it
     // re-scored the pool, else the leg's own; a plain read ranks by id. Its
-    // score is the autocut curve; its keys rank the groupBy pool and order a
-    // page that is neither sorted nor grouped.
+    // score is the autocut curve; its keys rank the groupBy pool, break an
+    // explicit sort's ties and order a page that is neither sorted nor
+    // grouped.
     val rankScore: Option[Column] = if (boosted) Some(col(HybridSearch.ScoreCol)) else leg.map(_.score)
     val rankKeys: Seq[Column] =
       if (boosted) Seq(col(HybridSearch.ScoreCol).desc, col(id).asc)
@@ -1373,16 +1374,13 @@ final class Graft(val spark: SparkSession) {
           if (s.desc) cc.desc_nulls_last else cc.asc_nulls_first
         }
         // Tie order: the reference sorts the retrieved slice STABLY
-        // (objects_sorter.go), so after a search leg, key ties keep the
-        // SEARCH ranking (distance asc — the acceptance sort-with-nearText
+        // (objects_sorter.go), so key ties keep the order the hits came in:
+        // the rank (a search leg's distance, score or fused order, the
+        // boosted score on a boosted read — the acceptance sort-with-nearText
         // cases pin this: population-tied Dusseldorf precedes Rotterdam
         // because it ranks nearer "Berlin"); a plain scan's prior order is
-        // the uuid order. The trailing id key keeps the total order either
-        // way.
-        keys ++ (leg match {
-          case Some(l: SearchLeg.ByDistance) => l.rankKeys(id)
-          case _ => Seq(col(id).asc)
-        })
+        // the uuid order. The rank's trailing id key keeps the total order.
+        keys ++ rankKeys
       }
     val groupKeys = Seq(col("group_index").asc, col("group_hit_rank").asc)
     // the page's order: groups, else the explicit sort, else the rank (a

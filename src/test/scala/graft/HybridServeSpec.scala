@@ -217,6 +217,28 @@ class HybridServeSpec extends SparkSpecBase {
     assert(mixGot == exp)
   }
 
+  /** The reference sorts the ranked slice stably: within a `cat`, rows keep
+   * the leg's order, not id order. The page covers every hit, so the
+   * unsorted read is the whole ranked slice. */
+  private def assertSortKeepsRank(p: GetParams): Unit = {
+    def page(p: GetParams): Seq[(String, String)] =
+      g.get(p.copy(pagination = Some(Pagination(limit = 200)), properties = Seq("uid", "cat")))
+        .collect().map(r => (r.getAs[String]("uid"), r.getAs[String]("cat"))).toSeq
+    val ranked = page(p)
+    val sorted = page(p.copy(sort = Seq(SortBy(Seq("cat")))))
+    assert(sorted == ranked.sortBy(_._2))
+    val idOrder = ranked.sortWith((a, b) => a._2 < b._2 || (a._2 == b._2 && utf8(a._1, b._1) < 0))
+    assert(sorted != idOrder, "a rank that agrees with id order proves nothing")
+  }
+
+  test("a sort after a bm25 leg breaks its ties by the keyword rank") {
+    assertSortKeepsRank(GetParams("Mix", bm25 = Some(Bm25("alpha gamma", Seq("text")))))
+  }
+
+  test("a sort after a hybrid leg breaks its ties by the fused rank") {
+    assertSortKeepsRank(GetParams("Mix", hybrid = Some(base)))
+  }
+
   test("resolving refs or grouping keeps a boosted page's order") {
     // x is the nearer doc; the boost on n = 1 lifts y over it
     val boosted = GetParams("Pair", nearVector = Some(NearVector(q, Metric.Cosine)),

@@ -30,10 +30,16 @@ class PlanGuardSpec extends SparkSpecBase {
     // frame for idf
     "q_text_tfidf" -> "single-row N onto vocabulary-sized df frame")
 
+  test("every allowlisted name is a gate") {
+    val names = SparkEntry.gates.map(_.name).toSet
+    assert(allowedNestedLoop.keySet.subsetOf(names), allowedNestedLoop.keySet -- names)
+  }
+
   test("no cartesian product or nested-loop join in any declared query plan") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = SparkEntry.gates.sortBy(_.name).flatMap { gt =>
+      val name = gt.name
       try {
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+        val plan = gt.build(spark, dir).queryExecution.executedPlan.toString
         val hits = Seq("CartesianProduct", "BroadcastNestedLoopJoin").filter(plan.contains)
           .filterNot(h => h == "BroadcastNestedLoopJoin" && allowedNestedLoop.contains(name))
         if (hits.nonEmpty) Some(s"$name: ${hits.mkString(",")}") else None
