@@ -28,6 +28,24 @@ object Gate {
 
   private[graft] def g(spark: SparkSession, dir: String): Graft = Fixtures.graft(spark, dir)
 
+  /** A fresh directory `<root>/<tag>-<random>` for a gate's side tables,
+   * stores and replay files. Every one lives under one per-JVM root
+   * (`graft-<random>` in the temp dir) that a shutdown hook deletes:
+   * nothing reads a gate's dirs after its JVM exits. */
+  private[graft] def tempDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tempRoot, s"$tag-").toString
+
+  private lazy val tempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-")
+    sys.addShutdownHook(deleteRecursively(root.toFile))
+    root
+  }
+
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(deleteRecursively))
+    f.delete()
+  }
+
   /** Scripted-gate step outcomes, shared by every control-plane walk gate:
    * "ok" (or the value) on success, the thrown message on failure. */
   private[graft] def okOr(body: => Any): String =

@@ -54,7 +54,7 @@ object ScaleProfile {
     // materialize both corpora to parquet so every pipeline times its own
     // work, not the expansion
     def mat(df: DataFrame, tag: String): (DataFrame, String) = {
-      val p = java.nio.file.Files.createTempDirectory(s"graft-scale-$tag").toString
+      val p = Gate.tempDir(s"scale-$tag")
       df.write.mode("overwrite").parquet(p)
       (spark.read.parquet(p), p)
     }
@@ -271,7 +271,7 @@ object ScaleProfile {
         val sc = CollectionSchema(s"StreamC$i", "uuid", Seq(
           Property("lang", PropType.Text, Tokenization.Field)))
         val st = new graft.sources.CollectionStore(spark,
-          java.nio.file.Files.createTempDirectory(s"graft-bs-$i").toString, sc)
+          Gate.tempDir(s"bs-$i"), sc)
         st.init(empty)
         gg.register(sc, st.read())
         s"StreamC$i" -> st

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ann.IvfIndex
@@ -23,7 +21,7 @@ object Smoke {
     require(rows.nonEmpty, "entry() returned no rows")
 
     // CRUD store round-trip (upsert → merge → deleteWhere → ttl)
-    val storeDir = Files.createTempDirectory("graft-smoke-store").toString
+    val storeDir = Gate.tempDir("smoke-store")
     val store = new CollectionStore(spark, storeDir,
       AutoSchema.infer("SmokeItems", Seq((1L, "a", 5L)).toDF("id", "name", "qty"), "id"))
     store.init(Seq((1L, "a", 5L), (2L, "b", 50L)).toDF("id", "name", "qty"))
@@ -40,9 +38,9 @@ object Smoke {
     require(store.read().count() == 2 && deleted == 1)
 
     // streaming file ingest
-    val in = Files.createTempDirectory("graft-smoke-in").toString
-    val out = Files.createTempDirectory("graft-smoke-out").toString
-    val cp = Files.createTempDirectory("graft-smoke-cp").toString
+    val in = Gate.tempDir("smoke-in")
+    val out = Gate.tempDir("smoke-out")
+    val cp = Gate.tempDir("smoke-cp")
     val batch = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
     batch.write.mode("append").parquet(in)
     Ingest.fileIngest(spark, in, out, batch.schema, cp).awaitTermination(60000)

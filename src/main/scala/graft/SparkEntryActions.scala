@@ -67,7 +67,7 @@ object SparkEntryActions {
 
     def createClass(schema: CollectionSchema): Unit = {
       val st = new CollectionStore(s,
-        java.nio.file.Files.createTempDirectory(s"graft-actions-${schema.name}").toString,
+        Gate.tempDir(s"actions-${schema.name}"),
         schema)
       st.init(s.createDataFrame(java.util.Collections.emptyList[Row](),
         structOf(schema, schema.properties)))

@@ -28,7 +28,7 @@ object SparkEntryExt {
    * q_near_muvera fixed cost), and (b) makes the code-only first pass a real
    * parquet column-pruned scan that never touches the float vectors. */
   private[graft] def sideTable(df: DataFrame, tag: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    val path = Gate.tempDir(tag)
     df.write.mode("overwrite").parquet(path)
     df.sparkSession.read.parquet(path)
   }
@@ -110,7 +110,7 @@ object SparkEntryExt {
   // AnnSpec covers the approximate low-nprobe regime (recall ≥ 0.9).
   private[graft] def ivfFor(gg: Graft, dir: String): graft.ann.IvfIndex =
     cached(gg.spark, s"ivf:$dir") {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+      val path = Gate.tempDir("ivf")
       graft.ann.IvfIndex.build(gg.collection("Embedding").df, "vec_id", "embedding",
         nlist = 8, defaultNprobe = 8, persistPath = Some(path))
     }
@@ -144,7 +144,7 @@ object SparkEntryExt {
   // index-probe query — same full-probe-exact setup as ivfFor
   private[graft] def ivfRevFor(gg: Graft, dir: String): graft.ann.IvfIndex =
     cached(gg.spark, s"ivfRev:$dir") {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-rev").toString
+      val path = Gate.tempDir("ivf-rev")
       graft.ann.IvfIndex.build(gg.collection("Embedding").df, "vec_id", "rev",
         nlist = 8, defaultNprobe = 8, persistPath = Some(path))
     }
@@ -274,7 +274,7 @@ object SparkEntryExt {
   // first with distance 0, same planted-copy oracle shape as PQ/BQ/SQ/RQ
   private[graft] def ivfpqFor(gg: Graft, dir: String): graft.ann.IvfPqIndex =
     cached(gg.spark, s"ivfpq:$dir") {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+      val path = Gate.tempDir("ivfpq")
       graft.ann.IvfPq.build(embWithPlantedDups(gg), "vec_id", "embedding",
         nlist = 8, m = 8, k = 16, persistPath = Some(path))
     }
@@ -286,7 +286,7 @@ object SparkEntryExt {
   private[graft] def dynFor(gg: Graft, dir: String): graft.ann.DynamicIndex =
     cached(gg.spark, s"dyn:$dir") {
       val emb = gg.collection("Embedding").df
-      val path = java.nio.file.Files.createTempDirectory("graft-dyn").toString
+      val path = Gate.tempDir("dyn")
       val flat = graft.ann.DynamicIndex.build(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", threshold = 100L, nlist = 8, defaultNprobe = 8,
         persistPath = Some(path))
@@ -344,7 +344,7 @@ object SparkEntryExt {
   // planted exact copy appended assign-only; cached across bench passes
   private[graft] def ivfAppendFor(gg: Graft, dir: String): DataFrame =
     cached(gg.spark, s"ivfAppend:$dir") {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
+      val path = Gate.tempDir("ivf-append")
       val emb = gg.collection("Embedding").df
       val idx0 = graft.ann.IvfIndex.build(emb, "vec_id", "embedding",
         nlist = 8, defaultNprobe = 8, persistPath = Some(path))
@@ -401,7 +401,7 @@ object SparkEntryExt {
       gg.registerMuvera("MVecBed", None,
         graft.ann.MuveraEncoder(ksim = 3, dproj = 8, reps = 6, dim = 64),
         persistPath =
-          Some(java.nio.file.Files.createTempDirectory("graft-muvera").toString),
+          Some(Gate.tempDir("muvera")),
         // rescoreLimit analogue: topK×32 candidates — the 48-dim FDE
         // estimate needs the wider cut for full true-top-10 recall on this
         // bed (a random ranking still only has ~1% odds of covering the
@@ -416,18 +416,17 @@ object SparkEntryExt {
   // scratch dir deleted as soon as its part file is copied out.
   private[graft] def replayDir(s: SparkSession, tag: String, dir: String)(build: String => Unit): String =
     cached(s, s"replay-$tag:$dir") {
-      val d = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+      val d = Gate.tempDir(tag)
       build(d)
       d
     }
   private[graft] def dumpReplayFile(f: DataFrame, streamDir: String, name: String): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-replay-scratch")
-    f.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = new java.io.File(tmp.toString).listFiles()
+    val tmp = Gate.tempDir("replay-scratch")
+    f.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(streamDir, name))
-    def rm(x: java.io.File): Unit = { Option(x.listFiles).foreach(_.foreach(rm)); x.delete() }
-    rm(tmp.toFile)
+    Gate.deleteRecursively(new java.io.File(tmp))
   }
 
   // Embedding twin whose DEFAULT vector is the reversed embedding: the
@@ -2510,9 +2509,9 @@ object SparkEntryExt {
       val eng = cached(s, s"streamIndex:$dir") {
         import java.nio.file.Files
         val docs = g(s, dir).collection("Document").df.select(col("doc_id"), col("text"))
-        val storeDir = Files.createTempDirectory("graft-qsi-store").toString
-        val inDir = Files.createTempDirectory("graft-qsi-in").toString
-        val ckpt = Files.createTempDirectory("graft-qsi-ckpt").toString
+        val storeDir = Gate.tempDir("qsi-store")
+        val inDir = Gate.tempDir("qsi-in")
+        val ckpt = Gate.tempDir("qsi-ckpt")
         val schema = CollectionSchema("DocStream", "doc_id", Seq(
           Property("text", PropType.Text, Tokenization.Word)))
         val st = new graft.sources.CollectionStore(s, storeDir, schema)
@@ -2555,7 +2554,7 @@ object SparkEntryExt {
       import java.nio.file.Files
       val docs = g(s, dir).collection("Document").df
         .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-      val root = Files.createTempDirectory("graft-clustered").toString
+      val root = Gate.tempDir("clustered")
       val st = new graft.sources.CollectionStore(s, root,
         CollectionSchema("DocClustered", "doc_id", Seq(
           Property("text", PropType.Text),
@@ -3422,7 +3421,7 @@ object SparkEntryExt {
       val schema = CollectionSchema("ClsBed", "vec_id", Seq(
         Property("label_ref", PropType.Ref, refTarget = Some("ClsBed"))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-clsjob").toString, schema)
+        Gate.tempDir("clsjob"), schema)
       st.init(base.unionByName(planted))
       val run = Classify.knnJob(st, "embedding", "label_ref", k = 5,
         "run-t2", 1700000000000000L)
@@ -4755,7 +4754,7 @@ object SparkEntryExt {
         Property("source", PropType.Text, Tokenization.Field),
         Property("n_chars", PropType.Int)))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-crud").toString, schema)
+        Gate.tempDir("crud"), schema)
       st.init(docs)
       st.upsert(docs.filter(col("doc_id") % 100 === 0).withColumn("lang", lit("xx"))
         .unionByName(docs.filter(col("doc_id") % 100 === 7)
@@ -4790,7 +4789,7 @@ object SparkEntryExt {
         Property("ts", PropType.Date),
         Property("event_type", PropType.Text, Tokenization.Field)))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-ttl").toString, schema)
+        Gate.tempDir("ttl"), schema)
       // boundary plants: 9000001 sits EXACTLY on the cutoff second (kept —
       // the expiry rule is strictly-before; a <= off-by-one deletes it) and
       // 9000002 at cutoff−0.4s (expired — flooring the sub-second part puts
@@ -4843,7 +4842,7 @@ object SparkEntryExt {
       val schema = CollectionSchema("LinkStore", "doc_id", Seq(
         Property("links", PropType.Ref, refTarget = Some("LinkStore"))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-refs").toString, schema)
+        Gate.tempDir("refs"), schema)
       st.init(docs)
       val d = docs.select(col("doc_id"))
       val edges = d.filter(col("doc_id") % 10 === 0)
@@ -4903,7 +4902,7 @@ object SparkEntryExt {
       val schema = CollectionSchema("LinkOps", "doc_id", Seq(
         Property("links", PropType.Ref, refTarget = Some("LinkOps"))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-refops").toString, schema)
+        Gate.tempDir("refops"), schema)
       st.init(docs)
       val d = docs.select(col("doc_id"))
       val dels = d.filter(col("doc_id") % 10 === 5)
@@ -4948,9 +4947,9 @@ object SparkEntryExt {
       val schema = CollectionSchema("EvT", "event_id", Seq(
         Property("value", PropType.Number)), tenantColumn = Some("event_type"))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-offl").toString, schema)
+        Gate.tempDir("offl"), schema)
       st.init(ev)
-      val off = java.nio.file.Files.createTempDirectory("graft-offl-root").toString
+      val off = Gate.tempDir("offl-root")
       st.offloadTenant("click", off)
       val phase = st.read().groupBy(col("event_type"))
         .agg(count(lit(1)).as("n")).withColumn("phase", lit("offloaded"))

@@ -29,7 +29,7 @@ object SparkEntryExt2 {
       """SELECT doc_id, lang, n_chars, md5(text) AS text_md5, source
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val gg = g(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-backup").toString
+      val path = Gate.tempDir("backup")
       graft.sources.Backup.exportCollection(gg.collection("Document"), path)
       val restored = graft.sources.Backup.restoreCollection(s, path)
       // every stored column reaches the compare (text via md5 to keep the
@@ -287,7 +287,7 @@ object SparkEntryExt2 {
       val schema = CollectionSchema("LimStore", "doc_id",
         Seq(Property("n_chars", PropType.Int)))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-lim").toString, schema)
+        Gate.tempDir("lim"), schema)
         .withMaxObjects(70L)
       out += "01_init_under_cap" -> res(st.init(docs))
       // 10 REPLACEMENTS: the reference counts len(batch) conservatively, so
@@ -299,7 +299,7 @@ object SparkEntryExt2 {
         docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(2000L))))
       out += "05_live_count" -> st.read().count().toString
       val st2 = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-lim2").toString, schema)
+        Gate.tempDir("lim2"), schema)
         .withMaxObjects(5L, "Limit {limit}={value} hit - upgrade at example.com {unknown}")
       out += "06_custom_template" -> res(st2.init(docs))
       val g2 = new Graft(s).withUsageLimits(collections = Some(2L))
@@ -358,7 +358,7 @@ object SparkEntryExt2 {
       val gg = g(s, dir)
       val docs = gg.collection("Document").df.select(col("doc_id"), col("n_chars"))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-expst").toString,
+        Gate.tempDir("expst"),
         CollectionSchema("DocExp", "doc_id", Seq(Property("n_chars", PropType.Int))))
       st.init(docs.filter(col("doc_id") < 80))
       val ex = new ExportSnapshot()
@@ -368,7 +368,7 @@ object SparkEntryExt2 {
       out += "01_slot_held" -> res(ex.prepare("exp-2", Seq("DocExp" -> st)))
       st.upsert(docs.filter(col("doc_id") < 20)
         .withColumn("doc_id", col("doc_id") + 5000L))
-      val dest = java.nio.file.Files.createTempDirectory("graft-expdst").toString
+      val dest = Gate.tempDir("expdst")
       val m = ex.commit(p, dest)
       out += "02_meta" -> s"${m.status}:${m.objectsExported("DocExp")}"
       out += "03_dup_id" -> res(ex.prepare("exp-1", Seq("DocExp" -> st)))
@@ -523,7 +523,7 @@ object SparkEntryExt2 {
       val schema = CollectionSchema("RoStore", "doc_id",
         Seq(Property("n_chars", PropType.Int)))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-ro").toString, schema)
+        Gate.tempDir("ro"), schema)
       st.init(docs)
       val steps = scala.collection.mutable.ListBuffer.empty[(String, String, String)]
       def attempt(tag: String)(body: => Unit): Unit =
@@ -1840,7 +1840,7 @@ object SparkEntryExt2 {
       val gg = g(s, dir)
       val docs = gg.collection("Document").df.select(col("doc_id"), col("n_chars"))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-racest").toString,
+        Gate.tempDir("racest"),
         CollectionSchema("DocRace", "doc_id", Seq(Property("n_chars", PropType.Int))))
       st.init(docs.filter(col("doc_id") < 50))
       val pinned = st.collection.df // reader opened at v0
@@ -1865,7 +1865,7 @@ object SparkEntryExt2 {
       val ex = new graft.sources.ExportSnapshot()
       val p = ex.prepare("race-exp", Seq("DocRace" -> st))
       wave(2, 1, 50000L, _ => 9000)
-      val dest = java.nio.file.Files.createTempDirectory("graft-racedst").toString
+      val dest = Gate.tempDir("racedst")
       val m = ex.commit(p, dest)
       val live = st.read()
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -1916,7 +1916,7 @@ object SparkEntryExt2 {
       s.sparkContext.hadoopConfiguration
         .set("fs.mockfs.impl", classOf[graft.sources.MockFs].getName)
       val gg = g(s, dir)
-      val local = java.nio.file.Files.createTempDirectory("graft-mockfs").toString
+      val local = Gate.tempDir("mockfs")
       val root = s"mockfs:$local"
       val createsBefore = graft.sources.MockFs.creates.get()
       graft.sources.Backup.backup(gg, Seq("Document"), s"$root/bk")
@@ -1945,7 +1945,7 @@ object SparkEntryExt2 {
         (new java.io.File(s"$local/bk/Document/data").exists() &&
           createsAfterBackup > createsBefore).toString
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-schemest").toString,
+        Gate.tempDir("schemest"),
         CollectionSchema("DocSch", "doc_id", Seq(Property("n_chars", PropType.Int))))
       st.init(gg.collection("Document").df
         .select(col("doc_id"), col("n_chars")).filter(col("doc_id") < 120))
@@ -1970,7 +1970,7 @@ object SparkEntryExt2 {
       // to a fresh root and read it back via plain file:// — nothing in the
       // layout or metadata pins the original root/scheme (the reference's
       // backups restore from whatever backend they were copied to)
-      val moved = java.nio.file.Files.createTempDirectory("graft-moved").toString
+      val moved = Gate.tempDir("moved")
       val movedOk = new java.io.File(s"$local/exp/sch-exp")
         .renameTo(new java.io.File(s"$moved/sch-exp"))
       out += "08_moved_restorable" -> (movedOk &&
@@ -2104,7 +2104,7 @@ object SparkEntryExt2 {
       import s.implicits._
       val W = graft.engine.WireDecoder
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-wirebatch").toString,
+        Gate.tempDir("wirebatch"),
         CollectionSchema("WireObj", "id", Seq(
           Property("title", PropType.Text), Property("n", PropType.Int),
           Property("score", PropType.Number), Property("flag", PropType.Bool),
@@ -2561,7 +2561,7 @@ object SparkEntryExt2 {
       out += "08_glob_exclude" -> valueOr(W.decodeBackupRequest(eng, "filesystem",
         """{"id": "a1", "exclude": ["WireB?"]}""").classes.mkString(","))
       // live: the decoded class list drives a real backup→restore
-      val bkRoot = java.nio.file.Files.createTempDirectory("graft-wire-bk").toString
+      val bkRoot = Gate.tempDir("wire-bk")
       val bkReq = W.decodeBackupRequest(eng, "filesystem",
         """{"id": "wire_bk_1", "include": ["WireA", "WireB1"]}""")
       out += "09_roundtrip_rows" -> valueOr {
@@ -2736,7 +2736,7 @@ object SparkEntryExt2 {
         Property("n_chars", PropType.Int, indexSearchable = false),
         Property("lang", PropType.Text, Tokenization.Field)))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-wire-del").toString, schema)
+        Gate.tempDir("wire-del"), schema)
       st.init(s.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < 500)
         .select(format_string("00000000-0000-4000-8000-%012d", col("doc_id")).as("id"),
           col("n_chars"), col("lang")))
@@ -3042,7 +3042,7 @@ object SparkEntryExt2 {
       val schema = CollectionSchema("WireRefs", "id", Seq(
         Property("links", PropType.Ref, refTarget = Some("WireRefs"))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-wire-refs").toString, schema)
+        Gate.tempDir("wire-refs"), schema)
       st.init(docs)
       val srcs = docs.select(col("id")).collect().map(_.getString(0))
         .filter(u => u.takeRight(12).toLong % 100 == 0).sorted

@@ -1223,7 +1223,7 @@ object SparkEntryFixtures {
       def dt(i: Int) = f"40000000-0000-4000-8000-${i}%012d"   // delete-bed targets
       def store(schema: CollectionSchema, frame: StructType) = {
         val st = new graft.sources.CollectionStore(s,
-          java.nio.file.Files.createTempDirectory(s"graft-bulk-${schema.name}").toString, schema)
+          Gate.tempDir(s"bulk-${schema.name}"), schema)
         st.init(s.createDataFrame(java.util.Collections.emptyList[Row](), frame))
         st
       }
@@ -2401,7 +2401,7 @@ object SparkEntryFixtures {
         StructField("objects", ArrayType(StructType(Seq(
           StructField("texts", ArrayType(StringType))))))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-lvr").toString, schema)
+        Gate.tempDir("lvr"), schema)
       st.init(s.createDataFrame(java.util.Collections.emptyList[Row](), frame))
       val numBytes = {
         val bb = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)

@@ -369,7 +369,7 @@ object SparkEntryGrpc {
       StructField("reviews", ArrayType(StructType(Seq(
         StructField("tags", ArrayType(StringType))))))))
     val st = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-books").toString, schema)
+      Gate.tempDir("books"), schema)
     st.init(s.createDataFrame(java.util.Collections.emptyList[Row](), frame))
     val (objs, errs) = ProtoWire.batchObjectsRequest(
       ProtoWire.write(booksBatchDoc, "BatchObjectsRequest"))
@@ -609,7 +609,7 @@ object SparkEntryGrpc {
     val frame = StructType(Seq(
       StructField("uuid", StringType), StructField("contents", StringType)))
     val st = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-alpha").toString, schema)
+      Gate.tempDir("alpha"), schema)
     st.init(s.createDataFrame(java.util.Collections.emptyList[Row](), frame))
     // 26×26 objects "III J", imported over the binary batch wire like the suite
     val objs = for { i <- 0 until 26; j <- 0 until 26 } yield JObject(List(
@@ -673,10 +673,10 @@ object SparkEntryGrpc {
       StructField("uuid", StringType), StructField("contents", StringType),
       StructField("title", StringType)))
     val aStore = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-article").toString, aSchema)
+      Gate.tempDir("article"), aSchema)
     aStore.init(s.createDataFrame(java.util.Collections.emptyList[Row](), aFrame))
     val pStore = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-para").toString, pSchema)
+      Gate.tempDir("para"), pSchema)
     pStore.init(s.createDataFrame(java.util.Collections.emptyList[Row](), pFrame))
     val gg = new Graft(s)
     gg.register(aSchema, aStore.read())
@@ -1255,7 +1255,7 @@ object SparkEntryGrpc {
           case other => throw new IllegalArgumentException(s"$other")
         })) ++ extraCols))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory(s"graft-mcpup-${schema.name}").toString,
+        Gate.tempDir(s"mcpup-${schema.name}"),
         schema)
       st.init(s.createDataFrame(java.util.Arrays.asList(seed: _*), struct))
       stores(schema.name) = st

@@ -128,14 +128,14 @@ object SparkEntryObjects {
     val tgtSchema = CollectionSchema("SequenceReferenceTestTarget", "uuid", Seq(
       Property("name", PropType.Text, Tokenization.Whitespace)))
     val srcStore = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-seq-src").toString, srcSchema)
+      Gate.tempDir("seq-src"), srcSchema)
     srcStore.init(s.createDataFrame(java.util.Arrays.asList(
       Row(sourceId, null, "Source Object")),
       StructType(Seq(StructField("uuid", StringType),
         StructField("toTarget", ArrayType(StringType)),
         StructField("name", StringType)))))
     val tgtStore = new graft.sources.CollectionStore(s,
-      java.nio.file.Files.createTempDirectory("graft-seq-tgt").toString, tgtSchema)
+      Gate.tempDir("seq-tgt"), tgtSchema)
     tgtStore.init(s.createDataFrame(
       java.util.Arrays.asList(targetIds.zipWithIndex.map { case (id, i) =>
         Row(id, s"target object $i") }: _*),
@@ -168,7 +168,7 @@ object SparkEntryObjects {
     def store(name: String, refProp: Property): graft.sources.CollectionStore = {
       val sc = CollectionSchema(name, "uuid", Seq(refProp))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory(s"graft-cref-$name").toString, sc)
+        Gate.tempDir(s"cref-$name"), sc)
       st.init(s.createDataFrame(java.util.Collections.emptyList[Row](), StructType(Seq(
         StructField("uuid", StringType),
         StructField("ref", ArrayType(StringType))))))
@@ -305,7 +305,7 @@ object SparkEntryObjects {
       val schema = CollectionSchema("DeadlockProbe", "uuid", Nil,
         tenantColumn = Some("tenant"))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-coldshard").toString, schema)
+        Gate.tempDir("coldshard"), schema)
       // a multi-tenant store partitions by the tenant column; an empty init
       // would write no partition files, so seed the tenant's one row
       st.init(s.createDataFrame(java.util.Arrays.asList(

@@ -552,7 +552,7 @@ object SparkEntryWire2 {
         StructField("population", LongType), StructField("cityRights", TimestampType),
         StructField("code", StringType), StructField("tags", ArrayType(StringType))))
       val st = new graft.sources.CollectionStore(s,
-        java.nio.file.Files.createTempDirectory("graft-objwire").toString, schema)
+        Gate.tempDir("objwire"), schema)
       def rowOf(o: W.RestObject): org.apache.spark.sql.DataFrame = {
         val vals = W.restObjectValues(schema, o)
         val row = Row(o.id.orNull, vals.get("name").orNull,
@@ -680,7 +680,7 @@ object SparkEntryWire2 {
         |) AS t(step, result) ORDER BY step""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.types._
-      val base = java.nio.file.Files.createTempDirectory("graft-bp").toString
+      val base = Gate.tempDir("bp")
       val schema = StructType(Seq(
         StructField("id", LongType), StructField("key", LongType),
         StructField("ts", TimestampType)))

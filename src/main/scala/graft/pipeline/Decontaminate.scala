@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.text.Tokenize
-
 /**
  * Benchmark decontamination — flag training documents that share word
  * n-grams with an evaluation/benchmark set (the GPT-3-style 13-gram overlap
@@ -31,9 +29,9 @@ object Decontaminate {
                    bench: DataFrame, benchText: Column, n: Int): DataFrame = {
     val corpusGrams = corpus
       .select(corpusId.as("id"),
-        explode(array_distinct(Dedup.shingleHashes(Tokenize.word(corpusText), n))).as("__g"))
+        explode(Dedup.wordShingles(corpusText, n)).as("__g"))
     val benchGrams = bench
-      .select(explode(array_distinct(Dedup.shingleHashes(Tokenize.word(benchText), n))).as("__g"))
+      .select(explode(Dedup.wordShingles(benchText, n)).as("__g"))
       .distinct()
     corpusGrams
       .join(broadcast(benchGrams), Seq("__g"), "left_semi")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.VectorFunctions
+import org.apache.spark.sql.graft.{TextHashFunctions, VectorFunctions}
 import graft.text.Tokenize
 
 /**
@@ -16,9 +16,12 @@ import graft.text.Tokenize
  *  1. *bucket → verify*: a cheap deterministic signature shuffles candidate
  *     rows into small buckets (one `groupBy`), exact verification runs only
  *     inside buckets — total work is Σ bucket², never N².
- *  2. *signature-as-column*: signatures (minhash arrays, simhash bits, band
- *     keys) are codegen'd column expressions, so signature computation is a
- *     single scan with no UDF boxing and no driver involvement.
+ *  2. *signature-as-column*: signatures are column expressions, so their
+ *     computation is a single scan with no UDF boxing and no driver
+ *     involvement. The MinHash path's shingle hashes, signature and band
+ *     keys are native kernels (`ShingleHashes`, `MinHashSignature`,
+ *     `LshBandKeys` in TextHashFunctions.scala), one codegen'd pass each;
+ *     SimHash bits build from an explode + aggregate.
  *
  * All hashing is seeded xxhash64 — deterministic across runs/partitions.
  */
@@ -37,12 +40,6 @@ object Dedup {
 
   // --- MinHash + LSH ---------------------------------------------------------
 
-  /**
-   * k minhash values over a shingle array as a single column expression
-   * (column-API form; `minhashDuplicates` uses the faster explode +
-   * hash-aggregate shape). One hash per shingle, then k cheap fixed-width
-   * re-hashes — the universal-hash-family trick.
-   */
   /** MinHash signature of a shingle-hash array — the native codegen
    * expression (one primitive loop, no HOF lambdas, no shuffle; see
    * [[org.apache.spark.sql.graft.MinHashSignature]]). Lane i =
@@ -54,26 +51,27 @@ object Dedup {
    * Hashed word-n-gram shingles: combine consecutive token hashes with
    * chained xxhash64 — shingle *identity* is all dedup needs, so the shingle
    * strings are never materialized (string building dominated the profile:
-   * ~4 s/scan at sf0.1 vs ~0.5 s for the hash form).
+   * ~4 s/scan at sf0.1 vs ~0.5 s for the hash form). A doc of 1..n-1 tokens
+   * yields one hash of all its tokens, no tokens yield []. The native
+   * [[org.apache.spark.sql.graft.ShingleHashes]] kernel: each token is hashed
+   * once, in one pass.
    */
-  def shingleHashes(tokens: Column, n: Int): Column = {
-    val h = transform(tokens, t => xxhash64(t))
-    val len = size(h)
-    val windows = (0 until n).map(o => slice(h, lit(o + 1), greatest(len - (n - 1), lit(0))))
-    val combined = windows.reduce((a, b) => zip_with(a, b, (x, y) => xxhash64(x, y)))
-    when(tokens.isNull, lit(null))
-      .when(len === 0, array().cast("array<bigint>"))
-      .when(len < n, array(aggregate(h, lit(42L), (acc, x) => xxhash64(acc, x))))
-      .otherwise(combined)
-  }
+  def shingleHashes(tokens: Column, n: Int): Column = TextHashFunctions.shingleHashes(tokens, n)
+
+  /** Distinct shingle hashes of a text's `Tokenize.word` tokens — the
+   * shingle set every shingle-based dedup op compares. The tokens are
+   * Tokenize.word's `[\p{L}\p{N}]+` runs of lower(text) without its
+   * empty-token filter, a lambda that a `+` run never needs. */
+  def wordShingles(text: Column, n: Int): Column =
+    array_distinct(shingleHashes(regexp_extract_all(lower(text), lit("[\\p{L}\\p{N}]+"), lit(0)), n))
 
   /** LSH band keys: split the signature into `bands` rows of `rowsPerBand`,
-   * hash each band. Two docs sharing any band key become candidates. */
+   * hash each band as xxhash64(concat_ws(",", lanes), band). Two docs
+   * sharing any band key become candidates. The native
+   * [[org.apache.spark.sql.graft.LshBandKeys]] kernel; a null signature has
+   * null keys. */
   def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64(concat_ws(",",
-        slice(signature, b * rowsPerBand + 1, rowsPerBand)), lit(b))
-    }: _*)
+    TextHashFunctions.lshBandKeys(signature, bands, rowsPerBand)
 
   /** Exact Jaccard similarity of two token arrays (as sets). */
   def jaccard(a: Column, b: Column): Column = {
@@ -105,34 +103,25 @@ object Dedup {
    * 1−(1−s^r)^(b−1) per pair. Default off (None) — the oracle replays
    * exact all-pairs semantics; deployments at scale set a cap.
    */
-  /** (__id, __shh) → one (__id, __band) row per LSH band. The signature is
-   * the native codegen [[minhashSignature]] expression — ONE projection,
-   * no shuffle (the previous explode → 128-column hash-aggregate paid a
-   * full shuffle on the doc key; before that, HOF lambdas evaluated
-   * interpreted per element). Band keys hash the comma-joined lane slices
-   * exactly as before, so bucket membership is a pure plan change. */
-  private def sigBands(toks: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // the signature is ALIASED in its own projection: bandKeys references
-    // it 64× (one slice per band), and CollapseProject keeps a multi-
-    // referenced non-cheap alias out of the consumer — inlining would
-    // evaluate the 128-lane kernel once per band
-    toks.select(col("__id"), minhashSignature(col("__shh"), numHashes).as("__sig"))
-      .select(col("__id"),
-        explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
-  }
+  /** (__id, __shh) → one (__id, __band) row per LSH band. The signature and
+   * band keys are native kernels ([[minhashSignature]], [[bandKeys]]) — ONE
+   * projection, no shuffle (the previous explode → 128-column
+   * hash-aggregate paid a full shuffle on the doc key; before that, HOF
+   * lambdas evaluated interpreted per element). */
+  private def sigBands(toks: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    toks.select(col("__id"), explode(bandKeys(
+      minhashSignature(col("__shh"), numHashes), bands, numHashes / bands)).as("__band"))
 
   def minhashDuplicates(
       df: DataFrame, idCol: Column, textCol: Column,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, hotBandCap: Option[Int] = None): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val toks = df.select(idCol.as("__id"),
-        array_distinct(shingleHashes(Tokenize.word(textCol), shingleSize)).as("__shh"))
+    val toks = df.select(idCol.as("__id"), wordShingles(textCol, shingleSize).as("__shh"))
       .filter(size(col("__shh")) > 0)
       // the shingle table feeds signature build AND pair verification — one
       // materialization, not one per consumer (at warehouse scale this is a
-      // persisted signature side-table)
+      // persisted signature side-table); released before returning, see
+      // [[releasing]]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // materialize BEFORE the multi-branch consumers: the band self-join and
     // the two verification joins all scan this cache inside ONE job, and
@@ -163,7 +152,17 @@ object Dedup {
           .select(col("__bmin").as("id_a"), col("__id").as("id_b"))
         smallPairs.unionByName(starPairs).dropDuplicates("id_a", "id_b")
     }
-    verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold)
+    releasing(toks)(verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold))
+  }
+
+  /** The verified pairs, materialized (`localCheckpoint`), with the shingle
+   * table they were computed from unpersisted. Left cached, that table would
+   * pin one entry per distinct corpus for the session's life, and a later
+   * call on the same plan would read it instead of building its shingles. */
+  private def releasing(shingles: DataFrame)(pairs: DataFrame): DataFrame = {
+    val done = pairs.localCheckpoint(eager = true)
+    shingles.unpersist()
+    done
   }
 
   /**
@@ -186,7 +185,7 @@ object Dedup {
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, hotBandCap: Option[Int] = None): DataFrame = {
     val toks = df.select(idCol.as("__id"), newCol.cast("boolean").as("__new"),
-        array_distinct(shingleHashes(Tokenize.word(textCol), shingleSize)).as("__shh"))
+        wordShingles(textCol, shingleSize).as("__shh"))
       .filter(size(col("__shh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     toks.count() // materialize before the multi-branch consumers (see above)
@@ -221,7 +220,7 @@ object Dedup {
           .select(col("__bmin").as("id_a"), col("__id").as("id_b"))
         smallPairs.unionByName(starPairs)
     }).dropDuplicates("id_a", "id_b")
-    verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold)
+    releasing(toks)(verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold))
   }
 
   /** Join shingle-hash sets onto (id_a, id_b) candidates and keep pairs ≥ t.
@@ -320,7 +319,7 @@ object Dedup {
     val toks = df.select(
       (bucketCols.zip(bNames).map { case (c, n) => c.as(n) } :+
         idCol.as("__id") :+
-        array_sort(array_distinct(shingleHashes(Tokenize.word(textCol), shingleSize))).as("__shh")): _*)
+        array_sort(wordShingles(textCol, shingleSize)).as("__shh")): _*)
       .filter(size(col("__shh")) > 0)
       // consumed by prefix pass and verification — persist so shingle
       // construction runs once; eager count: the prefix self-join's two

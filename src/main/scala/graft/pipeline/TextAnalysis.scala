@@ -2,14 +2,21 @@ package graft.pipeline
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{TextHashFunctions, TextKernels}
 
 import graft.text.Tokenize
 
 /**
  * Text-analysis operators for training-data pipelines (engine extensions
  * beyond the weaviate surface): language ID, quality scoring, token counting,
- * document fingerprinting. All pure column expressions — one scan, fully
- * codegen'd, no UDFs — so they compose with filters/dedup at any scale.
+ * document fingerprinting. All pure column expressions — one scan, no UDFs —
+ * so they compose with filters/dedup at any scale. The quality score and the
+ * Gopher rules read their per-document counts from one native kernel each
+ * ([[org.apache.spark.sql.graft.TextQualityCounts]],
+ * [[org.apache.spark.sql.graft.GopherCounts]]: one codegen'd pass over the
+ * document) and keep their ratio and threshold arithmetic as column math.
+ * Operators built from higher-order functions (`aggregate`, `filter`,
+ * `transform`) evaluate those lambdas interpreted, per element.
  */
 object TextAnalysis {
 
@@ -24,26 +31,35 @@ object TextAnalysis {
     aggregate(pieces, lit(0L), (acc, p) => acc + ceil(length(p) / 4.0).cast("long"))
   }
 
+  // The quality signals below are column arithmetic over one
+  // TextQualityCounts struct: `tokens`/`stopword_tokens`/`token_chars` count
+  // the Tokenize.word tokens, `non_space`/`punct` the text's code points
+  // outside \s and outside [\p{L}\p{N}\s]. A null text has null counts.
+
   /** Ratio of punctuation characters to all non-space characters. */
-  def punctRatio(text: Column): Column = {
-    val nonSpace = length(regexp_replace(text, "\\s+", "")).cast("double")
-    val punct = length(regexp_replace(text, "[\\p{L}\\p{N}\\s]+", "")).cast("double")
+  def punctRatio(text: Column): Column = punctRatioOf(TextHashFunctions.textQualityCounts(text))
+
+  private def punctRatioOf(counts: Column): Column = {
+    val nonSpace = counts.getField("non_space").cast("double")
+    val punct = counts.getField("punct").cast("double")
     when(nonSpace === 0, 0.0).otherwise(punct / nonSpace)
   }
 
   /** Fraction of word-tokens that are English stopwords. */
-  def stopwordRatio(text: Column): Column = {
-    val toks = Tokenize.word(text)
-    val stopArr = array(Tokenize.StopwordsEn.toSeq.sorted.map(lit): _*)
-    when(size(toks) === 0, 0.0)
-      .otherwise(size(filter(toks, t => array_contains(stopArr, t))).cast("double") / size(toks))
+  def stopwordRatio(text: Column): Column = stopwordRatioOf(TextHashFunctions.textQualityCounts(text))
+
+  private def stopwordRatioOf(counts: Column): Column = {
+    val nToks = counts.getField("tokens")
+    when(nToks === 0, 0.0)
+      .otherwise(counts.getField("stopword_tokens").cast("double") / nToks)
   }
 
   /** Mean word-token length. */
   def meanTokenLen(text: Column): Column = {
-    val toks = Tokenize.word(text)
-    when(size(toks) === 0, 0.0)
-      .otherwise(aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") / size(toks))
+    val counts = TextHashFunctions.textQualityCounts(text)
+    val nToks = counts.getField("tokens")
+    when(nToks === 0, 0.0)
+      .otherwise(counts.getField("token_chars").cast("double") / nToks)
   }
 
   /**
@@ -52,10 +68,11 @@ object TextAnalysis {
    * all-punctuation, or stopword-free score low.
    */
   def qualityScore(text: Column): Column = {
-    val nToks = size(Tokenize.word(text)).cast("double")
+    val counts = TextHashFunctions.textQualityCounts(text)
+    val nToks = counts.getField("tokens").cast("double")
     val lengthOk = least(nToks / 50.0, lit(1.0))                  // ≥50 tokens → full credit
-    val punctOk = greatest(lit(1.0) - punctRatio(text) * 4.0, lit(0.0)) // >25% punct → 0
-    val stopOk = least(stopwordRatio(text) * 10.0, lit(1.0))      // ≥10% stopwords → full credit
+    val punctOk = greatest(lit(1.0) - punctRatioOf(counts) * 4.0, lit(0.0)) // >25% punct → 0
+    val stopOk = least(stopwordRatioOf(counts) * 10.0, lit(1.0))  // ≥10% stopwords → full credit
     (lengthOk + punctOk + stopOk) / 3.0
   }
 
@@ -72,31 +89,33 @@ object TextAnalysis {
    *   6. at least 2 distinct words from the required-word list
    *      {the, be, to, of, and, that, have, with}
    *
-   * Pure column math — one scan, zero shuffle, whole-stage codegen (the
-   * same posture as c4Clean). Returns the input plus per-rule booleans and
-   * the conjunction `gopher_pass`; words = whitespace tokens (the paper
-   * operates on whitespace words, not the inverted-index tokenizer).
+   * The per-document counts come from one native kernel
+   * ([[org.apache.spark.sql.graft.GopherCounts]]: one codegen'd pass, no
+   * lambdas, no shuffle); the rules are column math over them. Returns the
+   * input plus per-rule booleans and the conjunction `gopher_pass`; words =
+   * whitespace tokens (the paper operates on whitespace words, not the
+   * inverted-index tokenizer), lines = the text's '\n' pieces that are
+   * non-blank after `trim`.
    */
   def gopherFilter(df: org.apache.spark.sql.DataFrame, textCol: Column): org.apache.spark.sql.DataFrame = {
-    val words = Tokenize.whitespace(textCol)
-    val nWords = size(words).cast("double")
-    val meanLen = when(nWords > 0,
-      aggregate(words, lit(0.0), (acc, w) => acc + length(w)) / nWords).otherwise(lit(0.0))
-    val nSymbols = (length(textCol) - length(regexp_replace(textCol, "#|…", ""))).cast("double") +
-      (size(split(textCol, "\\.\\.\\.", -1)) - 1).cast("double")
-    val lines = filter(split(textCol, "\n"), l => length(trim(l)) > 0)
-    val nLines = size(lines).cast("double")
-    val bulletFrac = when(nLines > 0,
-      size(filter(lines, l => trim(l).rlike("^([\\u2022\\u2023\\u25E6\\u2043\\u2219*-])"))).cast("double") / nLines)
-      .otherwise(lit(0.0))
-    val ellipsisFrac = when(nLines > 0,
-      size(filter(lines, l => trim(l).rlike("(\\.\\.\\.|…)$"))).cast("double") / nLines)
-      .otherwise(lit(0.0))
-    val alphaFrac = when(nWords > 0,
-      size(filter(words, w => w.rlike("[\\p{L}]"))).cast("double") / nWords).otherwise(lit(0.0))
-    val required = array(Seq("the", "be", "to", "of", "and", "that", "have", "with").map(lit): _*)
-    val requiredHits = size(filter(required,
-      r => array_contains(transform(words, w => lower(w)), r)))
+    // The counts are the output of a one-element `inline` (a Generate), so
+    // the kernel runs once per row: a filter on the rules stops above a
+    // Generate, while it is pushed below any projection, where it would
+    // evaluate the kernel once per count it reads (FilterExec has no
+    // subexpression elimination).
+    val countCols = TextKernels.GopherSchema.fieldNames.toSeq.map("__gopher_" + _)
+    val counted = df.select(col("*"),
+      inline(array(TextHashFunctions.gopherCounts(textCol))).as(countCols))
+    def n(field: String): Column = col("__gopher_" + field).cast("double")
+    val nWords = n("words")
+    val meanLen = when(nWords > 0, n("word_chars") / nWords).otherwise(lit(0.0))
+    val nSymbols = n("symbols")
+    val nLines = n("lines")
+    val bulletFrac = when(nLines > 0, n("bullet_lines") / nLines).otherwise(lit(0.0))
+    val ellipsisFrac = when(nLines > 0, n("ellipsis_lines") / nLines).otherwise(lit(0.0))
+    val alphaFrac = when(nWords > 0, n("alpha_words") / nWords).otherwise(lit(0.0))
+    // a null text has no words, so no required-word hits
+    val requiredHits = coalesce(col("__gopher_required_hits"), lit(0))
     val rules = Seq(
       "gopher_word_count"  -> (nWords >= 50 && nWords <= 100000),
       "gopher_mean_len"    -> (meanLen >= 3.0 && meanLen <= 10.0),
@@ -104,8 +123,9 @@ object TextAnalysis {
       "gopher_lines"       -> (bulletFrac < 0.9 && ellipsisFrac < 0.3),
       "gopher_alpha"       -> (alphaFrac >= 0.8),
       "gopher_required"    -> (requiredHits >= 2))
-    val withRules = rules.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+    val withRules = rules.foldLeft(counted) { case (d, (name, c)) => d.withColumn(name, c) }
     withRules.withColumn("gopher_pass", rules.map(r => col(r._1)).reduce(_ && _))
+      .drop(countCols: _*)
   }
 
   /** Per-language stopword profiles for the n-gram-free language-ID heuristic. */
@@ -219,9 +239,9 @@ object TextAnalysis {
    *
    * Returns only the retained pages: all input columns plus `c4_text` (kept
    * lines re-joined with newlines), `c4_lines_kept`, `c4_lines_total`. Pure
-   * codegen'd column expressions over one scan — array filter + regex per
-   * row, no shuffle, no UDF — so it composes with dedup/quality at 100 TB
-   * exactly like the other signals here.
+   * column expressions over one scan — array filter (its lambda evaluated
+   * interpreted) + regex per row, no shuffle, no UDF — so it composes with
+   * dedup/quality at 100 TB exactly like the other signals here.
    */
   def c4Clean(df: org.apache.spark.sql.DataFrame, textCol: Column,
               blocklist: Seq[String] = Nil, minSentences: Int = 5,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.pipeline.Dedup
-import graft.text.Tokenize
 
 /**
  * Streaming near-duplicate detection — MinHash-LSH with watermark-bounded
@@ -64,10 +63,10 @@ object StreamDedup {
    * `shh` is SORTED, so the stateful verify is an allocation-free
    * merge-intersect.
    *
-   * The 128-lane minhash runs as the NATIVE codegen expression
-   * ([[org.apache.spark.sql.graft.MinHashSignature]]) + the same
-   * [[Dedup.bandKeys]] the batch path hashes — band keys are bit-identical
-   * to [[Dedup.minhashDuplicates]], and the whole phase is one codegen'd
+   * Shingles, the 128-lane minhash and the band keys are the native
+   * kernels the batch path runs ([[Dedup.wordShingles]],
+   * [[Dedup.minhashSignature]], [[Dedup.bandKeys]]) — band keys are
+   * bit-identical to [[Dedup.minhashDuplicates]], and the whole phase is one codegen'd
    * projection: no HOF-lambda interpretation (61 s for 1000 sf0.1 docs),
    * no aggregation (not allowed before a stateful operator), no typed-map
    * encoder round-trip. */
@@ -77,14 +76,10 @@ object StreamDedup {
     implicit val outEnc = Encoders.product[BandedDoc]
     val rowsPerBand = numHashes / bands
     docs
-      .withColumn("__shh", array_sort(array_distinct(
-        Dedup.shingleHashes(Tokenize.word(col(textCol)), shingleSize))))
+      .withColumn("__shh", array_sort(Dedup.wordShingles(col(textCol), shingleSize)))
       .filter(size(col("__shh")) > 0)
-      // aliased signature projection — bandKeys references it 64×, and
-      // CollapseProject keeps multi-referenced non-cheap aliases separate
-      // (inlining would run the 128-lane kernel once per band)
-      .withColumn("__sig", Dedup.minhashSignature(col("__shh"), numHashes))
-      .withColumn("band", explode(Dedup.bandKeys(col("__sig"), bands, rowsPerBand)))
+      .withColumn("band", explode(Dedup.bandKeys(
+        Dedup.minhashSignature(col("__shh"), numHashes), bands, rowsPerBand)))
       .select(col("band"), col(idCol).cast("long").as("doc_id"),
         (unix_micros(col(eventTimeCol)) / 1000L).cast("long").as("ts_ms"),
         col(eventTimeCol).as("ts"), col("__shh").as("shh"))

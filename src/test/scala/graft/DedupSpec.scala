@@ -49,6 +49,27 @@ class DedupSpec extends SparkSpecBase {
       "bed must produce at least one new<->new pair")
   }
 
+  test("minhashDuplicates leaves no cache entry behind once its pairs are written") {
+    // planted exact copies, on a bed no other test builds (a plan that is
+    // already cached would hide a new entry)
+    val bed = docs.unionByName(docs.filter($"doc_id" % 7 === 0)
+      .select(($"doc_id" + 3000000L).as("doc_id"), $"text"))
+    def cacheEntries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    val before = cacheEntries
+    val pairs = Dedup.minhashDuplicates(bed, $"doc_id", $"text",
+      shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.7)
+    def collected = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val want = collected
+    Dedup.selectCanonical(bed, $"doc_id", length($"text"), pairs, $"id_a", $"id_b")
+      .write.mode("overwrite").parquet(Gate.tempDir("dedup-cache"))
+    assert(cacheEntries == before)
+    assert(collected == want)
+    val copies = bed.filter($"doc_id" >= 3000000L && size(Tokenize.word($"text")) > 0)
+      .select($"doc_id").as[Long].collect()
+    assert(copies.nonEmpty)
+    assert(copies.forall(c => want.contains((c - 3000000L, c, 1.0))))
+  }
+
   test("minhash-LSH finds exactly the brute-force near-dup pairs (recall 1 here)", SlowTests) {
     val got = Dedup.minhashDuplicates(docs, $"doc_id", $"text",
         shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.7)
