@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope
 
 import graft.engine.{Collection, Graft}
 import graft.model._
@@ -312,9 +313,11 @@ object Fixtures {
    * is exact.
    */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // older Sparks honor this and surface nanos as long; harmless otherwise
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(spark, dir, "events")
+    // older Sparks honor nanosAsLong and surface nanos as long; harmless
+    // otherwise. It is set on a clone, so the caller's session keeps its conf
+    val raw = SessionScope.rebind(
+      t(SessionScope.cloned(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true"),
+        dir, "events"), spark)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) as nanos-long
         raw.withColumn("ts_nanos", col("ts"))

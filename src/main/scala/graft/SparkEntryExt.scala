@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope
 
 import graft.engine.Graft
 import graft.model._
@@ -2527,12 +2528,15 @@ object SparkEntryExt {
         docs.filter(col("doc_id") < 60).write.mode("append").parquet(inDir)
         docs.filter(col("doc_id") >= 60 && col("doc_id") < 120)
           .write.mode("append").parquet(inDir)
-        graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-          val q = graft.streaming.IndexMaintenance.startPostings(
-            s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
-            st, e, "DocStream", ckpt)
-          require(q.awaitTermination(300000), "q_stream_index: stream did not drain")
-        }
+        // a stream plans its micro-batches at spark.sql.shuffle.partitions (a
+        // stateful one fixes the count in its checkpoint at first start and
+        // pays one state-store task per partition per batch): size it to the
+        // data on a clone, so the session's batch shuffle width stays as is
+        val ss = SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4")
+        val q = graft.streaming.IndexMaintenance.startPostings(
+          ss.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
+          st, e, "DocStream", ckpt)
+        require(q.awaitTermination(300000), "q_stream_index: stream did not drain")
         e
       }
       eng.get(GetParams("DocStream",

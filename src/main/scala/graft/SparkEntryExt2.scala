@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope
 
 import graft.engine.Graft
 import graft.model._
@@ -889,7 +890,9 @@ object SparkEntryExt2 {
           ms < 1705784400000L), d, "01.parquet")                          // < 01-20T21:00Z
         dumpReplayFile(full.filter(ms >= 1705784400000L), d, "02.parquet")
       }
-      val stream = s.readStream.schema(full.schema)
+      // state partitions sized to the state, on a clone (see q_stream_index)
+      val ss = SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(full.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(streamDir)
       val agg = stream
@@ -897,13 +900,11 @@ object SparkEntryExt2 {
         .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
       val name = s"stream_out_${System.identityHashCode(agg)}"
-      graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(300000), "q_stream_window: stream did not drain")
-      }
-      s.table(name)
+      val q = agg.writeStream.outputMode("complete")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      require(q.awaitTermination(300000), "q_stream_window: stream did not drain")
+      ss.table(name)
         .select(col("w.start").cast("string").as("window_start"), col("event_type"),
           col("n"), round(col("sv"), 4).as("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
@@ -1032,7 +1033,8 @@ object SparkEntryExt2 {
           col("ts_ms") <= 10040L * 60000L), d, "02.parquet")
         dumpReplayFile(full.filter(col("ts_ms") > 10040L * 60000L), d, "03.parquet")
       }
-      val bed = s.readStream.schema(full.schema)
+      val ss = SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4")
+      val bed = ss.readStream.schema(full.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(streamDir)
         .withColumn("ts", timestamp_millis(col("ts_ms")))
@@ -1042,14 +1044,12 @@ object SparkEntryExt2 {
       val dups = graft.streaming.StreamDedup.pairs(banded,
         horizonMillis = 7200000L, threshold = 0.7)
       val name = s"dedup_stream_out_${System.identityHashCode(dups)}"
-      graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-        val q = dups.toDF().writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        // loud, not truncating: a partial read would silently under-report
-        require(q.awaitTermination(300000), "q_dedup_stream: stream did not drain")
-      }
-      s.table(name).distinct()
+      val q = dups.toDF().writeStream.outputMode("append")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      // loud, not truncating: a partial read would silently under-report
+      require(q.awaitTermination(300000), "q_dedup_stream: stream did not drain")
+      ss.table(name).distinct()
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -1080,7 +1080,8 @@ object SparkEntryExt2 {
         |FROM r WHERE rnk <= 3 ORDER BY window_start_ms, rnk""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.streaming.Trigger
       val raw = s.read.parquet(s"$dir/documents.parquet")
-      val stream = s.readStream.schema(raw.schema)
+      val ss = SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
@@ -1093,13 +1094,11 @@ object SparkEntryExt2 {
       val counts = graft.streaming.TrendingTerms.termCounts(
         bed, "ts", "text", "120 minutes")
       val name = s"trending_out_${System.identityHashCode(counts)}"
-      graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-        val q = counts.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(300000), "q_stream_trending: stream did not drain")
-      }
-      graft.streaming.TrendingTerms.topK(s.table(name), k = 3)
+      val q = counts.writeStream.outputMode("append")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      require(q.awaitTermination(300000), "q_stream_trending: stream did not drain")
+      graft.streaming.TrendingTerms.topK(ss.table(name), k = 3)
         .select(col("window_start_ms"), col("term"), col("cnt"), col("rnk"))
         .orderBy(col("window_start_ms"), col("rnk"))
     },
@@ -1167,7 +1166,8 @@ object SparkEntryExt2 {
           ms <= 1707000000000L), d, "01.parquet")
         dumpReplayFile(full.filter(ms > 1707000000000L), d, "02.parquet")
       }
-      val stream = s.readStream.schema(full.schema)
+      val ss = SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(full.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(streamDir)
         .withColumn("ts_ms", expr("unix_micros(ts) div 1000"))
@@ -1175,13 +1175,11 @@ object SparkEntryExt2 {
         .as[graft.streaming.Sessionize.Event]
       val closed = graft.streaming.Sessionize.stateful(stream, gapMillis = 1800000L)
       val name = s"sessionize_out_${System.identityHashCode(closed)}"
-      graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-        val q = closed.toDF().writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(300000), "q_sessionize_stream: stream did not drain")
-      }
-      s.table(name)
+      val q = closed.toDF().writeStream.outputMode("append")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      require(q.awaitTermination(300000), "q_sessionize_stream: stream did not drain")
+      ss.table(name)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_closed"), sum(col("n_events")).as("events_closed"),
           max(col("n_events")).as("max_session_events"))

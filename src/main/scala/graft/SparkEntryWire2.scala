@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope
 
 import graft.engine.{Graft, GraphQL}
 import graft.streaming.Ingest
@@ -706,15 +707,12 @@ object SparkEntryWire2 {
       // dedup arm: same burst through the watermark-bounded dedup. State
       // partitions sized to the state (100 keys), not the session's batch
       // shuffle width — every micro-batch pays one state-store task per
-      // partition (see StreamTuning)
-      val q2 = graft.streaming.StreamTuning.withStatePartitions(s, 4) {
-        val started = Ingest.dedupIngest(s, inDir, s"$base/out2", schema,
-          s"$base/ckpt2", keyCols = Seq("key"), tsCol = "ts",
-          watermark = "10 minutes", maxFilesPerTrigger = 2)
-        // drain INSIDE the block, per the helper's contract (start AND drain)
-        started.awaitTermination()
-        started
-      }
+      // partition, and the count is fixed at first start
+      val q2 = Ingest.dedupIngest(
+        SessionScope.cloned(s, "spark.sql.shuffle.partitions" -> "4"),
+        inDir, s"$base/out2", schema, s"$base/ckpt2", keyCols = Seq("key"),
+        tsCol = "ts", watermark = "10 minutes", maxFilesPerTrigger = 2)
+      q2.awaitTermination()
       val p2 = q2.recentProgress
       val maxState = p2.flatMap(_.stateOperators.map(_.numRowsTotal))
         .foldLeft(0L)(math.max)

@@ -59,11 +59,9 @@ object Dedup {
   def shingleHashes(tokens: Column, n: Int): Column = TextHashFunctions.shingleHashes(tokens, n)
 
   /** Distinct shingle hashes of a text's `Tokenize.word` tokens — the
-   * shingle set every shingle-based dedup op compares. The tokens are
-   * Tokenize.word's `[\p{L}\p{N}]+` runs of lower(text) without its
-   * empty-token filter, a lambda that a `+` run never needs. */
+   * shingle set every shingle-based dedup op compares. */
   def wordShingles(text: Column, n: Int): Column =
-    array_distinct(shingleHashes(regexp_extract_all(lower(text), lit("[\\p{L}\\p{N}]+"), lit(0)), n))
+    array_distinct(shingleHashes(Tokenize.word(text), n))
 
   /** LSH band keys: split the signature into `bands` rows of `rowsPerBand`,
    * hash each band as xxhash64(concat_ws(",", lanes), band). Two docs

@@ -141,7 +141,7 @@ object Backup {
     // same string-partition contract as CollectionStore.read — a restored
     // multi-tenant class must not re-type numeric-looking tenant directories
     Collection(schema,
-      CollectionStore.readKeepingStringPartitions(spark, s"$path/data"))
+      CollectionStore.readVersion(spark, s"$path/data"))
   }
 
   /** Export several collections under `root/<name>` (the reference's backup

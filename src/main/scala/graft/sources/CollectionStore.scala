@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope.{cloned, rebind}
 
 import graft.engine.{Collection, FilterCompiler}
 import graft.model.{CollectionSchema, Where}
@@ -61,32 +62,33 @@ final class CollectionStore(val spark: SparkSession, val root: String,
    * would race each other straight back into the lost-update hole.
    */
   private val writeLock = CollectionStore.lockFor(root)
-  private def mutate[T](body: => T): T = writeLock.synchronized(withMutationAqe(body))
 
   /**
-   * Store mutations run with AQE disabled (restored after). The mutation
-   * plan shape is fixed at ANY scale: a broadcast (anti/left) join of the
-   * batch against the current version — the batch side is small by
-   * protocol — feeding a write whose partitioning is already EXPLICIT
-   * (adaptive width / coalesce(1) below), so AQE has nothing left to
-   * re-optimize; what it does add is one scheduler round-trip per query
-   * stage, measured at ~40% of a mutation-heavy journey's wall clock
-   * (PROBE_AQE A/B on q_fixture_actions_crud: 29.4 s on, 17.8 s off, 216 vs
-   * 170 jobs). r16 rejected AQE-off when small writes still shuffled at the
-   * session width and needed AQE's coalescing — the adaptive write width
-   * made that objection obsolete. Scoped HERE, not globally: scan/join/agg
-   * queries keep AQE's skew and coalescing at scale. Set
-   * `spark.graft.mutationAqe=true` to keep AQE inside mutations too; a value
-   * that is not a boolean falls back to the default instead of failing the
-   * write.
-   * The conf set/restore is session-visible for the mutation's duration; a
-   * concurrently-planned reader would merely plan without AQE once —
-   * a perf nuance, never a correctness one (AQE is purely physical).
+   * Every mutation runs under the write lock on the STORE SESSION
+   * ([[CollectionStore.storeSession]]), a clone of the caller's session with
+   * AQE off, and rebinds its inputs and the current version into it at
+   * entry. So the whole mutation (cap count, batch persist, join, write)
+   * plans without AQE, while the caller's session, and every reader that
+   * plans in it meanwhile, keeps AQE.
+   *
+   * Why AQE is off here: the mutation plan shape is fixed at ANY scale. It is
+   * a broadcast (anti/left) join of the batch against the current version
+   * (the batch side is small by protocol) feeding a write whose partitioning
+   * is already EXPLICIT (adaptive width / coalesce(1) below), so AQE has
+   * nothing left to re-optimize. What it does add is one scheduler
+   * round-trip per query stage, measured at ~40% of a mutation-heavy
+   * journey's wall clock (PROBE_AQE A/B on q_fixture_actions_crud: 29.4 s
+   * on, 17.8 s off, 216 vs 170 jobs); an upsert runs 3 jobs without AQE and
+   * 6 with it. r16 rejected AQE-off when small writes still shuffled at the
+   * session width and needed AQE's coalescing; the adaptive write width made
+   * that objection obsolete. Scan/join/agg queries keep AQE's skew handling
+   * and coalescing at scale.
    */
-  private def withMutationAqe[T](body: => T): T =
-    if (spark.conf.getOption("spark.graft.mutationAqe")
-        .exists(v => scala.util.Try(v.trim.toBoolean).getOrElse(false))) body
-    else CollectionStore.withAqeOff(spark)(body)
+  private def mutate[T](body: SparkSession => T): T =
+    writeLock.synchronized(body(CollectionStore.storeSession(spark)))
+
+  /** The current version, planned by `ss` (a mutation's store session). */
+  private def currentIn(ss: SparkSession): DataFrame = rebind(read(), ss)
 
   def version: Int =
     if (Files.exists(latestPath)) new String(Files.readAllBytes(latestPath)).trim.toInt else -1
@@ -112,7 +114,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     cachedRead match {
       case Some((cv, ce, df)) if cv == v && ce == e => df
       case _ =>
-        val df = CollectionStore.readKeepingStringPartitions(spark, s"$root/v$v")
+        val df = CollectionStore.readVersion(spark, s"$root/v$v")
         cachedRead = Some((v, e, df))
         df
     }
@@ -124,7 +126,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
   def readAt(v: Int): DataFrame = {
     require(v >= 0 && java.nio.file.Files.exists(Paths.get(root, s"v$v")),
       s"version $v of collection store $root does not exist")
-    CollectionStore.readKeepingStringPartitions(spark, s"$root/v$v")
+    CollectionStore.readVersion(spark, s"$root/v$v")
   }
 
   /** Per-store lineage nonce, drawn once from the session-global counter and
@@ -194,15 +196,16 @@ final class CollectionStore(val spark: SparkSession, val root: String,
   }
 
   /** Initialize / overwrite the whole table. */
-  def init(df: DataFrame): Unit = mutate {
+  def init(df: DataFrame): Unit = mutate { ss =>
+    val rows = rebind(df, ss)
     // init OVERWRITES: the cap compares the incoming count alone — counting
     // the rows this write replaces would reject any re-init of a
     // more-than-half-full capped store
     maxObjects.foreach { _ =>
-      graft.engine.UsageLimits.check(maxObjects, 0L, df.count(),
+      graft.engine.UsageLimits.check(maxObjects, 0L, rows.count(),
         graft.engine.UsageLimits.LimitObjects, usageTemplate)
     }
-    writeVersion(vectorize(df))
+    writeVersion(vectorize(rows))
   }
 
   /** Upsert whole objects by id (reference: crud.go:35 PutObject / batch.go:35
@@ -229,7 +232,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     catch { case _: Throwable => false }
   }
 
-  def upsert(updates: DataFrame): Unit = mutate {
+  def upsert(updates: DataFrame): Unit = mutate { ss =>
     val id = schema.idColumn
     // the id is the primary key: a batch carrying the same id twice collapses
     // to one row (DataFrames are unordered, so which duplicate wins is
@@ -240,7 +243,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     // one set of rows and written as another (and even deterministic callers
     // would pay three scans). A LocalRelation batch needs no persist (it is
     // deterministic literal rows; re-evaluating it costs nothing).
-    val collapsed = updates.dropDuplicates(id)
+    val collapsed = rebind(updates, ss).dropDuplicates(id)
     val local = isLocalFrame(updates)
     val unique =
       if (local) collapsed
@@ -248,9 +251,8 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     try {
       // reference CheckObjects passes len(batch) — conservatively counting
       // replacements too (Shard.PutObjectBatch has no replace-aware count)
-      checkObjects(unique.count())
-      val current = read()
-      val remaining = current.join(unique.select(col(id)), Seq(id), "left_anti")
+      checkObjects(ss, unique.count())
+      val remaining = currentIn(ss).join(unique.select(col(id)), Seq(id), "left_anti")
       writeVersion(remaining.unionByName(vectorize(unique), allowMissingColumns = true))
     } finally if (!local) { unique.unpersist(); () }
   }
@@ -258,16 +260,15 @@ final class CollectionStore(val spark: SparkSession, val root: String,
   /** Partial update (PATCH) — only the columns present in `patch` (besides the
    * id) change; missing columns keep their value (reference: crud.go:292,
    * usecases/objects/merge.go). */
-  def merge(patch: DataFrame): Unit = mutate {
+  def merge(patch: DataFrame): Unit = mutate { ss =>
     val id = schema.idColumn
-    val current = read()
     val patchCols = patch.columns.filterNot(_ == id)
     // same primary-key guard as upsert: a patch carrying an id twice would
     // multiply that row through the left join and the store would hold
     // duplicate primary keys forever
-    val unique = patch.dropDuplicates(id)
+    val unique = rebind(patch, ss).dropDuplicates(id)
     val renamed = patchCols.foldLeft(unique) { (d, c) => d.withColumnRenamed(c, s"__p_$c") }
-    val joined = current.join(renamed, Seq(id), "left")
+    val joined = currentIn(ss).join(renamed, Seq(id), "left")
     // a PATCH that changes the vectorized text invalidates the stored vector
     // — weaviate's merge re-vectorizes (usecases/objects/merge.go); an
     // explicit vector still wins. The decision is PER-ROW, not per-patch: a
@@ -347,17 +348,18 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     }
 
   private def mutateReferences(refProp: String, edges: DataFrame)(
-      combine: (Column, Column) => Column): (Long, Long) = mutate {
+      combine: (Column, Column) => Column): (Long, Long) = mutate { ss =>
     val id = schema.idColumn
     require(schema.property(refProp).exists(_.dataType == graft.model.PropType.Ref),
       s"$refProp is not a cref property")
-    val current = read()
+    val current = currentIn(ss)
     require(current.schema(refProp).dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType],
       s"$refProp is a scalar FK — reference batches need a multi-edge (array) cref")
     val local = isLocalFrame(edges)
+    val batch = rebind(edges, ss)
     val cached =
-      if (local) edges
-      else edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (local) batch
+      else batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val marked = cached.join(
         current.select(col(id), lit(1).as("__exists")), Seq(id), "left")
@@ -379,8 +381,8 @@ final class CollectionStore(val spark: SparkSession, val root: String,
   def deleteWhere(where: Where,
                   resolve: String => Collection =
                     n => throw new IllegalArgumentException(s"no ref target $n registered"),
-                  dryRun: Boolean = false): Long = mutate {
-    val current = read()
+                  dryRun: Boolean = false): Long = mutate { ss =>
+    val current = currentIn(ss)
     val compiler = new FilterCompiler(resolve)
     val matching = compiler(current, schema, where)
     val n = matching.count()
@@ -393,8 +395,8 @@ final class CollectionStore(val spark: SparkSession, val root: String,
 
   /** TTL expiry: delete rows whose `tsColumn` is older than `ttlSeconds`
    * relative to `now` (reference: index_objects_ttl.go:63, usecases/object_ttl). */
-  def expireTtl(tsColumn: String, ttlSeconds: Long, nowEpochSeconds: Long): Long = mutate {
-    val current = read()
+  def expireTtl(tsColumn: String, ttlSeconds: Long, nowEpochSeconds: Long): Long = mutate { ss =>
+    val current = currentIn(ss)
     val cutoff = nowEpochSeconds - ttlSeconds
     val isExpired = unix_timestamp(col(tsColumn)) < cutoff
     val n = current.filter(isExpired).count()
@@ -413,7 +415,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
    * instance keeps serving the old schema against the previous version.
    */
   def addProperty(p: graft.model.Property,
-                  default: Option[org.apache.spark.sql.Column] = None): CollectionStore = mutate {
+                  default: Option[org.apache.spark.sql.Column] = None): CollectionStore = mutate { ss =>
     import graft.model.PropType
     require(schema.property(p.name).isEmpty, s"property ${p.name} already exists")
     def sparkType(t: PropType): org.apache.spark.sql.types.DataType = {
@@ -439,7 +441,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
     // carry the lifecycle flag: the fresh instance starts READY, which would
     // let a schema rewrite slip past this store's READONLY gate
     extended.readOnly = readOnly
-    extended.writeVersion(read().withColumn(p.name, d))
+    extended.writeVersion(currentIn(ss).withColumn(p.name, d))
     extended
   }
 
@@ -455,7 +457,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
    * so the engine must gate writes on tenant status (TenantSpec pins the
    * read-side behavior).
    */
-  def offloadTenant(tenant: String, offloadRoot: String): Unit = mutate {
+  def offloadTenant(tenant: String, offloadRoot: String): Unit = mutate { _ =>
     val src = tenantDir(tenant)
     require(Files.exists(src), s"tenant $tenant has no partition directory in v$version")
     val dst = Paths.get(offloadRoot, s"v$version-${src.getFileName}")
@@ -468,7 +470,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
 
   /** Move an offloaded tenant's partition directory back into the current
    * version (reference: ONLOADING — cloud → local hot storage). */
-  def onloadTenant(tenant: String, offloadRoot: String): Unit = mutate {
+  def onloadTenant(tenant: String, offloadRoot: String): Unit = mutate { _ =>
     val dst = tenantDir(tenant)
     val src = Paths.get(offloadRoot, s"v$version-${dst.getFileName}")
     require(Files.exists(src), s"tenant $tenant is not offloaded at $offloadRoot for v$version")
@@ -493,7 +495,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
    * transaction-log/segment cleanup the reference's LSM compaction cycle does
    * (adapters/repos/db/lsmkv compaction); without it a long-lived store leaks
    * one full table copy per mutation. */
-  def vacuum(keep: Int = 1): Int = mutate {
+  def vacuum(keep: Int = 1): Int = mutate { _ =>
     require(keep >= 1, "vacuum must keep at least the current version")
     val cutoff = version - keep
     val stale = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
@@ -532,7 +534,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
   // the analogue is one count per store VERSION — a write loop against a
   // capped store recounts only after a version actually lands
   private var cachedLiveCount: Option[(Int, Long)] = None
-  private def checkObjects(n: => Long): Unit =
+  private def checkObjects(ss: SparkSession, n: => Long): Unit =
     maxObjects.foreach { _ =>
       val v = version
       val current =
@@ -540,7 +542,7 @@ final class CollectionStore(val spark: SparkSession, val root: String,
         else cachedLiveCount match {
           case Some((cv, c)) if cv == v => c
           case _ =>
-            val c = read().count()
+            val c = currentIn(ss).count()
             cachedLiveCount = Some((v, c))
             c
         }
@@ -639,26 +641,23 @@ object CollectionStore {
   private def canonical(root: String): String =
     java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
 
-  /** Session-keyed depth-counted AQE flip: mutations on DIFFERENT roots can
-   * run concurrently (only same-root writes serialize through lockFor), and
-   * a naive per-call set/restore pair interleaved across threads could
-   * capture the other thread's "false" as its restore value and leave the
-   * session without AQE permanently. First-in records the true previous
-   * value; last-out restores it. */
-  private final class AqeGuard { var depth = 0; var prev: String = "true" }
-  private val aqeGuards =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, AqeGuard]()
-  private[sources] def withAqeOff[T](spark: SparkSession)(body: => T): T = {
-    val g = aqeGuards.computeIfAbsent(spark, _ => new AqeGuard)
-    val key = "spark.sql.adaptive.enabled"
-    g.synchronized {
-      if (g.depth == 0) { g.prev = spark.conf.get(key); spark.conf.set(key, "false") }
-      g.depth += 1
-    }
-    try body finally g.synchronized {
-      g.depth -= 1
-      if (g.depth == 0) spark.conf.set(key, g.prev)
-    }
+  /** One store session per caller session: a clone with AQE off (see the
+   * instance's `mutate`) and partition-type inference off (see
+   * [[readVersion]]). The conf change lives in the clone only, so mutations
+   * and reads on any number of threads and roots never flip the caller's
+   * conf. Cloning costs a fresh analyzer and planner on first use, so the
+   * clone is kept, and re-cloned only when the caller's conf differs from
+   * the snapshot it was cloned from; a runtime conf change still reaches
+   * mutations. */
+  private val storeSessions = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, (Map[String, String], SparkSession)]()
+  private[sources] def storeSession(spark: SparkSession): SparkSession = {
+    val confs = spark.conf.getAll
+    storeSessions.compute(spark, (_, held) =>
+      if (held != null && held._1 == confs) held
+      else confs -> cloned(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))._2
   }
 
   /** Root-keyed read-memo epoch, bumped by in-place version-dir mutations
@@ -676,15 +675,10 @@ object CollectionStore {
    * string tenant from the directory name ("007" → int 7), silently changing
    * both the column type vs the declared schema and the tenant's IDENTITY on
    * the next rewrite. Tenants are strings (the reference's tenant names are
-   * string shard keys), so partition columns stay strings. The conf flip is
-   * scoped to the eager partition-discovery in `parquet(path)` and restored
-   * after.
+   * string shard keys), so partition columns stay strings. Partition
+   * discovery (eager, in `parquet(path)`) runs in the store session; the
+   * frame is rebound to `spark`, so queries over it keep the caller's AQE.
    */
-  private[sources] def readKeepingStringPartitions(
-      spark: SparkSession, path: String): DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try spark.read.parquet(path) finally spark.conf.set(key, prev)
-  }
+  private[sources] def readVersion(spark: SparkSession, path: String): DataFrame =
+    rebind(storeSession(spark).read.parquet(path), spark)
 }

@@ -70,9 +70,10 @@ object Tokenize {
     try body finally cjkUserDictTL.set(prev)
   }
 
-  /** `word`: runs of letters/digits, lowercased. */
+  /** `word`: runs of letters/digits, lowercased. A `+` run is never empty,
+   * so unlike the split modes it needs no empty-token filter. */
   def word(c: Column): Column =
-    filterEmpty(regexp_extract_all(lower(c), lit("[\\p{L}\\p{N}]+"), lit(0)))
+    regexp_extract_all(lower(c), lit("[\\p{L}\\p{N}]+"), lit(0))
 
   /** `lowercase`: split on whitespace, lowercased. */
   def lowercase(c: Column): Column =

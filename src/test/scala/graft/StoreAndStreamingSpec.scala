@@ -29,17 +29,6 @@ class StoreAndStreamingSpec extends SparkSpecBase {
     assert(st.version == 1)
   }
 
-  test("a malformed spark.graft.mutationAqe falls back to the default; writes still land") {
-    val st = freshStore()
-    spark.conf.set("spark.graft.mutationAqe", "yes")
-    try {
-      st.init(Seq((1L, "a", 10L)).toDF("id", "name", "qty"))
-      st.upsert(Seq((1L, "a2", 11L), (2L, "b", 20L)).toDF("id", "name", "qty"))
-      val out = st.read().orderBy($"id").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      assert(out.toSeq == Seq((1L, "a2", 11L), (2L, "b", 20L)))
-    } finally spark.conf.unset("spark.graft.mutationAqe")
-  }
-
   test("merge patches only provided columns") {
     val st = freshStore()
     st.init(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "name", "qty"))

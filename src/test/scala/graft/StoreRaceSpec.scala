@@ -122,4 +122,64 @@ class StoreRaceSpec extends SparkSpecBase {
       .filter(col("payload") === 7).count() == 10)                      // merge landed
     assert(fin.count() == 50) // 40 init − 10 deleted + 20 upserted (merge patches in place)
   }
+
+  test("mutations never change the conf a concurrent reader plans or reads with") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types.{DataType, StringType}
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.sources.partitionColumnTypeInference.enabled",
+      "spark.sql.shuffle.partitions")
+    val before = keys.map(k => k -> spark.conf.get(k)).toMap
+    val written = newStore("ConfW")
+    written.init(spark.range(0, 200).select(col("id"), lit(0).as("payload")))
+    val other = newStore("ConfR")
+    other.init(spark.range(0, 50).select(col("id"), (col("id") % 5).cast("int").as("payload")))
+    val tenants = new CollectionStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-race-tenant").toString,
+      CollectionSchema("ConfT", "id", Seq(Property("payload", PropType.Int)),
+        tenantColumn = Some("tenant")))
+    tenants.init(Seq((1L, 1, "007"), (2L, 2, "acme")).toDF("id", "payload", "tenant"))
+
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val upserts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writer = new Thread(() => {
+      try {
+        while (!stop.get()) {
+          val lo = 1000L * (upserts.get() + 1)
+          written.upsert(spark.range(lo, lo + 200).select(col("id"), lit(1).as("payload")))
+          upserts.incrementAndGet()
+        }
+      } catch { case e: Throwable => errs.add(e) }
+    })
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    writer.start()
+    try {
+      var rounds = 0
+      while (errs.isEmpty && (rounds < 10 || upserts.get() < 3)) {
+        val plan = other.read().groupBy("payload").count().queryExecution.executedPlan
+        assert(plan.isInstanceOf[AdaptiveSparkPlanExec],
+          s"round $rounds planned without AQE:\n$plan")
+        keys.foreach(k => assert(spark.conf.get(k) == before(k), s"round $rounds: $k changed"))
+        val v = tenants.version
+        val reads = (0 until 4).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[(DataType, Set[Any])] {
+            def call() = {
+              val df = tenants.readAt(v)
+              (df.schema("tenant").dataType, df.select("tenant").collect().map(_.get(0)).toSet)
+            }
+          })
+        }
+        reads.map(_.get()).foreach { case (dt, values) =>
+          assert(dt == StringType && values.contains("007"),
+            s"round $rounds: tenant read as $dt with $values")
+        }
+        rounds += 1
+      }
+    } finally {
+      stop.set(true); writer.join(300000); pool.shutdown()
+    }
+    assert(errs.isEmpty, s"writer failed: ${Option(errs.peek()).map(_.toString)}")
+    keys.foreach(k => assert(spark.conf.get(k) == before(k), s"$k left changed"))
+  }
 }

@@ -16,6 +16,23 @@ class TokenizeSpec extends SparkSpecBase {
       Seq("hello", "world", "42", "foo", "bar"))
   }
 
+  test("word: no lambda in the plan, same tokens as the empty-filtered form") {
+    val inputs = Seq("Hello, World-42 foo_bar", " Hello You*-beautiful_world?!",
+      "Hello, World-42", "a  B c", " x ", "", "?! --", null)
+    // an RDD-backed frame: a local one would fold the projection away
+    val df = spark.sparkContext.parallelize(inputs, 2).toDF("t")
+    val filtered = filter(regexp_extract_all(lower($"t"), lit("[\\p{L}\\p{N}]+"), lit(0)),
+      t => length(t) > 0)
+    def plan(c: org.apache.spark.sql.Column) =
+      df.select(c.as("x")).queryExecution.optimizedPlan.toString
+    // the check can see a lambda: the filtered form has one
+    assert(plan(filtered).contains("lambdafunction"))
+    assert(!plan(Tokenize.word($"t")).contains("lambdafunction"))
+    val got = df.select($"t", Tokenize.word($"t").as("x")).collect()
+    val want = df.select($"t", filtered.as("x")).collect()
+    assert(got.toSeq == want.toSeq)
+  }
+
   test("lowercase: whitespace split, lowered") {
     assert(toks(Tokenization.Lowercase, "Hello  World-42") == Seq("hello", "world-42"))
   }
