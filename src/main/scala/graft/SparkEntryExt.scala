@@ -1238,8 +1238,8 @@ object SparkEntryExt {
       // A–B–C chain with NO A–C edge (the q_dedup_keep construction, fresh
       // tokens): every natural component is a CLIQUE (verified: one-hop
       // min-neighbor labeling equals the closure on the unplanted bed), so
-      // only this chain proves clusterPairs iterates to a fixpoint — a
-      // single propagation round labels C with B (2000002) instead of A
+      // only this chain proves clusterPairs reaches the closure — a single
+      // propagation round labels C with B (2000002) instead of A
       val qcx = (1 to 83).map(i => s"qcx$i")
       val qcy = (1 to 17).map(i => s"qcy$i")
       val chain = Seq(

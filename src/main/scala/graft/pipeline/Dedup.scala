@@ -10,7 +10,7 @@ import graft.text.Tokenize
 /**
  * Deduplication operators for large-scale training-data pipelines. These are
  * engine extensions beyond the weaviate surface (the reference has no dedup;
- * its nearest notion is vector similarity, §2.3), designed around the two
+ * its nearest notion is vector similarity, §2.3), designed around the
  * patterns that survive 100 TB:
  *
  *  1. *bucket → verify*: a cheap deterministic signature shuffles candidate
@@ -18,10 +18,18 @@ import graft.text.Tokenize
  *     inside buckets — total work is Σ bucket², never N².
  *  2. *signature-as-column*: signatures are column expressions, so their
  *     computation is a single scan with no UDF boxing and no driver
- *     involvement. The MinHash path's shingle hashes, signature and band
- *     keys are native kernels (`ShingleHashes`, `MinHashSignature`,
- *     `LshBandKeys` in TextHashFunctions.scala), one codegen'd pass each;
- *     SimHash bits build from an explode + aggregate.
+ *     involvement. The MinHash path's shingles, signature and band keys are
+ *     native kernels (`WordShingles`, `MinHashSignature`, `LshBandKeys` in
+ *     TextHashFunctions.scala): the shingle kernel scans each document's
+ *     bytes once, and one cached table holds each document's shingles and
+ *     band keys for every consumer. SimHash bits build from an explode +
+ *     aggregate.
+ *  3. *bounded driver work*: a verified pair relation is small next to the
+ *     corpus (about 3000 pairs on a 12000-doc corpus with 1000 planted
+ *     clusters), so [[clusterPairs]] labels components with a union-find on
+ *     the driver up to [[DriverClusterMaxPairs]] pairs; only above that does
+ *     the distributed label-propagation loop run, whose per-round jobs
+ *     would cost more than the work at curation-pass size.
  *
  * All hashing is seeded xxhash64 — deterministic across runs/partitions.
  */
@@ -59,9 +67,24 @@ object Dedup {
   def shingleHashes(tokens: Column, n: Int): Column = TextHashFunctions.shingleHashes(tokens, n)
 
   /** Distinct shingle hashes of a text's `Tokenize.word` tokens — the
-   * shingle set every shingle-based dedup op compares. */
-  def wordShingles(text: Column, n: Int): Column =
-    array_distinct(shingleHashes(Tokenize.word(text), n))
+   * shingle set every shingle-based dedup op compares. One native kernel
+   * ([[org.apache.spark.sql.graft.WordShingles]]) over lower(text): equal to
+   * array_distinct(shingleHashes(Tokenize.word(text), n)), with each token
+   * hashed over its bytes in place instead of extracted as a string. */
+  def wordShingles(text: Column, n: Int): Column = TextHashFunctions.wordShingles(text, n)
+
+  /** `cols` plus the non-empty `wordShingles` of `textCol` as `__shh`
+   * (`sorted`: in ascending order). The shingles are the output of a
+   * one-element `explode` (a Generate), so the emptiness filter stays above
+   * them and the kernel runs once per row: over a projection the filter is
+   * pushed below it and evaluates the kernel a second time (the same trick
+   * as `TextAnalysis.gopherFilter`). Token-less documents drop. */
+  private[graft] def withShingles(df: DataFrame, cols: Seq[Column], textCol: Column,
+                                  shingleSize: Int, sorted: Boolean = false): DataFrame = {
+    val shh = wordShingles(textCol, shingleSize)
+    df.select(cols :+ explode(array(if (sorted) array_sort(shh) else shh)).as("__shh"): _*)
+      .filter(size(col("__shh")) > 0)
+  }
 
   /** LSH band keys: split the signature into `bands` rows of `rowsPerBand`,
    * hash each band as xxhash64(concat_ws(",", lanes), band). Two docs
@@ -87,8 +110,10 @@ object Dedup {
    * verification is per-bucket. With b bands of r rows the detection
    * probability of a pair with Jaccard s is 1-(1-s^r)^b (the standard LSH
    * S-curve); defaults (32 bands × 4 rows) catch s ≥ 0.8 with p > 0.99.
-   */
-  /**
+   * Each document's shingles, signature and band keys are computed once,
+   * into one cached table ([[bandTable]]) that both sides of the band join
+   * and the verification read.
+   *
    * `hotBandCap`: buckets larger than this emit STAR candidate pairs (every
    * member vs the bucket's min id) instead of all pairs — Σ bucket² becomes
    * Σ bucket for the hot keys, which is what survives a boilerplate-heavy
@@ -101,32 +126,12 @@ object Dedup {
    * 1−(1−s^r)^(b−1) per pair. Default off (None) — the oracle replays
    * exact all-pairs semantics; deployments at scale set a cap.
    */
-  /** (__id, __shh) → one (__id, __band) row per LSH band. The signature and
-   * band keys are native kernels ([[minhashSignature]], [[bandKeys]]) — ONE
-   * projection, no shuffle (the previous explode → 128-column
-   * hash-aggregate paid a full shuffle on the doc key; before that, HOF
-   * lambdas evaluated interpreted per element). */
-  private def sigBands(toks: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    toks.select(col("__id"), explode(bandKeys(
-      minhashSignature(col("__shh"), numHashes), bands, numHashes / bands)).as("__band"))
-
   def minhashDuplicates(
       df: DataFrame, idCol: Column, textCol: Column,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, hotBandCap: Option[Int] = None): DataFrame = {
-    val toks = df.select(idCol.as("__id"), wordShingles(textCol, shingleSize).as("__shh"))
-      .filter(size(col("__shh")) > 0)
-      // the shingle table feeds signature build AND pair verification — one
-      // materialization, not one per consumer (at warehouse scale this is a
-      // persisted signature side-table); released before returning, see
-      // [[releasing]]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE the multi-branch consumers: the band self-join and
-    // the two verification joins all scan this cache inside ONE job, and
-    // concurrently-scheduled branches would each recompute the shingle scan
-    // before any cache entry lands (see clusterPairs — same race)
-    toks.count()
-    val sigs = sigBands(toks, numHashes, bands)
+    val table = bandTable(df, Seq(idCol.as("__id")), textCol, shingleSize, numHashes, bands)
+    val sigs = table.select(col("__id"), explode(col("__bands")).as("__band"))
     // candidates carry ONLY ids through the band join + dedup; the (large)
     // shingle arrays are joined back once per surviving pair
     val candidates = hotBandCap match {
@@ -150,7 +155,27 @@ object Dedup {
           .select(col("__bmin").as("id_a"), col("__id").as("id_b"))
         smallPairs.unionByName(starPairs).dropDuplicates("id_a", "id_b")
     }
-    releasing(toks)(verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold))
+    releasing(table)(verifyJaccard(candidates, table, threshold))
+  }
+
+  /** `cols` plus each document's shingles `__shh` and its LSH band keys
+   * `__bands` (the native [[minhashSignature]] and [[bandKeys]] kernels,
+   * one projection, no shuffle), cached and materialized. The table feeds
+   * the band join's two sides AND pair verification — one materialization,
+   * not one per consumer (at warehouse scale this is a persisted signature
+   * side-table); callers release it with [[releasing]]. It is materialized
+   * BEFORE the multi-branch consumers: they all scan this cache inside ONE
+   * job, and concurrently-scheduled branches would each recompute the
+   * shingle scan before any cache entry lands (see clusterPairs — same
+   * race). */
+  private def bandTable(df: DataFrame, cols: Seq[Column], textCol: Column,
+                        shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
+    val table = withShingles(df, cols, textCol, shingleSize)
+      .withColumn("__bands",
+        bandKeys(minhashSignature(col("__shh"), numHashes), bands, numHashes / bands))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    table.count()
+    table
   }
 
   /** The verified pairs, materialized (`localCheckpoint`), with the shingle
@@ -170,25 +195,21 @@ object Dedup {
    * inside one frame (old rows are the standing corpus).
    *
    * Scale shape: signatures build for the whole frame exactly as the batch
-   * op (explode → hash-agg; at warehouse scale the old side's signature
-   * table is the persisted side-table the batch build already wrote, so
-   * only the increment pays the build), but the candidate join's LEFT side
-   * is ONLY the new rows — per band bucket the work is |new∩bucket| ×
-   * |bucket|, not |bucket|², which is what makes a small daily increment
-   * against a 100 TB corpus feasible. Pair orientation follows the batch
-   * contract (id_a < id_b) regardless of which side is new.
+   * op (one cached [[bandTable]]; at warehouse scale the old side's
+   * signature table is the persisted side-table the batch build already
+   * wrote, so only the increment pays the build), but the candidate join's
+   * LEFT side is ONLY the new rows — per band bucket the work is
+   * |new∩bucket| × |bucket|, not |bucket|², which is what makes a small
+   * daily increment against a 100 TB corpus feasible. Pair orientation
+   * follows the batch contract (id_a < id_b) regardless of which side is new.
    */
   def minhashIncrementalDuplicates(
       df: DataFrame, idCol: Column, textCol: Column, newCol: Column,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, hotBandCap: Option[Int] = None): DataFrame = {
-    val toks = df.select(idCol.as("__id"), newCol.cast("boolean").as("__new"),
-        wordShingles(textCol, shingleSize).as("__shh"))
-      .filter(size(col("__shh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toks.count() // materialize before the multi-branch consumers (see above)
-    val sigs = sigBands(toks.select(col("__id"), col("__shh")), numHashes, bands)
-      .join(toks.select(col("__id"), col("__new")), Seq("__id"))
+    val table = bandTable(df, Seq(idCol.as("__id"), newCol.cast("boolean").as("__new")),
+      textCol, shingleSize, numHashes, bands)
+    val sigs = table.select(col("__id"), col("__new"), explode(col("__bands")).as("__band"))
     // new rows drive the probe; a new↔new pair arrives in both orientations
     // and normalizes, an old partner only ever appears on the right
     def probe(left: DataFrame, right: DataFrame): DataFrame =
@@ -218,7 +239,7 @@ object Dedup {
           .select(col("__bmin").as("id_a"), col("__id").as("id_b"))
         smallPairs.unionByName(starPairs)
     }).dropDuplicates("id_a", "id_b")
-    releasing(toks)(verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold))
+    releasing(table)(verifyJaccard(candidates, table, threshold))
   }
 
   /** Join shingle-hash sets onto (id_a, id_b) candidates and keep pairs ≥ t.
@@ -314,11 +335,9 @@ object Dedup {
       df: DataFrame, idCol: Column, textCol: Column, bucketCols: Seq[Column],
       shingleSize: Int = 3, threshold: Double = 0.8): DataFrame = {
     val bNames = bucketCols.indices.map(i => s"__b$i")
-    val toks = df.select(
-      (bucketCols.zip(bNames).map { case (c, n) => c.as(n) } :+
-        idCol.as("__id") :+
-        array_sort(wordShingles(textCol, shingleSize)).as("__shh")): _*)
-      .filter(size(col("__shh")) > 0)
+    val toks = withShingles(df,
+        bucketCols.zip(bNames).map { case (c, n) => c.as(n) } :+ idCol.as("__id"),
+        textCol, shingleSize, sorted = true)
       // consumed by prefix pass and verification — persist so shingle
       // construction runs once; eager count: the prefix self-join's two
       // branches scan this cache in one job and would otherwise race into
@@ -358,7 +377,7 @@ object Dedup {
     val candidates = prefixes.as("a").join(prefixes.as("b"), joinCond)
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    verifyJaccard(candidates, toks.select(col("__id"), col("__shh")), threshold)
+    verifyJaccard(candidates, toks, threshold)
   }
 
   // --- embedding cosine near-dup --------------------------------------------
@@ -478,26 +497,6 @@ object Dedup {
 
   // --- Duplicate clustering --------------------------------------------------
 
-  /**
-   * Turn a duplicate-PAIR relation (what every *Duplicates operator above
-   * emits) into connected components — the step a real dedup pipeline needs
-   * before it can act: `cluster_id` = smallest member id, so "keep one per
-   * cluster" is the single predicate `id == cluster_id`.
-   *
-   * Algorithm: distributed min-label propagation. Each round every node takes
-   * the minimum label over itself and its neighbours (one shuffle join + one
-   * partial-aggregated groupBy — both scale-safe shapes), until a fixpoint.
-   * Rounds = component diameter; duplicate clusters are near-cliques by
-   * construction (pairwise similarity above a threshold), so diameter is
-   * small — typically 2–3 rounds. Lineage is truncated per round
-   * (localCheckpoint), otherwise the iterated plan grows without bound. The
-   * convergence probe is a count on the changed-labels frame — a distributed
-   * aggregate, not a collect.
-   *
-   * Returns (id, cluster_id) for every node that appears in `pairs`
-   * (singletons never enter a pair relation and are their own cluster by
-   * definition — callers need not materialize them).
-   */
   /**
    * Cross-document duplicated-SUBSTRING coverage — the span-level exact-dedup
    * signal of Lee et al. 2022, "Deduplicating Training Data Makes Language
@@ -832,15 +831,101 @@ object Dedup {
           .otherwise(lit(0.0)).as("dup_token_frac"))
   }
 
-  def clusterPairs(pairs: DataFrame, aCol: Column, bCol: Column,
-                   maxIterations: Int = 20): DataFrame = {
-    // the pair relation is typically an expensive LSH pipeline — materialize
-    // it EAGERLY before the symmetrizing union: a lazy persist would let the
-    // union's two branches race in one stage, each recomputing the LSH plan
-    // before the other's cache entry lands (observed as a full duplicate
-    // evaluation in the bench profile)
+  /** Pair relations of at most this many pairs are clustered on the
+   * driver; larger ones by the distributed loop. At the bound the driver
+   * holds 100k collected rows of two longs and at most 200k labels, which a
+   * broadcast carries: far above the pairs a curation pass verifies (about
+   * 3000 on a 12000-doc corpus with 1000 planted clusters), far below
+   * driver memory. The bound is that driver-memory limit, not a measured
+   * crossover between the arms: no benchmark workload verifies enough pairs
+   * to reach the distributed arm, so where it starts to win is unknown. */
+  private[graft] val DriverClusterMaxPairs = 100000
+
+  /**
+   * Turn a duplicate-PAIR relation (what every *Duplicates operator above
+   * emits) into connected components — the step a real dedup pipeline needs
+   * before it can act: `cluster_id` = smallest member id, so "keep one per
+   * cluster" is the single predicate `id == cluster_id`.
+   *
+   * Two arms, by the size of the relation. The pairs are checkpointed once
+   * (`localCheckpoint`: the relation is typically an expensive LSH plan),
+   * and up to [[DriverClusterMaxPairs]] + 1 of them are collected.
+   *  - At most the bound: a union-find on the driver labels the
+   *    components, min id = root, and the labels come back as a local
+   *    frame. The checkpoint and the bounded collect are the only jobs,
+   *    whatever the diameter.
+   *  - Above the bound: distributed min-label propagation. Each round every
+   *    node takes the minimum label over itself and its neighbours (one
+   *    shuffle join + one partial-aggregated groupBy — both scale-safe
+   *    shapes), until no label changes. Labels only fall, so the loop ends
+   *    within the component diameter; duplicate clusters are near-cliques
+   *    by construction (pairwise similarity above a threshold), so that is
+   *    typically 2–3 rounds. Lineage is truncated per round
+   *    (localCheckpoint), otherwise the iterated plan grows without bound.
+   *    The convergence probe is an `isEmpty` on the changed-labels frame —
+   *    a distributed probe, not a collect.
+   *
+   * Returns (id, cluster_id) for every node that appears in `pairs`
+   * (singletons never enter a pair relation and are their own cluster by
+   * definition — callers need not materialize them). Pairs with a null side
+   * are ignored.
+   */
+  def clusterPairs(pairs: DataFrame, aCol: Column, bCol: Column): DataFrame =
+    clusterPairs(pairs, aCol, bCol, DriverClusterMaxPairs)
+
+  /** [[clusterPairs]] with the driver arm's bound given, so tests can run
+   * the distributed arm on small relations. */
+  private[graft] def clusterPairs(pairs: DataFrame, aCol: Column, bCol: Column,
+                                  driverMaxPairs: Int): DataFrame =
+    clusterLabels(pairs, aCol, bCol, driverMaxPairs)._1
+
+  /** The labels of [[clusterPairs]], and whether the driver arm made them
+   * (a local frame, small enough to broadcast). */
+  private def clusterLabels(pairs: DataFrame, aCol: Column, bCol: Column,
+                            driverMaxPairs: Int): (DataFrame, Boolean) = {
+    // materialize the relation EAGERLY: it is read by the bounded collect
+    // and, above the bound, by the symmetrizing union, whose two branches
+    // would otherwise race in one stage, each recomputing the LSH plan
     val p = pairs.select(aCol.cast("long").as("src"), bCol.cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint(true)
+    // p's checkpoint blocks are released by the ContextCleaner once the
+    // RDD is unreferenced; the labels carry no lineage onto them
+    val local = p.limit(driverMaxPairs + 1).collect()
+    if (local.length <= driverMaxPairs) {
+      val spark = p.sparkSession
+      import spark.implicits._
+      (unionFind(local.map(_.getLong(0)), local.map(_.getLong(1))).toSeq
+        .toDF("id", "cluster_id"), true)
+    } else (propagateLabels(p), false)
+  }
+
+  /** Connected components of the edges (src(k), dst(k)), as (id, smallest
+   * id of its component) for every id on an edge. */
+  private def unionFind(src: Array[Long], dst: Array[Long]): Array[(Long, Long)] = {
+    val ids = (src ++ dst).distinct.sorted
+    // root = the smallest index of the component, which is its smallest id
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    var k = 0
+    while (k < src.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, src(k)))
+      val b = find(java.util.Arrays.binarySearch(ids, dst(k)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      k += 1
+    }
+    Array.tabulate(ids.length)(i => (ids(i), ids(find(i))))
+  }
+
+  /** The distributed arm of [[clusterPairs]] over the checkpointed (src,
+   * dst) relation: min-label propagation to the fixpoint. */
+  private def propagateLabels(p: DataFrame): DataFrame = {
     val sym = p
       .unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -854,8 +939,7 @@ object Dedup {
       .select(col("id"), least(col("id"), col("__nbr_min")).as("cluster_id"))
       .localCheckpoint(true)
     var converged = false
-    var it = 0
-    while (!converged && it < maxIterations) {
+    while (!converged) {
       val nbrMin = sym
         .join(labels.select(col("id").as("dst"), col("cluster_id").as("__nl")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("__nl")).as("__nbr_min"))
@@ -866,44 +950,51 @@ object Dedup {
         .localCheckpoint(true)
       converged = next.filter(col("__changed")).isEmpty
       labels = next.drop("__changed")
-      it += 1
     }
     sym.unpersist()
-    // p's checkpoint blocks are released by the ContextCleaner once the
-    // RDD is unreferenced; labels carries no lineage onto them
     labels
   }
 
   /**
    * Canonical-representative selection — the step that turns duplicate PAIRS
-   * into a deduplicated corpus: cluster the pairs ([[clusterPairs]]
-   * min-label propagation), then keep exactly one document per cluster — the
-   * best by `qualityCol` (ties to the smallest id; "keep the longest/
-   * highest-quality copy" is the standard large-corpus rule). Documents in
-   * no pair are their own singleton cluster and always survive.
+   * into a deduplicated corpus: cluster the pairs ([[clusterPairs]]), then
+   * keep exactly one document per cluster — the best by `qualityCol` (ties
+   * to the smallest id; "keep the longest/highest-quality copy" is the
+   * standard large-corpus rule). Documents in no pair are their own
+   * singleton cluster and always survive.
    *
-   * Scale shape: cluster labels join the corpus once on the id (left — the
-   * overwhelming singleton majority never shuffles into the propagation
-   * loop, only the pair-touched minority does); the winner per cluster is a
-   * single `max_by` hash-agg on the cluster key (map-side combined, no
-   * window, no sort), joined back broadcast-or-shuffle by size. Output is
-   * corpus-sized with a boolean verdict, so callers filter `kept`.
+   * Scale shape: winners are picked only among the clustered documents —
+   * the corpus joins the labels on the id (inner), and one `max_by`
+   * hash-agg on the cluster key runs over that pair-touched minority; the
+   * overwhelming singleton majority never shuffles. The corpus then joins
+   * the labels and the winners (left) in one pass. When [[clusterPairs]]
+   * took its driver arm (at most [[DriverClusterMaxPairs]] pairs), the label
+   * and winner frames are small and both joins are broadcast; above the
+   * bound the planner picks the join by size. Output is corpus-sized with a
+   * boolean verdict, so callers filter `kept`.
    *
    * Returns (id, cluster_id, quality, kept).
    */
   def selectCanonical(docs: DataFrame, idCol: Column, qualityCol: Column,
-                      pairs: DataFrame, aCol: Column, bCol: Column): DataFrame = {
-    val clusters = clusterPairs(pairs, aCol, bCol)
-    val labeled = docs
+                      pairs: DataFrame, aCol: Column, bCol: Column): DataFrame =
+    selectCanonical(docs, idCol, qualityCol, pairs, aCol, bCol, DriverClusterMaxPairs)
+
+  /** [[selectCanonical]] with [[clusterPairs]]' driver bound given. */
+  private[graft] def selectCanonical(docs: DataFrame, idCol: Column, qualityCol: Column,
+                                     pairs: DataFrame, aCol: Column, bCol: Column,
+                                     driverMaxPairs: Int): DataFrame = {
+    val (clusters, small) = clusterLabels(pairs, aCol, bCol, driverMaxPairs)
+    def sized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val scored = docs
       .select(idCol.cast("long").as("id"), qualityCol.cast("double").as("quality"))
-      .join(clusters, Seq("id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
     // unique ids make (quality, -id) a total order: max_by is deterministic
-    val winners = labeled.groupBy(col("cluster_id"))
+    val winners = scored.join(sized(clusters), Seq("id"))
+      .groupBy(col("cluster_id"))
       .agg(max_by(col("id"), struct(col("quality"), -col("id"))).as("__win"))
-    labeled.join(winners, Seq("cluster_id"))
-      .select(col("id"), col("cluster_id"), col("quality"),
-        (col("id") === col("__win")).as("kept"))
+    scored.join(sized(clusters), Seq("id"), "left")
+      .join(sized(winners), Seq("cluster_id"), "left")
+      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"),
+        col("quality"), (col("__win").isNull || col("id") === col("__win")).as("kept"))
   }
 
   /** Whitespace-collapsed, lowercased content key — "the same text modulo

@@ -61,13 +61,14 @@ object StreamDedup {
    * `ts` so the stateful operator can use EventTimeTimeout. Token-less
    * documents drop (they have no shingles — same rule as the batch path).
    * `shh` is SORTED, so the stateful verify is an allocation-free
-   * merge-intersect.
+   * merge-intersect. The shingles come out of a one-element Generate
+   * ([[Dedup.withShingles]]), so the shingle kernel runs once per row.
    *
    * Shingles, the 128-lane minhash and the band keys are the native
    * kernels the batch path runs ([[Dedup.wordShingles]],
    * [[Dedup.minhashSignature]], [[Dedup.bandKeys]]) — band keys are
    * bit-identical to [[Dedup.minhashDuplicates]], and the whole phase is one codegen'd
-   * projection: no HOF-lambda interpretation (61 s for 1000 sf0.1 docs),
+   * stage: no HOF-lambda interpretation (61 s for 1000 sf0.1 docs),
    * no aggregation (not allowed before a stateful operator), no typed-map
    * encoder round-trip. */
   def banded(docs: DataFrame, idCol: String, eventTimeCol: String, textCol: String,
@@ -75,9 +76,7 @@ object StreamDedup {
              watermarkDelay: String = "0 seconds"): Dataset[BandedDoc] = {
     implicit val outEnc = Encoders.product[BandedDoc]
     val rowsPerBand = numHashes / bands
-    docs
-      .withColumn("__shh", array_sort(Dedup.wordShingles(col(textCol), shingleSize)))
-      .filter(size(col("__shh")) > 0)
+    Dedup.withShingles(docs, Seq(col("*")), col(textCol), shingleSize, sorted = true)
       .withColumn("band", explode(Dedup.bandKeys(
         Dedup.minhashSignature(col("__shh"), numHashes), bands, rowsPerBand)))
       .select(col("band"), col(idCol).cast("long").as("doc_id"),

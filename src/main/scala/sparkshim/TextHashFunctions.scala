@@ -1,7 +1,5 @@
 package org.apache.spark.sql.graft
 
-import java.util.regex.{Matcher, Pattern}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -99,19 +97,22 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 // --- Per-document text kernels -----------------------------------------------
 //
 // The curation chain's per-document rules, each one native expression that
-// makes one pass over a document. They replace chains of `transform`/
-// `filter`/`aggregate`/`zip_with` lambdas: Spark evaluates those interpreted
-// (`CodegenFallback`), and subexpression elimination looks neither inside
-// them nor into `CASE` branches, so the lambda forms re-tokenized a document
-// once per reference (`Dedup.shingleHashes` hashed every token once per use
-// of its hash array; the Gopher required-word rule lowercased every word once
-// per required word).
+// makes one forward scan over a document's UTF-8 bytes. They replace chains
+// of `transform`/`filter`/`aggregate`/`zip_with` lambdas and regex passes:
+// Spark evaluates lambdas interpreted (`CodegenFallback`), and subexpression
+// elimination looks neither inside them nor into `CASE` branches, so the
+// lambda forms re-tokenized a document once per reference.
 //
 // Each kernel has one implementation: `nullSafeEval` and the generated code
 // call the same static method of [[TextKernels]], so codegen and interpreted
-// evaluation run the same code. The methods reuse Spark's primitives (`XXH64`
-// over `UTF8String` bytes, `hashLong`/`hashInt`, `UTF8String.trim`) and the
-// very `java.util.regex.Pattern`s the replaced column forms evaluated; case
+// evaluation run the same code. The scans use no `java.util.regex`: they
+// classify code points themselves, as the regexes of the replaced column
+// forms did (`\s` is Java's ASCII default [ \t\n\x0B\f\r]; `\p{L}`/`\p{N}`
+// are the `Character.getType` letter and number categories), trim lines as
+// Spark's `trim` does, and end lines by Java's `$` rules. Bytes that are not
+// valid UTF-8 first take the Java decode the column forms ran (each malformed
+// sequence becomes U+FFFD), so there is one scan path. Hashes are Spark's
+// primitives (`XXH64` over the token's bytes, `hashLong`/`hashInt`); case
 // mapping is Spark's `lower`, passed in as an input. The count kernels return
 // integer counts only: callers keep their column arithmetic over them, so
 // every derived double comes from the same operations in the same order.
@@ -132,6 +133,25 @@ case class ShingleHashes(child: Expression, n: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, t => s"${TextKernels.Name}.shingleHashes($t, $n)")
   override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
+}
+
+/** The distinct shingles of a document (`Dedup.wordShingles`), from
+ * `lowered` = lower(text): equal to
+ * array_distinct(shingle_hashes(regexp_extract_all(lowered, "[\p{L}\p{N}]+"), n)),
+ * with each token hashed over its bytes in place. See
+ * [[TextKernels.wordShingles]]. */
+case class WordShingles(child: Expression, n: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(n > 0, "word_shingles: n must be positive")
+  override def prettyName: String = "word_shingles"
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(lowered: Any): Any =
+    TextKernels.wordShingles(lowered.asInstanceOf[UTF8String], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, l => s"${TextKernels.Name}.wordShingles($l, $n)")
+  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
 }
 
 /** LSH band keys of a MinHash signature (`Dedup.bandKeys`): key b =
@@ -193,24 +213,98 @@ object TextKernels {
   /** The class generated code calls the static forwarders on. */
   private[graft] val Name: String = getClass.getName.stripSuffix("$")
 
-  // the patterns of the column forms the kernels replace
-  private val Space = Pattern.compile("\\s+")                       // split(_, "\\s+")
-  private val Token = Pattern.compile("[\\p{L}\\p{N}]+")            // Tokenize.word
-  private val TokenOrSpace = Pattern.compile("[\\p{L}\\p{N}\\s]+") // punctRatio's removal
-  private val Letter = Pattern.compile("[\\p{L}]")
-  private val HashOrEllipsisChar = Pattern.compile("#|…")
-  private val ThreeDots = Pattern.compile("\\.\\.\\.")
-  private val Bullet = Pattern.compile("^([\\u2022\\u2023\\u25E6\\u2043\\u2219*-])")
-  private val EllipsisEnd = Pattern.compile("(\\.\\.\\.|…)$")
+  // code-point classes: `\s`, `\p{L}`, `\p{N}`
+  private final val Space = 1
+  private final val Letter = 2
+  private final val Digit = 4
+  private final val Word = Letter | Digit
+  private val AsciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (" \t\n\u000B\f\r".indexOf(c) >= 0) Space.toByte
+    else if (Character.isLetter(c)) Letter.toByte
+    else if (Character.isDigit(c)) Digit.toByte
+    else 0
+  }
+  private val LetterTypes: Int = Seq(Character.UPPERCASE_LETTER, Character.LOWERCASE_LETTER,
+    Character.TITLECASE_LETTER, Character.MODIFIER_LETTER, Character.OTHER_LETTER)
+    .map(1 << _).reduce(_ | _)
+  private val DigitTypes: Int = Seq(Character.DECIMAL_DIGIT_NUMBER, Character.LETTER_NUMBER,
+    Character.OTHER_NUMBER).map(1 << _).reduce(_ | _)
 
-  /** Gopher's required words {the, be, to, of, and, that, have, with}. */
-  private val RequiredWords: Array[String] = Array("the", "be", "to", "of", "and", "that", "have", "with")
-  private val Stopwords: java.util.Set[String] = {
-    val s = new java.util.HashSet[String]()
-    graft.text.Tokenize.StopwordsEn.foreach(s.add)
+  private def classOf(cp: Int): Int =
+    if (cp < 0x80) AsciiClass(cp)
+    else {
+      val t = 1 << Character.getType(cp)
+      if ((LetterTypes & t) != 0) Letter else if ((DigitTypes & t) != 0) Digit else 0
+    }
+
+  private def byteAt(s: UTF8String, i: Int): Int =
+    Platform.getByte(s.getBaseObject, s.getBaseOffset + i)
+
+  /** Byte length of the UTF-8 sequence that lead byte `b` starts. */
+  private def seqLen(b: Int): Int =
+    if (b >= 0) 1 else if ((b & 0xE0) == 0xC0) 2 else if ((b & 0xF0) == 0xE0) 3 else 4
+
+  /** The code point of the valid `len`-byte sequence at `i`. */
+  private def codePoint(s: UTF8String, i: Int, len: Int): Int = {
+    val b = byteAt(s, i)
+    var cp = if (len == 1) b else if (len == 2) b & 0x1F else if (len == 3) b & 0x0F else b & 0x07
+    var k = 1
+    while (k < len) { cp = (cp << 6) | (byteAt(s, i + k) & 0x3F); k += 1 }
+    cp
+  }
+
+  /** `s` if Java's UTF-8 decoder reads it without replacement (no overlong
+   * form, surrogate, code point above U+10FFFF or cut sequence), otherwise
+   * its decoded-and-re-encoded form, which is what the column forms saw. */
+  private def valid(s: UTF8String): UTF8String = {
+    val n = s.numBytes
+    var i = 0
+    while (i < n) {
+      val b = byteAt(s, i) & 0xFF
+      if (b < 0x80) i += 1
+      else {
+        var len = 0
+        var lo = 0x80
+        var hi = 0xBF
+        if (b >= 0xC2 && b <= 0xDF) len = 2
+        else if (b >= 0xE0 && b <= 0xEF) {
+          len = 3
+          if (b == 0xE0) lo = 0xA0 else if (b == 0xED) hi = 0x9F
+        } else if (b >= 0xF0 && b <= 0xF4) {
+          len = 4
+          if (b == 0xF0) lo = 0x90 else if (b == 0xF4) hi = 0x8F
+        } else return UTF8String.fromString(s.toString)
+        if (i + len > n) return UTF8String.fromString(s.toString)
+        var k = 1
+        while (k < len) {
+          val c = byteAt(s, i + k) & 0xFF
+          if (c < (if (k == 1) lo else 0x80) || c > (if (k == 1) hi else 0xBF))
+            return UTF8String.fromString(s.toString)
+          k += 1
+        }
+        i += len
+      }
+    }
     s
   }
+
+  /** Up to seven bytes of `s` from `from`, packed behind a 1 bit, so that
+   * packs of different lengths differ. */
+  private def pack(s: UTF8String, from: Int, len: Int): Long = {
+    var acc = 1L
+    var k = 0
+    while (k < len) { acc = (acc << 8) | (byteAt(s, from + k) & 0xFF); k += 1 }
+    acc
+  }
+  private def pack(word: String): Long = pack(UTF8String.fromString(word), 0, word.length)
+
+  /** Gopher's required words {the, be, to, of, and, that, have, with}. */
+  private val RequiredWords: Array[Long] =
+    Array("the", "be", "to", "of", "and", "that", "have", "with").map(pack)
+  /** `Tokenize.StopwordsEn` (ASCII, at most five letters), packed and sorted. */
+  private val Stopwords: Array[Long] = graft.text.Tokenize.StopwordsEn.toArray.map(pack).sorted
   private val MaxStopwordLen = graft.text.Tokenize.StopwordsEn.map(_.length).max
+  require(MaxStopwordLen < 8 && graft.text.Tokenize.StopwordsEn.forall(_.forall(_ < 0x80)))
 
   val GopherSchema: StructType = StructType(Seq(
     "words", "word_chars", "symbols", "lines", "bullet_lines", "ellipsis_lines",
@@ -232,26 +326,80 @@ object TextKernels {
       h(j) = if (tokens.isNullAt(j)) 42L else xxhash64(tokens.getUTF8String(j))
       j += 1
     }
-    val out =
-      if (len >= n) {
-        val o = new Array[Long](len - n + 1)
-        var i = 0
-        while (i < o.length) {
-          var acc = h(i)
-          var k = 1
-          while (k < n) { acc = xxhash64(acc, h(i + k)); k += 1 }
-          o(i) = acc
-          i += 1
-        }
-        o
-      } else if (len == 0) Array.emptyLongArray
-      else {
-        var acc = 42L
-        j = 0
-        while (j < len) { acc = xxhash64(acc, h(j)); j += 1 }
-        Array(acc)
+    UnsafeArrayData.fromPrimitiveArray(shingles(h, len, n))
+  }
+
+  /** The n-gram folds of the first `len` token hashes `h`. */
+  private def shingles(h: Array[Long], len: Int, n: Int): Array[Long] =
+    if (len >= n) {
+      val o = new Array[Long](len - n + 1)
+      var i = 0
+      while (i < o.length) {
+        var acc = h(i)
+        var k = 1
+        while (k < n) { acc = xxhash64(acc, h(i + k)); k += 1 }
+        o(i) = acc
+        i += 1
       }
-    UnsafeArrayData.fromPrimitiveArray(out)
+      o
+    } else if (len == 0) Array.emptyLongArray
+    else {
+      var acc = 42L
+      var j = 0
+      while (j < len) { acc = xxhash64(acc, h(j)); j += 1 }
+      Array(acc)
+    }
+
+  /** `xs` without repeats, each kept at its first position (`array_distinct`). */
+  private def distinct(xs: Array[Long]): Array[Long] = {
+    val n = xs.length
+    if (n < 2) return xs
+    val mask = Integer.highestOneBit(n) * 4 - 1
+    val slots = new Array[Int](mask + 1) // 1 + index into out; 0 is empty
+    val out = new Array[Long](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      val x = xs(i)
+      var j = (x ^ (x >>> 32)).toInt & mask
+      while (slots(j) != 0 && out(slots(j) - 1) != x) j = (j + 1) & mask
+      if (slots(j) == 0) { out(m) = x; m += 1; slots(j) = m }
+      i += 1
+    }
+    if (m == n) out else java.util.Arrays.copyOf(out, m)
+  }
+
+  /**
+   * The distinct shingles of a document's `Tokenize.word` tokens, the
+   * `[\p{L}\p{N}]+` runs of `lowered` = lower(text), in first-occurrence
+   * order: each run's bytes are hashed in place (xxhash64, seed 42, which is
+   * xxhash64 of the token string), then folded as [[shingleHashes]] folds.
+   */
+  def wordShingles(lowered: UTF8String, n: Int): ArrayData = {
+    val s = valid(lowered)
+    val nb = s.numBytes
+    var h = new Array[Long](16)
+    var m = 0
+    var from = -1 // start of the current token, -1 between tokens
+    var i = 0
+    while (i <= nb) {
+      var len = 1
+      var word = false
+      if (i < nb) {
+        val b = byteAt(s, i)
+        len = seqLen(b)
+        word = (classOf(if (len == 1) b else codePoint(s, i, len)) & Word) != 0
+      }
+      if (word) { if (from < 0) from = i }
+      else if (from >= 0) {
+        if (m == h.length) h = java.util.Arrays.copyOf(h, m * 2)
+        h(m) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + from, i - from, 42L)
+        m += 1
+        from = -1
+      }
+      i += len
+    }
+    UnsafeArrayData.fromPrimitiveArray(distinct(shingles(h, m, n)))
   }
 
   def bandKeys(signature: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
@@ -276,7 +424,46 @@ object TextKernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  private def count(m: Matcher): Int = { var c = 0; while (m.find()) c += 1; c }
+  private def isBullet(cp: Int): Boolean =
+    cp == '*' || cp == '-' || cp == 0x2022 || cp == 0x2023 || cp == 0x25E6 ||
+      cp == 0x2043 || cp == 0x2219
+
+  /** Whether bytes [from, to) of `s` end with "..." or "…" (E2 80 A6). */
+  private def endsWithEllipsis(s: UTF8String, from: Int, to: Int): Boolean =
+    to - from >= 3 && {
+      val a = byteAt(s, to - 3); val b = byteAt(s, to - 2); val c = byteAt(s, to - 1)
+      (a == '.' && b == '.' && c == '.') ||
+        ((a & 0xFF) == 0xE2 && (b & 0xFF) == 0x80 && (c & 0xFF) == 0xA6)
+    }
+
+  /** Byte length of the line terminator other than '\n' that ends bytes
+   * [from, to) of `s` ('\r', U+0085, U+2028, U+2029), or 0. */
+  private def terminatorLen(s: UTF8String, from: Int, to: Int): Int = {
+    val last = if (to > from) byteAt(s, to - 1) & 0xFF else 0
+    if (last == '\r') 1
+    else if (last == 0x85 && to - from >= 2 && (byteAt(s, to - 2) & 0xFF) == 0xC2) 2
+    else if ((last == 0xA8 || last == 0xA9) && to - from >= 3 &&
+        (byteAt(s, to - 3) & 0xFF) == 0xE2 && (byteAt(s, to - 2) & 0xFF) == 0x80) 3
+    else 0
+  }
+
+  /** Line bytes [from, to) of `s`, trimmed as Spark's `trim` does (U+0020
+   * only): 0 if blank, else 1 | 2 if it starts with a bullet | 4 if it ends
+   * with an ellipsis. A match of `(\.\.\.|…)$` ends at the end, or before
+   * one final line terminator (the line holds no '\n'). */
+  private def lineFlags(s: UTF8String, from: Int, to: Int): Int = {
+    var a = from
+    var e = to
+    while (a < e && byteAt(s, a) == ' ') a += 1
+    while (e > a && byteAt(s, e - 1) == ' ') e -= 1
+    if (a == e) 0
+    else {
+      val b = byteAt(s, a)
+      val bullet = isBullet(if (b >= 0) b else codePoint(s, a, seqLen(b)))
+      val ellipsis = endsWithEllipsis(s, a, e - terminatorLen(s, a, e))
+      1 | (if (bullet) 2 else 0) | (if (ellipsis) 4 else 0)
+    }
+  }
 
   /**
    * Gopher counts of `text` (`lowered` = lower(text)), all integers:
@@ -292,67 +479,61 @@ object TextKernels {
    *    `lowered` (lower of a word is that word of lower(text)).
    */
   def gopherCounts(lowered: UTF8String, text: UTF8String): InternalRow = {
-    val s = text.toString
-    var words, wordChars, alpha = 0
-    val letter = Letter.matcher(s)
-    val sp = Space.matcher(s)
-    var from = 0
-    var more = true
-    while (more) {
-      more = sp.find()
-      val to = if (more) sp.start() else s.length
-      if (to > from) {
-        words += 1
-        wordChars += s.codePointCount(from, to)
-        if (letter.region(from, to).find()) alpha += 1
-      }
-      if (more) from = sp.end()
-    }
-    val symbols = count(HashOrEllipsisChar.matcher(s)) + count(ThreeDots.matcher(s))
-
-    // lines are byte ranges between '\n' bytes (never part of a multi-byte
-    // UTF-8 sequence), trimmed as Spark's trim does
+    val s = valid(text)
+    val nb = s.numBytes
+    var words, wordChars, alpha, symbols, dots = 0
+    var inWord, wordAlpha = false
     var lines, bullets, ellipses = 0
-    val bullet = Bullet.matcher("")
-    val ellipsis = EllipsisEnd.matcher("")
-    val base = text.getBaseObject
-    val off = text.getBaseOffset
-    val nb = text.numBytes
-    from = 0
-    while (from <= nb) {
-      var to = from
-      while (to < nb && Platform.getByte(base, off + to) != '\n') to += 1
-      val line = UTF8String.fromAddress(base, off + from, to - from).trim()
-      if (line.numBytes > 0) {
-        lines += 1
-        // a bullet match can only cover the first char (`^` and one BMP
-        // bullet), an ellipsis match only the last five ("..." or "…", then
-        // at most one line terminator before `$`): search only there
-        val l = line.toString
-        if (bullet.reset(l).region(0, math.min(1, l.length)).find()) bullets += 1
-        if (ellipsis.reset(l).region(math.max(0, l.length - 5), l.length).find()) ellipses += 1
+    var lineFrom = 0
+    var i = 0
+    while (i <= nb) { // a '\n' past the end closes the last word and line
+      val b = if (i < nb) byteAt(s, i) else '\n'
+      val len = seqLen(b)
+      val cp = if (len == 1) b else codePoint(s, i, len)
+      if (cp == '.') dots += 1
+      else {
+        symbols += dots / 3
+        dots = 0
+        if (cp == '#' || cp == 0x2026) symbols += 1
       }
-      from = to + 1
+      val cls = classOf(cp)
+      if ((cls & Space) != 0) {
+        if (inWord) { words += 1; if (wordAlpha) alpha += 1; inWord = false }
+        if (cp == '\n') {
+          val flags = lineFlags(s, lineFrom, i)
+          lines += flags & 1
+          bullets += (flags >> 1) & 1
+          ellipses += (flags >> 2) & 1
+          lineFrom = i + 1
+        }
+      } else {
+        if (!inWord) { inWord = true; wordAlpha = false }
+        wordChars += 1
+        if ((cls & Letter) != 0) wordAlpha = true
+      }
+      i += len
     }
 
-    val ls = lowered.toString
+    val ls = valid(lowered)
+    val ln = ls.numBytes
     var required = 0 // bit i: RequiredWords(i) seen
-    val lsp = Space.matcher(ls)
-    from = 0
-    more = true
-    while (more) {
-      more = lsp.find()
-      val to = if (more) lsp.start() else ls.length
-      val len = to - from
-      if (len >= 2 && len <= 4) {
-        var i = 0
-        while (i < RequiredWords.length) {
-          val r = RequiredWords(i)
-          if (r.length == len && ls.regionMatches(from, r, 0, len)) required |= 1 << i
-          i += 1
+    var from = 0
+    i = 0
+    while (i <= ln) {
+      val b = if (i < ln) byteAt(ls, i) else ' '
+      if (b >= 0 && (AsciiClass(b) & Space) != 0) {
+        val len = i - from
+        if (len >= 2 && len <= 4) {
+          val p = pack(ls, from, len)
+          var r = 0
+          while (r < RequiredWords.length) {
+            if (RequiredWords(r) == p) required |= 1 << r
+            r += 1
+          }
         }
+        from = i + 1
       }
-      if (more) from = lsp.end()
+      i += 1
     }
     new GenericInternalRow(Array[Any](words, wordChars, symbols, lines, bullets,
       ellipses, alpha, Integer.bitCount(required)))
@@ -367,23 +548,48 @@ object TextKernels {
    *    outside `[\p{L}\p{N}\s]`.
    */
   def qualityCounts(lowered: UTF8String, text: UTF8String): InternalRow = {
-    val ls = lowered.toString
+    val ls = valid(lowered)
+    val ln = ls.numBytes
     var tokens, stop, tokenChars = 0
-    val tok = Token.matcher(ls)
-    while (tok.find()) {
-      val a = tok.start()
-      val b = tok.end()
-      tokens += 1
-      tokenChars += ls.codePointCount(a, b)
-      if (b - a <= MaxStopwordLen && Stopwords.contains(ls.substring(a, b))) stop += 1
+    var from = -1 // start of the current token, -1 between tokens
+    var cps = 0   // its code points so far
+    var i = 0
+    while (i <= ln) {
+      var len = 1
+      var word = false
+      if (i < ln) {
+        val b = byteAt(ls, i)
+        len = seqLen(b)
+        word = (classOf(if (len == 1) b else codePoint(ls, i, len)) & Word) != 0
+      }
+      if (word) {
+        if (from < 0) { from = i; cps = 0 }
+        cps += 1
+      } else if (from >= 0) {
+        tokens += 1
+        tokenChars += cps
+        // stopwords are ASCII: a token of as many bytes as code points
+        val bytes = i - from
+        if (bytes <= MaxStopwordLen && bytes == cps &&
+            java.util.Arrays.binarySearch(Stopwords, pack(ls, from, bytes)) >= 0) stop += 1
+        from = -1
+      }
+      i += len
     }
-    val s = text.toString
-    val total = s.codePointCount(0, s.length)
-    var space, kept = 0
-    val sp = Space.matcher(s)
-    while (sp.find()) space += sp.end() - sp.start() // \s is single-char ASCII
-    val ts = TokenOrSpace.matcher(s)
-    while (ts.find()) kept += s.codePointCount(ts.start(), ts.end())
+
+    val s = valid(text)
+    val nb = s.numBytes
+    var total, space, kept = 0
+    i = 0
+    while (i < nb) {
+      val b = byteAt(s, i)
+      val len = seqLen(b)
+      val cls = classOf(if (len == 1) b else codePoint(s, i, len))
+      total += 1
+      if ((cls & Space) != 0) space += 1
+      if (cls != 0) kept += 1
+      i += len
+    }
     new GenericInternalRow(Array[Any](tokens, stop, tokenChars, total - space, total - kept))
   }
 }
@@ -398,6 +604,10 @@ object TextHashFunctions {
 
   /** Hashed word-n-gram shingles of a token array; see [[ShingleHashes]]. */
   def shingleHashes(tokens: Column, n: Int): Column = c(ShingleHashes(x(tokens), n))
+
+  /** Distinct word-n-gram shingles of `text`; see [[WordShingles]]. */
+  def wordShingles(text: Column, n: Int): Column =
+    c(WordShingles(x(org.apache.spark.sql.functions.lower(text)), n))
 
   /** LSH band keys of a MinHash signature; see [[LshBandKeys]]. */
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =

@@ -6,9 +6,11 @@ import org.scalacheck.Prop.forAll
 import graft.pipeline.Dedup
 
 /**
- * Property test: distributed min-label propagation (Dedup.clusterPairs)
- * agrees with a driver-side union-find on random pair relations — including
- * long chains (worst-case diameter for propagation) and dense multigraphs.
+ * Property test: Dedup.clusterPairs agrees with a reference union-find on
+ * random pair relations — including long chains (worst-case diameter for
+ * propagation) and dense multigraphs — in both of its arms: the driver
+ * union-find at the default bound, and the distributed min-label
+ * propagation (driver bound 0).
  */
 object ClusterProps extends Properties("ClusterPairs") {
 
@@ -42,14 +44,20 @@ object ClusterProps extends Properties("ClusterPairs") {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  property("components match union-find on random graphs") = forAll(pairsGen) { edges =>
-    edges.isEmpty || {
-      val session = spark
-      import session.implicits._
-      val df = edges.toDF("id_a", "id_b")
-      val got = Dedup.clusterPairs(df, df("id_a"), df("id_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      got == unionFind(edges)
-    }
+  private def components(edges: List[(Long, Long)], driverMaxPairs: Int): Map[Long, Long] = {
+    val session = spark
+    import session.implicits._
+    val df = edges.toDF("id_a", "id_b")
+    Dedup.clusterPairs(df, df("id_a"), df("id_b"), driverMaxPairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
   }
+
+  property("components match union-find on random graphs") = forAll(pairsGen) { edges =>
+    edges.isEmpty || components(edges, Dedup.DriverClusterMaxPairs) == unionFind(edges)
+  }
+
+  property("distributed arm: components match union-find on random graphs") =
+    forAll(pairsGen) { edges =>
+      edges.isEmpty || components(edges, 0) == unionFind(edges)
+    }
 }

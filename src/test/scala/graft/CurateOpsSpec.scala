@@ -108,15 +108,18 @@ class CurateOpsSpec extends SparkSpecBase {
       (5L, 2.0), (6L, 7.0)              // cluster {5,6}: 6 wins
     ).toDF("doc_id", "q")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val got = Dedup.selectCanonical(docs, col("doc_id"), col("q"),
-        pairs, col("id_a"), col("id_b"))
-      .orderBy(col("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3)))
-    assert(got.toSeq == Seq(
-      (1L, 1L, false), (2L, 1L, true), (3L, 1L, false),
-      (4L, 4L, true), (5L, 5L, false), (6L, 5L, true)))
-    // exactly one kept per cluster
-    assert(got.filter(_._3).map(_._2).distinct.length == got.map(_._2).distinct.length)
+    // the driver union-find arm (default bound) and the distributed arm (0)
+    for (bound <- Seq(Dedup.DriverClusterMaxPairs, 0)) {
+      val got = Dedup.selectCanonical(docs, col("doc_id"), col("q"),
+          pairs, col("id_a"), col("id_b"), bound)
+        .orderBy(col("id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3)))
+      assert(got.toSeq == Seq(
+        (1L, 1L, false), (2L, 1L, true), (3L, 1L, false),
+        (4L, 4L, true), (5L, 5L, false), (6L, 5L, true)), s"bound $bound")
+      // exactly one kept per cluster
+      assert(got.filter(_._3).map(_._2).distinct.length == got.map(_._2).distinct.length)
+    }
   }
 
   test("plans: no cartesian / nested-loop beyond the single-row N broadcast") {

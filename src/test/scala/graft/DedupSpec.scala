@@ -49,6 +49,10 @@ class DedupSpec extends SparkSpecBase {
       "bed must produce at least one new<->new pair")
   }
 
+  /** The driver bounds that send clusterPairs down each arm: the default
+   * (driver union-find) and 0 (distributed label propagation). */
+  private val arms = Seq("driver" -> Dedup.DriverClusterMaxPairs, "distributed" -> 0)
+
   test("minhashDuplicates leaves no cache entry behind once its pairs are written") {
     // planted exact copies, on a bed no other test builds (a plan that is
     // already cached would hide a new entry)
@@ -60,14 +64,28 @@ class DedupSpec extends SparkSpecBase {
       shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.7)
     def collected = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val want = collected
-    Dedup.selectCanonical(bed, $"doc_id", length($"text"), pairs, $"id_a", $"id_b")
-      .write.mode("overwrite").parquet(Gate.tempDir("dedup-cache"))
-    assert(cacheEntries == before)
+    val kept = arms.map { case (arm, bound) =>
+      val dir = Gate.tempDir("dedup-cache")
+      Dedup.selectCanonical(bed, $"doc_id", length($"text"), pairs, $"id_a", $"id_b", bound)
+        .write.mode("overwrite").parquet(dir)
+      assert(cacheEntries == before, arm)
+      arm -> spark.read.parquet(dir).collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
+    }
+    assert(kept.map(_._2).distinct.size == 1, "the two arms keep different docs")
     assert(collected == want)
     val copies = bed.filter($"doc_id" >= 3000000L && size(Tokenize.word($"text")) > 0)
       .select($"doc_id").as[Long].collect()
     assert(copies.nonEmpty)
     assert(copies.forall(c => want.contains((c - 3000000L, c, 1.0))))
+    // each planted copy shares its original's cluster, and the cluster keeps
+    // one doc, so not both
+    val verdicts = kept.head._2.map(r => r._1 -> (r._2, r._4)).toMap
+    assert(copies.forall { c =>
+      val (orig, copy) = (verdicts(c - 3000000L), verdicts(c))
+      orig._1 == copy._1 && !(orig._2 && copy._2)
+    })
+    assert(kept.head._2.filter(_._4).groupBy(_._2).values.forall(_.size == 1))
   }
 
   test("minhash-LSH finds exactly the brute-force near-dup pairs (recall 1 here)", SlowTests) {
@@ -151,14 +169,34 @@ class DedupSpec extends SparkSpecBase {
       (10L, 11L), (11L, 12L), (10L, 12L),               // triangle
       (20L, 21L)                                        // pair
     ).toDF("id_a", "id_b")
-    val got = Dedup.clusterPairs(pairs, $"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert((1L to 6L).forall(got(_) == 1L))
-    assert(Seq(10L, 11L, 12L).forall(got(_) == 10L))
-    assert(Seq(20L, 21L).forall(got(_) == 20L))
-    assert(got.size == 11)
-    // keep-set predicate: exactly one survivor per cluster
-    assert(got.count { case (id, c) => id == c } == 3)
+    for ((arm, bound) <- arms) {
+      val got = Dedup.clusterPairs(pairs, $"id_a", $"id_b", bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert((1L to 6L).forall(got(_) == 1L), arm)
+      assert(Seq(10L, 11L, 12L).forall(got(_) == 10L), arm)
+      assert(Seq(20L, 21L).forall(got(_) == 20L), arm)
+      assert(got.size == 11, arm)
+      // keep-set predicate: exactly one survivor per cluster
+      assert(got.count { case (id, c) => id == c } == 3, arm)
+    }
+  }
+
+  test("clusterPairs: a 40-node path converges to one label in both arms") {
+    // diameter 39: label propagation needs about 38 rounds to reach the
+    // path's tail, beyond any fixed round cap of 20
+    val path = (1L until 40L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    for ((arm, bound) <- arms) {
+      val got = Dedup.clusterPairs(path, $"id_a", $"id_b", bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == (1L to 40L).map(_ -> 1L).toMap, s"$arm: $got")
+    }
+    // selectCanonical keeps exactly one doc of the path, the best
+    val docs = (1L to 40L).map(i => (i, (i * 7) % 40)).toDF("doc_id", "q")
+    for ((arm, bound) <- arms) {
+      val kept = Dedup.selectCanonical(docs, $"doc_id", $"q", path, $"id_a", $"id_b", bound)
+        .filter($"kept").select($"id").as[Long].collect()
+      assert(kept.toSeq == Seq(17L), arm) // 17 · 7 = 119 ≡ 39 (mod 40), the top quality
+    }
   }
 
   test("embedding LSH dedup matches brute force on planted copies") {

@@ -1,21 +1,26 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.{Dedup, TextAnalysis}
+import graft.streaming.StreamDedup
 import graft.text.Tokenize
 
-/** The curation chain's native text kernels (ShingleHashes, LshBandKeys,
- * GopherCounts, TextQualityCounts) against the lambda column forms they
- * replaced, kept here as the reference; each kernel also agrees between
- * generated code and interpreted evaluation. */
+/** The curation chain's native text kernels (ShingleHashes, WordShingles,
+ * LshBandKeys, GopherCounts, TextQualityCounts) against the regex and lambda
+ * column forms they replaced, kept here as the reference; each kernel also
+ * agrees between generated code and interpreted evaluation. The inputs are
+ * UTF-8 bytes cast to string, hand-picked edge cases plus a seeded fuzz, so
+ * malformed sequences reach the kernels as stored. */
 class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -55,6 +60,18 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       val toks = Tokenize.word(text)
       when(size(toks) === 0, 0.0)
         .otherwise(aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") / size(toks))
+    }
+
+    /** TextQualityCounts' fields, in its field order. */
+    def qualityCounts(text: Column): Seq[Column] = {
+      val toks = Tokenize.word(text)
+      val stopArr = array(Tokenize.StopwordsEn.toSeq.sorted.map(lit): _*)
+      Seq(
+        size(toks),
+        size(filter(toks, t => array_contains(stopArr, t))),
+        aggregate(toks, lit(0), (a, t) => a + length(t)),
+        length(regexp_replace(text, "\\s+", "")),
+        length(regexp_replace(text, "[\\p{L}\\p{N}\\s]+", "")))
     }
 
     def qualityScore(text: Column): Column = {
@@ -125,7 +142,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     "• bullet one\n- dash\n* star\n  - indented dash\n‣ tri\n◦ white\n⁃ hyph\n∙ op",
     "𝐀𝐁 math letters 𝟙𝟚 math digits",
     "٣٤٥ ١٢ arabic-indic digits, ½ vulgar half",
-    "İstanbul İS İthe THE The", "Kelvin KELVIN",
+    "İstanbul İS İthe THE The", "\u212Aelvin \u212AELVIN",
     "one", "one two", "one two three", "one two three four",
     "The THE the be To of And that HAVE with wiTH",
     "   leading and trailing   ", "a\n\nb\n \n", "...\n...\n...\nok line",
@@ -133,13 +150,65 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     "it's the end of the world, isn't it? they're there, and THEIR things...",
     s"$fifty the be to of and\n- b1\n- b2\n- b3",
     s"$fifty the be " + (1 to 12).map(_ => "#").mkString(" "),
-    (1 to 60).map(_ => "a").mkString(" ") + " the be")
+    (1 to 60).map(_ => "a").mkString(" ") + " the be",
+    // U+FFFD as text, and supplementary-plane letters and digits next to ASCII
+    "\uFFFD", "a\uFFFDthe \uFFFD...", "a𝐀b 1𝟙2 𝐀the the𝟙 x𐐀y 𐐀𐐨 😀the😀 be😀",
+    // a lone \r, and U+0085/U+2028/U+2029 after "..." and "…"
+    "\r", "a\rb", " \r ", "x...\u0085", "x...\u2028", "x …\u2029", "...\u0085\n…\u2028 \n...\u2029\r",
+    "x...\u0085\u0085", "x...\r\u0085", "\u0085...", "- ...\r",
+    // stopwords at token edges
+    "the,end (a) [it] it's and-the THE. xthe thex theirs their' a1 1a to_be of\u0301 the\u0000",
+    "\u0000the the\u0000 \u0000 that\u00A0have with\u2028be")
 
-  /** The texts as a frame that is not a local relation (which the optimizer
-   * would evaluate interpreted at planning time), so projections over it
-   * run as generated code. */
+  private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+  private def utf8(s: String): Array[Byte] = s.getBytes(UTF_8)
+
+  /** Malformed UTF-8 on which Spark's own `length` and Java's decode agree
+   * (the gopher reference counts symbols through `length` of the raw bytes). */
+  private val malformed: Seq[Array[Byte]] = Seq(
+    bytes(0xFF), bytes(0x80), bytes(0xC0, 0x80), bytes(0xED, 0xA0, 0x80),
+    utf8("end") ++ bytes(0xE2, 0x80),
+    utf8("the ") ++ bytes(0xFF) ++ utf8(" be... ") ++ bytes(0xC0, 0x80) ++ utf8("\n- x ") ++
+      bytes(0xBF) ++ utf8("...\r"),
+    utf8("a") ++ bytes(0xF5) ++ utf8("b #") ++ bytes(0xED, 0xBF, 0xBF) ++ utf8("…the\n") ++ bytes(0xC1))
+
+  /** A seeded fuzz of mixed-alphabet texts, a quarter of them with malformed
+   * bytes spliced in. */
+  private val fuzz: Seq[Array[Byte]] = {
+    val pieces = IndexedSeq(
+      "a", "Z", "q", "7", "0", " ", " ", "  ", "\t", "\n", "\n", "\r", "\r\n", "\u000B", "\f",
+      ".", "..", "...", "#", "…", "-", "*", "•", "‣", "◦", "⁃", "∙", ",", "'", "!", "?", "\u0000",
+      "é", "ß", "ª", "½", "\u00A0", "\u0085", "\u2028", "\u2029", "\uFFFD",
+      "İ", "\u212A", "Σ", "ς", "Ж", "ж", "数", "デ", "한", "٣", "\u0301", "ǅ", "ʰ", "Ⅻ",
+      "𝐀", "𝟙", "😀", "𐐀", "𐐨", "𝒳",
+      "the", "The", "THE", "be", "to", "of", "and", "that", "have", "with", "their", "these",
+      "an", "it", "word", "x")
+    val bad = IndexedSeq(bytes(0xFF), bytes(0x80), bytes(0xBF), bytes(0xC0, 0x80), bytes(0xC1),
+      bytes(0xF5), bytes(0xED, 0xA0, 0x80), bytes(0xED, 0xBF, 0xBF))
+    val r = new scala.util.Random(1309)
+    Seq.fill(2400) {
+      val out = new java.io.ByteArrayOutputStream()
+      val malformedText = r.nextInt(4) == 0
+      for (_ <- 0 until (if (r.nextInt(10) == 0) r.nextInt(160) else r.nextInt(40)))
+        out.write(if (malformedText && r.nextInt(8) == 0) bad(r.nextInt(bad.size))
+          else utf8(pieces(r.nextInt(pieces.size))))
+      out.toByteArray
+    }
+  }
+
+  private val inputs: Seq[Array[Byte]] =
+    texts.map(t => if (t == null) null else utf8(t)) ++ malformed ++ fuzz
+
+  /** Input `id`, printable, for failure messages. */
+  private def describe(id: Long): String = Option(inputs(id.toInt)).map(_.map { b =>
+    if (b >= 0x20 && b < 0x7F) b.toChar.toString else f"\\x${b & 0xFF}%02X" }.mkString).toString
+
+  /** The inputs as a frame of strings (the bytes cast, unvalidated) that is
+   * not a local relation (which the optimizer would evaluate interpreted at
+   * planning time), so projections over it run as generated code. */
   private def textFrame: DataFrame =
-    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text").repartition(2)
+    inputs.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "bytes")
+      .select($"id", $"bytes".cast("string").as("text")).repartition(2)
 
   private def rows(df: DataFrame): Map[Long, Row] =
     df.collect().map(r => r.getLong(0) -> r).toMap
@@ -167,7 +236,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   private def assertSameRows(got: Map[Long, Row], want: Map[Long, Row]): Unit = {
     assert(got.keySet == want.keySet)
     for ((id, w) <- want; i <- 1 until w.length)
-      assert(got(id).get(i) == w.get(i), s"text ${Option(texts(id.toInt)).map(_.toSeq)} column $i")
+      assert(got(id).get(i) == w.get(i), s"text ${describe(id)} column $i")
   }
 
   private def longs(r: Row, i: Int): Option[Seq[Long]] =
@@ -189,10 +258,16 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   }
 
   test("wordShingles equals array_distinct(shingleHashes(Tokenize.word(text)))") {
-    val got = inBothModes(textFrame.select($"id", Dedup.wordShingles($"text", 3)))
-    val want = rows(textFrame.select($"id",
-      array_distinct(Ref.shingleHashes(Tokenize.word($"text"), 3))))
-    for ((id, w) <- want) assert(longs(got(id), 1) == longs(w, 1), s"id=$id")
+    // the malformed bytes reach the kernels as stored, not replaced by the cast
+    val stored = textFrame.select($"id", $"text".cast("binary")).collect()
+      .map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toMap
+    assert(inputs.indices.forall(i => stored(i.toLong) == Option(inputs(i)).map(_.toSeq)))
+    for (n <- 1 to 4) {
+      val got = inBothModes(textFrame.select($"id", Dedup.wordShingles($"text", n)))
+      val want = rows(textFrame.select($"id",
+        array_distinct(Ref.shingleHashes(Tokenize.word($"text"), n))))
+      for ((id, w) <- want) assert(longs(got(id), 1) == longs(w, 1), s"n=$n ${describe(id)}")
+    }
   }
 
   test("LshBandKeys matches xxhash64(concat_ws(slice), b), incl. short and null-laned signatures") {
@@ -222,8 +297,20 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val want = rows(textFrame.filter($"text".isNotNull).select($"id" +: Ref.gopherCounts($"text"): _*))
     for ((id, w) <- want; i <- 1 until w.length)
       assert(got(id).get(i) == w.get(i),
-        s"${fields(i - 1)} of ${texts(id.toInt).toSeq}: got ${got(id).get(i)}, want ${w.get(i)}")
-    val nullId = texts.indexOf(null).toLong
+        s"${fields(i - 1)} of ${describe(id)}: got ${got(id).get(i)}, want ${w.get(i)}")
+    val nullId = inputs.indexOf(null).toLong
+    assert((1 to fields.size).forall(got(nullId).isNullAt))
+  }
+
+  test("TextQualityCounts equals the regex/array-form counts, field by field") {
+    val fields = org.apache.spark.sql.graft.TextKernels.QualitySchema.fieldNames.toSeq
+    val got = inBothModes(textFrame.select($"id" +: fields.map(f =>
+      org.apache.spark.sql.graft.TextHashFunctions.textQualityCounts($"text").getField(f)): _*))
+    val want = rows(textFrame.filter($"text".isNotNull).select($"id" +: Ref.qualityCounts($"text"): _*))
+    for ((id, w) <- want; i <- 1 until w.length)
+      assert(got(id).get(i) == w.get(i),
+        s"${fields(i - 1)} of ${describe(id)}: got ${got(id).get(i)}, want ${w.get(i)}")
+    val nullId = inputs.indexOf(null).toLong
     assert((1 to fields.size).forall(got(nullId).isNullAt))
   }
 
@@ -248,6 +335,38 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assertSameRows(got, want)
   }
 
+  /** The optimized and executed plans of the queries `body` runs, once a
+   * query named `last` has reported (listeners are called asynchronously). */
+  private def plansOf(last: String)(body: => Unit): Seq[(String, String, SparkPlan)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add((name, qe.optimizedPlan.toString, qe.executedPlan))
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30e9.toLong
+      def done = seen.toArray.exists(_.asInstanceOf[(String, String, SparkPlan)]._1 == last)
+      while (!done && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = ArrayBuffer.empty[(String, String, SparkPlan)]
+    seen.forEach(p => plans += p)
+    assert(plans.exists(_._1 == last), plans.map(_._1))
+    plans.toSeq
+  }
+
+  /** Shingle-kernel nodes of each plan tree `plan` holds: the plan itself
+   * (across its adaptive stages), then every cached plan it scans. */
+  private def shingleKernels(plan: SparkPlan): Seq[Int] = {
+    val kernels = Set("shingle_hashes", "word_shingles")
+    val own = collect(plan) { case p => p }
+      .map(_.expressions.map(_.collect { case e if kernels(e.prettyName) => e }.size).sum).sum
+    own +: collect(plan) { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+      .flatMap(shingleKernels)
+  }
+
   test("plans: gopherFilter, qualityScore and minhashDuplicates evaluate no lambda") {
     def lambdaFree(df: DataFrame): Boolean =
       !df.queryExecution.optimizedPlan.toString.contains("lambdafunction")
@@ -256,24 +375,39 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(lambdaFree(TextAnalysis.gopherFilter(textFrame, $"text")))
     assert(lambdaFree(textFrame.select(TextAnalysis.qualityScore($"text"))))
 
-    // minhashDuplicates returns a checkpoint: inspect every query it runs
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(name -> qe.optimizedPlan.toString)
-      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    // minhashDuplicates returns a checkpoint: inspect every query it runs.
+    // The docs are read from parquet: over a local relation the optimizer
+    // would push a filter into the relation and evaluate it while planning,
+    // out of sight of the executed plans
+    val dir = Gate.tempDir("kernel-plans")
+    textFrame.filter($"text".isNotNull).write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val minhash = plansOf("localCheckpoint") {
+      Dedup.minhashDuplicates(docs, $"id", $"text", threshold = 0.5)
     }
-    spark.listenerManager.register(listener)
-    try {
-      Dedup.minhashDuplicates(textFrame.filter($"text".isNotNull), $"id", $"text",
+    minhash.foreach { case (name, plan, _) =>
+      assert(!plan.contains("lambdafunction"), s"$name: $plan") }
+
+    // the shingle kernel runs once per document: each of the four shingle
+    // builds' executed plans holds exactly one kernel node (an emptiness
+    // filter pushed below the projection evaluates it a second time)
+    val incremental = plansOf("localCheckpoint") {
+      Dedup.minhashIncrementalDuplicates(docs, $"id", $"text", $"id" % 3 === 0,
         threshold = 0.5)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.toArray.exists(_.asInstanceOf[(String, String)]._1 == "localCheckpoint") &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    val plans = ArrayBuffer.empty[(String, String)]
-    seen.forEach(p => plans += p)
-    assert(plans.exists(_._1 == "localCheckpoint"), plans.map(_._1))
-    plans.foreach { case (name, plan) => assert(!plan.contains("lambdafunction"), s"$name: $plan") }
+    }
+    val jaccard = plansOf("collect") {
+      Dedup.ngramJaccardDuplicates(docs, $"id", $"text", Seq($"id" % 2)).collect()
+    }
+    val banded = plansOf("collect") {
+      StreamDedup.banded(docs.withColumn("ts", timestamp_seconds($"id")), "id", "ts", "text")
+        .collect()
+    }
+    for ((op, plans) <- Seq("minhashDuplicates" -> minhash,
+        "minhashIncrementalDuplicates" -> incremental, "ngramJaccardDuplicates" -> jaccard,
+        "StreamDedup.banded" -> banded)) {
+      val counts = plans.flatMap { case (_, _, p) => shingleKernels(p) }.filter(_ > 0)
+      assert(counts.nonEmpty && counts.forall(_ == 1),
+        s"$op: kernel nodes per plan $counts\n${plans.map(_._3).mkString("\n")}")
+    }
   }
 }
