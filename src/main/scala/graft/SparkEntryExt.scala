@@ -3599,8 +3599,8 @@ object SparkEntryExt {
     // SemDeDup / cluster-balanced selection bucket by; the oracle replays
     // the ENTIRE training run (seed init, both assign+update rounds with
     // the empty-cluster keep rule, final assignment + squared-L2) unrolled
-    // in SQL — a fully correctness-gated iterative model, unlike MLlib's
-    // randomly-seeded KMeans behind the IVF build
+    // in SQL — a fully correctness-gated iterative model, unlike the
+    // RNG-seeded k-means++ trainer behind the IVF build
     // unrolled Lloyd replay: c0 = 4 smallest-id embeddings; per round,
     // nearest-centroid assignment (ties to the lower index), per-dim means
     // via a range(64) lateral, empty clusters keeping the previous centroid;

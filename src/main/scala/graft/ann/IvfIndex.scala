@@ -1,6 +1,5 @@
 package graft.ann
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,10 +10,10 @@ import graft.operators.VectorSearch
 /**
  * IVF (inverted-file) vector index: a batch-built side table replacing the
  * reference's online HNSW graph (SURVEY §4 — "index acceleration is a
- * batch-built side table + planner choice"; north star: "batch vector index
- * build via MLlib").
+ * batch-built side table + planner choice").
  *
- * Build: MLlib KMeans learns `nlist` coarse centroids (the quantizer —
+ * Build: [[KMeansTrainer]] learns `nlist` coarse centroids on the driver
+ * from a hash-picked sample of at most 256·nlist vectors (the quantizer —
  * analogous to the PQ codebook training in the reference's
  * compressionhelpers); every row is assigned its `replicas` nearest centroids
  * (replicas > 1 is the multi-probe recall lever for near-uniform data: the
@@ -264,7 +263,9 @@ object FilterStrategy {
 object IvfIndex {
 
   /**
-   * Train the coarse quantizer and assign every row to its `replicas` nearest
+   * Train the coarse quantizer (one sample job, then driver-side k-means —
+   * see [[KMeansTrainer]]; fewer than `nlist` centroids when the sample holds
+   * fewer distinct vectors) and assign every row to its `replicas` nearest
    * centroids. With `persistPath` the assignment is written
    * `partitionBy("__centroid")` and read back, so `__centroid` becomes a
    * physical partition column and probing prunes partitions at the source.
@@ -275,15 +276,7 @@ object IvfIndex {
             persistPath: Option[String] = None,
             rngFactor: Option[Double] = None): IvfIndex = {
     require(replicas >= 1 && replicas <= nlist, "replicas must be in [1, nlist]")
-    // codegen'd array->vector featurization (build-time only, but no reason
-    // to pay a boxed UDF when ml.functions has the kernel)
-    val withFeatures = df.withColumn("__features",
-      org.apache.spark.ml.functions.array_to_vector(col(vecCol)))
-    val model = new KMeans()
-      .setK(nlist).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("__features").setPredictionCol("__centroid")
-      .fit(withFeatures)
-    val centers: Array[Array[Double]] = model.clusterCenters.map(_.toArray)
+    val centers = KMeansTrainer.train(df, col(idCol), col(vecCol), nlist, seed)
     // top-r nearest (or RNG-selected, hfresh/SPFresh rng.go) centroids per
     // row via a codegen'd kernel — one pass, centroid table rides in the
     // serialized plan, no boxed UDF in the stage

@@ -93,10 +93,9 @@ object IvfPq {
     val withRes = ivf0.assigned.withColumn("__res",
       zip_with(col(vecCol), element_at(centerLit, col("__centroid") + 1),
         (x, c) => (x.cast("double") - c).cast("float")))
-      // one materialization: PQ training runs m per-segment KMeans fits and
-      // the encode is one more pass — without this each re-derives the
-      // centroid assignment + residual zip_with from the raw data (m+1
-      // redundant full scans at build time)
+      // one materialization: PQ training samples it once and the encode is
+      // one more pass — without this each re-derives the centroid
+      // assignment + residual zip_with from the raw data
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pq = ProductQuantizer.train(withRes, "__res", m, k, seed)
     val encoded0 = withRes.withColumn(codeCol, pq.encode(col("__res"))).drop("__res")

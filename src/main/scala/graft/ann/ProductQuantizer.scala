@@ -1,6 +1,5 @@
 package graft.ann
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,11 +11,12 @@ import graft.operators.VectorSearch
  * Product quantization for cheap first-pass distances + exact rescore
  * (reference: adapters/repos/db/vector/compressionhelpers — PQ codebooks via
  * per-segment k-means; the rescore pattern is the reference's BQ/PQ flat-index
- * path, flat/index.go). North star: "batch vector index build via MLlib".
+ * path, flat/index.go).
  *
- * Train: split the dimension into `m` segments, KMeans (k codewords) per
- * segment. Encode: one small int per segment (m bytes/vector vs 4·d for
- * floats — 32× compression at d=64, m=8). Search (ADC): the query builds an
+ * Train: split the dimension into `m` segments, k-means (k codewords) per
+ * segment over one shared driver-held sample ([[KMeansTrainer]]). Encode:
+ * one small int per segment (m bytes/vector vs 4·d for floats — 32×
+ * compression at d=64, m=8). Search (ADC): the query builds an
  * m×k distance table driver-side; the approximate distance is a table-lookup
  * sum — no float vector is read at scan time, so the first pass streams the
  * (tiny) code column only; the top `rescore·k` candidates re-rank with exact
@@ -91,19 +91,21 @@ final case class ProductQuantizer(
 
 object ProductQuantizer {
 
-  /** Train per-segment codebooks with MLlib KMeans. */
+  /** Train per-segment codebooks: one sample of at most 256·k vectors,
+   * picked by xxhash64 of the vector, then driver-side k-means per segment
+   * (seed + segment) — see [[KMeansTrainer]]. */
   def train(df: DataFrame, vecCol: String, m: Int, k: Int, seed: Long = 42L): ProductQuantizer = {
-    val dim = df.select(size(col(vecCol))).head().getInt(0)
+    val points = KMeansTrainer.sample(df, col(vecCol), col(vecCol),
+      KMeansTrainer.SamplePerCentroid * k, seed)
+    require(points.nonEmpty, "PQ: no non-null vectors to train on")
+    val dim = points(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val segLen = dim / m
     val books = (0 until m).map { s =>
-      val sub = df.select(slice(col(vecCol), s * segLen + 1, segLen).as("seg"))
-        .withColumn("__features", org.apache.spark.ml.functions.array_to_vector(col("seg")))
-      val model = new KMeans().setK(k).setSeed(seed + s).setMaxIter(20)
-        .setFeaturesCol("__features").fit(sub)
-      model.clusterCenters.map(_.toArray)
+      KMeansTrainer.fit(points.map(_.slice(s * segLen, (s + 1) * segLen)), k, seed + s)
     }.toArray
-    // KMeans may return fewer centers than k on tiny inputs; record reality
+    // a segment with fewer than k distinct sub-vectors gets fewer codewords;
+    // record reality
     ProductQuantizer(books, m, books.map(_.length).min, dim)
   }
 }

@@ -17,7 +17,7 @@ import graft.operators.VectorSearch
  * (d bytes + 8 tail bytes vs 4·d float bytes — Stats():215-225).
  *
  * Train is ONE partial-aggregated scan (min/max over array elements —
- * map-side combine, no shuffle of data rows), unlike PQ's per-segment KMeans:
+ * map-side combine, no shuffle of data rows), unlike PQ's per-segment k-means:
  * that is exactly why the reference defaults flat indexes to SQ — training
  * cost is negligible and append-safe. Search shape at 100 TB mirrors
  * BinaryQuantizer.search: the first pass scans ONLY the code column (~25 TB

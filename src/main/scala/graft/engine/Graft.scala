@@ -1260,7 +1260,7 @@ final class Graft(val spark: SparkSession) {
     require(legs.size <= 1, "at most one search leg (nearX | bm25 | hybrid)")
     val leg = legs.headOption
     val near = leg.collect { case n: SearchLeg.Near => n }
-    val legTarget = near.flatMap(_.targets.headOption)
+    val legTarget = leg.flatMap(_.vectorTarget)
     // threshold-only nearX with no explicit pagination = SearchByVectorDistance
     // (unlimited radius search, reference: shard_read.go:674-700): it returns
     // every row inside the threshold, bypassing the results cap too
@@ -1474,7 +1474,7 @@ final class Graft(val spark: SparkSession) {
         // the active leg's targetVectors pick BOTH the diversity vector
         // column and the metric — a leg over a named non-default vector
         // must not be diversified against the default vector's column
-        val legMetric = near.fold(c.schema.metricFor(legTarget))(_.metric)
+        val legMetric = leg.flatMap(_.vectorMetric).getOrElse(c.schema.metricFor(legTarget))
         Mmr.diversify(pagedD, id, c.schema.vectorColumn(legTarget),
           relCol, sm.balance, sm.limit, legMetric)
           .drop("__mmr_rel") // pseudo-distances never project
@@ -2079,6 +2079,14 @@ private sealed trait SearchLeg {
   def score: Column
   /** The order the leg ranks its hits in. */
   def rankKeys(id: String): Seq[Column]
+  /** The named vector the leg searches (None: the default vector, or no
+   * vector for a keyword leg): selection.mmr, nearestNeighbors and
+   * semanticPath read this vector's column. */
+  def vectorTarget: Option[String] = None
+  /** The metric the leg ranks that vector by, once resolved; None where the
+   * class's configured metric applies (a keyword leg) or the vector is a
+   * multi-vector scored by MaxSim. */
+  def vectorMetric: Option[Metric] = None
 }
 
 private object SearchLeg {
@@ -2094,11 +2102,15 @@ private object SearchLeg {
                         targets: Seq[String], concepts: Option[Seq[String]] = None)(
                         val resolve: Metric => NearVector) extends ByDistance {
     lazy val query: NearVector = resolve(metric)
+    override def vectorTarget: Option[String] = targets.headOption
+    override def vectorMetric: Option[Metric] = Some(metric)
     /** A threshold (distance or certainty) makes an unpaged read a radius search. */
     def radius: Boolean = distance.orElse(certainty).isDefined
   }
 
-  final case class MultiVector(nmv: NearMultiVector) extends ByDistance
+  final case class MultiVector(nmv: NearMultiVector) extends ByDistance {
+    override def vectorTarget: Option[String] = nmv.targetVectors.headOption
+  }
 
   final case class Keyword(kw: Bm25) extends SearchLeg {
     def score: Column = col(Bm25Search.ScoreCol)
@@ -2109,6 +2121,8 @@ private object SearchLeg {
   final case class Fused(params: Hybrid)(val resolve: Hybrid => Hybrid) extends SearchLeg {
     lazy val resolved: Hybrid = resolve(params)
     def score: Column = col(HybridSearch.ScoreCol)
+    override def vectorTarget: Option[String] = params.targetVectors.headOption
+    override def vectorMetric: Option[Metric] = Some(params.metric)
     def rankKeys(id: String): Seq[Column] = HybridSearch.rankOrder(id)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /**
  * Maximal-Marginal-Relevance re-selection over a bounded top-k candidate pool
@@ -66,20 +66,36 @@ object Mmr {
    * pick is the lowest query distance; unselected candidates fill the tail
    * in their original order — selection_hybrid.go:104-116): reorders the
    * bounded PAGE by the diversified order, keeps `limit` rows. Columns pass
-   * through; `_mmr_rank` (1-based) is appended.
+   * through; `_mmr_rank` (1-based) is appended. A multi-vector column
+   * (array<array<float>>) is diversified by the MaxSim distance its search
+   * ranks by, with the selected row as the query; `metric` then is unused.
    */
   def diversify(page: DataFrame, idCol: String, vecCol: String, distCol: String,
                 balance: Double, limit: Int,
                 metric: graft.model.Metric = graft.model.Metric.Cosine): DataFrame = {
     require(balance >= 0 && balance <= 1, "MMR balance must be between 0 and 1")
-    val rows: Array[(Any, Array[Double], Double)] = page
+    val multi = page.schema(vecCol).dataType match {
+      case ArrayType(_: ArrayType, _) => true
+      case _ => false
+    }
+    type Floats = scala.collection.Seq[Float]
+    def doubles(v: Floats): Array[Double] = v.map(_.toDouble).toArray
+    // each row's vectors: one for a single-vector column
+    val rows: Array[(Any, Array[Array[Double]], Double)] = page
       .select(col(idCol), col(vecCol), col(distCol).cast("double"))
       .collect()
-      .map(r => (r.get(0), r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2)))
+      .map(r => (r.get(0),
+        if (multi) r.getSeq[Floats](1).map(doubles).toArray else Array(doubles(r.getSeq[Float](1))),
+        r.getDouble(2)))
     import graft.model.Metric
+    // MaxSim late interaction as a distance: -Σ_i max_j (a_i · b_j)
+    def maxSim(a: Array[Array[Double]], b: Array[Array[Double]]): Double =
+      -a.map(q => b.map(d => q.indices.map(i => q(i) * d(i)).sum).max).sum
     // pairwise diversity distance under the CLASS metric (the reference
     // hands the selector distProv.SingleDist — the index's own distancer)
-    def pairDist(a: Array[Double], b: Array[Double]): Double = metric match {
+    def pairDist(a: Array[Array[Double]], b: Array[Array[Double]]): Double =
+      if (multi) maxSim(a, b) else singleDist(a(0), b(0))
+    def singleDist(a: Array[Double], b: Array[Double]): Double = metric match {
       case Metric.L2Squared =>
         var s = 0.0; var i = 0
         while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
@@ -101,7 +117,6 @@ object Mmr {
         while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
         if (na == 0 || nb == 0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
     }
-    def l2(a: Array[Double], b: Array[Double]): Double = pairDist(a, b)
     val n = rows.length
     val removed = Array.fill(n)(false)
     val minDist = Array.fill(n)(Double.PositiveInfinity)
@@ -116,7 +131,7 @@ object Mmr {
         var i = 0
         while (i < n) {
           if (!removed(i)) {
-            val d = l2(lastVec, rows(i)._2)
+            val d = pairDist(lastVec, rows(i)._2)
             if (d < minDist(i)) minDist(i) = d
             val score = -balance * rows(i)._3 + (1 - balance) * minDist(i)
             if (score > bestScore) { bestScore = score; bestIdx = i }
@@ -132,7 +147,7 @@ object Mmr {
   }
 
   private def fillAndJoin(page: DataFrame, idCol: String,
-                          rows: Array[(Any, Array[Double], Double)],
+                          rows: Array[(Any, Array[Array[Double]], Double)],
                           order: scala.collection.mutable.ArrayBuffer[Int],
                           limit: Int): DataFrame = {
     // unselected candidates keep their original relevance order behind the

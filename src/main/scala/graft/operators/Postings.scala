@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TextHashFunctions
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.engine.Collection
@@ -19,7 +20,8 @@ import Bm25Search.TermKey
  *
  * `Bm25Search` scans and tokenizes the collection per query — right for
  * ad-hoc queries. For query-heavy workloads the postings table amortizes
- * tokenization once: one explode + groupBy at build time, then each query is
+ * tokenization once: one per-document (term, tf) pass + explode at build
+ * time (no aggregation, no shuffle), then each query is
  * a pushdown-filtered read of a few term partitions (each posting row carries
  * its prop length, so no join back to doc lengths). At 100 TB the postings
  * table is partitioned/bucketed by term, so a query reads only its terms'
@@ -89,7 +91,9 @@ object Postings {
     val rawLens = docLensOf(toks, props)
     val (post, lens) = persistPath match {
       case Some(p) =>
-        rawPost.repartition(col("__bucket")).sortWithinPartitions("term")
+        // one job: each task writes its rows bucket by bucket, term-sorted
+        // (no shuffle; a one-partition input gives one file per bucket)
+        rawPost.sortWithinPartitions("__bucket", "term")
           .write.mode("overwrite").partitionBy("__bucket").parquet(s"$p/postings")
         rawLens.write.mode("overwrite").parquet(s"$p/docLens")
         val ss = c.df.sparkSession
@@ -171,24 +175,33 @@ object Postings {
     }: _*)
   }
 
+  /** Prop i's distinct (term, tf) pairs, in first-occurrence order. */
+  private def termFreqs(i: Int): Column = TextHashFunctions.termFreqs(col(s"__toks_$i"))
+
   /** Prop length = DISTINCT-term count (reference: the prop length tracker
    * stores len(Items) — unique countables — per doc,
-   * shard_write_inverted_lsm.go:251). */
-  private def propLen(i: Int): Column =
-    size(array_distinct(col(s"__toks_$i"))).cast("double")
+   * shard_write_inverted_lsm.go:251), the number of (term, tf) pairs. */
+  private def propLen(pairs: Column): Column = size(pairs).cast("double")
 
   private def docLensOf(toks: DataFrame, props: Seq[String]): DataFrame =
-    toks.select(col("__id") +: props.indices.map(i => propLen(i).as(s"__dl_$i")): _*)
+    toks.select(col("__id") +: props.indices.map(i => propLen(termFreqs(i)).as(s"__dl_$i")): _*)
 
-  /** (term, __id, __p, tf, __dl) without the bucket column. Each row carries
-   * its prop's length so scoring and the block-max stats read it in place. */
+  /** (term, __id, __p, tf, __dl) without the bucket column, one row per
+   * (term, doc, prop), exploded from each doc's (term, tf) pairs, so no
+   * aggregation runs. Each row carries its prop's length so scoring and the
+   * block-max stats read it in place. The pairs are exploded with
+   * `explode_outer` and the outer row dropped after: for a plain `explode`
+   * Spark infers size(pairs) > 0 and pushes that filter below the
+   * projection, which runs the tokenizer and kernel twice more per doc. */
   private def postingsOf(toks: DataFrame, props: Seq[String]): DataFrame =
     props.indices.map { i =>
-      toks.select(col("__id"), lit(i).as("__p"), propLen(i).as("__dl"),
-        explode(col(s"__toks_$i")).as("term"))
+      toks.select(col("__id"), lit(i).as("__p"), termFreqs(i).as("__tf"))
+        .select(col("__id"), col("__p"), propLen(col("__tf")).as("__dl"),
+          explode_outer(col("__tf")).as("__pair"))
+        .filter(col("__pair").isNotNull)
+        .select(col("__pair.term").as("term"), col("__id"), col("__p"),
+          col("__pair.tf").cast("double").as("tf"), col("__dl"))
     }.reduce(_.unionByName(_))
-      .groupBy(col("term"), col("__id"), col("__p"))
-      .agg(count(lit(1)).cast("double").as("tf"), max(col("__dl")).as("__dl"))
 
   /** `when`-chain mapping __p → its tokenization-group index. */
   private def groupOfProp(groups: Seq[((Tokenization, Boolean), Seq[Int])]): Column =

@@ -9,8 +9,9 @@ import org.apache.spark.storage.StorageLevel
  * Deterministic Lloyd k-means — the TRAINED upgrade of
  * [[Dedup.seedAssign]]'s 0-iteration nearest-seed clustering, for the
  * curation paths that bucket by embedding (SemDeDup, cluster-balanced
- * selection, IVF-style sharding). MLlib's KMeans (used by the IVF index
- * build, `ann/IvfIndex.scala`) is seeded randomly and not replayable; this
+ * selection, IVF-style sharding). The IVF/PQ quantizer trainer
+ * (`ann/KMeansTrainer.scala`) samples by hash and seeds k-means++ from an
+ * RNG, so it is deterministic per seed but not replayable in SQL; this
  * one is exactly reproducible by ANY engine, so the whole model sits on the
  * correctness gate like the other replayed models (DSIR, CCNet, SemDeDup).
  *

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TextHashFunctions
 
 import graft.model.Tokenization
 
@@ -70,18 +71,19 @@ object Tokenize {
     try body finally cjkUserDictTL.set(prev)
   }
 
-  /** `word`: runs of letters/digits, lowercased. A `+` run is never empty,
-   * so unlike the split modes it needs no empty-token filter. */
-  def word(c: Column): Column =
-    regexp_extract_all(lower(c), lit("[\\p{L}\\p{N}]+"), lit(0))
+  /** `word`: runs of letters/digits, lowercased — the `WordTokens` byte
+   * scan, equal to regexp_extract_all(lower(c), "[\\p{L}\\p{N}]+", 0). A
+   * run is never empty, so unlike the split modes it needs no empty-token
+   * filter. */
+  def word(c: Column): Column = TextHashFunctions.wordTokens(c)
 
   /** `lowercase`: split on whitespace, lowercased. */
   def lowercase(c: Column): Column =
-    filterEmpty(split(lower(c), "\\s+"))
+    dropEmpty(split(TextHashFunctions.lower(c), "\\s+"))
 
   /** `whitespace`: split on whitespace, case preserved. */
   def whitespace(c: Column): Column =
-    filterEmpty(split(c, "\\s+"))
+    dropEmpty(split(c, "\\s+"))
 
   /** Unicode-White_Space leading/trailing run — the reference field mode is
    * `strings.TrimFunc(in, unicode.IsSpace)` (tokenizer.go:331), i.e. the
@@ -102,7 +104,7 @@ object Tokenize {
    * loop bound i+3 < len(offs)).
    */
   def trigram(c: Column): Column = {
-    val s = array_join(regexp_extract_all(lower(c), lit("[\\p{L}\\p{N}]+"), lit(0)), "")
+    val s = array_join(word(c), "")
     when(c.isNull, lit(null).cast("array<string>"))
       .when(length(s) < 3, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(1), length(s) - 2), i => s.substr(i, lit(3))))
@@ -112,7 +114,7 @@ object Tokenize {
    * dedup/shingling primitive (NOT the reference's trigram mode, which also
    * strips punctuation; see `trigram`). */
   def charNgrams(c: Column, n: Int): Column = {
-    val s = regexp_replace(lower(c), "\\s+", "")
+    val s = regexp_replace(TextHashFunctions.lower(c), "\\s+", "")
     when(c.isNull, lit(null))
       .when(length(s) === 0, array().cast("array<string>"))
       .when(length(s) < n, array(s))
@@ -147,7 +149,7 @@ object Tokenize {
    * (regexp run extraction + per-run transform), stays in codegen.
    */
   def cjkBigram(c: Column): Column = {
-    val runs = regexp_extract_all(lower(c), lit(CjkRunPattern), lit(0))
+    val runs = regexp_extract_all(TextHashFunctions.lower(c), lit(CjkRunPattern), lit(0))
     val perRun = transform(runs, r =>
       when(r.rlike(s"^[$CjkClass]"),
         when(length(r) === 1, array(r))
@@ -284,6 +286,8 @@ object Tokenize {
     filter(tokens, t => !array_contains(stopArr, t))
   }
 
-  private def filterEmpty(arr: Column): Column =
-    filter(arr, t => length(t) > 0)
+  /** `arr` without its empty strings (a split at a leading separator
+   * yields one), natively: `split` never yields a null element, so this
+   * equals filter(arr, t => length(t) > 0) without the interpreted lambda. */
+  private def dropEmpty(arr: Column): Column = array_remove(arr, "")
 }

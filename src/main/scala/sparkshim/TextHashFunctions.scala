@@ -4,8 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -113,7 +114,8 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 // valid UTF-8 first take the Java decode the column forms ran (each malformed
 // sequence becomes U+FFFD), so there is one scan path. Hashes are Spark's
 // primitives (`XXH64` over the token's bytes, `hashLong`/`hashInt`); case
-// mapping is Spark's `lower`, passed in as an input. The count kernels return
+// mapping is passed in as an input, lower(text) from [[AsciiFastLower]], so
+// ASCII text skips Spark's ICU case mapping. The count kernels return
 // integer counts only: callers keep their column arithmetic over them, so
 // every derived double comes from the same operations in the same order.
 
@@ -152,6 +154,59 @@ case class WordShingles(child: Expression, n: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, l => s"${TextKernels.Name}.wordShingles($l, $n)")
   override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
+}
+
+/** `lower(text)` with an ASCII fast path: an all-ASCII string is lower-cased
+ * byte by byte (`UTF8String.toLowerCaseAscii`), any other takes Spark's own
+ * `Lower` kernel (`CollationSupport.Lower.exec`) with `useICU` =
+ * `spark.sql.icu.caseMappings.enabled` as read when the expression was
+ * built. Results equal `lower(text)` byte for byte; ASCII text never loads
+ * the ICU case-mapping tables, whose one-time initializer costs about a
+ * second on a JVM's first `lower()`. */
+case class AsciiFastLower(child: Expression, useICU: Boolean)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "ascii_fast_lower"
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = child.dataType
+  override def nullIntolerant: Boolean = true
+  private def collationId: Int = child.dataType.asInstanceOf[StringType].collationId
+  override def nullSafeEval(text: Any): Any =
+    TextKernels.lower(text.asInstanceOf[UTF8String], collationId, useICU)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${TextKernels.Name}.lower($t, $collationId, $useICU)")
+  override protected def withNewChildInternal(c: Expression): AsciiFastLower = copy(child = c)
+}
+
+/** The `Tokenize.word` tokens of a document, from `lowered` = lower(text):
+ * equal to regexp_extract_all(lowered, "[\p{L}\p{N}]+", 0), by the byte
+ * scan [[WordShingles]] makes. See [[TextKernels.wordTokens]]. */
+case class WordTokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "word_tokens"
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(lowered: Any): Any =
+    TextKernels.wordTokens(lowered.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, l => s"${TextKernels.Name}.wordTokens($l)")
+  override protected def withNewChildInternal(c: Expression): WordTokens = copy(child = c)
+}
+
+/** A token array's distinct terms with their counts, in first-occurrence
+ * order (`Postings.build`'s per-document posting rows): element i is
+ * (term, tf) for the i-th distinct token, a null token counting as one term,
+ * so `size` of the result is size(array_distinct(tokens)). See
+ * [[TextKernels.termFreqs]]. */
+case class TermFreqs(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "term_freqs"
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = ArrayType(TextKernels.TermFreqSchema, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(tokens: Any): Any =
+    TextKernels.termFreqs(tokens.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${TextKernels.Name}.termFreqs($t)")
+  override protected def withNewChildInternal(c: Expression): TermFreqs = copy(child = c)
 }
 
 /** LSH band keys of a MinHash signature (`Dedup.bandKeys`): key b =
@@ -369,16 +424,17 @@ object TextKernels {
     if (m == n) out else java.util.Arrays.copyOf(out, m)
   }
 
-  /**
-   * The distinct shingles of a document's `Tokenize.word` tokens, the
-   * `[\p{L}\p{N}]+` runs of `lowered` = lower(text), in first-occurrence
-   * order: each run's bytes are hashed in place (xxhash64, seed 42, which is
-   * xxhash64 of the token string), then folded as [[shingleHashes]] folds.
-   */
-  def wordShingles(lowered: UTF8String, n: Int): ArrayData = {
-    val s = valid(lowered)
+  /** `lower(text)`: see [[AsciiFastLower]]. */
+  def lower(text: UTF8String, collationId: Int, useICU: Boolean): UTF8String =
+    if (collationId == CollationFactory.UTF8_BINARY_COLLATION_ID && text.isFullAscii)
+      text.toLowerCaseAscii
+    else CollationSupport.Lower.exec(text, collationId, useICU)
+
+  /** The `[\p{L}\p{N}]+` runs of `s`, which must be valid UTF-8, as byte
+   * offsets: run j spans bytes [b(2j), b(2j+1)) of `s`. */
+  private def wordRuns(s: UTF8String): Array[Int] = {
     val nb = s.numBytes
-    var h = new Array[Long](16)
+    var bounds = new Array[Int](32)
     var m = 0
     var from = -1 // start of the current token, -1 between tokens
     var i = 0
@@ -392,14 +448,84 @@ object TextKernels {
       }
       if (word) { if (from < 0) from = i }
       else if (from >= 0) {
-        if (m == h.length) h = java.util.Arrays.copyOf(h, m * 2)
-        h(m) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + from, i - from, 42L)
+        if (2 * m + 1 >= bounds.length) bounds = java.util.Arrays.copyOf(bounds, bounds.length * 2)
+        bounds(2 * m) = from
+        bounds(2 * m + 1) = i
         m += 1
         from = -1
       }
       i += len
     }
+    java.util.Arrays.copyOf(bounds, 2 * m)
+  }
+
+  /**
+   * The distinct shingles of a document's `Tokenize.word` tokens, the
+   * `[\p{L}\p{N}]+` runs of `lowered` = lower(text), in first-occurrence
+   * order: each run's bytes are hashed in place (xxhash64, seed 42, which is
+   * xxhash64 of the token string), then folded as [[shingleHashes]] folds.
+   */
+  def wordShingles(lowered: UTF8String, n: Int): ArrayData = {
+    val s = valid(lowered)
+    val b = wordRuns(s)
+    val m = b.length / 2
+    val h = new Array[Long](m)
+    var j = 0
+    while (j < m) {
+      h(j) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + b(2 * j),
+        b(2 * j + 1) - b(2 * j), 42L)
+      j += 1
+    }
     UnsafeArrayData.fromPrimitiveArray(distinct(shingles(h, m, n)))
+  }
+
+  /** The `Tokenize.word` tokens of `lowered` = lower(text): its
+   * `[\p{L}\p{N}]+` runs, each copied out of the scanned bytes. */
+  def wordTokens(lowered: UTF8String): ArrayData = {
+    val s = valid(lowered)
+    val b = wordRuns(s)
+    val m = b.length / 2
+    val out = new Array[Any](m)
+    var j = 0
+    while (j < m) {
+      val bytes = new Array[Byte](b(2 * j + 1) - b(2 * j))
+      Platform.copyMemory(s.getBaseObject, s.getBaseOffset + b(2 * j), bytes,
+        Platform.BYTE_ARRAY_OFFSET, bytes.length)
+      out(j) = UTF8String.fromBytes(bytes)
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  val TermFreqSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("tf", IntegerType, nullable = false)))
+
+  /** (term, tf) for each distinct element of `tokens`, in first-occurrence
+   * order; a null element is one term. See [[TermFreqs]]. */
+  def termFreqs(tokens: ArrayData): ArrayData = {
+    val n = tokens.numElements()
+    val slot = new java.util.HashMap[UTF8String, Integer](math.max(16, n * 2))
+    val terms = new Array[UTF8String](n)
+    val tfs = new Array[Int](n)
+    var m = 0
+    var nullSlot = -1
+    var i = 0
+    while (i < n) {
+      if (tokens.isNullAt(i)) {
+        if (nullSlot < 0) { nullSlot = m; m += 1 }
+        tfs(nullSlot) += 1
+      } else {
+        val t = tokens.getUTF8String(i)
+        val at = slot.get(t)
+        if (at == null) { slot.put(t, m); terms(m) = t; tfs(m) = 1; m += 1 }
+        else tfs(at) += 1
+      }
+      i += 1
+    }
+    val out = new Array[Any](m)
+    var j = 0
+    while (j < m) { out(j) = new GenericInternalRow(Array[Any](terms(j), tfs(j))); j += 1 }
+    new GenericArrayData(out)
   }
 
   def bandKeys(signature: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
@@ -605,9 +731,19 @@ object TextHashFunctions {
   /** Hashed word-n-gram shingles of a token array; see [[ShingleHashes]]. */
   def shingleHashes(tokens: Column, n: Int): Column = c(ShingleHashes(x(tokens), n))
 
+  /** `lower(text)`, skipping Spark's ICU case mapping for ASCII strings;
+   * see [[AsciiFastLower]]. */
+  def lower(text: Column): Column =
+    c(AsciiFastLower(x(text), SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
+
+  /** `Tokenize.word` tokens of `text`; see [[WordTokens]]. */
+  def wordTokens(text: Column): Column = c(WordTokens(x(lower(text))))
+
+  /** Distinct (term, tf) pairs of a token array; see [[TermFreqs]]. */
+  def termFreqs(tokens: Column): Column = c(TermFreqs(x(tokens)))
+
   /** Distinct word-n-gram shingles of `text`; see [[WordShingles]]. */
-  def wordShingles(text: Column, n: Int): Column =
-    c(WordShingles(x(org.apache.spark.sql.functions.lower(text)), n))
+  def wordShingles(text: Column, n: Int): Column = c(WordShingles(x(lower(text)), n))
 
   /** LSH band keys of a MinHash signature; see [[LshBandKeys]]. */
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
@@ -615,9 +751,9 @@ object TextHashFunctions {
 
   /** Gopher rule counts of `text`; see [[TextKernels.gopherCounts]]. */
   def gopherCounts(text: Column): Column =
-    c(GopherCounts(x(org.apache.spark.sql.functions.lower(text)), x(text)))
+    c(GopherCounts(x(lower(text)), x(text)))
 
   /** Quality-score counts of `text`; see [[TextKernels.qualityCounts]]. */
   def textQualityCounts(text: Column): Column =
-    c(TextQualityCounts(x(org.apache.spark.sql.functions.lower(text)), x(text)))
+    c(TextQualityCounts(x(lower(text)), x(text)))
 }

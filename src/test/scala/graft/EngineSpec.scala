@@ -324,6 +324,28 @@ class EngineSpec extends SparkSpecBase {
       "MMR must diversify over the leg's named vector, not the default")
   }
 
+  test("selection.mmr after nearMultiVector diversifies over the leg's multi-vector target") {
+    val gg = new Graft(spark)
+    // one-token bags, so MaxSim is a plain dot: on colbert 2 is the near-dup
+    // of 1 and 3 the diverse one; the default vector swaps them
+    val df = Seq(
+      (1L, Seq(1.0f, 0.0f), Seq(Seq(1.0f, 0.0f))),
+      (2L, Seq(0.0f, 1.0f), Seq(Seq(0.99f, 0.01f))),
+      (3L, Seq(0.99f, 0.01f), Seq(Seq(0.0f, 1.0f))))
+      .toDF("id", "vec", "cvec")
+    gg.register(CollectionSchema("SelMv", "id", Nil,
+      vectors = Map("default" -> "vec", "colbert" -> "cvec"), defaultVector = Some("default"),
+      vectorMetrics = Map("default" -> Metric.L2Squared)), df)
+    val picked = gg.get(GetParams("SelMv",
+      nearMultiVector = Some(NearMultiVector(Array(Array(1.0f, 0.0f)), Seq("colbert"))),
+      pagination = Some(Pagination(limit = 3)),
+      selectionMmr = Some(SelectionMmrParams(2, 0.3)),
+      properties = Seq("id")))
+      .orderBy(col("_mmr_rank")).collect().map(_.getLong(0)).toSeq
+    assert(picked == Seq(1L, 3L),
+      "MMR must diversify over the nearMultiVector leg's colbert vectors, not the default")
+  }
+
   test("collection aliases: create/resolve/update/delete with reference error shapes") {
     val gg = new Graft(spark)
     import spark.implicits._

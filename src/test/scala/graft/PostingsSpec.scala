@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.engine.Collection
 import graft.model._
 import graft.operators.{Bm25Search, Postings, PostingsIndex}
+import graft.text.Tokenize
 
 /** The postings-table BM25 path must reproduce the scan path bit-for-bit
  * (same formula, different physical plan). */
@@ -302,6 +303,61 @@ class PostingsSpec extends SparkSpecBase {
     val gone = Postings.search(viaDelta, "spark join stream window table", 10000)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(!gone.contains(7L))
+  }
+
+  test("build and delta give the explode/groupBy forms' postings and docLens (repeated tokens, text[], null body)") {
+    import spark.implicits._
+    val schema = CollectionSchema("Tf", "id", Seq(
+      Property("title", PropType.Arr(PropType.Text), Tokenization.Word),
+      Property("body", PropType.Text, Tokenization.Lowercase)))
+    val docs = Seq[(Long, Seq[String], String)](
+      (1L, Seq("Spark spark", null, "SPARK join"), "the the The join  join spark"),
+      (2L, Nil, null),
+      (3L, null, "  lead trail  x x x "),
+      (4L, Seq("\u0130stanbul \u212Aelvin kelvin", "\u039F\u03A3 \u03BF\u03C2"), "\u039F\u03A3 \u03BF\u03C2 x x"),
+      (5L, Seq("a-b a_b a"), ""))
+    val c0 = Collection(schema, docs.toDF("id", "title", "body").coalesce(1))
+
+    /** (term, __id, __p, tf, __dl) and docLens rows as the explode/groupBy
+     * and array_distinct forms computed them. */
+    def reference(c: Collection): (Set[Row], Set[Row]) = {
+      val toks = c.df.select(col("id").as("__id"),
+        Tokenize.propTokens(Tokenization.Word, false, true)(col("title")).as("t0"),
+        Tokenize.propTokens(Tokenization.Lowercase, false, false)(col("body")).as("t1"))
+      def len(t: String): Column = size(array_distinct(col(t))).cast("double")
+      val post = Seq("t0", "t1").zipWithIndex.map { case (t, i) =>
+        toks.select(col("__id"), lit(i).as("__p"), len(t).as("__dl"), explode(col(t)).as("term"))
+      }.reduce(_ unionByName _)
+        .groupBy(col("term"), col("__id"), col("__p"))
+        .agg(count(lit(1)).cast("double").as("tf"), max(col("__dl")).as("__dl"))
+      val lens = toks.select(col("__id"), len("t0").as("__dl_0"), len("t1").as("__dl_1"))
+      (post.collect().toSet, lens.collect().toSet)
+    }
+    def rowsOf(idx: PostingsIndex): (Set[Row], Set[Row]) =
+      (idx.postings.select("term", "__id", "__p", "tf", "__dl").collect().toSet,
+        idx.docLens.select("__id", "__dl_0", "__dl_1").collect().toSet)
+
+    val dir = Gate.tempDir("postings-tf")
+    val persisted = Postings.build(c0, Seq("title", "body"), 2, Some(dir))
+    val want0 = reference(c0)
+    assert(want0._1.exists(_.getDouble(3) > 1.0), "vacuous: no repeated token")
+    assert(rowsOf(persisted) == want0)
+    assert(rowsOf(Postings.build(c0, Seq("title", "body"), 2)) == want0)
+    // a one-partition input keeps the old layout: one term-sorted file per bucket
+    for (b <- new java.io.File(s"$dir/postings").listFiles().filter(_.getName.startsWith("__bucket="))) {
+      val files = b.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, b)
+      val terms = spark.read.parquet(files.head.getPath).select("term").collect().map(_.getString(0)).toSeq
+      assert(terms == terms.sorted, b)
+    }
+
+    // delta: replace doc 1, delete doc 3, add doc 6
+    val changed = Seq[(Long, Seq[String], String)](
+      (1L, Seq("join join", "window"), "Spark SPARK spark"), (6L, Seq("x", null), null))
+      .toDF("id", "title", "body")
+    val c1 = Collection(schema, c0.df.filter(!col("id").isin(1L, 3L)).unionByName(changed))
+    val viaDelta = Postings.delta(persisted, c1, changed, Some(Seq(3L).toDF("id")))
+    assert(rowsOf(viaDelta) == reference(c1))
   }
 
   test("registered prebuilt index goes stale with the store version and the engine re-serves") {

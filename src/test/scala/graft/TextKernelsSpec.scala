@@ -7,17 +7,25 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{TermFreqs, TextHashFunctions}
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.engine.Collection
+import graft.model.{CollectionSchema, PropType, Property, Tokenization}
+import graft.operators.Postings
 import graft.pipeline.{Dedup, TextAnalysis}
 import graft.streaming.StreamDedup
 import graft.text.Tokenize
 
-/** The curation chain's native text kernels (ShingleHashes, WordShingles,
- * LshBandKeys, GopherCounts, TextQualityCounts) against the regex and lambda
- * column forms they replaced, kept here as the reference; each kernel also
+/** The native text kernels (ShingleHashes, WordShingles, LshBandKeys,
+ * GopherCounts, TextQualityCounts, AsciiFastLower, WordTokens, TermFreqs)
+ * against the regex, lambda and aggregation column forms they replaced, kept
+ * here as the reference; each kernel also
  * agrees between generated code and interpreted evaluation. The inputs are
  * UTF-8 bytes cast to string, hand-picked edge cases plus a seeded fuzz, so
  * malformed sequences reach the kernels as stored. */
@@ -26,6 +34,12 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   /** The column forms the kernels replaced, as they were. */
   private object Ref {
+    /** `Tokenize.word` before the WordTokens kernel. */
+    def word(text: Column): Column = regexp_extract_all(lower(text), lit("[\\p{L}\\p{N}]+"), lit(0))
+
+    /** `Tokenize.whitespace` before array_remove. */
+    def whitespace(text: Column): Column = filter(split(text, "\\s+"), t => length(t) > 0)
+
     def shingleHashes(tokens: Column, n: Int): Column = {
       val h = transform(tokens, t => xxhash64(t))
       val len = size(h)
@@ -50,21 +64,21 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
 
     def stopwordRatio(text: Column): Column = {
-      val toks = Tokenize.word(text)
+      val toks = word(text)
       val stopArr = array(Tokenize.StopwordsEn.toSeq.sorted.map(lit): _*)
       when(size(toks) === 0, 0.0)
         .otherwise(size(filter(toks, t => array_contains(stopArr, t))).cast("double") / size(toks))
     }
 
     def meanTokenLen(text: Column): Column = {
-      val toks = Tokenize.word(text)
+      val toks = word(text)
       when(size(toks) === 0, 0.0)
         .otherwise(aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") / size(toks))
     }
 
     /** TextQualityCounts' fields, in its field order. */
     def qualityCounts(text: Column): Seq[Column] = {
-      val toks = Tokenize.word(text)
+      val toks = word(text)
       val stopArr = array(Tokenize.StopwordsEn.toSeq.sorted.map(lit): _*)
       Seq(
         size(toks),
@@ -75,7 +89,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
 
     def qualityScore(text: Column): Column = {
-      val nToks = size(Tokenize.word(text)).cast("double")
+      val nToks = size(word(text)).cast("double")
       val lengthOk = least(nToks / 50.0, lit(1.0))
       val punctOk = greatest(lit(1.0) - punctRatio(text) * 4.0, lit(0.0))
       val stopOk = least(stopwordRatio(text) * 10.0, lit(1.0))
@@ -84,7 +98,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
     /** gopherFilter's per-document counts, in GopherCounts' field order. */
     def gopherCounts(textCol: Column): Seq[Column] = {
-      val words = Tokenize.whitespace(textCol)
+      val words = whitespace(textCol)
       val lines = filter(split(textCol, "\n"), l => length(trim(l)) > 0)
       val required = array(Seq("the", "be", "to", "of", "and", "that", "have", "with").map(lit): _*)
       Seq(
@@ -100,7 +114,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
 
     def gopherFilter(df: DataFrame, textCol: Column): DataFrame = {
-      val words = Tokenize.whitespace(textCol)
+      val words = whitespace(textCol)
       val nWords = size(words).cast("double")
       val meanLen = when(nWords > 0,
         aggregate(words, lit(0.0), (acc, w) => acc + length(w)) / nWords).otherwise(lit(0.0))
@@ -143,6 +157,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     "𝐀𝐁 math letters 𝟙𝟚 math digits",
     "٣٤٥ ١٢ arabic-indic digits, ½ vulgar half",
     "İstanbul İS İthe THE The", "\u212Aelvin \u212AELVIN",
+    "ΟΔΟΣ ΣΟΦΟΣ. Σ ΑΣ ΣΑ Σ\u0301Σ",
     "one", "one two", "one two three", "one two three four",
     "The THE the be To of And that HAVE with wiTH",
     "   leading and trailing   ", "a\n\nb\n \n", "...\n...\n...\nok line",
@@ -265,7 +280,7 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     for (n <- 1 to 4) {
       val got = inBothModes(textFrame.select($"id", Dedup.wordShingles($"text", n)))
       val want = rows(textFrame.select($"id",
-        array_distinct(Ref.shingleHashes(Tokenize.word($"text"), n))))
+        array_distinct(Ref.shingleHashes(Ref.word($"text"), n))))
       for ((id, w) <- want) assert(longs(got(id), 1) == longs(w, 1), s"n=$n ${describe(id)}")
     }
   }
@@ -333,6 +348,58 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val want = rows(textFrame.select($"id" +: signals(Ref.punctRatio, Ref.stopwordRatio,
       Ref.meanTokenLen, Ref.qualityScore): _*))
     assertSameRows(got, want)
+  }
+
+  private def bin(r: Row): Option[Seq[Byte]] = Option(r.getAs[Array[Byte]](1)).map(_.toSeq)
+  private def strs(r: Row): Option[Seq[String]] = Option(r.getSeq[String](1)).map(_.toSeq)
+
+  test("AsciiFastLower equals lower(text) byte for byte, with ICU case mapping on and off") {
+    val key = "spark.sql.icu.caseMappings.enabled"
+    for (icu <- Seq("true", "false")) {
+      spark.conf.set(key, icu)
+      try {
+        val got = inBothModes(textFrame.select($"id", TextHashFunctions.lower($"text").cast("binary")))
+        val want = rows(textFrame.select($"id", lower($"text").cast("binary")))
+        assert(got.keySet == want.keySet)
+        for ((id, w) <- want) assert(bin(got(id)) == bin(w), s"icu=$icu ${describe(id)}")
+      } finally spark.conf.unset(key)
+    }
+  }
+
+  test("WordTokens equals regexp_extract_all(lower(text), [\\p{L}\\p{N}]+), incl. malformed and null") {
+    val got = inBothModes(textFrame.select($"id", Tokenize.word($"text")))
+    val want = rows(textFrame.select($"id", Ref.word($"text")))
+    assert(got.keySet == want.keySet)
+    for ((id, w) <- want) assert(strs(got(id)) == strs(w), describe(id))
+    assert(got(inputs.indexOf(null).toLong).isNullAt(1))
+  }
+
+  test("TermFreqs equals the explode/groupBy counts and size(array_distinct), in first-occurrence order") {
+    val tokenArrays: Seq[Option[Seq[String]]] = Seq(None, Some(Nil), Some(Seq("")),
+      Some(Seq("a", "a", "b", "a")), Some(Seq("x", null, "y", null, "x", "")),
+      Some(Seq("\u0130", "i\u0307", "k", "\u212A", "K", "k")))
+    val bed = tokenArrays.zipWithIndex.map { case (t, i) => (i.toLong + 100000, t) }
+      .toDF("id", "toks")
+      .unionByName(textFrame.select($"id", Tokenize.word($"text").as("toks")))
+      .unionByName(textFrame.select(($"id" + 10000).as("id"), Tokenize.lowercase($"text").as("toks")))
+      .repartition(2)
+    val got = inBothModes(bed.select($"id", TextHashFunctions.termFreqs($"toks")))
+    // the per-(doc, term) aggregation Postings.build ran before the kernel
+    val counted = bed.select($"id", explode($"toks").as("term"))
+      .groupBy($"id", $"term").agg(count(lit(1)).as("tf")).collect()
+      .groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(r => (Option(r.getString(1)), r.getLong(2).toInt)).toSet }
+    val distinct = rows(bed.select($"id", size(array_distinct($"toks"))))
+    for ((id, r) <- rows(bed)) {
+      val pairs = Option(got(id).getSeq[Row](1)).map(_.map(p => (Option(p.getString(0)), p.getInt(1))))
+      pairs match {
+        case None => assert(r.isNullAt(1), s"id=$id")
+        case Some(ps) =>
+          assert(ps.toSet == counted.getOrElse(id, Set.empty), s"id=$id")
+          assert(ps.size == distinct(id).getInt(1), s"id=$id")
+          assert(ps.map(_._1) == r.getSeq[String](1).map(Option(_)).distinct, s"order, id=$id")
+      }
+    }
   }
 
   /** The optimized and executed plans of the queries `body` runs, once a
@@ -409,5 +476,32 @@ class TextKernelsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       assert(counts.nonEmpty && counts.forall(_ == 1),
         s"$op: kernel nodes per plan $counts\n${plans.map(_._3).mkString("\n")}")
     }
+  }
+
+  test("plans: the persisted Postings.build write runs one TermFreqs per prop, no aggregate, no shuffle") {
+    // one node per prop also means no inferred size(pairs) > 0 filter was
+    // pushed below the projection that computes the pairs
+    val schema = CollectionSchema("KernelPostings", "id", Seq(
+      Property("title", PropType.Text, Tokenization.Word),
+      Property("body", PropType.Text, Tokenization.Lowercase)))
+    // read from parquet, so any exchange in the plan is the build's own
+    val docsDir = Gate.tempDir("kernel-postings-docs")
+    textFrame.select($"id", $"text".as("title"), $"text".as("body"))
+      .write.mode("overwrite").parquet(docsDir)
+    val c = Collection(schema, spark.read.parquet(docsDir))
+    val dir = Gate.tempDir("kernel-postings")
+    val plans = plansOf("collect") {
+      Postings.build(c, Seq("title", "body"), 4, Some(dir))
+      spark.range(1).collect()
+    }
+    val writes = plans.map(_._3).filter(p => collect(p) { case w: DataWritingCommandExec => w }
+      .exists(_.cmd.toString.contains(s"$dir/postings")))
+    assert(writes.size == 1, plans.map(_._1))
+    val write = writes.head
+    val termFreqs = collect(write) { case p => p }
+      .map(_.expressions.map(_.collect { case e: TermFreqs => e }.size).sum).sum
+    assert(termFreqs == 2, write)
+    assert(collect(write) { case a: BaseAggregateExec => a }.isEmpty, write)
+    assert(collect(write) { case x: ShuffleExchangeExec => x }.isEmpty, write)
   }
 }

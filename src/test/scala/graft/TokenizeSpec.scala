@@ -37,6 +37,23 @@ class TokenizeSpec extends SparkSpecBase {
     assert(toks(Tokenization.Lowercase, "Hello  World-42") == Seq("hello", "world-42"))
   }
 
+  test("lowercase and whitespace: array_remove equals the per-token empty filter, no lambda") {
+    val inputs = Seq(" Lead", "trail ", "  both  ", "A\tb\nC", "", " ", "\t\n", "One  Two",
+      "x\u00A0Y", "\u212Aelvin \u0130", null)
+    val df = spark.sparkContext.parallelize(inputs, 2).toDF("t")
+    def plan(c: org.apache.spark.sql.Column) =
+      df.select(c.as("x")).queryExecution.optimizedPlan.toString
+    for ((mode, base) <- Seq(Tokenization.Lowercase -> lower($"t"), Tokenization.Whitespace -> $"t")) {
+      val filtered = filter(split(base, "\\s+"), t => length(t) > 0)
+      // the check can see a lambda: the filtered form has one
+      assert(plan(filtered).contains("lambdafunction"))
+      assert(!plan(Tokenize(mode)($"t")).contains("lambdafunction"), mode)
+      val got = df.select($"t", Tokenize(mode)($"t").as("x")).collect()
+      val want = df.select($"t", filtered.as("x")).collect()
+      assert(got.toSeq == want.toSeq, mode)
+    }
+  }
+
   test("whitespace: case preserved") {
     assert(toks(Tokenization.Whitespace, "Hello  World") == Seq("Hello", "World"))
   }
